@@ -425,8 +425,9 @@ class LakeTable:
         writes per-epoch batch winners, compaction writes fully-resolved
         buckets), so a bucket with a single file needs no resolution at all —
         that scan unions in untouched. Multi-file (delta-bearing) buckets are
-        resolved by the shuffle-free ``mor_scan`` source by default (one task
-        per bucket, bucket-local Arrow merge — see maestro_spark.mor_scan);
+        resolved by the shuffle-free ``mor_scan`` source by default (whole
+        buckets packed one task per core, bucket-local Arrow merge — see
+        maestro_spark.mor_scan);
         ``maestro.read.resolve=shuffle`` selects the ``max_by`` exchange
         formulation instead (useful when buckets are few and huge).
         Compaction keeps delta-bearing buckets bounded, so at scale the
@@ -507,6 +508,7 @@ class LakeTable:
                     .schema(phys)
                     .option("schema_json", json.dumps(phys.jsonValue()))
                     .option("groups_json", json.dumps(multi_groups))
+                    .option("slots", str(self.spark.sparkContext.defaultParallelism))
                     .option("n_buckets", str(snap.n_buckets))
                     .option("pushdown", _pushdown_ok(self.spark))
                     .load()
@@ -2281,19 +2283,26 @@ class LakeTable:
             # so an upgraded engine can't silently mix formats into it
             _atomic_write_json(fmt_sentinel, {"format": "parquet"},
                                exclusive=False)
-        try:
-            _atomic_write_json(fmt_sentinel, {"format": format}, exclusive=True)
-        except FileExistsError:
+
+        def check_format() -> None:
             have = json.load(open(fmt_sentinel))["format"]
             if have != format:
                 raise ValueError(
                     f"export dir {dest_root!r} already serves format "
                     f"{have!r}; a destination is one wire format forever"
                 )
+
+        if os.path.exists(fmt_sentinel):
+            check_format()
         cur = self.snapshot().snapshot_id
         frm = self._export_cursor(dest_root)
         if cur <= frm:
             return {"from": frm, "to": frm, "rows": 0, "path": None}
+        # only a call that writes a range decides the destination's format
+        try:
+            _atomic_write_json(fmt_sentinel, {"format": format}, exclusive=True)
+        except FileExistsError:  # set by a racer since the check above
+            check_format()
         claim = os.path.join(dest_root, f"_claim-{frm:013d}.json")
         try:
             _atomic_write_json(claim, {"from": frm, "to": cur}, exclusive=True)
@@ -2502,10 +2511,10 @@ class LakeTable:
         thousands of epochs, full-bucket folds cost O(table) per trigger).
 
         Zero-shuffle by construction: the fold set is read by the mor_scan
-        source (one task per bucket, bucket-local resolve) with ``pk_bucket``
-        parsed from the partition path, so the partitionBy write emits one
-        folded file per bucket without an exchange — read + resolve + write
-        of just the tier bytes.
+        source (whole buckets packed one task per core, bucket-local resolve)
+        with ``pk_bucket`` parsed from the partition path, so the partitionBy
+        write emits one folded file per bucket without an exchange — read +
+        resolve + write of just the tier bytes.
 
         Tombstones are NEVER GC'd here: a fold reads a subset of the bucket,
         and dropping a tombstone while an older live version of its key
@@ -2537,11 +2546,14 @@ class LakeTable:
             return None
         fold_mode = self.spark.conf.get("maestro.compact.fold", "auto")
         if fold_mode == "auto":
-            # measured on the 20-epoch/68.6M-event sweep: the JVM shuffle
-            # fold wins on big tiers (18.1s vs 29.4s on a 1.07 GB fold —
-            # codegen scan beats Arrow-socket transfer), the zero-shuffle
-            # Arrow fold wins on small ones (1.5s vs 12.5s on 8.5 MB — per-
-            # position scan jobs + an exchange are pure fixed cost there)
+            # measured on the 20-epoch/68.6M-event sweep, when the Arrow fold
+            # still ran one Python task per bucket: the JVM shuffle fold wins
+            # on big tiers (18.1s vs 29.4s on a 1.07 GB fold — codegen scan
+            # beats Arrow-socket transfer), the zero-shuffle Arrow fold wins
+            # on small ones (1.5s vs 12.5s on 8.5 MB — per-position scan jobs
+            # + an exchange are pure fixed cost there). Packing buckets one
+            # task per core cut the Arrow fold's fixed cost, so the crossover
+            # likely sits above this threshold now; not re-measured since.
             big = int(
                 self.spark.conf.get(
                     "maestro.compact.foldShuffleMinBytes", str(256 << 20)
@@ -2580,8 +2592,9 @@ class LakeTable:
                 .select(*keys, *[f"_w.{c}" for c in rest])
             )
         else:
-            # Arrow fold: zero-shuffle (one mor_scan task per bucket reads,
-            # resolves, and the partitionBy write lands without an exchange)
+            # Arrow fold: zero-shuffle (one mor_scan task per core reads and
+            # resolves its whole buckets, and the partitionBy write lands
+            # without an exchange)
             # — the cluster-friendly shape when shuffle bandwidth, not CPU,
             # is the constraint. maestro.compact.fold=local selects it.
             from maestro_spark import mor_scan
@@ -2601,6 +2614,7 @@ class LakeTable:
                 .schema(scan_schema)
                 .option("schema_json", json.dumps(scan_schema.jsonValue()))
                 .option("groups_json", json.dumps(groups))
+                .option("slots", str(self.spark.sparkContext.defaultParallelism))
                 .option("n_buckets", str(snap.n_buckets))
                 .option("pushdown", "false")
                 .load()

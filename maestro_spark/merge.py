@@ -33,7 +33,9 @@ Shuffle/partitioning strategy (explicit, per north_rule):
   second shuffle; `spread` fans a hot conversation out across tasks (skew
   salting that never touches the dedup key, SURVEY M5) and is sized from the
   planning pass (rows per changed bucket) so cold epochs write exactly one
-  file per bucket;
+  file per bucket; the exchange has an explicit
+  ``min(shuffle partitions, buckets × spread)`` partitions, so even a small
+  epoch writes its bucket files on every core;
 - ``groupBy(pk_bucket, _spread, conv_id, turn_idx)`` — adding the
   functionally-dependent columns to the keys lets Catalyst prove the existing
   partitioning satisfies the aggregation's ClusteredDistribution: no second
@@ -213,8 +215,11 @@ def merge_batch(
     # - spread is sized from the planning pass: rows per changed bucket over
     #   the per-task row target. Cold epochs get spread=1 → exactly one file
     #   per bucket per epoch (small-file pressure is what kills MOR reads);
-    #   a skewed epoch fans hot buckets out instead of pinning one task.
-    # REPARTITION_BY_COL (no explicit N) keeps AQE free to coalesce.
+    #   a skewed epoch fans hot buckets out instead of pinning one task;
+    # - the partition count is explicit, min(shuffle partitions, buckets x
+    #   spread), so AQE cannot coalesce a small epoch into ONE writing task
+    #   that writes every bucket file in turn: the write spreads over every
+    #   core, while each (pk_bucket, _spread) still lands in one partition.
     rows_per_task = int(table.spark.conf.get("maestro.merge.rowsPerTask", "1000000"))
     max_spread = int(table.spark.conf.get("maestro.merge.spread", "4"))
     if mode == "cow":
@@ -239,7 +244,11 @@ def merge_batch(
     ev = (
         unioned.withColumn("pk_bucket", bucket_expr("conv_id", n_buckets))
         .withColumn("_spread", F.pmod(F.col("turn_idx"), F.lit(spread)))
-        .repartition("pk_bucket", "_spread")
+        .repartition(
+            min(int(table.spark.conf.get("spark.sql.shuffle.partitions")),
+                n_buckets * spread),
+            "pk_bucket", "_spread",
+        )
     )
     keys = ["pk_bucket", "_spread", "conv_id", "turn_idx"]
     rest = [c for c in ev.columns if c not in keys]

@@ -228,6 +228,28 @@ def test_export_changes_debezium_format(spark, tmp_path):
         src.export_changes(dest2, format="debezium")
 
 
+def test_export_changes_idle_call_pins_no_format(spark, tmp_path):
+    """A call that writes no range must not pin the destination's format:
+    only the first range written decides it, and a mismatch is still
+    refused after that."""
+    import os
+
+    TS = dt.datetime(2025, 1, 1, 12)
+    src = LakeTable.create(spark, str(tmp_path / "src"), n_buckets=4)
+    dest = str(tmp_path / "feed")
+    idle = src.export_changes(dest, format="debezium")
+    assert idle["path"] is None and idle["rows"] == 0
+    assert not os.path.exists(f"{dest}/_format.json")
+    merge_batch(src, spark.createDataFrame(
+        [(1, "insert", "A", 0, "user", "a0", None, TS)],
+        S.CHANGE_EVENT_SCHEMA), "seed", 0)
+    out = src.export_changes(dest, format="parquet")
+    assert out["path"] is not None
+    assert spark.read.parquet(out["path"]).count() == 1
+    with pytest.raises(ValueError, match="one wire format"):
+        src.export_changes(dest, format="debezium")
+
+
 def test_copy_into_debezium_via_sql_door(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
     d = tmp_path / "dump"

@@ -213,7 +213,7 @@ def test_key_filter_pushdown_into_mor_scan(spark, tmp_path):
     parts = r.partitions()
     assert 0 < len(parts) < max(len(groups), 2)
     b = bucket_of(cid, snap.n_buckets)
-    assert all(f"pk_bucket={b}/" in p.files[0] for p in parts if p.files)
+    assert all(f"pk_bucket={b}/" in g[0] for p in parts for g in p.groups)
 
 
 # --------------------------------------------------------------- key blooms

@@ -51,5 +51,6 @@ def test_merge_spread_splits_hot_conversation(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     assert parts >= 3  # one conversation no longer pins a single task
-    # (AQE may re-coalesce small partitions in production; the guarantee the
-    # merge relies on is the key space: 4 distinct (bucket, spread) groups)
+    # (the merge's exchange has an explicit partition count, so AQE cannot
+    # re-coalesce it; the guarantee it relies on is the key space: 4
+    # distinct (bucket, spread) groups)
