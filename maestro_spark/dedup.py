@@ -1,10 +1,12 @@
 """Max-LSN dedup — the engine's hottest operator (SURVEY §2.D2/E1/K2).
 
-Two equivalent forms are provided; the **aggregation form is the default**
-because ``groupBy().agg(max_by(...))`` gets map-side partial aggregation for
-free (duplicates and superseded updates collapse before the shuffle), while
-the window form (`row_number`) must shuffle every event. Both are kept and
-property-tested equal (SURVEY §5.2).
+:func:`dedup_max_lsn` is the engine's ONE winner rule: every merge, change
+feed, point lookup, range read, purge, exchange fold and index probe resolves
+its keys through it. The **aggregation form** is used because
+``groupBy().agg(max_by(...))`` gets map-side partial aggregation for free
+(duplicates and superseded updates collapse before the shuffle), while the
+window form (`row_number`) must shuffle every event. The window form is kept
+only as the property-tested reference (SURVEY §5.2).
 
 A delete is a *winner*, not an absence: deletes survive dedup as rows so the
 merge can apply them (the classic CDC bug called out in SURVEY §7).
@@ -21,21 +23,23 @@ from maestro_spark.schema import KEY_COLS
 def dedup_max_lsn(
     events: DataFrame,
     keys: list[str] | None = None,
-    lsn_col: str = "op_lsn",
-    order: Column | None = None,
+    order: Column | str = "op_lsn",
 ) -> DataFrame:
-    """One winning event per key: the one with max LSN (agg form).
+    """One winning row per ``keys``: the one with the max ``order``, every
+    other column carried along (output = ``keys`` then the rest, in input
+    order).
 
-    ``order`` may override the ordering expression (the merge passes
-    ``struct(op_lsn, _prio)`` so current table state wins LSN ties against a
-    re-delivered event with identical content).
+    ``order`` is a column name or expression; callers with a tie-break pass a
+    struct (the merge passes ``struct(op_lsn, _prio)`` so current table state
+    wins LSN ties against a re-delivered event with identical content, reads
+    pass ``struct(_lsn, _seq)`` so the later commit wins). Columns that only
+    feed the order ride along in the output; drop them after.
     """
     keys = keys or KEY_COLS
     rest = [c for c in events.columns if c not in keys]
-    ord_expr = order if order is not None else F.col(lsn_col)
     return (
         events.groupBy(*keys)
-        .agg(F.max_by(F.struct(*rest), ord_expr).alias("_w"))
+        .agg(F.max_by(F.struct(*rest), order).alias("_w"))
         .select(*keys, "_w.*")
     )
 
@@ -43,8 +47,8 @@ def dedup_max_lsn(
 def dedup_max_lsn_window(
     events: DataFrame, keys: list[str] | None = None, lsn_col: str = "op_lsn"
 ) -> DataFrame:
-    """Window form (SURVEY §2.E1) — kept for equivalence testing and for
-    plans that already carry a compatible partitioning."""
+    """Window form (SURVEY §2.E1) — the reference :func:`dedup_max_lsn` is
+    property-tested against."""
     keys = keys or KEY_COLS
     w = Window.partitionBy(*keys).orderBy(F.col(lsn_col).desc())
     return (

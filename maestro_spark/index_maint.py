@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from maestro_spark import schema as S
+from maestro_spark.dedup import dedup_max_lsn
 from maestro_spark.functions.similarity import (
     _projection_vector,
     _query_signature,
@@ -58,6 +59,44 @@ from maestro_spark.lake import LakeTable
 _META = "_maint_lsh_meta.json"
 _TOMBS = "_tombstones"
 _SH_META = "_maint_simhash_meta.json"
+
+
+def _append_tombstones(index_dir: str, feed: DataFrame) -> None:
+    """One ``(key, t_lsn)`` row per change-feed event into the index's
+    ``_tombstones/`` side table: EVERY event dominates older index rows of
+    its key (an update's new row survives its own tombstone, see
+    :func:`_anti_tombstones`)."""
+    (
+        feed.select(*S.KEY_COLS, F.col("lsn").alias("t_lsn"))
+        .write.mode("append")
+        .parquet(os.path.join(index_dir, _TOMBS))
+    )
+
+
+def _anti_tombstones(spark: SparkSession, index_dir: str, df: DataFrame) -> DataFrame:
+    """Drop rows whose key was deleted/updated past the row's LSN — the
+    shared LSN-dominance discipline of every probe: a broadcast anti-join
+    against the index's ``_tombstones/`` side table (max ``t_lsn`` per key,
+    strict ``>`` so an update's new row survives its own tombstone)."""
+    tdir = os.path.join(index_dir, _TOMBS)
+    if not os.path.isdir(tdir):
+        return df
+    tombs = (
+        spark.read.parquet(tdir)
+        .groupBy(*S.KEY_COLS)
+        .agg(F.max("t_lsn").alias("t_lsn"))
+        .withColumnRenamed("conv_id", "_t_conv")
+        .withColumnRenamed("turn_idx", "_t_turn")
+    )
+    return df.join(
+        F.broadcast(tombs),
+        on=(
+            (F.col("conv_id") == F.col("_t_conv"))
+            & (F.col("turn_idx") == F.col("_t_turn"))
+            & (F.col("t_lsn") > F.col(S.LSN_COL))
+        ),
+        how="left_anti",
+    )
 
 
 class MaintainedLshIndex:
@@ -151,13 +190,7 @@ class MaintainedLshIndex:
             *S.KEY_COLS, self.vec_col, F.col("lsn").alias(S.LSN_COL)
         )
         self._sig_append(ups, dim, mode="append")
-        # EVERY event dominates older index rows of its key (an update's new
-        # row survives its own tombstone: the anti-join is strict >)
-        (
-            feed.select(*S.KEY_COLS, F.col("lsn").alias("t_lsn"))
-            .write.mode("append")
-            .parquet(os.path.join(self.dir, _TOMBS))
-        )
+        _append_tombstones(self.dir, feed)
         self._mark(frm, to)
         return {"from": frm, "to": to}
 
@@ -204,30 +237,9 @@ class MaintainedLshIndex:
                 <= multiprobe_hamming
             )
         )
-        rest = [c for c in cand.columns if c not in S.KEY_COLS]
-        latest = (
-            cand.groupBy(*S.KEY_COLS)
-            .agg(F.max_by(F.struct(*rest), F.col(S.LSN_COL)).alias("_w"))
-            .select(*S.KEY_COLS, "_w.*")
+        latest = _anti_tombstones(
+            self.spark, self.dir, dedup_max_lsn(cand, S.KEY_COLS, S.LSN_COL)
         )
-        tdir = os.path.join(self.dir, _TOMBS)
-        if os.path.isdir(tdir):
-            tombs = (
-                self.spark.read.parquet(tdir)
-                .groupBy(*S.KEY_COLS)
-                .agg(F.max("t_lsn").alias("t_lsn"))
-                .withColumnRenamed("conv_id", "_t_conv")
-                .withColumnRenamed("turn_idx", "_t_turn")
-            )
-            latest = latest.join(
-                F.broadcast(tombs),
-                on=(
-                    (F.col("conv_id") == F.col("_t_conv"))
-                    & (F.col("turn_idx") == F.col("_t_turn"))
-                    & (F.col("t_lsn") > F.col(S.LSN_COL))
-                ),
-                how="left_anti",
-            )
         qcol = F.array(*[F.lit(float(v)) for v in query_vec])
         return (
             latest.select(
@@ -311,11 +323,7 @@ class MaintainedSimhashIndex:
             (F.col("op") == "upsert") & F.col(self.text_col).isNotNull()
         ).select(*S.KEY_COLS, self.text_col, F.col("lsn").alias(S.LSN_COL))
         self._append(self._banded_rows(ups), mode="append")
-        (
-            feed.select(*S.KEY_COLS, F.col("lsn").alias("t_lsn"))
-            .write.mode("append")
-            .parquet(os.path.join(self.dir, _TOMBS))
-        )
+        _append_tombstones(self.dir, feed)
         self._mark(frm, to)
         return {"from": frm, "to": to}
 
@@ -338,35 +346,13 @@ class MaintainedSimhashIndex:
         """Stored banded rows resolved to current state: per-(key, band)
         max-LSN winner minus tombstone-dominated rows. Index rows are tiny
         (key + 3 longs), so this groupBy moves signatures, not text."""
-        banded = self.spark.read.parquet(self.dir)
-        latest = (
-            banded.groupBy(*S.KEY_COLS, "band")
-            .agg(
-                F.max_by(
-                    F.struct("simhash", "block", S.LSN_COL), F.col(S.LSN_COL)
-                ).alias("_w")
-            )
-            .select(*S.KEY_COLS, "band", "_w.*")
+        banded = self.spark.read.parquet(self.dir).select(
+            *S.KEY_COLS, "band", "simhash", "block", S.LSN_COL
         )
-        tdir = os.path.join(self.dir, _TOMBS)
-        if os.path.isdir(tdir):
-            tombs = (
-                self.spark.read.parquet(tdir)
-                .groupBy(*S.KEY_COLS)
-                .agg(F.max("t_lsn").alias("t_lsn"))
-                .withColumnRenamed("conv_id", "_t_conv")
-                .withColumnRenamed("turn_idx", "_t_turn")
-            )
-            latest = latest.join(
-                F.broadcast(tombs),
-                on=(
-                    (F.col("conv_id") == F.col("_t_conv"))
-                    & (F.col("turn_idx") == F.col("_t_turn"))
-                    & (F.col("t_lsn") > F.col(S.LSN_COL))
-                ),
-                how="left_anti",
-            )
-        return latest
+        return _anti_tombstones(
+            self.spark, self.dir,
+            dedup_max_lsn(banded, [*S.KEY_COLS, "band"], S.LSN_COL),
+        )
 
     def near_pairs(self, max_hamming: int = 3) -> DataFrame:
         """Near-dup key pairs by banded blocking over the maintained index --
@@ -492,11 +478,7 @@ class MaintainedIvfIndex:
             (F.col("op") == "upsert") & F.col(self.vec_col).isNotNull()
         ).select(*S.KEY_COLS, self.vec_col, F.col("lsn").alias(S.LSN_COL))
         self._append(ups, meta["centroids"], mode="append")
-        (
-            feed.select(*S.KEY_COLS, F.col("lsn").alias("t_lsn"))
-            .write.mode("append")
-            .parquet(os.path.join(self.dir, _TOMBS))
-        )
+        _append_tombstones(self.dir, feed)
         self._mark(frm, to)
         return {"from": frm, "to": to}
 
@@ -545,30 +527,9 @@ class MaintainedIvfIndex:
         cand = self.spark.read.parquet(self.dir).filter(
             F.col("_list").isin(lists)  # -> PartitionFilters, dir-pruned
         )
-        rest = [c for c in cand.columns if c not in S.KEY_COLS]
-        latest = (
-            cand.groupBy(*S.KEY_COLS)
-            .agg(F.max_by(F.struct(*rest), F.col(S.LSN_COL)).alias("_w"))
-            .select(*S.KEY_COLS, "_w.*")
+        latest = _anti_tombstones(
+            self.spark, self.dir, dedup_max_lsn(cand, S.KEY_COLS, S.LSN_COL)
         )
-        tdir = os.path.join(self.dir, _TOMBS)
-        if os.path.isdir(tdir):
-            tombs = (
-                self.spark.read.parquet(tdir)
-                .groupBy(*S.KEY_COLS)
-                .agg(F.max("t_lsn").alias("t_lsn"))
-                .withColumnRenamed("conv_id", "_t_conv")
-                .withColumnRenamed("turn_idx", "_t_turn")
-            )
-            latest = latest.join(
-                F.broadcast(tombs),
-                on=(
-                    (F.col("conv_id") == F.col("_t_conv"))
-                    & (F.col("turn_idx") == F.col("_t_turn"))
-                    & (F.col("t_lsn") > F.col(S.LSN_COL))
-                ),
-                how="left_anti",
-            )
         qcol = F.array(*[F.lit(float(v)) for v in query_vec])
         return (
             latest.select(
@@ -709,11 +670,7 @@ class MaintainedTextIndex:
         self._doclen_rows(ups).write.mode("append").parquet(
             os.path.join(self.dir, _DOCLEN)
         )
-        (
-            feed.select(*S.KEY_COLS, F.col("lsn").alias("t_lsn"))
-            .write.mode("append")
-            .parquet(os.path.join(self.dir, _TOMBS))
-        )
+        _append_tombstones(self.dir, feed)
         self._mark(frm, to)
         return {"from": frm, "to": to}
 
@@ -742,29 +699,6 @@ class MaintainedTextIndex:
     def _tokens(self, text: str) -> list[str]:
         return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
 
-    def _anti_tombstones(self, df: DataFrame) -> DataFrame:
-        """Drop rows whose key was deleted/updated past the row's LSN —
-        the shared LSN-dominance discipline of every probe."""
-        tdir = os.path.join(self.dir, _TOMBS)
-        if not os.path.isdir(tdir):
-            return df
-        tombs = (
-            self.spark.read.parquet(tdir)
-            .groupBy(*S.KEY_COLS)
-            .agg(F.max("t_lsn").alias("t_lsn"))
-            .withColumnRenamed("conv_id", "_t_conv")
-            .withColumnRenamed("turn_idx", "_t_turn")
-        )
-        return df.join(
-            F.broadcast(tombs),
-            on=(
-                (F.col("conv_id") == F.col("_t_conv"))
-                & (F.col("turn_idx") == F.col("_t_turn"))
-                & (F.col("t_lsn") > F.col(S.LSN_COL))
-            ),
-            how="left_anti",
-        )
-
     def _candidates(self, toks: list[str]) -> DataFrame:
         """Live (key, term, tf, dl) rows for the query tokens: one pruned
         scan over the tokens' bucket partitions (≤ n_tokens of n_buckets
@@ -781,16 +715,11 @@ class MaintainedTextIndex:
             .filter(F.col("_tb").isin(buckets))
             .filter(F.col("term").isin(toks))
         )
-        latest = (
-            cand.groupBy(*S.KEY_COLS, "term")
-            .agg(
-                F.max_by(
-                    F.struct("tf", "dl", S.LSN_COL), F.col(S.LSN_COL)
-                ).alias("_w")
-            )
-            .select(*S.KEY_COLS, "term", "_w.*")
+        latest = dedup_max_lsn(
+            cand.select(*S.KEY_COLS, "term", "tf", "dl", S.LSN_COL),
+            [*S.KEY_COLS, "term"], S.LSN_COL,
         )
-        return self._anti_tombstones(latest)
+        return _anti_tombstones(self.spark, self.dir, latest)
 
     def search(self, term: str, k: int | None = None) -> DataFrame:
         """Keys of live rows containing ``term``, ordered by tf desc then
@@ -835,14 +764,12 @@ class MaintainedTextIndex:
         ddir = os.path.join(self.dir, _DOCLEN)
         if not os.path.isdir(ddir):
             raise ValueError("text index not built yet — call refresh()")
-        latest = (
-            self.spark.read.parquet(ddir)
-            .groupBy(*S.KEY_COLS)
-            .agg(F.max_by(F.struct("dl", S.LSN_COL), F.col(S.LSN_COL)).alias("_w"))
-            .select(*S.KEY_COLS, "_w.*")
+        latest = dedup_max_lsn(
+            self.spark.read.parquet(ddir).select(*S.KEY_COLS, "dl", S.LSN_COL),
+            S.KEY_COLS, S.LSN_COL,
         )
         row = (
-            self._anti_tombstones(latest)
+            _anti_tombstones(self.spark, self.dir, latest)
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.avg(F.col("dl").cast("double")).alias("avgdl"),

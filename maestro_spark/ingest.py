@@ -159,7 +159,14 @@ def from_debezium(
     unknown op code passes through verbatim — both shapes are exactly what
     ``merge.quarantine_reason`` dead-letters (``bad_op`` /
     ``null_conv_id`` / ``null_op_lsn``), so the standard DLQ + repair flow
-    covers envelope corruption with zero extra machinery."""
+    covers envelope corruption with zero extra machinery.
+
+    Op codes ``t`` (TRUNCATE) and ``m`` (logical message) also pass through
+    verbatim and dead-letter as ``debezium_truncate`` / ``debezium_message``.
+    A source TRUNCATE is therefore NOT applied: the rows it removed stay
+    live here, and the replica must be re-synced from a fresh snapshot of
+    the source (e.g. a ``TRUNCATE TABLE`` on this table, then the
+    connector's snapshot read)."""
     payload = payload_schema or S.TRANSCRIPT_SCHEMA
     e = F.from_json(F.col(col), debezium_envelope_schema(payload))
     opcode = e["op"]

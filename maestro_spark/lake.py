@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from maestro_spark import schema as S
+from maestro_spark.dedup import dedup_max_lsn
 
 SNAP_DIR = "_snapshots"
 LEDGER_DIR = "_ledger"
@@ -425,13 +426,11 @@ class LakeTable:
         writes per-epoch batch winners, compaction writes fully-resolved
         buckets), so a bucket with a single file needs no resolution at all —
         that scan unions in untouched. Multi-file (delta-bearing) buckets are
-        resolved by the shuffle-free ``mor_scan`` source by default (whole
-        buckets packed one task per core, bucket-local Arrow merge — see
-        maestro_spark.mor_scan);
-        ``maestro.read.resolve=shuffle`` selects the ``max_by`` exchange
-        formulation instead (useful when buckets are few and huge).
-        Compaction keeps delta-bearing buckets bounded, so at scale the
-        resolve covers the hot tail of the table, not the table.
+        resolved by the shuffle-free ``mor_scan`` source (whole buckets packed
+        one task per core, bucket-local Arrow merge — see
+        maestro_spark.mor_scan). Compaction keeps delta-bearing buckets
+        bounded, so at scale the resolve covers the hot tail of the table,
+        not the table.
         """
         snap = self.snapshot(snapshot_id)
         if columns is not None:
@@ -469,57 +468,22 @@ class LakeTable:
                 )
             )
         if multi_groups:
-            mode = self.spark.conf.get("maestro.read.resolve", "local")
-            if mode == "shuffle":
-                # winner per key = max (_lsn, commit seq) — the SAME
-                # deterministic tie-break as mor_scan's bucket-local resolve.
-                # seq = position in the bucket's commit-ordered file list;
-                # one scan per position (bounded by maestro.compact.maxDeltas,
-                # not by table size) tags it without a per-file plan blowup.
-                maxlen = max(len(g) for g in multi_groups)
-                tagged = None
-                for j in range(maxlen):
-                    fs = [g[j] for g in multi_groups if len(g) > j]
-                    part = self._scan_files(scan_schema, fs).withColumn(
-                        "_seq", F.lit(j)
-                    )
-                    tagged = part if tagged is None else tagged.unionByName(part)
-                keys = ["conv_id", "turn_idx"]
-                rest = [c for c in cols if c not in keys]
-                parts.append(
-                    tagged.groupBy(*keys)
-                    .agg(
-                        F.max_by(
-                            F.struct(*rest), F.struct(F.col(S.LSN_COL), F.col("_seq"))
-                        ).alias("_w")
-                    )
-                    .select(*keys, "_w.*")
-                )
-            else:
-                from maestro_spark import mor_scan
+            from maestro_spark import mor_scan
 
-                mor_scan.register(self.spark)
-                # the Arrow source reads files, so it works in PHYSICAL
-                # names (keys/internals are never renameable, so its
-                # resolve/pushdown columns are untouched); rename after
-                phys = S.physical_schema(scan_schema)
-                part = (
-                    self.spark.read.format(mor_scan.FORMAT_NAME)
-                    .schema(phys)
-                    .option("schema_json", json.dumps(phys.jsonValue()))
-                    .option("groups_json", json.dumps(multi_groups))
-                    .option("slots", str(self.spark.sparkContext.defaultParallelism))
-                    .option("n_buckets", str(snap.n_buckets))
-                    .option("pushdown", _pushdown_ok(self.spark))
-                    .load()
+            # the Arrow source reads files, so it works in PHYSICAL
+            # names (keys/internals are never renameable, so its
+            # resolve/pushdown columns are untouched); rename after
+            part = mor_scan.scan(
+                self.spark, S.physical_schema(scan_schema), multi_groups,
+                snap.n_buckets, _pushdown_ok(self.spark),
+            )
+            cmap = S.column_map(scan_schema)
+            if cmap:
+                inv = {p: l for l, p in cmap.items()}
+                part = part.select(
+                    *[F.col(c).alias(inv.get(c, c)) for c in part.columns]
                 )
-                cmap = S.column_map(scan_schema)
-                if cmap:
-                    inv = {p: l for l, p in cmap.items()}
-                    part = part.select(
-                        *[F.col(c).alias(inv.get(c, c)) for c in part.columns]
-                    )
-                parts.append(part)
+            parts.append(part)
         if not parts:
             return self.spark.createDataFrame([], scan_schema)
         out = parts[0]
@@ -634,16 +598,11 @@ class LakeTable:
                 .select(*keys, S.LSN_COL, "_w.*")
             )
             return firsts.select(*out_cols, F.col("_sid").alias("snapshot_id"))
-        rest = [c for c in union.columns if c not in keys]
         # winner per key = max (_lsn, commit seq); the seq tie-break makes
         # re-delivered equal-LSN rows resolve to the later commit
         # deterministically (payloads are identical by the one-LSN-one-payload
         # invariant, so this is belt-and-braces, not semantics)
-        winners = (
-            union.groupBy(*keys)
-            .agg(F.max_by(F.struct(*rest), F.struct(F.col(S.LSN_COL), F.col("_seq"))).alias("_w"))
-            .select(*keys, "_w.*")
-        )
+        winners = dedup_max_lsn(union, keys, F.struct(S.LSN_COL, "_seq"))
         return winners.select(*out_cols)
 
     def scd2(
@@ -841,7 +800,6 @@ class LakeTable:
                     "a transaction script cannot target a time-travel pin"
                 )
             n = sqldml.execute_script(self, query, name=name)
-            self.create_view(name)  # post-transaction state
             return self.spark.createDataFrame(
                 [("transaction", n, self.snapshot().snapshot_id)],
                 "op: string, statements_applied: int, snapshot_id: long",
@@ -1080,21 +1038,13 @@ class LakeTable:
             return self.spark.createDataFrame(
                 [], T.StructType([f for f in scan_schema.fields if f.name in set(payload)])
             )
-        keys = S.KEY_COLS
-        rest = [f.name for f in scan_schema.fields if f.name not in keys]
         union: DataFrame | None = None
         for j in sorted(cand):
             part = self._scan_files(scan_schema, cand[j]).withColumn(
                 "_seq", F.lit(j)
             )
             union = part if union is None else union.unionByName(part)
-        winners = (
-            union.groupBy(*keys)
-            .agg(
-                F.max_by(F.struct(*rest), F.struct(F.col(S.LSN_COL), F.col("_seq"))).alias("_w")
-            )
-            .select(*keys, "_w.*")
-        )
+        winners = dedup_max_lsn(union, S.KEY_COLS, F.struct(S.LSN_COL, "_seq"))
         if mask:
             m = (
                 self._scan_files(scan_schema, mask)
@@ -1182,8 +1132,6 @@ class LakeTable:
         pred = F.col("conv_id") == F.lit(conv_id)
         if turn_idx is not None:
             pred = pred & (F.col("turn_idx") == F.lit(turn_idx))
-        keys = S.KEY_COLS
-        rest = [f.name for f in snap.schema.fields if f.name not in keys]
         union: DataFrame | None = None
         for j, p in cand:
             part = (
@@ -1192,13 +1140,7 @@ class LakeTable:
                 .withColumn("_seq", F.lit(j))
             )
             union = part if union is None else union.unionByName(part)
-        winners = (
-            union.groupBy(*keys)
-            .agg(
-                F.max_by(F.struct(*rest), F.struct(F.col(S.LSN_COL), F.col("_seq"))).alias("_w")
-            )
-            .select(*keys, "_w.*")
-        )
+        winners = dedup_max_lsn(union, S.KEY_COLS, F.struct(S.LSN_COL, "_seq"))
         return winners.filter(~F.col(S.DELETED_COL)).select(*payload)
 
     def purge(self, conv_id: str) -> Snapshot:
@@ -1258,12 +1200,7 @@ class LakeTable:
         # one winner per key first (the rewrite is also a compaction of this
         # bucket — re-writing every historical delta version of the purged
         # key as a null row would leak its row count)
-        rest = [f.name for f in snap.schema.fields if f.name not in S.KEY_COLS]
-        df = (
-            df.groupBy("pk_bucket", *S.KEY_COLS)
-            .agg(F.max_by(F.struct(*rest), F.col(S.LSN_COL)).alias("_w"))
-            .select("pk_bucket", *S.KEY_COLS, "_w.*")
-        )
+        df = dedup_max_lsn(df, ["pk_bucket", *S.KEY_COLS], S.LSN_COL)
         new_files = self.write_bucket_files(df.repartition("pk_bucket"))
         # base = the snapshot this rewrite was planned from: a delta landing
         # in this bucket while the rewrite job ran must conflict, not vanish
@@ -2499,6 +2436,29 @@ class LakeTable:
                 break
         return k if k >= min_fold else 0
 
+    def _fold_exchange(
+        self, schema: T.StructType, groups: list[list[str]], n_buckets: int
+    ) -> DataFrame:
+        """JVM-native resolve of whole-bucket file groups (each in commit
+        order): one scan per commit position (bounded by the group depth,
+        not table size) tagged with ``_seq``, ONE exchange on ``pk_bucket``,
+        and the max ``(_lsn, _seq)`` winner per key — the same rule as
+        mor_scan's bucket-local resolve. The grouping keys are a superset of
+        the partitioning key, so Catalyst inserts no second shuffle.
+        Returns ``pk_bucket`` + ``schema``'s columns; compact_tiered's fold
+        for large tiers."""
+        tagged = None
+        for j in range(max(len(g) for g in groups)):
+            fs = [g[j] for g in groups if len(g) > j]
+            part = self._scan_files(schema, fs).withColumn("_seq", F.lit(j))
+            tagged = part if tagged is None else tagged.unionByName(part)
+        tagged = tagged.withColumn(
+            "pk_bucket", bucket_expr("conv_id", n_buckets)
+        ).repartition("pk_bucket")
+        return dedup_max_lsn(
+            tagged, ["pk_bucket", *S.KEY_COLS], F.struct(S.LSN_COL, "_seq")
+        ).drop("_seq")
+
     def compact_tiered(
         self,
         buckets: list[int] | None = None,
@@ -2510,11 +2470,13 @@ class LakeTable:
         rewrite of settled base files (the r2 measured scale-killer: at
         thousands of epochs, full-bucket folds cost O(table) per trigger).
 
-        Zero-shuffle by construction: the fold set is read by the mor_scan
-        source (whole buckets packed one task per core, bucket-local resolve)
-        with ``pk_bucket`` parsed from the partition path, so the partitionBy
-        write emits one folded file per bucket without an exchange — read +
-        resolve + write of just the tier bytes.
+        The executor follows the measured tier bytes: below
+        ``maestro.compact.foldShuffleMinBytes`` (256 MB) the fold set is read
+        by the mor_scan source (whole buckets packed one task per core,
+        bucket-local resolve) with ``pk_bucket`` parsed from the partition
+        path, so the partitionBy write emits one folded file per bucket
+        without an exchange — read + resolve + write of just the tier bytes;
+        at or above it, :meth:`_fold_exchange` resolves in the JVM.
 
         Tombstones are NEVER GC'd here: a fold reads a subset of the bucket,
         and dropping a tombstone while an older live version of its key
@@ -2544,62 +2506,26 @@ class LakeTable:
             n_fold_files += k
         if not groups:
             return None
-        fold_mode = self.spark.conf.get("maestro.compact.fold", "auto")
-        if fold_mode == "auto":
-            # measured on the 20-epoch/68.6M-event sweep, when the Arrow fold
-            # still ran one Python task per bucket: the JVM shuffle fold wins
-            # on big tiers (18.1s vs 29.4s on a 1.07 GB fold — codegen scan
-            # beats Arrow-socket transfer), the zero-shuffle Arrow fold wins
-            # on small ones (1.5s vs 12.5s on 8.5 MB — per-position scan jobs
-            # + an exchange are pure fixed cost there). Packing buckets one
-            # task per core cut the Arrow fold's fixed cost, so the crossover
-            # likely sits above this threshold now; not re-measured since.
-            big = int(
-                self.spark.conf.get(
-                    "maestro.compact.foldShuffleMinBytes", str(256 << 20)
-                )
-            )
-            fold_mode = "shuffle" if fold_bytes >= big else "local"
-        if fold_mode == "shuffle":
-            # JVM-native fold: one scan per commit position (bounded by the
-            # tier depth, not table size) tagged with _seq, ONE exchange on
-            # pk_bucket, and a bucket-co-partitioned max_by — grouping keys
-            # are a superset of the partitioning key, so Catalyst inserts no
-            # second shuffle. Whole-stage-codegen end to end; measured ~4×
-            # the Arrow path's throughput on equal-tier folds (the shuffle
-            # moves only delta-tier bytes, which is what this policy bounds).
-            maxlen = max(len(g) for g in groups)
-            tagged = None
-            for j in range(maxlen):
-                fs = [g[j] for g in groups if len(g) > j]
-                part = self._scan_files(snap.schema, fs).withColumn(
-                    "_seq", F.lit(j)
-                )
-                tagged = part if tagged is None else tagged.unionByName(part)
-            tagged = tagged.withColumn(
-                "pk_bucket", bucket_expr("conv_id", snap.n_buckets)
-            ).repartition("pk_bucket")
-            keys = ["pk_bucket", "conv_id", "turn_idx"]
-            rest = [c for c in tagged.columns if c not in keys and c != "_seq"]
-            df = (
-                tagged.groupBy(*keys)
-                .agg(
-                    F.max_by(
-                        F.struct(*rest),
-                        F.struct(F.col(S.LSN_COL), F.col("_seq")),
-                    ).alias("_w")
-                )
-                .select(*keys, *[f"_w.{c}" for c in rest])
-            )
+        # measured on the 20-epoch/68.6M-event sweep, when the Arrow fold
+        # still ran one Python task per bucket: the JVM exchange fold wins on
+        # big tiers (18.1s vs 29.4s on a 1.07 GB fold — codegen scan beats
+        # Arrow-socket transfer), the zero-shuffle Arrow fold wins on small
+        # ones (1.5s vs 12.5s on 8.5 MB — per-position scan jobs + an
+        # exchange are pure fixed cost there); choosing by tier bytes beat
+        # either executor forced (BENCH/BASELINE.md). Packing buckets one
+        # task per core cut the Arrow fold's fixed cost, so the crossover
+        # likely sits above this threshold now; not re-measured since.
+        big = int(
+            self.spark.conf.get("maestro.compact.foldShuffleMinBytes", str(256 << 20))
+        )
+        if fold_bytes >= big:
+            df = self._fold_exchange(snap.schema, groups, snap.n_buckets)
         else:
             # Arrow fold: zero-shuffle (one mor_scan task per core reads and
             # resolves its whole buckets, and the partitionBy write lands
             # without an exchange)
-            # — the cluster-friendly shape when shuffle bandwidth, not CPU,
-            # is the constraint. maestro.compact.fold=local selects it.
             from maestro_spark import mor_scan
 
-            mor_scan.register(self.spark)
             # the Arrow fold reads+writes in PHYSICAL names end to end (its
             # output goes straight back to write_bucket_files, where the
             # logical->physical rename is a per-absent-column no-op)
@@ -2609,16 +2535,7 @@ class LakeTable:
                     *S.physical_schema(snap.schema).fields,
                 ]
             )
-            df = (
-                self.spark.read.format(mor_scan.FORMAT_NAME)
-                .schema(scan_schema)
-                .option("schema_json", json.dumps(scan_schema.jsonValue()))
-                .option("groups_json", json.dumps(groups))
-                .option("slots", str(self.spark.sparkContext.defaultParallelism))
-                .option("n_buckets", str(snap.n_buckets))
-                .option("pushdown", "false")
-                .load()
-            )
+            df = mor_scan.scan(self.spark, scan_schema, groups, snap.n_buckets)
         new_files = self.write_bucket_files(df)
         out = self.commit(
             {b: keep[b] + new_files.get(b, []) for b in keep},
@@ -3237,20 +3154,24 @@ def warehouse_sql(
         # read-only sources (tables referenced but never written) serve
         # their COMMITTED state — snapshot isolation for the script's reads
         register_catalog(spark, warehouse, prefix=prefix)
-        with tables[names[0]].transaction_multi(
-            *[tables[n] for n in names[1:]]
-        ) as branches:
-            bmap = dict(zip(names, branches))
-            for i, (s_, tgt) in enumerate(zip(stmts, targets)):
-                for n, b in bmap.items():
-                    b.create_view(prefix + n)  # in-flight branch states
-                if sqldml.is_ddl(s_):
-                    sqldml.execute_ddl(bmap[tgt], s_, name=tgt)
-                else:
-                    sqldml.execute_dml(bmap[tgt], s_, name=tgt,
-                                       query_id=f"sqltxn.{i}")
-        for n, t in tables.items():
-            t.create_view(prefix + n)  # post-transaction state
+        try:
+            with tables[names[0]].transaction_multi(
+                *[tables[n] for n in names[1:]]
+            ) as branches:
+                bmap = dict(zip(names, branches))
+                for i, (s_, tgt) in enumerate(zip(stmts, targets)):
+                    for n, b in bmap.items():
+                        b.create_view(prefix + n)  # in-flight branch states
+                    if sqldml.is_ddl(s_):
+                        sqldml.execute_ddl(bmap[tgt], s_, name=tgt)
+                    else:
+                        sqldml.execute_dml(bmap[tgt], s_, name=tgt,
+                                           query_id=f"sqltxn.{i}")
+        finally:
+            # committed states, published or discarded (the branches the
+            # views pointed at mid-script are gone)
+            for n, t in tables.items():
+                t.create_view(prefix + n)
         return _summary("transaction", statements_applied=len(stmts),
                         tables=names)
     target = sqldml.statement_target(query)

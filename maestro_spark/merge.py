@@ -5,10 +5,11 @@ The merge is *not* a join; both write modes reduce to max-LSN dedup:
 **merge-on-read (default, ``maestro.merge.mode=mor``)** — the scale path.
 Each epoch writes ONLY the batch's per-key winners as new *delta* files
 appended to their buckets; the current table is never read or rewritten.
-Resolution happens at read time (``LakeTable.read_resolved``: ``max_by``
-over ``_lsn`` across a bucket's base+delta files), and compaction
-(LSM-style, triggered at ``maestro.compact.maxDeltas`` files per bucket)
-folds deltas back into one resolved file per bucket. Per-epoch write volume
+Resolution happens at read time (``LakeTable.read_resolved``: the
+bucket-local ``mor_scan`` resolve, max ``(_lsn, commit seq)`` across a
+bucket's base+delta files), and size-tiered compaction (LSM-style,
+triggered at ``maestro.compact.maxDeltas`` files per bucket) folds each
+bucket's recent delta tier into one resolved file. Per-epoch write volume
 is O(batch), not O(table) — at 10^10 events a copy-on-write epoch would
 rewrite the whole table every microbatch, which is the difference between a
 viable 1000-executor ingest and an I/O-bound one. This is the same
@@ -23,8 +24,8 @@ batch; max-LSN dedup over the union IS the merge:
     winners(union(current_as_events, batch)) == new bucket content
 
 Both collapse SURVEY's K2 (dedup), K5 (apply) and cross-epoch LSN dominance
-into a single ``groupBy(...).agg(max_by(...))`` with map-side partial
-aggregation — correct by induction on epochs, and exactly one hash exchange
+into a single ``dedup_max_lsn`` aggregation (maestro_spark.dedup) with
+map-side partial aggregation — correct by induction on epochs, and exactly one hash exchange
 per epoch.
 
 Shuffle/partitioning strategy (explicit, per north_rule):
@@ -59,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from maestro_spark import schema as S
+from maestro_spark.dedup import dedup_max_lsn
 from maestro_spark.lake import CommitConflict, LakeTable, Snapshot, bucket_expr
 from maestro_spark.ledger import Ledger
 from maestro_spark.lineage import append_lineage
@@ -83,6 +85,24 @@ def _as_pseudo_events(current: DataFrame) -> DataFrame:
         .withColumn("op_lsn", F.col(S.LSN_COL))
         .drop(S.LSN_COL, S.DELETED_COL)
     )
+
+
+def epoch_winners(
+    events: DataFrame, n_buckets: int, spread: int, partitions: int
+) -> DataFrame:
+    """The epoch's ONE exchange, on ``(pk_bucket, turn_idx % spread)`` into
+    ``partitions`` partitions, then the max-``(op_lsn, _prio)`` winner per
+    key. Grouping on the partitioning columns plus the key lets Catalyst
+    reuse the exchange for the aggregation (tests/test_plan_quality.py)."""
+    ev = (
+        events.withColumn("pk_bucket", bucket_expr("conv_id", n_buckets))
+        .withColumn("_spread", F.pmod(F.col("turn_idx"), F.lit(spread)))
+        .repartition(partitions, "pk_bucket", "_spread")
+    )
+    return dedup_max_lsn(
+        ev, ["pk_bucket", "_spread", "conv_id", "turn_idx"],
+        F.struct("op_lsn", "_prio"),
+    ).drop("_spread")
 
 
 def merge_batch(
@@ -241,21 +261,10 @@ def merge_batch(
         est_rows = p.stats.get("rows_in") or 0
         est_buckets = max(1, p.stats.get("changed_buckets") or n_buckets)
     spread = max(1, min(max_spread, int(est_rows / est_buckets // rows_per_task) + 1))
-    ev = (
-        unioned.withColumn("pk_bucket", bucket_expr("conv_id", n_buckets))
-        .withColumn("_spread", F.pmod(F.col("turn_idx"), F.lit(spread)))
-        .repartition(
-            min(int(table.spark.conf.get("spark.sql.shuffle.partitions")),
-                n_buckets * spread),
-            "pk_bucket", "_spread",
-        )
-    )
-    keys = ["pk_bucket", "_spread", "conv_id", "turn_idx"]
-    rest = [c for c in ev.columns if c not in keys]
-    winners = (
-        ev.groupBy(*keys)
-        .agg(F.max_by(F.struct(*rest), F.struct(F.col("op_lsn"), F.col("_prio"))).alias("_w"))
-        .select("pk_bucket", "conv_id", "turn_idx", "_w.*")
+    winners = epoch_winners(
+        unioned, n_buckets, spread,
+        min(int(table.spark.conf.get("spark.sql.shuffle.partitions")),
+            n_buckets * spread),
     )
     result = (
         winners.withColumn(S.LSN_COL, F.col("op_lsn"))
@@ -353,13 +362,12 @@ def merge_batch(
         stats=stats,
     )
 
-    # LSM levelling: fold delta-heavy buckets. Default policy is SIZE-TIERED
-    # (compact_tiered): work per trigger is O(delta-tier bytes), settled base
-    # files are never rewritten on cadence, so amortized compaction cost is
-    # O(log) rewrites per byte instead of one full-bucket rewrite per
-    # maxDeltas epochs — the r2 epoch-size sweep's measured scale-killer.
-    # maestro.compact.policy=full restores the full-bucket fold (which also
-    # GC's nothing here; horizon GC is an explicit compact() call).
+    # LSM levelling: fold delta-heavy buckets SIZE-TIERED (compact_tiered):
+    # work per trigger is O(delta-tier bytes), settled base files are never
+    # rewritten on cadence, so amortized compaction cost is O(log) rewrites
+    # per byte instead of one full-bucket rewrite per maxDeltas epochs — the
+    # r2 epoch-size sweep's measured scale-killer (BENCH/BASELINE.md: 63.7 s
+    # tiered vs 128.4 s full-bucket). Horizon GC is an explicit compact().
     # Timing is recorded in the compaction snapshot's own stats (this epoch's
     # ledger entry is already durable).
     max_deltas = int(table.spark.conf.get("maestro.compact.maxDeltas", "8"))
@@ -367,10 +375,7 @@ def merge_batch(
         due = table.delta_buckets(max_deltas)
         if due:
             try:
-                if table.spark.conf.get("maestro.compact.policy", "tiered") == "tiered":
-                    table.compact_tiered(due)
-                else:
-                    table.compact(due)
+                table.compact_tiered(due)
             except CommitConflict:
                 # multi-writer: a concurrent commit rewrote one of the due
                 # buckets while compaction ran — the EPOCH is already
@@ -396,7 +401,12 @@ def quarantine_reason(
     upstreams must not wedge the stream on a column they don't send yet).
     """
     out = (
-        F.when(F.col("conv_id").isNull(), F.lit("null_conv_id"))
+        # Debezium TRUNCATE / logical-message envelopes carry no row image:
+        # named for what they are, ahead of the null-key check they would
+        # otherwise fail (ingest.from_debezium: a truncate means re-sync)
+        F.when(F.col("op") == "t", F.lit("debezium_truncate"))
+        .when(F.col("op") == "m", F.lit("debezium_message"))
+        .when(F.col("conv_id").isNull(), F.lit("null_conv_id"))
         .when(F.col("turn_idx").isNull(), F.lit("null_turn_idx"))
         .when(F.col("op_lsn").isNull(), F.lit("null_op_lsn"))
         .when(

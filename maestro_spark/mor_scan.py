@@ -63,10 +63,10 @@ def resolve_group(files: list[str], schema: StructType, key_filters=None):
     """Read one bucket's base+delta files and yield resolved Arrow batches.
 
     Winner per (conv_id, turn_idx) = max (_lsn, commit-seq), where seq is
-    the file's position in the bucket's commit-ordered list. The
-    ``maestro.read.resolve=shuffle`` formulation applies the identical
-    (_lsn, seq) ordering (lake.read_resolved tags each commit position), so
-    the two paths are deterministically equal. Equal-LSN ties can only come
+    the file's position in the bucket's commit-ordered list. The JVM
+    exchange fold (``LakeTable._fold_exchange``, compaction's large-tier
+    executor) applies the identical (_lsn, seq) ordering (it tags each commit
+    position), so the two paths are deterministically equal. Equal-LSN ties can only come
     from re-delivered events — the engine invariant is one-LSN-one-payload
     per key, so the seq preference for the later commit is defensive
     determinism, not semantics (and tests compare the paths row-for-row).
@@ -200,3 +200,20 @@ class MorScanDataSource(DataSource):
 
 def register(spark) -> None:
     spark.dataSource.register(MorScanDataSource)
+
+
+def scan(spark, schema: StructType, groups: list[list[str]], n_buckets: int,
+         pushdown: str = "false"):
+    """DataFrame of ``groups`` (whole buckets, files in commit order)
+    resolved in ``schema`` (PHYSICAL names), packed one task per core."""
+    register(spark)
+    return (
+        spark.read.format(FORMAT_NAME)
+        .schema(schema)
+        .option("schema_json", json.dumps(schema.jsonValue()))
+        .option("groups_json", json.dumps(groups))
+        .option("slots", str(spark.sparkContext.defaultParallelism))
+        .option("n_buckets", str(n_buckets))
+        .option("pushdown", pushdown)
+        .load()
+    )

@@ -363,7 +363,7 @@ def q_dedup_maxlsn(spark, sf_dir):
         F.col("value"),
         F.col("ts"),
     )
-    w = dedup_max_lsn(ev, keys=["user_id"], lsn_col="op_lsn")
+    w = dedup_max_lsn(ev, keys=["user_id"])
     return w.select(
         "user_id",
         F.col("op_lsn").alias("last_event_id"),
@@ -1104,7 +1104,6 @@ def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Dat
             F.col("user_id"), F.col("event_id").alias("op_lsn"), "event_type", "value", "ts"
         ),
         keys=["user_id"],
-        lsn_col="op_lsn",
     )
     journey = ev.groupBy("user_id").agg(
         F.array_join(

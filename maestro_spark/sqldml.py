@@ -566,7 +566,9 @@ def execute_script(
     each seeing the previous statements' effects through the re-registered
     view — and publish as one all-or-nothing adopt on COMMIT. A failing
     statement (or a concurrent-writer conflict at publish) discards the
-    branch: readers never observe a partial script. ``ROLLBACK`` as the
+    branch: readers never observe a partial script. Either way the view
+    ``name`` is re-registered on the table's committed state on exit (the
+    branch it pointed at mid-script is gone). ``ROLLBACK`` as the
     terminator validates the script and discards it — identical visible
     effect to never running it, at zero cost.
 
@@ -576,14 +578,17 @@ def execute_script(
     stmts, term = parse_script(sql)
     if term == "rollback" or not stmts:
         return 0
-    with table.transaction() as txn:
-        for i, s_ in enumerate(stmts):
-            # each statement reads the BRANCH state as of the previous one
-            txn.create_view(name)
-            if is_ddl(s_):
-                execute_ddl(txn, s_, name=name)
-            else:
-                execute_dml(txn, s_, name=name, query_id=f"{query_id}.{i}")
+    try:
+        with table.transaction() as txn:
+            for i, s_ in enumerate(stmts):
+                # each statement reads the BRANCH state as of the previous one
+                txn.create_view(name)
+                if is_ddl(s_):
+                    execute_ddl(txn, s_, name=name)
+                else:
+                    execute_dml(txn, s_, name=name, query_id=f"{query_id}.{i}")
+    finally:
+        table.create_view(name)  # committed state, published or discarded
     return len(stmts)
 
 

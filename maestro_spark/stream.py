@@ -62,18 +62,21 @@ def stream_ingest(
       arrival-order-invariant).
     - ``"debezium"``: tail a directory of standard Debezium JSON envelopes
       (a connector's sink / topic dump) — text file-stream decoded by
-      ``ingest.from_debezium`` (one from_json, no UDFs); rows keep their
-      SOURCE op + LSN, defects dead-letter via the merge DLQ.
+      ``ingest.from_debezium`` (one from_json, no UDFs) against the target
+      table's payload schema, as ``copy_into`` does; rows keep their SOURCE
+      op + LSN, defects dead-letter via the merge DLQ. Envelope fields the
+      table lacks are dropped — ALTER TABLE ADD COLUMN first, then restart.
 
-    Both readers use the log's discovered schema (merged from segment
-    footers), so evolved columns present on disk flow through; columns that
-    first appear while a continuous query is running are picked up on
-    restart — the same contract Spark's own file source has.
+    The two parquet readers use the log's discovered schema (merged from
+    segment footers), so evolved columns present on disk flow through;
+    columns that first appear while a continuous query is running are
+    picked up on restart — the same contract Spark's own file source has.
 
     ``maintain_views``: materialized views (e.g. ``ivm.ConvStatsView`` over
     this table) refreshed after each epoch's commit, so they stay fresh as
     the stream runs; each refresh is delta-driven and exactly-once.
     """
+    table = LakeTable(spark, table_root)
     if source == "debezium":
         # tail a directory of Debezium envelope JSONL (a connector's file
         # sink / topic dump): text file-stream → one from_json projection
@@ -87,7 +90,9 @@ def stream_ingest(
             reader = reader.option(
                 "maxFilesPerTrigger", str(max_segments_per_batch)
             )
-        events = from_debezium(reader.text(log_dir))
+        events = from_debezium(
+            reader.text(log_dir), table.snapshot().payload_schema()
+        )
     elif source == "native":
         log_schema = _discover_log_schema(log_dir)
         reader = spark.readStream.schema(log_schema)
@@ -124,8 +129,6 @@ def stream_ingest(
         events = events.withWatermark("_event_time", watermark)
         if dedup_within_watermark:
             events = events.dropDuplicatesWithinWatermark(["conv_id", "turn_idx", "op_lsn"])
-
-    table = LakeTable(spark, table_root)
 
     def apply_epoch(batch_df, epoch_id: int):
         if "_event_time" in batch_df.columns:

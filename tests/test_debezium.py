@@ -86,6 +86,24 @@ def test_envelopes_merge_with_dlq(spark, tmp_path):
     assert reasons == {"null_conv_id", "bad_op"}
 
 
+def test_truncate_and_message_envelopes_have_own_reasons(spark, tmp_path):
+    """Debezium 't' (TRUNCATE) and 'm' (logical message) envelopes carry no
+    row image; each dead-letters under its own reason, not bad_op/null key,
+    so a source TRUNCATE is visible in the DLQ as what it is."""
+    t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
+    ev = from_debezium(_raw(spark, [
+        _env("c", lsn=1, after=ROW_A0 % "a0"),
+        _env("t", lsn=2),
+        _env("m", lsn=3),
+    ]))
+    snap = merge_batch(t, ev, "dbz", 0)
+    assert snap.stats["invalid_events"] == 2
+    assert [r["text"] for r in t.read().collect()] == ["a0"]
+    q = read_quarantine(t, "dbz").toPandas()
+    assert sorted(zip(q["op"], q["_reason"])) == [
+        ("m", "debezium_message"), ("t", "debezium_truncate")]
+
+
 @pytest.mark.parametrize("per_file", [True, False])
 def test_copy_into_debezium_out_of_order_reconverges(spark, tmp_path, per_file):
     """A directory of binlog archive dumps loads in ANY file order to the
@@ -149,6 +167,23 @@ def test_stream_ingest_debezium_source(spark, tmp_path):
     stream_ingest(spark, str(log), t.root, query_id="dbz",
                   source="debezium", watermark=None)
     assert t.read().count() == 0  # the delete tailed in
+
+
+def test_stream_ingest_debezium_decodes_table_schema(spark, tmp_path):
+    """The debezium tail decodes envelopes against the TABLE's payload
+    schema, so a column added by ALTER TABLE ADD COLUMN arrives."""
+    from maestro_spark.ddl import add_column
+    from maestro_spark.stream import stream_ingest
+
+    t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
+    add_column(t, "lang", "string")
+    log = tmp_path / "dbzlog"
+    log.mkdir()
+    row = ROW_A0.replace("}", ', "lang": "fr"}') % "a0"
+    (log / "seg-0.jsonl").write_text(_env("c", lsn=1, after=row) + "\n")
+    stream_ingest(spark, str(log), t.root, query_id="dbz",
+                  source="debezium", watermark=None)
+    assert [(r["text"], r["lang"]) for r in t.read().collect()] == [("a0", "fr")]
 
 
 def test_to_debezium_round_trip_replicates_table(spark, tmp_path):

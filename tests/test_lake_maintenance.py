@@ -609,11 +609,12 @@ def test_fold_suffix_properties():
     check()
 
 
-def test_compact_tiered_across_schema_evolution(spark, tmp_path):
+def test_compact_tiered_across_schema_evolution(spark, tmp_path, monkeypatch):
     """A fold set spanning a schema evolution (older files lack the evolved
-    columns) must resolve and rewrite correctly on BOTH fold executors:
-    the JVM shuffle path null-fills via the explicit read schema, the Arrow
-    path via conform_arrow_table."""
+    columns) must resolve and rewrite correctly on BOTH fold executors,
+    picked by tier bytes: at a 0-byte threshold the JVM exchange fold
+    null-fills via the explicit read schema; at the default (256 MB) the
+    Arrow fold does via conform_arrow_table."""
     import datetime as dt
 
     import pyspark.sql.functions as F
@@ -621,10 +622,20 @@ def test_compact_tiered_across_schema_evolution(spark, tmp_path):
     from maestro_spark import schema as S
     from maestro_spark.merge import merge_batch
 
+    calls = []
+    real_fold = LakeTable._fold_exchange
+    monkeypatch.setattr(
+        LakeTable, "_fold_exchange",
+        lambda self, *a: calls.append(a) or real_fold(self, *a),
+    )
     spark.conf.set("maestro.compact.maxDeltas", "0")
     try:
-        for mode in ("shuffle", "local"):
-            spark.conf.set("maestro.compact.fold", mode)
+        for mode in ("exchange", "arrow"):
+            calls.clear()
+            if mode == "exchange":
+                spark.conf.set("maestro.compact.foldShuffleMinBytes", "0")
+            else:
+                spark.conf.unset("maestro.compact.foldShuffleMinBytes")
             t = LakeTable.create(
                 spark, str(tmp_path / f"evo_{mode}"), n_buckets=2)
             merge_batch(t, spark.createDataFrame(
@@ -640,6 +651,7 @@ def test_compact_tiered_across_schema_evolution(spark, tmp_path):
             before = comparable(t.read()).orderBy("conv_id", "turn_idx")
             snap = t.compact_tiered()  # folds the pre- and post-evolution files
             assert snap is not None
+            assert len(calls) == (mode == "exchange")
             after = comparable(t.read()).orderBy("conv_id", "turn_idx")
             assert symmetric_diff_empty(before, after)
             rows = {r["turn_idx"]: r for r in t.read().collect()}
@@ -647,7 +659,7 @@ def test_compact_tiered_across_schema_evolution(spark, tmp_path):
             assert rows[1]["metadata"] == {"m": "v1"}
     finally:
         spark.conf.set("maestro.compact.maxDeltas", "8")
-        spark.conf.unset("maestro.compact.fold")
+        spark.conf.unset("maestro.compact.foldShuffleMinBytes")
 
 
 def test_clustered_compaction_keeps_ts_pruning(spark, tmp_path):

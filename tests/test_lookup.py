@@ -11,6 +11,7 @@ import random
 import string
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 import pytest
 
 from maestro_spark import schema as S
@@ -117,10 +118,10 @@ def test_lookup_on_replayed_log(spark, tmp_path):
 
 def test_read_columns_prunes_and_matches(spark, tmp_path):
     """read(columns=...) equals read().select(...) exactly, and the pruned
-    plan's scan schema is narrow on BOTH resolve paths (the Python
-    DataSource gets no projection pushdown from Spark, so the manual
-    pruning is the only thing standing between a 2-column query and a
-    full-width decode at 100 TB)."""
+    plan's scan schema is narrow (the Python DataSource gets no projection
+    pushdown from Spark, so the manual pruning is the only thing standing
+    between a 2-column query and a full-width decode at 100 TB); the JVM
+    exchange resolve over the same narrowed schema agrees."""
     import contextlib
     import io
 
@@ -152,16 +153,22 @@ def test_read_columns_prunes_and_matches(spark, tmp_path):
     w_wide, _ = scan_width(wide)
     assert w_narrow <= 4, plan_n[:2000]   # keys + _lsn + _deleted
     assert w_wide >= 8                    # full schema without pruning
-    # pinned-column read on the shuffle resolve path matches too
-    spark.conf.set("maestro.read.resolve", "shuffle")
-    try:
-        c = (
-            t.read(columns=["conv_id", "turn_idx"])
-            .orderBy("conv_id", "turn_idx")
-            .toPandas()
-        )
-    finally:
-        spark.conf.set("maestro.read.resolve", "local")
+    # pinned-column resolve on the JVM exchange path matches too
+    import os
+
+    snap = t.snapshot()
+    narrow_schema = T.StructType(
+        [f for f in snap.schema.fields
+         if f.name in ("conv_id", "turn_idx", S.LSN_COL, S.DELETED_COL)]
+    )
+    groups = [[os.path.join(t.root, p) for p in ps] for ps in snap.files.values()]
+    c = (
+        t._fold_exchange(narrow_schema, groups, snap.n_buckets)
+        .filter(~F.col(S.DELETED_COL))
+        .select("conv_id", "turn_idx")
+        .orderBy("conv_id", "turn_idx")
+        .toPandas()
+    )
     assert c.equals(b)
     # evolved/unknown column name is rejected loudly
     import pytest as _pytest

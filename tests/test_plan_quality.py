@@ -55,33 +55,27 @@ def test_agg_has_mapside_partial(spark):
 
 
 def test_merge_winners_plan_single_exchange(spark):
-    """The CDC merge's dedup aggregation (union -> max_by winners) must hit
-    exactly ONE exchange keyed by the bucket columns — the engine's core
-    scale claim (SURVEY §2.K5)."""
+    """The CDC merge's dedup aggregation (merge.epoch_winners: the epoch
+    exchange, then the shared dedup_max_lsn winner rule) must hit exactly
+    ONE exchange keyed by the bucket columns — the engine's core scale
+    claim (SURVEY §2.K5)."""
     from pyspark.sql import functions as F
 
-    from maestro_spark.lake import bucket_expr
+    from maestro_spark.merge import epoch_winners
 
     rows = [
         (i * 10 + j, "upsert", f"conv_{i:03d}", j, "user", f"text {i} {j}")
         for i in range(30)
         for j in range(4)
     ]
-    ev = (
-        spark.createDataFrame(
-            rows, ["op_lsn", "op", "conv_id", "turn_idx", "role", "text"]
-        )
-        .withColumn("pk_bucket", bucket_expr("conv_id", 8))
-        .withColumn("_spread", F.pmod(F.col("turn_idx"), F.lit(1)))
-        .repartition("pk_bucket", "_spread")
-    )
-    keys = ["pk_bucket", "_spread", "conv_id", "turn_idx"]
-    rest = [c for c in ev.columns if c not in keys]
-    winners = ev.groupBy(*keys).agg(
-        F.max_by(F.struct(*rest), F.col("op_lsn")).alias("_w")
-    )
-    plan = winners._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
+    ev = spark.createDataFrame(
+        rows, ["op_lsn", "op", "conv_id", "turn_idx", "role", "text"]
+    ).withColumn("_prio", F.lit(0))
+    for spread in (1, 4):
+        winners = epoch_winners(ev, n_buckets=8, spread=spread, partitions=8)
+        plan = winners._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
+        assert "max_by" in plan, plan
 
 
 def test_merge_into_compiles_to_single_join(spark, tmp_path):

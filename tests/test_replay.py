@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 
 from maestro_spark.gen import GenConfig, expected_final_state, generate, write_log
@@ -167,8 +169,9 @@ def test_distributed_generator_replay(spark, tmp_path):
 
 
 def test_mor_scan_matches_shuffle_resolve(spark, tmp_path):
-    """The bucket-local mor_scan resolution must equal the max_by shuffle
-    formulation, and its read plan must contain no Exchange."""
+    """The bucket-local mor_scan resolution must equal the JVM exchange
+    resolve (compaction's large-tier fold, called directly on every bucket),
+    and its read plan must contain no Exchange."""
     cfg = GenConfig(seed=13, n_convs=30, segment_rows=250, evolution_at=0.5)
     log = generate(cfg)
     write_log(log, str(tmp_path / "log"), segment_rows=250)
@@ -185,11 +188,9 @@ def test_mor_scan_matches_shuffle_resolve(spark, tmp_path):
         )
 
     local = table.read_resolved()
-    spark.conf.set("maestro.read.resolve", "shuffle")
-    try:
-        shuffled = table.read_resolved()
-        assert symmetric_diff_empty(jsonable(local), jsonable(shuffled))
-    finally:
-        spark.conf.unset("maestro.read.resolve")
+    snap = table.snapshot()
+    groups = [[os.path.join(table.root, p) for p in ps] for ps in snap.files.values()]
+    shuffled = table._fold_exchange(snap.schema, groups, snap.n_buckets).drop("pk_bucket")
+    assert symmetric_diff_empty(jsonable(local), jsonable(shuffled))
     plan = local._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan

@@ -72,6 +72,22 @@ def test_failing_statement_discards_everything(spark, wh):
     assert _state(t) == {("A", 0): "a0"}
 
 
+def test_failed_script_leaves_view_on_committed_state(spark, wh):
+    """After a failing script the temp view serves the COMMITTED table, not
+    the discarded branch (whose files are gone)."""
+    t = _mk(spark, wh, "conv", [("A", 0, "a0")])
+    with pytest.raises(Exception):
+        t.sql("""
+            BEGIN;
+            INSERT INTO t (conv_id, turn_idx, role, text)
+              VALUES ('B', 0, 'user', 'b0');
+            UPDATE t SET text = no_such_column || 'x';
+            COMMIT;
+        """)
+    rows = spark.sql("SELECT conv_id, turn_idx, text FROM t").collect()
+    assert [tuple(r) for r in rows] == [("A", 0, "a0")]
+
+
 def test_script_grammar_refusals(spark, wh):
     t = _mk(spark, wh, "conv", [("A", 0, "a0")])
     with pytest.raises(ValueError, match="COMMIT or ROLLBACK"):
@@ -120,6 +136,10 @@ def test_cross_table_failure_moves_nothing(spark, wh):
         """)
     assert a.snapshot().snapshot_id == sa and b.snapshot().snapshot_id == sb
     assert _state(a) == {("A", 0): "a0"} and _state(b) == {("B", 0): "b0"}
+    # the catalog views serve the committed states, not the dead branches
+    for name, want in (("conv_a", ("A", "a0")), ("conv_b", ("B", "b0"))):
+        rows = spark.sql(f"SELECT conv_id, text FROM {name}").collect()
+        assert [tuple(r) for r in rows] == [want]
 
 
 def test_transactional_ddl_plus_dml(spark, wh):
