@@ -6,7 +6,7 @@ empty at build time, see SURVEY.md §0 — the binding spec is BASELINE.json
 
 - ordered change events (insert/update/delete) over multi-turn transcript rows,
 - max-LSN dedup per (conv_id, turn_idx),
-- key-partitioned copy-on-write MERGE into a snapshot-versioned parquet lake
+- key-partitioned merge-on-read MERGE into a snapshot-versioned parquet lake
   (Iceberg-capability layer built from scratch: no Iceberg jars exist here),
 - schema evolution on write, exactly-once epoch-stamped commits,
 - per-partition lineage + throughput metrics,

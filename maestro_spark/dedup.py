@@ -30,10 +30,9 @@ def dedup_max_lsn(
     order).
 
     ``order`` is a column name or expression; callers with a tie-break pass a
-    struct (the merge passes ``struct(op_lsn, _prio)`` so current table state
-    wins LSN ties against a re-delivered event with identical content, reads
-    pass ``struct(_lsn, _seq)`` so the later commit wins). Columns that only
-    feed the order ride along in the output; drop them after.
+    struct (reads pass ``struct(_lsn, _seq)`` so the later commit wins).
+    Columns that only feed the order ride along in the output; drop them
+    after.
     """
     keys = keys or KEY_COLS
     rest = [c for c in events.columns if c not in keys]

@@ -230,18 +230,13 @@ class FileStatsStore:
         os.rename(tmp, os.path.join(self.dir, fn))
         self._loaded.add(fn)
 
-    def add_files(self, rels: list[str], extra: dict[str, dict] | None = None) -> None:
-        """Harvest footer stats for freshly-written files; one shard.
-        ``extra`` merges additional per-file metadata (e.g. the JVM-built
-        ``key_bloom``) into the same entry — shards replace whole entries on
-        load, so bloom and footer stats must travel together."""
+    def add_files(self, rels: list[str]) -> None:
+        """Harvest footer stats for freshly-written files; one shard."""
         if not rels:
             return
-        shard = {rel: collect_file(os.path.join(self.root, rel)) for rel in rels}
-        for rel, add in (extra or {}).items():
-            if rel in shard:
-                shard[rel].update(add)
-        self._write_shard(shard)
+        self._write_shard(
+            {rel: collect_file(os.path.join(self.root, rel)) for rel in rels}
+        )
 
     def merge_extra(self, extra: dict[str, dict]) -> None:
         """Merge per-file metadata (e.g. backfilled blooms) into existing

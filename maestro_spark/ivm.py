@@ -40,8 +40,8 @@ refresh is a full recompute (still exactly-once, still cursor-tracked).
 
 Scale posture: one bucket-pruned scan + one aggregation + merge_batch's
 single exchange per refresh; nothing driver-side except the bounded
-changed-bucket id list (≤ n_buckets ints, the same bound the COW planner
-already accepts).
+changed-bucket id list (≤ n_buckets ints, the same bound the merge's
+changed-bucket observation already accepts).
 """
 
 from __future__ import annotations

@@ -5,7 +5,8 @@ capabilities the north star needs are built directly:
 
 - hash-bucketed layout ``data/pk_bucket=<pmod(xxhash64(conv_id), B)>/`` —
   Python-side manifest pruning plays the role of partition pruning, and the
-  bucket is the MERGE unit (copy-on-write per changed bucket);
+  bucket is the MERGE unit (each epoch appends delta files to the buckets
+  it changed);
 - snapshot isolation + time travel: every commit writes
   ``_snapshots/s-<id>.json`` (file list per bucket, schema, parent, epoch key);
   readers pin a snapshot;
@@ -56,6 +57,10 @@ LEDGER_DIR = "_ledger"
 LINEAGE_DIR = "_lineage"
 DATA_DIR = "data"
 MANIFEST_PREFIX = "m-"
+# compact_tiered's size-tier ratio (LakeTable._fold_suffix's ``factor``)
+TIER_FACTOR = 4.0
+# files per job in build_key_blooms' chunked backfill
+BLOOM_BACKFILL_BATCH_FILES = 256
 
 
 def load_snapshot(root: str, sid: int, cache: dict | None = None) -> "Snapshot":
@@ -238,7 +243,7 @@ class LakeTable:
         equals ``snap.files`` (commit() builds it as parent's list + one
         manifest of just this commit's new files — O(new files) metadata).
         Without it, the full state consolidates into a single manifest
-        (create/clone/rollback/rebucket/COW/compaction — the cadence that
+        (create/clone/rollback/rebucket/purge/compaction — the cadence that
         bounds list length)."""
         snap.committed_at = time.time()
         if manifest_names is None:
@@ -508,20 +513,20 @@ class LakeTable:
         range committed is emitted — one row per (key, epoch) batch winner
         (intra-epoch intermediates never reach disk; the merge writes each
         epoch's winners), tagged with ``snapshot_id``, deduplicated on
-        (key, lsn) so a copy-on-write epoch's re-stated rows (same row,
-        same LSN) appear once, at their first emission. This is the
-        version-history feed :meth:`scd2` builds on.
+        (key, lsn) so rows a :meth:`purge` bucket rewrite re-states (the
+        bucket's other keys, same row, same LSN) appear once, at their first
+        emission. This is the version-history feed :meth:`scd2` builds on.
 
         This is manifest arithmetic, not a table diff: each epoch snapshot in
         the range contributes exactly the data files it ADDED (per-bucket set
         difference vs its parent), and the net change per key is the max-LSN
-        winner across those files — under merge-on-read an epoch's added
-        files are precisely its batch winners, so the feed is exact. Under a
-        copy-on-write epoch the added files are full bucket rewrites, so the
-        feed may also carry unchanged rows of touched buckets re-stated at
-        their current LSN — still correct to apply (idempotent upserts), just
-        wider. Maintenance (compaction) snapshots are content-preserving and
-        contribute nothing.
+        winner across those files — an epoch's added files are precisely its
+        batch winners, so the feed is exact. A :meth:`purge` snapshot's added
+        file is a full rewrite of one bucket, so the feed also carries that
+        bucket's unchanged rows re-stated at their current LSN — still
+        correct to apply (idempotent upserts), just wider. Maintenance
+        (compaction) snapshots are content-preserving and contribute
+        nothing.
 
         Applying the feed for ``(k, n]`` on top of snapshot ``k`` reproduces
         snapshot ``n`` exactly (tombstones ride along as ``op='delete'``) —
@@ -588,7 +593,7 @@ class LakeTable:
         keys = S.KEY_COLS
         if not collapse:
             # one row per (key, lsn): the first commit that emitted the
-            # version wins the tag (COW re-statements carry the SAME lsn
+            # version wins the tag (purge re-statements carry the SAME lsn
             # and identical payload — the one-LSN-one-payload invariant —
             # so this dedup is exact, not a choice among candidates)
             rest2 = [c for c in union.columns if c not in (*keys, S.LSN_COL)]
@@ -1078,23 +1083,20 @@ class LakeTable:
         per-file key blooms, as ``(original_commit_seq, rel_path)`` pairs
         (the preserved seq keeps LSN-tie resolution commit-ordered), and
         ``total`` is the bucket's unpruned file count. Files without a
-        bloom (pre-upgrade shards, keyBloom=false writers) are kept —
-        pruning is only ever evidence-based. maestro.lookup.bloom=false
-        disables pruning (the A/B path the equality tests use)."""
+        bloom (not yet indexed by :meth:`build_key_blooms`) are kept —
+        pruning is only ever evidence-based, and blooms have no false
+        negatives."""
         from maestro_spark import filestats as FS
         from maestro_spark.keyhash import bucket_of
 
         snap = self.snapshot(snapshot_id)
         b = bucket_of(conv_id, snap.n_buckets)
         ps = snap.files.get(str(b), [])
-        if self.spark.conf.get("maestro.lookup.bloom", "true") == "true":
-            cand = [
-                (j, p)
-                for j, p in enumerate(ps)
-                if FS.bloom_maybe_contains(self.file_stats.get(p), conv_id)
-            ]
-        else:
-            cand = list(enumerate(ps))
+        cand = [
+            (j, p)
+            for j, p in enumerate(ps)
+            if FS.bloom_maybe_contains(self.file_stats.get(p), conv_id)
+        ]
         return b, cand, len(ps)
 
     def lookup(
@@ -1252,12 +1254,10 @@ class LakeTable:
         # parquet min/max stats prune key lookups and the MOR resolver's
         # bucket-local merge stays cache-friendly. Spark would insert a
         # pk_bucket-only sort for the dynamic-partition write anyway, so the
-        # marginal cost is the two extra sort keys. maestro.write.sortWithin=
-        # false drops to that implicit sort for write-throughput experiments.
-        if self.spark.conf.get("maestro.write.sortWithin", "true") == "true":
-            df = df.sortWithinPartitions(
-                "pk_bucket", *(sort_cols or ["conv_id", "turn_idx"])
-            )
+        # marginal cost is the two extra sort keys.
+        df = df.sortWithinPartitions(
+            "pk_bucket", *(sort_cols or ["conv_id", "turn_idx"])
+        )
         # "__"-prefixed sort columns NOT in the table schema are ordering
         # helpers (e.g. the z-order key), not payload — project them away
         # AFTER the sort (a projection preserves the child's row order, so
@@ -1292,33 +1292,24 @@ class LakeTable:
         shutil.rmtree(staging, ignore_errors=True)
         # zone maps: footer stats for the files just born (metadata-only;
         # also feeds lineage, which therefore never re-opens these footers).
-        # Key blooms (maestro.stats.keyBloom): the default "explicit" keeps
-        # the ENTIRE ingest path untouched (events/sec is the north-star
-        # metric; the A/B measured ~5-7% replay cost for auto modes) —
-        # blooms are built by the serving-prep call build_key_blooms() /
-        # CLI bloom-index. Opt-ins: "maintenance" backfills on the
-        # compaction cadence, "commit" builds inline here (~0.6s/epoch at
-        # bench scale), "off" disables even the explicit call. Lookups stay
-        # exact in every mode (no bloom = no pruning).
-        rels_all = [p for ps in out.values() for p in ps]
-        extra = None
-        mode = self.spark.conf.get("maestro.stats.keyBloom", "explicit")
-        if rels_all and mode in ("commit", "true"):
-            extra = self._build_key_blooms(rels_all)
-        self.file_stats.add_files(rels_all, extra=extra)
+        # Key blooms are NOT built here: the ingest path stays untouched
+        # (events/sec is the north-star metric; an inline build measured
+        # ~5-7% replay cost) — they come from the serving-prep call
+        # build_key_blooms() (CLI bloom-index, optimize()). Lookups stay
+        # exact either way (no bloom = no pruning).
+        self.file_stats.add_files([p for ps in out.values() for p in ps])
         return out
 
     def build_key_blooms(self, snapshot_id: int | None = None) -> int:
         """Backfill per-file key blooms for every live file lacking one
         (idempotent; returns the number built). The serving-side prep call:
-        run it once before opening a table to point-lookup traffic, or let
-        the compaction cadence invoke it. Cost is one column-pruned scan of
-        the UNBLOOMED files only — already-indexed files are never re-read,
-        so steady-state cadence cost tracks the new-delta byte rate."""
+        run it once before opening a table to point-lookup traffic (CLI
+        ``bloom-index``; ``optimize()`` runs it too). Cost is one
+        column-pruned scan of the UNBLOOMED files only — already-indexed
+        files are never re-read, so a repeated call costs only the files
+        written since the last one."""
         from maestro_spark import filestats as FS
 
-        if self.spark.conf.get("maestro.stats.keyBloom", "explicit") in ("off", "false"):
-            return 0
         snap = self.snapshot(snapshot_id)
         missing = [
             p
@@ -1334,7 +1325,7 @@ class LakeTable:
         # Chunk the file list so each job scans a bounded file set and the
         # driver holds at most one chunk's finished ~KB bitsets (the bitsets
         # themselves are assembled EXECUTOR-side — see _build_key_blooms).
-        batch = int(self.spark.conf.get("maestro.bloom.backfillBatchFiles", "256"))
+        batch = BLOOM_BACKFILL_BATCH_FILES
         built = 0
         for i in range(0, len(missing), batch):
             extra = self._build_key_blooms(missing[i : i + batch])
@@ -1512,16 +1503,16 @@ class LakeTable:
         dropped_add: list[str] | None = None,
     ) -> Snapshot:
         """Commit new bucket files; untouched buckets carried forward by
-        reference. ``append=False`` (copy-on-write / compaction) replaces each
-        listed bucket's file set; ``append=True`` (merge-on-read delta commit)
-        appends the new files after the bucket's existing ones.
+        reference. ``append=False`` (bucket rewrite: compaction, purge, DDL)
+        replaces each listed bucket's file set; ``append=True`` (merge-on-read
+        delta commit) appends the new files after the bucket's existing ones.
 
         ``base`` is the snapshot id the caller PLANNED from (read its file
         lists / schema / max LSN). The whole window between that planning
         read and this commit is validated — every snapshot committed in
         ``(base, tip]`` runs through the same validate-and-rebase rules
         BEFORE the first publish attempt, so a delta landing while a
-        compaction/purge/COW job runs raises :class:`CommitConflict` instead
+        compaction/purge/DDL rewrite runs raises :class:`CommitConflict` instead
         of being silently dropped by the rewrite. Omitting ``base`` (the
         pre-round-3 behavior) protects only the CAS window itself.
 
@@ -1547,7 +1538,7 @@ class LakeTable:
           files are per-epoch batch winners and the max-(lsn, seq) resolve
           is order-insensitive across writers; a concurrent compaction only
           folded *older* files, so appending after it stays correct.
-        - ``append=False`` (COW / compaction): rebasable only when the
+        - ``append=False`` (bucket rewrite): rebasable only when the
           intervening commits touched DISJOINT buckets — our replacement
           content was computed from the planning snapshot's bucket state, so
           an overlapping touch (or drop) means lost updates →
@@ -2463,7 +2454,6 @@ class LakeTable:
         self,
         buckets: list[int] | None = None,
         min_fold: int = 2,
-        factor: float | None = None,
     ) -> Snapshot | None:
         """Size-tiered compaction: fold each bucket's small recent delta tier
         into one file — work proportional to DELTA bytes, never a cadence
@@ -2487,8 +2477,6 @@ class LakeTable:
         foldable tier."""
         t0 = time.time()
         snap = self.snapshot()
-        if factor is None:
-            factor = float(self.spark.conf.get("maestro.compact.tierFactor", "4.0"))
         todo = [int(b) for b in snap.files] if buckets is None else buckets
         keep: dict[str, list[str]] = {}
         groups: list[list[str]] = []
@@ -2497,7 +2485,7 @@ class LakeTable:
         for b in todo:
             ps = snap.files.get(str(b), [])
             sizes = [self._file_bytes(p) for p in ps]
-            k = self._fold_suffix(sizes, min_fold, factor)
+            k = self._fold_suffix(sizes, min_fold, TIER_FACTOR)
             if not k:
                 continue
             keep[str(b)] = ps[: len(ps) - k]
@@ -2537,7 +2525,7 @@ class LakeTable:
             )
             df = mor_scan.scan(self.spark, scan_schema, groups, snap.n_buckets)
         new_files = self.write_bucket_files(df)
-        out = self.commit(
+        return self.commit(
             {b: keep[b] + new_files.get(b, []) for b in keep},
             epoch_key=None,
             stats={
@@ -2550,13 +2538,6 @@ class LakeTable:
             append=False,
             base=snap.snapshot_id,
         )
-        # opt-in bloom maintenance rides the compaction cadence: index the
-        # freshly folded files plus any deltas that landed since the last
-        # fold — O(unbloomed bytes) only (default "explicit" skips this;
-        # ingest-time compactions then cost nothing extra)
-        if self.spark.conf.get("maestro.stats.keyBloom", "explicit") == "maintenance":
-            self.build_key_blooms(snapshot_id=out.snapshot_id)
-        return out
 
     def expire_snapshots(
         self, keep_last: int = 10, older_than_seconds: float | None = None

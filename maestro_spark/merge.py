@@ -1,39 +1,31 @@
 """Key-partitioned MERGE — dedup + upsert in ONE shuffle (SURVEY §2.K2-K7).
 
-The merge is *not* a join; both write modes reduce to max-LSN dedup:
+The merge is *not* a join; it reduces to max-LSN dedup of the batch alone.
+The write path is merge-on-read (MOR): each epoch writes ONLY the batch's
+per-key winners as new *delta* files appended to their buckets; the current
+table is never read or rewritten. Resolution happens at read time
+(``LakeTable.read_resolved``: the bucket-local ``mor_scan`` resolve, max
+``(_lsn, commit seq)`` across a bucket's base+delta files), and size-tiered
+compaction (LSM-style, triggered at ``maestro.compact.maxDeltas`` files per
+bucket) folds each bucket's recent delta tier into one resolved file.
+Per-epoch write volume is O(batch), not O(table) — at 10^10 events a
+copy-on-write epoch would rewrite the whole table every microbatch, which is
+the difference between a viable 1000-executor ingest and an I/O-bound one.
+Read-heavy tables get one file per bucket from an explicit
+``compact()``/``optimize()``. This is the same base+delta design as Hudi MOR
+/ Iceberg v2 row-level deletes, built from scratch per the north rule.
 
-**merge-on-read (default, ``maestro.merge.mode=mor``)** — the scale path.
-Each epoch writes ONLY the batch's per-key winners as new *delta* files
-appended to their buckets; the current table is never read or rewritten.
-Resolution happens at read time (``LakeTable.read_resolved``: the
-bucket-local ``mor_scan`` resolve, max ``(_lsn, commit seq)`` across a
-bucket's base+delta files), and size-tiered compaction (LSM-style,
-triggered at ``maestro.compact.maxDeltas`` files per bucket) folds each
-bucket's recent delta tier into one resolved file. Per-epoch write volume
-is O(batch), not O(table) — at 10^10 events a copy-on-write epoch would
-rewrite the whole table every microbatch, which is the difference between a
-viable 1000-executor ingest and an I/O-bound one. This is the same
-base+delta design as Hudi MOR / Iceberg v2 row-level deletes, built from
-scratch per the north rule.
-
-**copy-on-write (``maestro.merge.mode=cow``)** — read-optimized mode.
-Current bucket contents are re-expressed as pseudo-events (``op_lsn =
-_lsn``, ``op = delete if tombstone else insert``) and unioned with the
-batch; max-LSN dedup over the union IS the merge:
-
-    winners(union(current_as_events, batch)) == new bucket content
-
-Both collapse SURVEY's K2 (dedup), K5 (apply) and cross-epoch LSN dominance
-into a single ``dedup_max_lsn`` aggregation (maestro_spark.dedup) with
-map-side partial aggregation — correct by induction on epochs, and exactly one hash exchange
-per epoch.
+SURVEY's K2 (dedup), K5 (apply) and cross-epoch LSN dominance collapse into
+a single ``dedup_max_lsn`` aggregation (maestro_spark.dedup) with map-side
+partial aggregation — correct by induction on epochs, and exactly one hash
+exchange per epoch.
 
 Shuffle/partitioning strategy (explicit, per north_rule):
 - the event set is repartitioned on ``(pk_bucket, turn_idx % spread)`` —
   bucket-aligned so the subsequent ``write.partitionBy(pk_bucket)`` needs no
   second shuffle; `spread` fans a hot conversation out across tasks (skew
   salting that never touches the dedup key, SURVEY M5) and is sized from the
-  planning pass (rows per changed bucket) so cold epochs write exactly one
+  previous epoch's rows per changed bucket so cold epochs write exactly one
   file per bucket; the exchange has an explicit
   ``min(shuffle partitions, buckets × spread)`` partitions, so even a small
   epoch writes its bucket files on every core;
@@ -66,42 +58,20 @@ from maestro_spark.ledger import Ledger
 from maestro_spark.lineage import append_lineage
 
 
-def plan_changed_buckets(batch: DataFrame, n_buckets: int) -> list[int]:
-    """K4: the copy-on-write unit set — distinct buckets touched by the batch.
-
-    Collects at most ``n_buckets`` ints (bounded by bucket count, not data),
-    so this stays driver-cheap at any scale.
-    """
-    rows = batch.select(bucket_expr("conv_id", n_buckets).alias("b")).distinct().collect()
-    return sorted(r["b"] for r in rows)
-
-
-def _as_pseudo_events(current: DataFrame) -> DataFrame:
-    """Current table rows -> change events that 'recreate' them (K5 core)."""
-    return (
-        current.withColumn(
-            "op", F.when(F.col(S.DELETED_COL), F.lit("delete")).otherwise(F.lit("insert"))
-        )
-        .withColumn("op_lsn", F.col(S.LSN_COL))
-        .drop(S.LSN_COL, S.DELETED_COL)
-    )
-
-
 def epoch_winners(
     events: DataFrame, n_buckets: int, spread: int, partitions: int
 ) -> DataFrame:
     """The epoch's ONE exchange, on ``(pk_bucket, turn_idx % spread)`` into
-    ``partitions`` partitions, then the max-``(op_lsn, _prio)`` winner per
-    key. Grouping on the partitioning columns plus the key lets Catalyst
-    reuse the exchange for the aggregation (tests/test_plan_quality.py)."""
+    ``partitions`` partitions, then the max-``op_lsn`` winner per key.
+    Grouping on the partitioning columns plus the key lets Catalyst reuse
+    the exchange for the aggregation (tests/test_plan_quality.py)."""
     ev = (
         events.withColumn("pk_bucket", bucket_expr("conv_id", n_buckets))
         .withColumn("_spread", F.pmod(F.col("turn_idx"), F.lit(spread)))
         .repartition(partitions, "pk_bucket", "_spread")
     )
     return dedup_max_lsn(
-        ev, ["pk_bucket", "_spread", "conv_id", "turn_idx"],
-        F.struct("op_lsn", "_prio"),
+        ev, ["pk_bucket", "_spread", "conv_id", "turn_idx"], "op_lsn"
     ).drop("_spread")
 
 
@@ -163,14 +133,10 @@ def merge_batch(
     # older than the ledger watermark are never dropped — LSN dominance
     # applies regardless of event time — but they ARE counted so lineage
     # exposes lateness), and the new watermark (max event ts) for the ledger.
-    #
-    # COW must know the changed-bucket set BEFORE the job (it decides which
-    # current files to fold in), so it pays a separate planning scan of the
-    # batch. MOR needs nothing before the job — all planning metrics ride the
+    # Nothing is planned before the job — all planning metrics ride the
     # single write job as Observations, so each epoch scans the batch exactly
     # once regardless of scale.
     prev_wm = ledger.last_watermark()
-    mode = table.spark.conf.get("maestro.merge.mode", "mor")
     has_ts = "ts" in batch.columns
     late_expr = (
         (F.col("ts") < F.lit(prev_wm).cast("timestamp_ntz")).cast("long")
@@ -194,82 +160,54 @@ def merge_batch(
     ]
 
     t_plan0 = time.time()
-    changed: list[int] | None  # None = unknown until the job runs (MOR)
-    obs_in: Observation | None = None
-    invalid_events = 0
     raw_batch = batch  # pre-observe handle: the quarantine write (rare path)
     # re-executes the batch plan, which must NOT carry the Observation node
-    if mode == "cow":
-        plan_row = batch.agg(
-            F.collect_set(bucket_expr("conv_id", n_buckets)).alias("buckets"), *in_aggs
-        ).head()
-        changed = sorted(plan_row["buckets"])
-        rows_in, late_events, max_ts, invalid_events = (
-            plan_row["rows_in"], plan_row["late_events"], plan_row["max_ts"],
-            plan_row["invalid_events"] or 0,
-        )
-    else:
-        changed = None
-        obs_in = Observation(f"epoch-{epoch_id}-in")
-        batch = batch.observe(obs_in, *in_aggs)
+    obs_in = Observation(f"epoch-{epoch_id}-in")
+    batch = batch.observe(obs_in, *in_aggs)
     t_plan = time.time() - t_plan0
-    batch = batch.filter(reason.isNull())
-
-    bat_ev = S.conform(batch, event_schema).withColumn("_prio", F.lit(0))
-    if mode == "cow" and changed:
-        # read-optimized mode: fold current state in and rewrite the buckets
-        current = table.read_raw(changed)
-        cur_ev = S.conform(_as_pseudo_events(current), event_schema).withColumn(
-            "_prio", F.lit(1)  # current state wins an LSN tie vs re-delivered event
-        )
-        unioned = cur_ev.unionByName(bat_ev)
-    else:
-        # merge-on-read: deltas only — the current table is never touched
-        unioned = bat_ev
+    # deltas only — the current table is never touched
+    events = S.conform(batch.filter(reason.isNull()), event_schema)
 
     # Partition the ONE exchange by (pk_bucket, turn_idx % spread):
     # - bucket-aligned, so write.partitionBy(pk_bucket) needs no 2nd shuffle;
     # - a hot conversation spreads over `spread` tasks (skew, north_rule) —
     #   the salt is derived from turn_idx, i.e. *inside* the dedup key, so
     #   grouping correctness is untouched;
-    # - spread is sized from the planning pass: rows per changed bucket over
-    #   the per-task row target. Cold epochs get spread=1 → exactly one file
-    #   per bucket per epoch (small-file pressure is what kills MOR reads);
-    #   a skewed epoch fans hot buckets out instead of pinning one task;
+    # - spread is rows per changed bucket over the per-task row target, from
+    #   the previous epoch's observed input (steady streams are stable
+    #   epoch-to-epoch; a wrong guess only changes file fan-out, never
+    #   correctness). Cold epochs get spread=1 → exactly one file per bucket
+    #   per epoch (small-file pressure is what kills MOR reads); a skewed
+    #   epoch fans hot buckets out instead of pinning one task;
     # - the partition count is explicit, min(shuffle partitions, buckets x
     #   spread), so AQE cannot coalesce a small epoch into ONE writing task
     #   that writes every bucket file in turn: the write spreads over every
     #   core, while each (pk_bucket, _spread) still lands in one partition.
     rows_per_task = int(table.spark.conf.get("maestro.merge.rowsPerTask", "1000000"))
     max_spread = int(table.spark.conf.get("maestro.merge.spread", "4"))
-    if mode == "cow":
-        est_rows, est_buckets = rows_in, max(1, len(changed or []))
-    else:
-        # MOR sizes the fan-out from the previous epoch's observed input —
-        # steady streams are stable epoch-to-epoch, and a wrong guess only
-        # changes file fan-out, never correctness. The parent may be a
-        # maintenance (compaction) snapshot whose stats carry no input
-        # metrics, so walk back (bounded) to the most recent epoch commit.
-        p = parent
-        for _ in range(8):
-            if "rows_in" in p.stats or p.parent_id is None:
-                break
-            try:
-                p = table.snapshot(p.parent_id)
-            except FileNotFoundError:  # expired ancestor: estimate from here
-                break
-        est_rows = p.stats.get("rows_in") or 0
-        est_buckets = max(1, p.stats.get("changed_buckets") or n_buckets)
+    # The parent may be a maintenance (compaction) snapshot whose stats
+    # carry no input metrics, so walk back (bounded) to the most recent
+    # epoch commit.
+    p = parent
+    for _ in range(8):
+        if "rows_in" in p.stats or p.parent_id is None:
+            break
+        try:
+            p = table.snapshot(p.parent_id)
+        except FileNotFoundError:  # expired ancestor: estimate from here
+            break
+    est_rows = p.stats.get("rows_in") or 0
+    est_buckets = max(1, p.stats.get("changed_buckets") or n_buckets)
     spread = max(1, min(max_spread, int(est_rows / est_buckets // rows_per_task) + 1))
     winners = epoch_winners(
-        unioned, n_buckets, spread,
+        events, n_buckets, spread,
         min(int(table.spark.conf.get("spark.sql.shuffle.partitions")),
             n_buckets * spread),
     )
     result = (
         winners.withColumn(S.LSN_COL, F.col("op_lsn"))
         .withColumn(S.DELETED_COL, F.col("op") == F.lit("delete"))
-        .drop("op", "op_lsn", "_prio")
+        .drop("op", "op_lsn")
     )
     obs = Observation(f"epoch-{epoch_id}")
     result = result.observe(
@@ -281,36 +219,27 @@ def merge_batch(
     )
 
     cols = ["pk_bucket"] + [f.name for f in full_schema.fields]
-    run_job = changed is None or bool(changed)  # COW skips the job on an empty batch
     t_write0 = time.time()
-    new_files = (
-        table.write_bucket_files(result.select(*cols), schema=full_schema)
-        if run_job
-        else {}
-    )
+    new_files = table.write_bucket_files(result.select(*cols), schema=full_schema)
     t_write = time.time() - t_write0
-    if run_job:
-        try:
-            metrics = dict(obs.get)
-            changed = sorted(metrics.pop("buckets"))
-        except Exception:
-            # Degenerate plan: when Catalyst can statically prove the merge
-            # input empty (e.g. a LOCAL-relation batch whose every row is
-            # quarantined), the optimizer collapses the observed subtree and
-            # CollectMetrics never executes — Observation.get then asserts.
-            # File-backed epochs (the real path) always execute tasks, so
-            # this fallback only ever pays on tiny driver-local batches.
-            metrics = {"rows_out": 0, "tombstones_out": 0, "max_lsn": None}
-            changed = []
-    else:
+    try:
+        metrics = dict(obs.get)
+        changed = sorted(metrics.pop("buckets"))
+    except Exception:
+        # Degenerate plan: when Catalyst can statically prove the merge
+        # input empty (e.g. a LOCAL-relation batch whose every row is
+        # quarantined), the optimizer collapses the observed subtree and
+        # CollectMetrics never executes — Observation.get then asserts.
+        # File-backed epochs (the real path) always execute tasks, so
+        # this fallback only ever pays on tiny driver-local batches.
         metrics = {"rows_out": 0, "tombstones_out": 0, "max_lsn": None}
-    if obs_in is not None:  # MOR: planning metrics observed on the same job
-        try:
-            row = dict(obs_in.get)
-        except Exception:  # same degenerate-plan case: recount directly
-            row = raw_batch.agg(*in_aggs).head().asDict()
-        rows_in, late_events, max_ts = row["rows_in"], row["late_events"], row["max_ts"]
-        invalid_events = row["invalid_events"] or 0
+        changed = []
+    try:  # planning metrics observed on the same job
+        row = dict(obs_in.get)
+    except Exception:  # same degenerate-plan case: recount directly
+        row = raw_batch.agg(*in_aggs).head().asDict()
+    rows_in, late_events, max_ts = row["rows_in"], row["late_events"], row["max_ts"]
+    invalid_events = row["invalid_events"] or 0
     if invalid_events:
         import os as _os
 
@@ -330,7 +259,6 @@ def merge_batch(
         "rows_in": rows_in,
         "late_events": late_events or 0,
         "invalid_events": int(invalid_events),
-        "mode": mode,
         "changed_buckets": len(changed),
         "wall_s": round(wall, 3),
         "plan_s": round(t_plan, 3),
@@ -339,8 +267,7 @@ def merge_batch(
     }
 
     snap = table.commit(  # commit point
-        new_files, epoch_key, schema=full_schema, stats=stats,
-        append=(mode != "cow"),
+        new_files, epoch_key, schema=full_schema, stats=stats, append=True,
         # the planning window starts where the caller's plan read happened
         # (DML passes its LSN-acquisition snapshot); by default at this
         # epoch's own parent read above — either way a rebucket/rollback
@@ -371,7 +298,7 @@ def merge_batch(
     # Timing is recorded in the compaction snapshot's own stats (this epoch's
     # ledger entry is already durable).
     max_deltas = int(table.spark.conf.get("maestro.compact.maxDeltas", "8"))
-    if mode != "cow" and max_deltas > 0:
+    if max_deltas > 0:
         due = table.delta_buckets(max_deltas)
         if due:
             try:

@@ -238,19 +238,16 @@ def test_key_bloom_prunes_delta_files_exactly(spark, tmp_path):
     """Three keys forced into ONE bucket; epoch 2 updates only the first.
     The untouched keys' lookups must bloom-prune the epoch-2 delta file
     (cand < total) while every lookup stays byte-equal to the unpruned
-    path — blooms are an IO plan change, never a semantics change."""
+    full read — blooms are an IO plan change, never a semantics change."""
     k1, k2, k3 = _same_bucket_keys(4, 3)
     t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
-    spark.conf.set("maestro.stats.keyBloom", "commit")  # inline-build mode
-    try:
-        merge_batch(t, _events(spark, [
-            (1, "insert", k1, 0, "one"),
-            (2, "insert", k2, 0, "two"),
-            (3, "insert", k3, 0, "three"),
-        ]), "q", 0)
-        merge_batch(t, _events(spark, [(9, "update", k1, 0, "one-v2")]), "q", 1)
-    finally:
-        spark.conf.set("maestro.stats.keyBloom", "explicit")
+    merge_batch(t, _events(spark, [
+        (1, "insert", k1, 0, "one"),
+        (2, "insert", k2, 0, "two"),
+        (3, "insert", k3, 0, "three"),
+    ]), "q", 0)
+    merge_batch(t, _events(spark, [(9, "update", k1, 0, "one-v2")]), "q", 1)
+    assert t.build_key_blooms() == 2
 
     _, cand1, total1 = t.plan_lookup(k1)
     assert total1 == 2 and len(cand1) == 2  # k1 is in both files
@@ -259,14 +256,10 @@ def test_key_bloom_prunes_delta_files_exactly(spark, tmp_path):
         assert total == 2
         assert len(cand) == 1, f"{k}: epoch-2 delta not pruned"
         assert cand[0][0] == 0  # original commit seq preserved
-    # equality pruned vs unpruned, incl. a missing key
+    # equality pruned vs the unpruned full read, incl. a missing key
     for k in (k1, k2, k3, "absent-key"):
         pruned = sorted(map(tuple, t.lookup(k).collect()))
-        spark.conf.set("maestro.lookup.bloom", "false")
-        try:
-            plain = sorted(map(tuple, t.lookup(k).collect()))
-        finally:
-            spark.conf.set("maestro.lookup.bloom", "true")
+        plain = sorted(map(tuple, t.read().filter(F.col("conv_id") == k).collect()))
         assert pruned == plain, k
     assert [r.text for r in t.lookup(k1).collect()] == ["one-v2"]
 
@@ -286,8 +279,8 @@ def test_key_bloom_no_false_negatives_and_parity(spark, tmp_path):
     write_log(log, str(tmp_path / "log"), segment_rows=400)
     t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=8)
     replay(spark, str(tmp_path / "log"), t, query_id="lk")
-    # default mode is "explicit": ingest wrote no blooms; the serving-prep
-    # call indexes every live file once and is then a no-op
+    # ingest writes no blooms; the serving-prep call indexes every live
+    # file once and is then a no-op
     assert t.build_key_blooms() > 4
     assert t.build_key_blooms() == 0
     snap = t.snapshot()
@@ -309,23 +302,17 @@ def test_key_bloom_no_false_negatives_and_parity(spark, tmp_path):
 
 
 def test_lookup_degrades_without_blooms_then_backfills(spark, tmp_path):
-    """Writer ran with keyBloom=off (pre-upgrade table): plan_lookup keeps
-    every file (evidence-based pruning only) and lookup stays exact. A
-    maintenance backfill then indexes the table and pruning kicks in —
-    with results unchanged."""
+    """The writer builds no blooms: plan_lookup keeps every file
+    (evidence-based pruning only) and lookup stays exact. A backfill then
+    indexes the table and pruning kicks in — with results unchanged."""
     kA, kB, _ = _same_bucket_keys(4, 3)
-    spark.conf.set("maestro.stats.keyBloom", "off")
-    try:
-        t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
-        merge_batch(t, _events(spark, [
-            (1, "insert", kA, 0, "a0"), (2, "insert", kB, 0, "b0"),
-        ]), "q", 0)
-        merge_batch(t, _events(spark, [(3, "update", kA, 0, "a0v2")]), "q", 1)
-        _, cand, total = t.plan_lookup(kB)
-        assert total == 2 and len(cand) == total  # nothing pruned blind
-        assert t.build_key_blooms() == 0  # off-mode backfill is a no-op too
-    finally:
-        spark.conf.set("maestro.stats.keyBloom", "explicit")
+    t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
+    merge_batch(t, _events(spark, [
+        (1, "insert", kA, 0, "a0"), (2, "insert", kB, 0, "b0"),
+    ]), "q", 0)
+    merge_batch(t, _events(spark, [(3, "update", kA, 0, "a0v2")]), "q", 1)
+    _, cand, total = t.plan_lookup(kB)
+    assert total == 2 and len(cand) == total  # nothing pruned blind
     assert t.build_key_blooms() == 2
     _, cand, total = t.plan_lookup(kB)
     assert total == 2 and len(cand) == 1  # epoch-2 delta now pruned
@@ -333,16 +320,17 @@ def test_lookup_degrades_without_blooms_then_backfills(spark, tmp_path):
     assert [r.text for r in t.lookup(kB).collect()] == ["b0"]
 
 
-def test_bloom_backfill_is_chunked_and_collects_only_bitsets(spark, tmp_path):
+def test_bloom_backfill_is_chunked_and_collects_only_bitsets(spark, tmp_path, monkeypatch):
     """r3 verdict #1: the backfill must never collect key/hash PAIRS to the
     driver (a whole-table first call at 10^10 events would be GBs of heap) —
     bitsets are assembled executor-side and the file list is chunked.
     Asserted by (a) poisoning the driver-side pair assembler: the backfill
-    must succeed without it; (b) running with backfillBatchFiles=2 over >4
+    must succeed without it; (b) running with 2 files per chunk over >4
     files: one stats shard lands per chunk, and pruning/parity still hold."""
     import os
 
     from maestro_spark import filestats as FS
+    from maestro_spark import lake
 
     log = generate(GenConfig(seed=33, n_convs=30, segment_rows=200))
     write_log(log, str(tmp_path / "log"), segment_rows=200)
@@ -359,12 +347,11 @@ def test_bloom_backfill_is_chunked_and_collects_only_bitsets(spark, tmp_path):
     FS.bloom_from_pairs = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("driver-side pair assembly in the backfill path")
     )
-    spark.conf.set("maestro.bloom.backfillBatchFiles", "2")
+    monkeypatch.setattr(lake, "BLOOM_BACKFILL_BATCH_FILES", 2)
     try:
         assert t.build_key_blooms() == n_files
     finally:
         FS.bloom_from_pairs = orig
-        spark.conf.unset("maestro.bloom.backfillBatchFiles")
 
     shards_after = len(
         [f for f in os.listdir(os.path.join(t.root, "_snapshots"))

@@ -59,8 +59,6 @@ def test_merge_winners_plan_single_exchange(spark):
     exchange, then the shared dedup_max_lsn winner rule) must hit exactly
     ONE exchange keyed by the bucket columns — the engine's core scale
     claim (SURVEY §2.K5)."""
-    from pyspark.sql import functions as F
-
     from maestro_spark.merge import epoch_winners
 
     rows = [
@@ -70,7 +68,7 @@ def test_merge_winners_plan_single_exchange(spark):
     ]
     ev = spark.createDataFrame(
         rows, ["op_lsn", "op", "conv_id", "turn_idx", "role", "text"]
-    ).withColumn("_prio", F.lit(0))
+    )
     for spread in (1, 4):
         winners = epoch_winners(ev, n_buckets=8, spread=spread, partitions=8)
         plan = winners._jdf.queryExecution().executedPlan().toString()

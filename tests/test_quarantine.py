@@ -81,20 +81,6 @@ def test_quarantine_idempotent_on_redelivery(spark, table):
     assert len(read_quarantine(table, "q").collect()) == 1
 
 
-def test_quarantine_in_cow_mode(spark, table):
-    spark.conf.set("maestro.merge.mode", "cow")
-    try:
-        snap = merge_batch(table, _events(spark, [
-            (1, "insert", "A", 0, "a0"),
-            (2, "bogus", "B", 0, "bad"),
-        ]), "q", 0)
-    finally:
-        spark.conf.set("maestro.merge.mode", "mor")
-    assert snap.stats["invalid_events"] == 1
-    assert {r["conv_id"] for r in table.read().collect()} == {"A"}
-    assert read_quarantine(table, "q").head()["_reason"] == "bad_op"
-
-
 def test_all_invalid_local_batch(spark, table):
     """Every row quarantined (Catalyst statically collapses the empty merge
     input for a local batch — the degenerate-plan fallback path): the epoch

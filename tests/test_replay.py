@@ -110,37 +110,33 @@ def test_time_travel_and_vacuum(spark, tmp_path):
     assert table.vacuum() == 0  # nothing orphaned in a clean run
 
 
-def test_cow_and_mor_modes_converge(spark, tmp_path):
-    """Both write modes must produce the identical final table, and a
-    mid-replay compaction in MOR mode must not change visible content."""
+def test_compaction_churn_matches_default_layout(spark, tmp_path):
+    """Folds triggered mid-replay must not change visible content: a table
+    churned by a fold every 2 deltas per bucket reads the same as a replay
+    of the same log under the default maxDeltas, and both match the
+    oracle."""
     cfg = GenConfig(seed=11, n_convs=40, segment_rows=300)
     log = generate(cfg)
     write_log(log, str(tmp_path / "log"), segment_rows=300)
 
-    t_mor = LakeTable.create(spark, str(tmp_path / "lake_mor"), n_buckets=4)
+    churned = LakeTable.create(spark, str(tmp_path / "lake_churned"), n_buckets=4)
     # force compaction churn: every 2 deltas per bucket triggers a fold
     spark.conf.set("maestro.compact.maxDeltas", "2")
     try:
-        replay(spark, str(tmp_path / "log"), t_mor, query_id="m")
+        replay(spark, str(tmp_path / "log"), churned, query_id="m")
     finally:
         spark.conf.unset("maestro.compact.maxDeltas")
     assert any(
-        "compacted_buckets" in s.stats
-        for s in (t_mor.snapshot(i) for i in t_mor.snapshot_ids())
-    ) or max(len(ps) for ps in t_mor.snapshot().files.values()) <= 2
+        s.stats.get("maintenance") == "compact-tiered"
+        for s in (churned.snapshot(i) for i in churned.snapshot_ids())
+    )
 
-    t_cow = LakeTable.create(spark, str(tmp_path / "lake_cow"), n_buckets=4)
-    spark.conf.set("maestro.merge.mode", "cow")
-    try:
-        replay(spark, str(tmp_path / "log"), t_cow, query_id="c")
-    finally:
-        spark.conf.unset("maestro.merge.mode")
-    # COW keeps exactly one generation of files per bucket
-    assert all(len(ps) <= 4 for ps in t_cow.snapshot().files.values())
+    default = LakeTable.create(spark, str(tmp_path / "lake_default"), n_buckets=4)
+    replay(spark, str(tmp_path / "log"), default, query_id="d")
 
-    assert symmetric_diff_empty(t_mor.read(), t_cow.read())
+    assert symmetric_diff_empty(churned.read(), default.read())
     exp = expected_final_state(log)
-    assert per_turn_text_equal(t_mor.read(), spark.createDataFrame(exp))
+    assert per_turn_text_equal(churned.read(), spark.createDataFrame(exp))
 
 
 def test_distributed_generator_replay(spark, tmp_path):

@@ -30,27 +30,21 @@ def test_count_min_sketch_runs(spark):
 
 
 def test_merge_spread_splits_hot_conversation(spark, tmp_path):
-    """The merge's (pk_bucket, turn_idx % spread) keys must spread one hot
-    conversation's events over multiple shuffle partitions."""
-    from maestro_spark.lake import bucket_expr
+    """The merge's (pk_bucket, turn_idx % spread) exchange must spread one
+    hot conversation's events over multiple shuffle partitions."""
+    from maestro_spark import merge
 
     df = spark.createDataFrame(
-        [("hot_conv", t % 32) for t in range(4000)], ["conv_id", "turn_idx"]
+        [(t, "insert", "hot_conv", t % 32) for t in range(4000)],
+        ["op_lsn", "op", "conv_id", "turn_idx"],
     )
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        parts = (
-            df.withColumn("pk_bucket", bucket_expr("conv_id", 64))
-            .withColumn("_spread", F.pmod(F.col("turn_idx"), F.lit(4)))
-            .repartition(16, "pk_bucket", "_spread")
-            .withColumn("pid", F.spark_partition_id())
-            .select("pid")
-            .distinct()
-            .count()
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    assert parts >= 3  # one conversation no longer pins a single task
-    # (the merge's exchange has an explicit partition count, so AQE cannot
-    # re-coalesce it; the guarantee it relies on is the key space: 4
-    # distinct (bucket, spread) groups)
+    parts = (
+        merge.epoch_winners(df, 64, 4, 16)
+        .select(F.spark_partition_id().alias("pid"))
+        .distinct()
+        .count()
+    )
+    # one conversation no longer pins a single task: its 4 (bucket, spread)
+    # groups land in at least 3 of the exchange's 16 explicit partitions,
+    # which AQE does not coalesce
+    assert parts >= 3
