@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -263,7 +264,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     if args.cmd == "bench":
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         import bench
 
         bench.main()
@@ -300,8 +301,6 @@ def main(argv: list[str] | None = None) -> int:
     from maestro_spark.lake import LakeTable
 
     if args.cmd == "replay":
-        import os
-
         from maestro_spark.replay import replay
 
         table = (
@@ -315,8 +314,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"epochs_committed": n, "snapshot": snap.snapshot_id,
                           "stats": snap.stats}))
     elif args.cmd == "stream":
-        import os
-
         from maestro_spark.stream import stream_ingest, throughput_metrics
 
         if not os.path.exists(f"{args.table}/_snapshots"):
@@ -491,8 +488,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"snapshot": snap.snapshot_id,
                           "rows": table.read().count()}))
     elif args.cmd == "sql":
-        import os
-
         from maestro_spark import sqldml as _sqldml
 
         if _sqldml.is_table_ddl(args.query):
@@ -648,8 +643,6 @@ def main(argv: list[str] | None = None) -> int:
             df.show(args.limit, truncate=40)
             print(json.dumps({"rows": df.count(), "views": views}))
     elif args.cmd == "search":
-        import os
-
         from maestro_spark.index_maint import MaintainedTextIndex
 
         table = LakeTable(spark, args.table)

@@ -271,18 +271,6 @@ class FileStatsStore:
             self._loaded.add(fn)
 
 
-def ts_overlaps(st: dict | None, lo_us: int | None, hi_us: int | None) -> bool:
-    """Zone test: could a file with these stats hold a row in [lo, hi]?
-    Unknown bounds (no stats / all-null ts) → True (never prune blind)."""
-    if st is None or st.get("ts_min") is None:
-        return True
-    if lo_us is not None and st["ts_max"] < lo_us:
-        return False
-    if hi_us is not None and st["ts_min"] > hi_us:
-        return False
-    return True
-
-
 def col_overlaps(st: dict | None, col: str, lo, hi) -> bool:
     """Generic zone test over the per-column bounds map: could a file with
     these stats hold a row with ``col`` in [lo, hi]? Unknown bounds (no

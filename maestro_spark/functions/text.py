@@ -50,11 +50,6 @@ def token_count(text: Column) -> Column:
     ).cast("long")
 
 
-def word_chars(text: Column) -> Column:
-    """Characters remaining after stripping whitespace."""
-    return F.length(F.regexp_replace(text, r"\s", ""))
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring features: length, token count, mean token length,
     punctuation density, uppercase ratio. Exact integer/char arithmetic."""

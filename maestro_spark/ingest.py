@@ -149,10 +149,14 @@ def from_debezium(
       ``u`` → ``update``, ``d`` → ``delete``;
     - row image = ``after`` for upserts, ``before`` for deletes (each
       falling back to the other when a connector omits its primary image);
-    - ``op_lsn`` = ``source.lsn``, falling back to ``source.ts_ms`` then
-      envelope ``ts_ms`` for connectors without a numeric LSN (MySQL GTID
-      mode) — commit-timestamp ordering, the same total order Debezium
-      itself falls back to.
+    - ``op_lsn`` = ``source.lsn``, falling back to ``source.ts_ms``: a
+      per-connector fallback for connectors without a numeric LSN (MySQL
+      GTID mode), commit-timestamp ordering, the same total order Debezium
+      itself falls back to. One feed comes from one connector, so its rows
+      share one ordering domain. The envelope ``ts_ms`` is never an LSN (its
+      epoch-ms value would outrank every real LSN for good): an envelope
+      with no ``source`` block has a null ``op_lsn`` and dead-letters as
+      ``null_op_lsn``.
 
     DEFECTS ARE DATA, not exceptions: an unparseable line decodes to a row
     whose ``op`` is ``corrupt_envelope`` and whose key/LSN are null, an
@@ -179,7 +183,7 @@ def from_debezium(
     row = F.when(opcode == "d", F.coalesce(e["before"], e["after"])).otherwise(
         F.coalesce(e["after"], e["before"])
     )
-    lsn = F.coalesce(e["source"]["lsn"], e["source"]["ts_ms"], e["ts_ms"])
+    lsn = F.coalesce(e["source"]["lsn"], e["source"]["ts_ms"])
     return raw.select(
         lsn.cast("long").alias("op_lsn"),
         op.alias("op"),
@@ -221,10 +225,10 @@ DEBEZIUM_DEMO_PATH = "/tmp/maestro_dbz_demo/envelopes.jsonl"
 def write_debezium_demo(path: str = DEBEZIUM_DEMO_PATH) -> str:
     """Materialize a deterministic Debezium envelope JSONL exercising the
     whole mapping surface: snapshot reads (``r``), creates, updates,
-    deletes (before-image only), LSN fallbacks (``source.ts_ms``, envelope
-    ``ts_ms``), plus planted defects (invalid JSON, unknown op, an
-    envelope with no row image). sf-independent, so the DuckDB oracle
-    reads the same bytes."""
+    deletes (before-image only), the ``source.ts_ms`` LSN fallback, plus
+    planted defects (invalid JSON, unknown op, an envelope with no row
+    image, envelopes with no source block and so no LSN). sf-independent,
+    so the DuckDB oracle reads the same bytes."""
     if os.path.exists(path):
         return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -244,7 +248,7 @@ def write_debezium_demo(path: str = DEBEZIUM_DEMO_PATH) -> str:
         before = row if code in ("d", "u") else "null"
         after = row if code != "d" else "null"
         if i % 13 == 0:
-            src = "null"  # no source block: envelope ts_ms is the LSN
+            src = "null"  # no source block: no LSN (null op_lsn)
         elif i % 7 == 0:
             # connector without a numeric LSN (MySQL GTID): commit ts_ms
             src = '{"ts_ms": %d, "db": "crm"}' % (1_700_000_000_000 + i)

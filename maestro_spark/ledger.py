@@ -56,10 +56,6 @@ class Ledger:
                     out.append(json.load(fh))
         return out
 
-    def last_offsets(self) -> dict | None:
-        es = self.entries()
-        return es[-1]["offsets"] if es else None
-
     def last_watermark(self) -> str | None:
         """Monotone high-water mark over committed epochs ('YYYY-MM-DD
         HH:MM:SS[.ffffff]' strings compare lexicographically)."""

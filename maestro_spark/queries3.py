@@ -410,8 +410,7 @@ def q_ingest_json(spark, sf_dir):
                      ELSE COALESCE(code, 'corrupt_envelope') END AS op,
                 COALESCE(
                   TRY_CAST(json_extract_string(j, '$.source.lsn') AS BIGINT),
-                  TRY_CAST(json_extract_string(j, '$.source.ts_ms') AS BIGINT),
-                  TRY_CAST(json_extract_string(j, '$.ts_ms') AS BIGINT)
+                  TRY_CAST(json_extract_string(j, '$.source.ts_ms') AS BIGINT)
                 ) AS op_lsn,
                 CASE WHEN code = 'd'
                      THEN COALESCE(json_extract_string(j, '$.before.conv_id'),
@@ -430,10 +429,10 @@ def q_debezium(spark, sf_dir):
     envelopes decode to engine change events via one ``from_json`` +
     codegen projection (ingest.from_debezium) — op-code mapping (c/r→
     insert, u→update, d→delete), before/after row-image choice, and the
-    source.lsn → source.ts_ms → envelope ts_ms LSN fallback chain all
-    certified against a DuckDB twin parsing the same bytes. Defective
-    envelopes become quarantine-shaped rows (op='corrupt_envelope' /
-    verbatim unknown code) that the merge DLQ gates."""
+    source.lsn → source.ts_ms LSN fallback all certified against a DuckDB
+    twin parsing the same bytes. Defective envelopes become
+    quarantine-shaped rows (op='corrupt_envelope' / verbatim unknown code /
+    null op_lsn for a sourceless envelope) that the merge DLQ gates."""
     from maestro_spark.ingest import debezium_ingest_demo
 
     return debezium_ingest_demo(spark, sf_dir)

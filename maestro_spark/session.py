@@ -5,7 +5,12 @@ Single place that encodes the configs we rely on everywhere:
 - Arrow on (every Python boundary is vectorized, BASELINE.json input_hint),
 - UTC session timezone (determinism of replay equality + DuckDB parity),
 - shuffle partitions sized to the parallelism level (scaling-efficiency bench
-  runs the same job at local[8] and local[32]; shuffle partitions follow cores).
+  runs the same job at local[8] and local[32]; shuffle partitions follow cores),
+- file listing on the driver (``parallelPartitionDiscovery.threshold`` 4096):
+  every path a table read hands ``DataFrameReader`` is a manifest-named data
+  file on the POSIX filesystem the driver already works on directly (CAS
+  commits by ``os.rename``/``os.link``, footer harvest at write time), so a
+  read plans with one driver-side stat per file and no Spark listing job.
 """
 
 from __future__ import annotations
@@ -54,6 +59,12 @@ def get_spark(
         # groups must fan out across all cores, not 128MB driver-side chunks
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.sql.files.openCostInBytes", "1048576")
+        # stat up to 4096 paths on the driver instead of in a one-task-per-
+        # path listing job (Spark's default above 32 paths). Measured on a
+        # 4-core host, plan time of one read (median of 5): 512 files 2.86 s
+        # with the job vs 0.19 s serial, 4096 files 20.2 s vs 1.52 s. A
+        # default table names at most 512 files (64 buckets x maxDeltas 8).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         # transcripts tables carry naive event times; keep parquet round-trips NTZ
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -206,26 +206,6 @@ def stateful_conv_progress(events):
     )
 
 
-def session_windows(events, gap: str = "30 minutes"):
-    """I3: streaming conversation sessionization (gap-based session_window);
-    batch twin is ops.sessionize."""
-    return (
-        events.groupBy("conv_id", F.session_window("ts", gap).alias("sw"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.max("op_lsn").alias("max_lsn"))
-        .select("conv_id", F.col("sw.start").alias("start"), F.col("sw.end").alias("end"),
-                "n_events", "max_lsn")
-    )
-
-
-def tumbling_throughput(events, width: str = "1 minute"):
-    """I2: per-interval event counts (throughput metric stream)."""
-    return (
-        events.groupBy(F.window("ts", width).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("w_start"), "n")
-    )
-
-
 def _discover_log_schema(log_dir: str):
     """Merged schema of the on-disk log (driver-side, footer reads only).
 

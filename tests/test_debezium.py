@@ -44,7 +44,7 @@ def test_from_debezium_mapping(spark):
         _env("c", lsn=11, after=ROW_A0 % "created"),
         _env("u", lsn=12, before=ROW_A0 % "created", after=ROW_A0 % "edited"),
         _env("d", lsn=13, before=ROW_A0 % "edited"),
-        # LSN fallbacks: source.ts_ms, then envelope ts_ms
+        # LSN fallback: source.ts_ms; the envelope ts_ms is never an LSN
         _env("c", src_ts=777, after=ROW_A0 % "gtid"),
         _env("c", ts_ms=888, after=ROW_A0 % "nolsn"),
         # defects: invalid JSON / unknown op / no row image
@@ -60,7 +60,7 @@ def test_from_debezium_mapping(spark):
     assert got[2] == ("update", 12, "edited")      # after image wins
     assert got[3] == ("delete", 13, "edited")      # before image for d
     assert got[4] == ("insert", 777, "gtid")
-    assert got[5] == ("insert", 888, "nolsn")
+    assert got[5] == ("insert", None, "nolsn")
     assert got[6] == ("corrupt_envelope", None, None)
     assert got[7] == ("x", 14, "weird")            # unknown code verbatim
     assert got[8][0] == "insert" and got[8][2] is None  # imageless
@@ -102,6 +102,25 @@ def test_truncate_and_message_envelopes_have_own_reasons(spark, tmp_path):
     q = read_quarantine(t, "dbz").toPandas()
     assert sorted(zip(q["op"], q["_reason"])) == [
         ("m", "debezium_message"), ("t", "debezium_truncate")]
+
+
+def test_sourceless_envelope_dead_letters_not_outranks(spark, tmp_path):
+    """An envelope with no source block has no LSN. Its envelope ts_ms is
+    epoch milliseconds (~1.7e12), which would outrank every real LSN of the
+    feed for good; it dead-letters as null_op_lsn instead, and the later
+    real update still wins."""
+    t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
+    ev = from_debezium(_raw(spark, [
+        _env("c", lsn=5, after=ROW_A0 % "v5"),
+        _env("u", ts_ms=1_700_000_000_000, before=ROW_A0 % "v5",
+             after=ROW_A0 % "stray"),
+        _env("u", lsn=7, before=ROW_A0 % "v5", after=ROW_A0 % "v7"),
+    ]))
+    snap = merge_batch(t, ev, "dbz", 0)
+    assert snap.stats["invalid_events"] == 1
+    assert [(r["conv_id"], r["text"]) for r in t.read().collect()] == [("A", "v7")]
+    q = read_quarantine(t, "dbz").toPandas()
+    assert list(zip(q["text"], q["_reason"])) == [("stray", "null_op_lsn")]
 
 
 @pytest.mark.parametrize("per_file", [True, False])

@@ -4,6 +4,7 @@ multimodal plumbing, vectorized-UDF guard."""
 from __future__ import annotations
 
 import glob
+import os
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -200,7 +201,10 @@ def test_no_rowwise_python_udfs():
     """BASELINE.json:15 rule: no row-wise Python UDFs in the engine source."""
     from maestro_spark.udf import assert_vectorized_only
 
-    files = glob.glob("/root/repo/maestro_spark/**/*.py", recursive=True)
+    files = glob.glob(
+        os.path.join(os.path.dirname(__file__), "..", "maestro_spark", "**", "*.py"),
+        recursive=True,
+    )
     assert files, "engine sources not found"
     offenders = assert_vectorized_only(files)
     assert offenders == [], offenders

@@ -21,7 +21,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_SMALL, N_LARGE = 8, 32
 
@@ -72,7 +73,7 @@ def main() -> None:
                 shutil.rmtree(f"{d}/lake{cpus}", ignore_errors=True)
                 shutil.rmtree(f"{d}/lake{cpus}.warmup", ignore_errors=True)
                 out = subprocess.run(
-                    [sys.executable, "/root/repo/tools/replay_job.py",
+                    [sys.executable, os.path.join(REPO, "tools", "replay_job.py"),
                      f"{d}/log", f"{d}/lake{cpus}", str(cpus), "64", str(n_shards)],
                     capture_output=True, text=True, timeout=3600,
                 )
@@ -88,7 +89,7 @@ def main() -> None:
                     results[cpus] = r
             for cpus in (N_SMALL, N_LARGE):
                 out = subprocess.run(
-                    [sys.executable, "/root/repo/tools/cpu_calib.py", str(cpus),
+                    [sys.executable, os.path.join(REPO, "tools", "cpu_calib.py"), str(cpus),
                      "100000000"],
                     capture_output=True, text=True, timeout=1200,
                 )
@@ -102,7 +103,7 @@ def main() -> None:
                     calib[cpus] = c
             for w in (N_SMALL, N_LARGE):
                 out = subprocess.run(
-                    [sys.executable, "/root/repo/tools/membw_calib.py", str(w)],
+                    [sys.executable, os.path.join(REPO, "tools", "membw_calib.py"), str(w)],
                     capture_output=True, text=True, timeout=600,
                 )
                 line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
@@ -158,7 +159,7 @@ def main() -> None:
 
 
 def _write_md(summary: dict, results: dict, all_trials: list[dict] | None = None) -> None:
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     cores = os.cpu_count()
     md = f"""# BENCH/BASELINE.md — measured scaling evidence
 
@@ -232,7 +233,7 @@ Honesty notes:
     # APPEND a dated re-measurement section when the file already exists —
     # the file accumulates per-round addenda (tiered-compaction sweeps, bench
     # snapshots) that a wholesale rewrite would destroy.
-    path = "/root/repo/BENCH/BASELINE.md"
+    path = os.path.join(REPO, "BENCH", "BASELINE.md")
     if os.path.exists(path):
         import datetime as _dt
 
