@@ -18,7 +18,7 @@ schema in one metadata commit, its physical name is retired into the
 snapshot's monotone ``dropped`` registry, and physical excision happens
 lazily on the normal compaction cadence (a rewrite under the masked
 schema simply never writes the column). ``erase=True`` keeps the
-RTBF-grade immediate path: one copy-on-write rewrite whose files never
+RTBF-grade immediate path: one rewrite of every bucket whose files never
 contained the bytes (complete after expire+vacuum, as before).
 
 Why the ``dropped`` registry: re-adding a dropped/renamed-away name must
@@ -49,7 +49,7 @@ import time
 from pyspark.sql import types as T
 
 from maestro_spark import schema as S
-from maestro_spark.lake import LakeTable, Snapshot, bucket_expr
+from maestro_spark.lake import LakeTable, Snapshot
 
 
 _PROTECTED = set(S.KEY_COLS) | {S.LSN_COL, S.DELETED_COL}
@@ -92,16 +92,15 @@ def _rewrite(
     alter: dict,
     dropped_add: list[str] | None = None,
 ) -> Snapshot:
-    """One compaction-shaped COW rewrite publishing ``new_schema`` (the
-    ``erase=True`` drop path only): read_resolved (tombstones + ``_lsn``
-    ride along) → transform → write_bucket_files (zone maps re-harvested)
-    → commit with the planning snapshot as base (racing deltas conflict,
-    not vanish)."""
+    """One compaction-shaped rewrite of every bucket publishing
+    ``new_schema`` (the ``erase=True`` drop path only): ``LakeTable._fold``
+    (tombstones + ``_lsn`` ride along; no exchange) → transform →
+    write_bucket_files (zone maps re-harvested) → commit with the planning
+    snapshot as base (racing deltas conflict, not vanish)."""
     t0 = time.time()
     snap = table.snapshot()
-    df = transform(table.read_resolved())
-    df = df.withColumn("pk_bucket", bucket_expr("conv_id", snap.n_buckets))
-    new_files = table.write_bucket_files(df.repartition("pk_bucket"), schema=new_schema)
+    df = transform(table._fold(snap, [ps for ps in snap.files.values() if ps]))
+    new_files = table.write_bucket_files(df, schema=new_schema)
     for b in snap.files:
         new_files.setdefault(b, [])
     return table.commit(
@@ -160,7 +159,7 @@ def drop_column(table: LakeTable, name: str, erase: bool = False) -> Snapshot:
     bytes); physical excision completes on the normal compaction cadence —
     any rewrite under the masked schema simply never writes the column.
 
-    ``erase=True`` (RTBF-grade): one copy-on-write rewrite so the new
+    ``erase=True`` (RTBF-grade): one rewrite of every bucket so the new
     current-state files never contained the bytes; erasure from disk
     completes after pre-drop snapshots expire and vacuum runs, exactly as
     before."""

@@ -1,12 +1,13 @@
 """Max-LSN dedup — the engine's hottest operator (SURVEY §2.D2/E1/K2).
 
-:func:`dedup_max_lsn` is the engine's ONE winner rule: every merge, change
-feed, point lookup, range read, purge, exchange fold and index probe resolves
-its keys through it. The **aggregation form** is used because
-``groupBy().agg(max_by(...))`` gets map-side partial aggregation for free
-(duplicates and superseded updates collapse before the shuffle), while the
-window form (`row_number`) must shuffle every event. The window form is kept
-only as the property-tested reference (SURVEY §5.2).
+:func:`dedup_max_lsn` is the engine's ONE Spark-side winner rule: every
+merge, change feed, point lookup, range read and index probe resolves its
+keys through it (bucket rewrites resolve in ``mor_scan``'s Arrow fold, which
+applies the same max ``(_lsn, commit-seq)`` order). The **aggregation
+form** is used because ``groupBy().agg(max_by(...))`` gets map-side partial
+aggregation for free (duplicates and superseded updates collapse before the
+shuffle), while the window form (`row_number`) must shuffle every event. The
+window form is kept only as the property-tested reference (SURVEY §5.2).
 
 A delete is a *winner*, not an absence: deletes survive dedup as rows so the
 merge can apply them (the classic CDC bug called out in SURVEY §7).

@@ -110,6 +110,18 @@ def bucket_expr(conv_col: str = "conv_id", n_buckets: int = 64) -> F.Column:
     return F.pmod(F.xxhash64(F.col(conv_col)), F.lit(n_buckets)).cast("int")
 
 
+def _logical(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Rename ``df``'s PHYSICAL column names to ``schema``'s LOGICAL ones
+    (see schema.PHYSICAL_KEY) in ONE simultaneous Project: sequential
+    renames break on chains like text->body while text__p1->text. The
+    Project is one Catalyst rewrites filters and pruning through."""
+    cmap = S.column_map(schema)
+    if not cmap:
+        return df
+    inv = {p: l for l, p in cmap.items()}
+    return df.select(*[F.col(c).alias(inv.get(c, c)) for c in df.columns])
+
+
 def _pushdown_ok(spark) -> str:
     """"true" when the session allows Python-DataSource filter pushdown
     (set it if settable); else "false" so mor_scan installs the plain
@@ -385,17 +397,13 @@ class LakeTable:
     def _scan_files(self, schema: T.StructType, paths: list[str]) -> DataFrame:
         """Read data files under their PHYSICAL column names (stable across
         metadata-only renames — see schema.PHYSICAL_KEY), surfacing the
-        requested schema's LOGICAL names. The rename is a Project Catalyst
-        rewrites filters/pruning through, so pushdown is unaffected; for the
-        common no-rename table this is exactly the plain schema'd read."""
-        cmap = S.column_map(schema)
-        if not cmap:
+        requested schema's LOGICAL names (:func:`_logical`, so pushdown is
+        unaffected); for the common no-rename table this is exactly the
+        plain schema'd read."""
+        if not S.column_map(schema):
             return self.spark.read.schema(schema).parquet(*paths)
         df = self.spark.read.schema(S.physical_schema(schema)).parquet(*paths)
-        # ONE simultaneous Project (a sequential withColumnsRenamed breaks on
-        # chained renames like text->body while text__p1->text)
-        inv = {p: l for l, p in cmap.items()}
-        return df.select(*[F.col(c).alias(inv.get(c, c)) for c in df.columns])
+        return _logical(df, schema)
 
     def read_raw(
         self, buckets: list[int] | None = None, snapshot_id: int | None = None
@@ -482,13 +490,7 @@ class LakeTable:
                 self.spark, S.physical_schema(scan_schema), multi_groups,
                 snap.n_buckets, _pushdown_ok(self.spark),
             )
-            cmap = S.column_map(scan_schema)
-            if cmap:
-                inv = {p: l for l, p in cmap.items()}
-                part = part.select(
-                    *[F.col(c).alias(inv.get(c, c)) for c in part.columns]
-                )
-            parts.append(part)
+            parts.append(_logical(part, scan_schema))
         if not parts:
             return self.spark.createDataFrame([], scan_schema)
         out = parts[0]
@@ -1148,7 +1150,10 @@ class LakeTable:
     def purge(self, conv_id: str) -> Snapshot:
         """Right-to-be-forgotten delete: physically erase one conversation's
         CONTENT from the current table state, rewriting only the one bucket
-        the key lives in (IO is O(bucket), not O(table)).
+        the key lives in (IO is O(bucket), not O(table)). The bucket is
+        resolved by :meth:`_fold` (so the rewrite is also a compaction of
+        it: no historical delta version of the purged key is re-written,
+        not even as a null row, which would leak its row count).
 
         What remains is a payload-nulled tombstone per affected turn at that
         turn's last LSN **+ 1** — the engine forgets what was said but
@@ -1174,36 +1179,27 @@ class LakeTable:
             return snap
         is_key = F.col("conv_id") == F.lit(conv_id)
         nullable_payload = [
-            f.name
-            for f in snap.payload_schema().fields
-            if f.name not in S.KEY_COLS
+            f for f in snap.payload_schema().fields if f.name not in S.KEY_COLS
         ]
-        df = (
-            self._scan_files(snap.schema, [os.path.join(self.root, p) for p in ps])
-            .select(
-                *S.KEY_COLS,
-                *[
-                    F.when(is_key, F.lit(None).cast(dict(
-                        (f.name, f.dataType) for f in snap.schema.fields
-                    )[c])).otherwise(F.col(c)).alias(c)
-                    for c in nullable_payload
-                ],
-                # the tombstone takes lsn+1: it must STRICTLY dominate every
-                # version already emitted for this key, or an equal-LSN late
-                # re-delivery would win the (lsn, commit-seq) tie-break and
-                # resurrect the purged content
-                F.when(is_key, F.col(S.LSN_COL) + F.lit(1))
-                .otherwise(F.col(S.LSN_COL))
-                .alias(S.LSN_COL),
-                F.when(is_key, F.lit(True)).otherwise(F.col(S.DELETED_COL)).alias(S.DELETED_COL),
-            )
-            .withColumn("pk_bucket", F.lit(int(b)))
+        df = self._fold(snap, [ps]).select(
+            "pk_bucket",
+            *S.KEY_COLS,
+            *[
+                F.when(is_key, F.lit(None).cast(f.dataType))
+                .otherwise(F.col(f.name))
+                .alias(f.name)
+                for f in nullable_payload
+            ],
+            # the tombstone takes lsn+1: it must STRICTLY dominate every
+            # version already emitted for this key, or an equal-LSN late
+            # re-delivery would win the (lsn, commit-seq) tie-break and
+            # resurrect the purged content
+            F.when(is_key, F.col(S.LSN_COL) + F.lit(1))
+            .otherwise(F.col(S.LSN_COL))
+            .alias(S.LSN_COL),
+            F.when(is_key, F.lit(True)).otherwise(F.col(S.DELETED_COL)).alias(S.DELETED_COL),
         )
-        # one winner per key first (the rewrite is also a compaction of this
-        # bucket — re-writing every historical delta version of the purged
-        # key as a null row would leak its row count)
-        df = dedup_max_lsn(df, ["pk_bucket", *S.KEY_COLS], S.LSN_COL)
-        new_files = self.write_bucket_files(df.repartition("pk_bucket"))
+        new_files = self.write_bucket_files(df)
         # base = the snapshot this rewrite was planned from: a delta landing
         # in this bucket while the rewrite job ran must conflict, not vanish
         return self.commit(
@@ -2308,7 +2304,9 @@ class LakeTable:
         zorder: bool = False,
     ) -> Snapshot:
         """Rewrite buckets into minimal files; optionally GC tombstones whose
-        ``_lsn`` is below ``tombstone_horizon_lsn``.
+        ``_lsn`` is below ``tombstone_horizon_lsn``. Every file of each
+        bucket is resolved by :meth:`_fold` and written back with no
+        exchange: one file per bucket, or ``target_file_rows``-sized files.
 
         Dropping a tombstone is safe once no event with a lower LSN can still
         arrive (the caller decides the horizon from the source watermark /
@@ -2335,17 +2333,16 @@ class LakeTable:
         turn_idx range read degrades to a full scan. Scaling bounds come
         driver-side from the zone-map store (zero data IO).
         """
-        from pyspark.sql import functions as F  # local import to avoid cycle
-
         t0 = time.time()
         snap = self.snapshot()
         todo = buckets if buckets is not None else [int(b) for b in snap.files]
-        df = self.read_resolved(todo)
+        df = self._fold(
+            snap, [snap.files[str(b)] for b in todo if snap.files.get(str(b))]
+        )
         if tombstone_horizon_lsn is not None:
             df = df.filter(
                 ~F.col(S.DELETED_COL) | (F.col(S.LSN_COL) >= tombstone_horizon_lsn)
             )
-        df = df.withColumn("pk_bucket", bucket_expr("conv_id", snap.n_buckets))
         sort_cols = [*cluster_by, "conv_id", "turn_idx"] if cluster_by else None
         if cluster_by and zorder:
             from maestro_spark.ops import zorder_key
@@ -2368,7 +2365,7 @@ class LakeTable:
             df = df.withColumn("__z", zorder_key(df, cluster_by, bounds=bounds))
             sort_cols = ["__z", "conv_id", "turn_idx"]
         new_files = self.write_bucket_files(
-            df.repartition("pk_bucket"),
+            df,
             sort_cols=sort_cols,
             max_records_per_file=target_file_rows,
         )
@@ -2427,28 +2424,30 @@ class LakeTable:
                 break
         return k if k >= min_fold else 0
 
-    def _fold_exchange(
-        self, schema: T.StructType, groups: list[list[str]], n_buckets: int
-    ) -> DataFrame:
-        """JVM-native resolve of whole-bucket file groups (each in commit
-        order): one scan per commit position (bounded by the group depth,
-        not table size) tagged with ``_seq``, ONE exchange on ``pk_bucket``,
-        and the max ``(_lsn, _seq)`` winner per key — the same rule as
-        mor_scan's bucket-local resolve. The grouping keys are a superset of
-        the partitioning key, so Catalyst inserts no second shuffle.
-        Returns ``pk_bucket`` + ``schema``'s columns; compact_tiered's fold
-        for large tiers."""
-        tagged = None
-        for j in range(max(len(g) for g in groups)):
-            fs = [g[j] for g in groups if len(g) > j]
-            part = self._scan_files(schema, fs).withColumn("_seq", F.lit(j))
-            tagged = part if tagged is None else tagged.unionByName(part)
-        tagged = tagged.withColumn(
-            "pk_bucket", bucket_expr("conv_id", n_buckets)
-        ).repartition("pk_bucket")
-        return dedup_max_lsn(
-            tagged, ["pk_bucket", *S.KEY_COLS], F.struct(S.LSN_COL, "_seq")
-        ).drop("_seq")
+    def _fold(self, snap: Snapshot, groups: list[list[str]]) -> DataFrame:
+        """Resolve whole-bucket file groups (table-relative paths, each in
+        commit order) into ``pk_bucket`` + ``snap.schema``'s columns, LOGICAL
+        names: the mor_scan source packs the buckets one task per core and
+        resolves each bucket locally (max ``(_lsn, commit-seq)`` per key),
+        reading ``pk_bucket`` from the partition path. Every bucket's rows
+        come out of one task, so :meth:`write_bucket_files` writes one file
+        per bucket with no exchange. The one fold of every bucket rewrite:
+        :meth:`compact_tiered`, :meth:`compact`, :meth:`purge` and
+        ``ddl``'s erase-drop."""
+        from maestro_spark import mor_scan
+
+        scan_schema = T.StructType(
+            [
+                T.StructField("pk_bucket", T.IntegerType(), True),
+                *S.physical_schema(snap.schema).fields,
+            ]
+        )
+        df = mor_scan.scan(
+            self.spark, scan_schema,
+            [[os.path.join(self.root, p) for p in g] for g in groups],
+            snap.n_buckets,
+        )
+        return _logical(df, snap.schema)
 
     def compact_tiered(
         self,
@@ -2460,13 +2459,10 @@ class LakeTable:
         rewrite of settled base files (the r2 measured scale-killer: at
         thousands of epochs, full-bucket folds cost O(table) per trigger).
 
-        The executor follows the measured tier bytes: below
-        ``maestro.compact.foldShuffleMinBytes`` (256 MB) the fold set is read
-        by the mor_scan source (whole buckets packed one task per core,
-        bucket-local resolve) with ``pk_bucket`` parsed from the partition
-        path, so the partitionBy write emits one folded file per bucket
-        without an exchange — read + resolve + write of just the tier bytes;
-        at or above it, :meth:`_fold_exchange` resolves in the JVM.
+        The suffix groups go through :meth:`_fold` (mor_scan, whole buckets
+        packed one task per core, no exchange), so the write emits one
+        folded file per bucket: read + resolve + write of just the tier
+        bytes.
 
         Tombstones are NEVER GC'd here: a fold reads a subset of the bucket,
         and dropping a tombstone while an older live version of its key
@@ -2489,41 +2485,17 @@ class LakeTable:
             if not k:
                 continue
             keep[str(b)] = ps[: len(ps) - k]
-            groups.append([os.path.join(self.root, p) for p in ps[len(ps) - k:]])
+            groups.append(ps[len(ps) - k:])
             fold_bytes += sum(sizes[len(ps) - k:])
             n_fold_files += k
         if not groups:
             return None
-        # measured on the 20-epoch/68.6M-event sweep, when the Arrow fold
-        # still ran one Python task per bucket: the JVM exchange fold wins on
-        # big tiers (18.1s vs 29.4s on a 1.07 GB fold — codegen scan beats
-        # Arrow-socket transfer), the zero-shuffle Arrow fold wins on small
-        # ones (1.5s vs 12.5s on 8.5 MB — per-position scan jobs + an
-        # exchange are pure fixed cost there); choosing by tier bytes beat
-        # either executor forced (BENCH/BASELINE.md). Packing buckets one
-        # task per core cut the Arrow fold's fixed cost, so the crossover
-        # likely sits above this threshold now; not re-measured since.
-        big = int(
-            self.spark.conf.get("maestro.compact.foldShuffleMinBytes", str(256 << 20))
-        )
-        if fold_bytes >= big:
-            df = self._fold_exchange(snap.schema, groups, snap.n_buckets)
-        else:
-            # Arrow fold: zero-shuffle (one mor_scan task per core reads and
-            # resolves its whole buckets, and the partitionBy write lands
-            # without an exchange)
-            from maestro_spark import mor_scan
-
-            # the Arrow fold reads+writes in PHYSICAL names end to end (its
-            # output goes straight back to write_bucket_files, where the
-            # logical->physical rename is a per-absent-column no-op)
-            scan_schema = T.StructType(
-                [
-                    T.StructField("pk_bucket", T.IntegerType(), True),
-                    *S.physical_schema(snap.schema).fields,
-                ]
-            )
-            df = mor_scan.scan(self.spark, scan_schema, groups, snap.n_buckets)
+        # no exchange fold at any tier size: on a local[4] host (64 buckets,
+        # 8 similar delta files each) the mor_scan fold took 13.6 s on a
+        # 327 MB tier and 33.5 s on a 970 MB tier, where a JVM exchange fold
+        # of the same files took 24.9 s and 72.3 s, with identical rows
+        # (BENCH/BASELINE.md)
+        df = self._fold(snap, groups)
         new_files = self.write_bucket_files(df)
         return self.commit(
             {b: keep[b] + new_files.get(b, []) for b in keep},

@@ -57,6 +57,11 @@ from maestro_spark.lake import CommitConflict, LakeTable, Snapshot, bucket_expr
 from maestro_spark.ledger import Ledger
 from maestro_spark.lineage import append_lineage
 
+# the epoch exchange's per-task row target and its cap on the hot-bucket
+# salt fan-out (merge_batch derives ``spread`` from both)
+ROWS_PER_TASK = 1_000_000
+MAX_SPREAD = 4
+
 
 def epoch_winners(
     events: DataFrame, n_buckets: int, spread: int, partitions: int
@@ -183,8 +188,6 @@ def merge_batch(
     #   spread), so AQE cannot coalesce a small epoch into ONE writing task
     #   that writes every bucket file in turn: the write spreads over every
     #   core, while each (pk_bucket, _spread) still lands in one partition.
-    rows_per_task = int(table.spark.conf.get("maestro.merge.rowsPerTask", "1000000"))
-    max_spread = int(table.spark.conf.get("maestro.merge.spread", "4"))
     # The parent may be a maintenance (compaction) snapshot whose stats
     # carry no input metrics, so walk back (bounded) to the most recent
     # epoch commit.
@@ -198,7 +201,7 @@ def merge_batch(
             break
     est_rows = p.stats.get("rows_in") or 0
     est_buckets = max(1, p.stats.get("changed_buckets") or n_buckets)
-    spread = max(1, min(max_spread, int(est_rows / est_buckets // rows_per_task) + 1))
+    spread = max(1, min(MAX_SPREAD, int(est_rows / est_buckets // ROWS_PER_TASK) + 1))
     winners = epoch_winners(
         events, n_buckets, spread,
         min(int(table.spark.conf.get("spark.sql.shuffle.partitions")),

@@ -63,13 +63,13 @@ def resolve_group(files: list[str], schema: StructType, key_filters=None):
     """Read one bucket's base+delta files and yield resolved Arrow batches.
 
     Winner per (conv_id, turn_idx) = max (_lsn, commit-seq), where seq is
-    the file's position in the bucket's commit-ordered list. The JVM
-    exchange fold (``LakeTable._fold_exchange``, compaction's large-tier
-    executor) applies the identical (_lsn, seq) ordering (it tags each commit
-    position), so the two paths are deterministically equal. Equal-LSN ties can only come
-    from re-delivered events — the engine invariant is one-LSN-one-payload
-    per key, so the seq preference for the later commit is defensive
-    determinism, not semantics (and tests compare the paths row-for-row).
+    the file's position in the bucket's commit-ordered list — the order the
+    JVM-side reads (``changes``, ``read_where``, ``lookup``) give
+    ``dedup_max_lsn`` by tagging each commit position. Equal-LSN ties can
+    only come from re-delivered events — the engine invariant is
+    one-LSN-one-payload per key, so the seq preference for the later commit
+    is defensive determinism, not semantics. Every read of a delta-bearing
+    bucket and every bucket rewrite (``LakeTable._fold``) resolves here.
     """
     import numpy as np
     import pyarrow as pa
@@ -80,7 +80,7 @@ def resolve_group(files: list[str], schema: StructType, key_filters=None):
 
     arrow_schema = to_arrow_schema(schema)
     # pk_bucket lives in the partition DIRECTORY name, not the file; when the
-    # requested schema asks for it (the zero-shuffle compaction path), parse
+    # requested schema asks for it (LakeTable._fold, every bucket rewrite), parse
     # it from the path instead of null-filling it like an absent column
     want_bucket = "pk_bucket" in arrow_schema.names
 

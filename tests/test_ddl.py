@@ -127,6 +127,23 @@ def test_rename_back_and_compaction_compose(spark, table):
     assert got["A"] in ("a0", "a1") and got["D"] == "d0"
 
 
+def test_compact_tiered_folds_across_a_chained_rename(spark, table):
+    """After text->body, a late event evolves a FRESH ``text`` column, so
+    logical ``body`` lives in physical ``text`` and logical ``text`` in a
+    new alias. A tiered fold must write each column back under its own
+    physical name (the fold hands logical names to the write)."""
+    from maestro_spark.verify import symmetric_diff_empty
+
+    rename_column(table, "text", "body")
+    merge_batch(table, spark.createDataFrame(
+        [(9, "insert", "A", 2, "user", "a2", None, TS)],
+        S.CHANGE_EVENT_SCHEMA), "late", 1)
+    before = table.read()
+    assert {r["text"] for r in before.collect()} == {None, "a2"}
+    assert table.compact_tiered() is not None
+    assert symmetric_diff_empty(table.read(), before)
+
+
 def test_drop_column_masks_then_compaction_erases(spark, table):
     update_where(table, F.col("conv_id") == "B",
                  {"tool": F.lit("SENTINELTOOL")})

@@ -609,12 +609,10 @@ def test_fold_suffix_properties():
     check()
 
 
-def test_compact_tiered_across_schema_evolution(spark, tmp_path, monkeypatch):
+def test_compact_tiered_across_schema_evolution(spark, tmp_path):
     """A fold set spanning a schema evolution (older files lack the evolved
-    columns) must resolve and rewrite correctly on BOTH fold executors,
-    picked by tier bytes: at a 0-byte threshold the JVM exchange fold
-    null-fills via the explicit read schema; at the default (256 MB) the
-    Arrow fold does via conform_arrow_table."""
+    columns) must resolve and rewrite correctly: the mor_scan fold
+    null-fills the absent column via conform_arrow_table."""
     import datetime as dt
 
     import pyspark.sql.functions as F
@@ -622,44 +620,30 @@ def test_compact_tiered_across_schema_evolution(spark, tmp_path, monkeypatch):
     from maestro_spark import schema as S
     from maestro_spark.merge import merge_batch
 
-    calls = []
-    real_fold = LakeTable._fold_exchange
-    monkeypatch.setattr(
-        LakeTable, "_fold_exchange",
-        lambda self, *a: calls.append(a) or real_fold(self, *a),
-    )
     spark.conf.set("maestro.compact.maxDeltas", "0")
     try:
-        for mode in ("exchange", "arrow"):
-            calls.clear()
-            if mode == "exchange":
-                spark.conf.set("maestro.compact.foldShuffleMinBytes", "0")
-            else:
-                spark.conf.unset("maestro.compact.foldShuffleMinBytes")
-            t = LakeTable.create(
-                spark, str(tmp_path / f"evo_{mode}"), n_buckets=2)
-            merge_batch(t, spark.createDataFrame(
-                [(1, "insert", "A", 0, None, "a0", None,
-                  dt.datetime(2025, 1, 1))], S.CHANGE_EVENT_SCHEMA), "q", 0)
-            merge_batch(t, spark.createDataFrame(
-                [(2, "insert", "A", 1, None, "a1", None,
-                  dt.datetime(2025, 1, 1), None, {"m": "v1"})],
-                S.CHANGE_EVENT_SCHEMA_V2), "q", 1)
-            def comparable(df):  # set-ops reject MapType: json the map
-                return df.withColumn("metadata", F.to_json("metadata"))
+        t = LakeTable.create(spark, str(tmp_path / "evo"), n_buckets=2)
+        merge_batch(t, spark.createDataFrame(
+            [(1, "insert", "A", 0, None, "a0", None,
+              dt.datetime(2025, 1, 1))], S.CHANGE_EVENT_SCHEMA), "q", 0)
+        merge_batch(t, spark.createDataFrame(
+            [(2, "insert", "A", 1, None, "a1", None,
+              dt.datetime(2025, 1, 1), None, {"m": "v1"})],
+            S.CHANGE_EVENT_SCHEMA_V2), "q", 1)
 
-            before = comparable(t.read()).orderBy("conv_id", "turn_idx")
-            snap = t.compact_tiered()  # folds the pre- and post-evolution files
-            assert snap is not None
-            assert len(calls) == (mode == "exchange")
-            after = comparable(t.read()).orderBy("conv_id", "turn_idx")
-            assert symmetric_diff_empty(before, after)
-            rows = {r["turn_idx"]: r for r in t.read().collect()}
-            assert rows[0]["metadata"] is None  # evolved col null-filled
-            assert rows[1]["metadata"] == {"m": "v1"}
+        def comparable(df):  # set-ops reject MapType: json the map
+            return df.withColumn("metadata", F.to_json("metadata"))
+
+        before = comparable(t.read()).orderBy("conv_id", "turn_idx")
+        snap = t.compact_tiered()  # folds the pre- and post-evolution files
+        assert snap is not None
+        after = comparable(t.read()).orderBy("conv_id", "turn_idx")
+        assert symmetric_diff_empty(before, after)
+        rows = {r["turn_idx"]: r for r in t.read().collect()}
+        assert rows[0]["metadata"] is None  # evolved col null-filled
+        assert rows[1]["metadata"] == {"m": "v1"}
     finally:
         spark.conf.set("maestro.compact.maxDeltas", "8")
-        spark.conf.unset("maestro.compact.foldShuffleMinBytes")
 
 
 def test_clustered_compaction_keeps_ts_pruning(spark, tmp_path):

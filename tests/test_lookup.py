@@ -11,7 +11,6 @@ import random
 import string
 
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 import pytest
 
 from maestro_spark import schema as S
@@ -153,17 +152,10 @@ def test_read_columns_prunes_and_matches(spark, tmp_path):
     w_wide, _ = scan_width(wide)
     assert w_narrow <= 4, plan_n[:2000]   # keys + _lsn + _deleted
     assert w_wide >= 8                    # full schema without pruning
-    # pinned-column resolve on the JVM exchange path matches too
-    import os
-
-    snap = t.snapshot()
-    narrow_schema = T.StructType(
-        [f for f in snap.schema.fields
-         if f.name in ("conv_id", "turn_idx", S.LSN_COL, S.DELETED_COL)]
-    )
-    groups = [[os.path.join(t.root, p) for p in ps] for ps in snap.files.values()]
+    # the pinned-column resolve keeps the same winners (tombstones
+    # included) as the wide read
     c = (
-        t._fold_exchange(narrow_schema, groups, snap.n_buckets)
+        t.read_resolved(columns=["conv_id", "turn_idx"])
         .filter(~F.col(S.DELETED_COL))
         .select("conv_id", "turn_idx")
         .orderBy("conv_id", "turn_idx")
