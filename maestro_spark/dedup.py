@@ -1,9 +1,11 @@
 """Max-LSN dedup — the engine's hottest operator (SURVEY §2.D2/E1/K2).
 
-:func:`dedup_max_lsn` is the engine's ONE Spark-side winner rule: every
-merge, change feed, point lookup, range read and index probe resolves its
-keys through it (bucket rewrites resolve in ``mor_scan``'s Arrow fold, which
-applies the same max ``(_lsn, commit-seq)`` order). The **aggregation
+:func:`dedup_max_lsn` is the engine's ONE Spark-side winner rule, for keys
+that arrive unbucketed: every merge epoch and index probe resolves through
+it. Table reads (``read``, ``lookup``, ``read_where``, the change feed) and
+bucket rewrites resolve bucket-locally instead, in ``mor_scan``'s Arrow
+fold, which applies the same max ``(_lsn, commit-seq)`` order with no
+shuffle. The **aggregation
 form** is used because ``groupBy().agg(max_by(...))`` gets map-side partial
 aggregation for free (duplicates and superseded updates collapse before the
 shuffle), while the window form (`row_number`) must shuffle every event. The

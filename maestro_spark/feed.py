@@ -45,7 +45,7 @@ from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPart
 from pyspark.sql.types import StructType
 
 from maestro_spark import schema as S
-from maestro_spark.lake import SNAP_DIR, load_snapshot
+from maestro_spark.lake import SNAP_DIR, added_files, load_snapshot
 
 FORMAT_NAME = "table_changes"
 
@@ -223,13 +223,11 @@ class TableChangesStreamReader(DataSourceStreamReader):
             if stats.get("maintenance"):
                 continue
             parent = _snap(self.root, snap.parent_id) if snap.parent_id is not None else None
-            for b, ps in snap.files.items():
-                prev = set(parent.files.get(b, [])) if parent else set()
-                for p in ps:
-                    if p not in prev:
-                        parts.append(
-                            FeedFilePartition(os.path.join(self.root, p), full_json)
-                        )
+            parts.extend(
+                FeedFilePartition(os.path.join(self.root, p), full_json)
+                for ps in added_files(snap, parent).values()
+                for p in ps
+            )
         return parts or [FeedFilePartition("", "")]
 
     def read(self, partition: FeedFilePartition):

@@ -13,14 +13,15 @@ epoch-key index).
 Tracked per file: ``rows, bytes, lsn_min, lsn_max, ts_min_us, ts_max_us``.
 Byte sizes feed the size-tiered compaction planner (fold small delta tiers,
 never rewrite settled base files — see ``LakeTable.compact_tiered``). LSN
-bounds double as the lineage source (maestro_spark.lineage) and drive the
-superseder "mask scan" that keeps time-range pruning EXACT under
-merge-on-read (see ``LakeTable.read_where_ts``); ts bounds are the zone map
+bounds double as the lineage source (maestro_spark.lineage) and pick the
+out-of-range "mask" files that a range read resolves together with its
+candidates, which keeps zone-map pruning EXACT under merge-on-read (see
+``LakeTable.plan_col_scan``); ts bounds are the zone map
 for event-time range scans — at 100 TB a "yesterday's conversations" query
 touches yesterday's delta files, not the table.
 
 A file with no entry (pre-upgrade tables, foreign files) degrades safely:
-the planner treats its bounds as unknown → never pruned, always masked.
+the planner treats its bounds as unknown → never pruned.
 """
 
 from __future__ import annotations

@@ -52,7 +52,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from maestro_spark.lake import LakeTable, Snapshot, bucket_expr
+from maestro_spark.lake import LakeTable, Snapshot, added_files, bucket_expr
 from maestro_spark.merge import merge_batch
 
 STATS_PAYLOAD_SCHEMA = T.StructType(
@@ -527,7 +527,7 @@ class MaterializedView:
     def _range_bytes(self, frm: int, to: int) -> int:
         """Bytes the change feed for ``(frm, to]`` would scan: the sizes of
         the data files each non-maintenance epoch in the range ADDED vs its
-        parent — the exact file set :meth:`LakeTable.changes` unions. Pure
+        parent — the exact file set :meth:`LakeTable.changes` resolves. Pure
         driver-side manifest walk + file stats, no data IO. (An object-store
         lake would carry sizes in the manifest itself; the local-FS lake
         stats instead — same information, same cost class.)"""
@@ -541,14 +541,12 @@ class MaterializedView:
                 if snap.parent_id is not None
                 else None
             )
-            for b, ps in snap.files.items():
-                prev = set(parent.files.get(b, [])) if parent else set()
+            for ps in added_files(snap, parent).values():
                 for p in ps:
-                    if p not in prev:
-                        try:
-                            total += os.path.getsize(os.path.join(self.base.root, p))
-                        except OSError:
-                            pass  # vacuumed early: changes() will raise anyway
+                    try:
+                        total += os.path.getsize(os.path.join(self.base.root, p))
+                    except OSError:
+                        pass  # vacuumed early: changes() will raise anyway
         return total
 
     def _table_bytes(self, to: int) -> int:

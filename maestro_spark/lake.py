@@ -38,6 +38,7 @@ lower-LSN insert arriving in a later epoch can never resurrect the row
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import shutil
@@ -50,7 +51,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from maestro_spark import schema as S
-from maestro_spark.dedup import dedup_max_lsn
 
 SNAP_DIR = "_snapshots"
 LEDGER_DIR = "_ledger"
@@ -122,19 +122,18 @@ def _logical(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*[F.col(c).alias(inv.get(c, c)) for c in df.columns])
 
 
-def _pushdown_ok(spark) -> str:
-    """"true" when the session allows Python-DataSource filter pushdown
-    (set it if settable); else "false" so mor_scan installs the plain
-    reader — a foreign session that locks the flag must not lose reads."""
-    key = "spark.sql.python.filterPushdown.enabled"
-    try:
-        spark.conf.set(key, "true")
-        return "true"
-    except Exception:  # noqa: BLE001 — conf locked by the session owner
-        try:
-            return str(spark.conf.get(key, "false")).lower()
-        except Exception:  # noqa: BLE001
-            return "false"
+def added_files(snap: "Snapshot", parent: "Snapshot | None") -> dict[str, list[str]]:
+    """Bucket → the relative data file paths ``snap`` added over ``parent``
+    (per-bucket set difference, manifest order kept; no parent = every
+    file). The change feed's unit: an epoch's added files are exactly its
+    batch winners."""
+    out: dict[str, list[str]] = {}
+    for b, ps in snap.files.items():
+        prev = set(parent.files.get(b, [])) if parent else set()
+        new = [p for p in ps if p not in prev]
+        if new:
+            out[b] = new
+    return out
 
 
 class CommitConflict(Exception):
@@ -435,60 +434,74 @@ class LakeTable:
         """Merge-on-read resolution: one winning row per ``(conv_id, turn_idx)``
         (max ``_lsn``), tombstones still present, internal columns included.
 
-        Every file the engine writes is key-unique *within itself* (merge
-        writes per-epoch batch winners, compaction writes fully-resolved
-        buckets), so a bucket with a single file needs no resolution at all —
-        that scan unions in untouched. Multi-file (delta-bearing) buckets are
-        resolved by the shuffle-free ``mor_scan`` source (whole buckets packed
-        one task per core, bucket-local Arrow merge — see
-        maestro_spark.mor_scan). Compaction keeps delta-bearing buckets
-        bounded, so at scale the resolve covers the hot tail of the table,
-        not the table.
+        Whole buckets resolve through :meth:`_resolve`: a single-file bucket
+        is a plain parquet scan, a delta-bearing bucket goes through the
+        shuffle-free ``mor_scan`` source. Compaction keeps delta-bearing
+        buckets bounded, so at scale the resolve covers the hot tail of the
+        table, not the table.
         """
         snap = self.snapshot(snapshot_id)
-        if columns is not None:
-            # projection pushdown by hand: Python DataSources (mor_scan) never
-            # receive Spark's column pruning, so the narrow schema must be
-            # decided here. Keys + _lsn + _deleted always ride along — the
-            # MOR winner rule and tombstone filter need them.
-            need = dict.fromkeys(
-                [*S.KEY_COLS, *columns, S.LSN_COL, S.DELETED_COL]
-            )
-            scan_schema = T.StructType(
-                [f for f in snap.schema.fields if f.name in need]
-            )
-            missing = [c for c in columns if c not in {f.name for f in snap.schema.fields}]
-            if missing:
-                raise ValueError(f"unknown columns {missing}")
-        else:
-            scan_schema = snap.schema
         want = {str(b) for b in buckets} if buckets is not None else None
-        single: list[str] = []
-        multi_groups: list[list[str]] = []
-        for b, ps in snap.files.items():
-            if want is not None and b not in want:
-                continue
-            if len(ps) > 1:
-                multi_groups.append([os.path.join(self.root, p) for p in ps])
-            else:
-                single.extend(ps)
-        cols = [f.name for f in scan_schema.fields]
+        return self._resolve(
+            snap,
+            self._scan_schema(snap, columns),
+            [ps for b, ps in snap.files.items() if want is None or b in want],
+        )
+
+    @staticmethod
+    def _scan_schema(snap: Snapshot, columns: list[str] | None) -> T.StructType:
+        """The narrow schema a read decodes: ``columns`` plus the keys and
+        ``_lsn``/``_deleted`` (the winner rule and tombstone filter need
+        them) in table order; all of ``snap.schema`` when ``columns`` is
+        None. Projection pushdown by hand: Python DataSources (mor_scan)
+        never receive Spark's column pruning."""
+        if columns is None:
+            return snap.schema
+        names = {f.name for f in snap.schema.fields}
+        missing = [c for c in columns if c not in names]
+        if missing:
+            raise ValueError(f"unknown columns {missing}")
+        need = {*S.KEY_COLS, *columns, S.LSN_COL, S.DELETED_COL}
+        return T.StructType([f for f in snap.schema.fields if f.name in need])
+
+    def _resolve(
+        self,
+        snap: Snapshot,
+        scan_schema: T.StructType,
+        groups: list[list[str]],
+        n_buckets: int | None = None,
+    ) -> DataFrame:
+        """The ONE read-side winner rule: one row per key = max ``(_lsn,
+        position in its group)`` over each group of table-relative files,
+        in ``scan_schema``'s LOGICAL names, internal columns included,
+        tombstones kept. Each group lists, in commit order, files that
+        together hold every version of their keys worth resolving — a whole
+        bucket or a pruned subset of one — so no row crosses groups and the
+        read plans no exchange.
+
+        Every file the engine writes is key-unique *within itself* (merge
+        writes per-epoch batch winners, compaction writes fully-resolved
+        buckets), so a single-file group is a plain parquet scan; the
+        multi-file groups go through the ``mor_scan`` source (packed one
+        task per core, bucket-local Arrow merge). ``n_buckets`` (default
+        ``snap.n_buckets``) lets mor_scan drop the groups a pushed
+        ``conv_id`` equality cannot hit; 0 means groups are not single
+        buckets of one layout, and disables that pruning."""
+        root = self.root
+        single = [os.path.join(root, g[0]) for g in groups if len(g) == 1]
+        multi = [[os.path.join(root, p) for p in g] for g in groups if len(g) > 1]
         parts: list[DataFrame] = []
         if single:
-            parts.append(
-                self._scan_files(
-                    scan_schema, [os.path.join(self.root, p) for p in single]
-                )
-            )
-        if multi_groups:
+            parts.append(self._scan_files(scan_schema, single))
+        if multi:
             from maestro_spark import mor_scan
 
-            # the Arrow source reads files, so it works in PHYSICAL
-            # names (keys/internals are never renameable, so its
-            # resolve/pushdown columns are untouched); rename after
+            # the Arrow source reads files, so it works in PHYSICAL names
+            # (keys/internals are never renameable, so its resolve/pushdown
+            # columns are untouched); rename after
             part = mor_scan.scan(
-                self.spark, S.physical_schema(scan_schema), multi_groups,
-                snap.n_buckets, _pushdown_ok(self.spark),
+                self.spark, S.physical_schema(scan_schema), multi,
+                snap.n_buckets if n_buckets is None else n_buckets,
             )
             parts.append(_logical(part, scan_schema))
         if not parts:
@@ -496,7 +509,7 @@ class LakeTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out.select(*cols)
+        return out.select(*[f.name for f in scan_schema.fields])
 
     def changes(
         self,
@@ -522,8 +535,9 @@ class LakeTable:
         This is manifest arithmetic, not a table diff: each epoch snapshot in
         the range contributes exactly the data files it ADDED (per-bucket set
         difference vs its parent), and the net change per key is the max-LSN
-        winner across those files — an epoch's added files are precisely its
-        batch winners, so the feed is exact. A :meth:`purge` snapshot's added
+        winner across those files (resolved bucket-locally by
+        :meth:`_resolve`, no shuffle) — an epoch's added files are precisely
+        its batch winners, so the feed is exact. A :meth:`purge` snapshot's added
         file is a full rewrite of one bucket, so the feed also carries that
         bucket's unchanged rows re-stated at their current LSN — still
         correct to apply (idempotent upserts), just wider. Maintenance
@@ -538,18 +552,19 @@ class LakeTable:
         (``expire_snapshots`` + ``vacuum`` bound the feed horizon, same as
         any lake-format change feed).
         """
-        to_snapshot = to_snapshot if to_snapshot is not None else self.snapshot().snapshot_id
+        to_snap = self.snapshot(to_snapshot)
+        to_snapshot = to_snap.snapshot_id
         if to_snapshot < from_snapshot:
             raise ValueError(f"to_snapshot {to_snapshot} < from_snapshot {from_snapshot}")
-        to_snap = self.snapshot(to_snapshot)
         payload = [f.name for f in to_snap.payload_schema().fields]
         out_cols = [
             *payload,
             F.when(F.col(S.DELETED_COL), F.lit("delete")).otherwise(F.lit("upsert")).alias("op"),
             F.col(S.LSN_COL).alias("lsn"),
         ]
-        parts: list[DataFrame] = []
-        for seq, sid in enumerate(range(from_snapshot + 1, to_snapshot + 1)):
+        # (snapshot id, its bucket count, bucket -> added files), commit order
+        added: list[tuple[int, int, dict[str, list[str]]]] = []
+        for sid in range(from_snapshot + 1, to_snapshot + 1):
             snap = self.snapshot(sid)
             if snap.stats.get("rollback_to") is not None:
                 # a rollback's delta is files REMOVED vs its parent — the
@@ -570,34 +585,33 @@ class LakeTable:
                 # column's stale bytes.
                 continue
             parent = self.snapshot(snap.parent_id) if snap.parent_id is not None else None
-            added = []
-            for b, ps in snap.files.items():
-                prev = set(parent.files.get(b, [])) if parent else set()
-                added.extend(os.path.join(self.root, p) for p in ps if p not in prev)
-            if added:
-                parts.append(
-                    self._scan_files(to_snap.schema, added)
-                    .withColumn("_seq", F.lit(seq))
-                    .withColumn("_sid", F.lit(sid))
-                )
-        if not parts:
-            empty = (
-                self.spark.createDataFrame([], to_snap.schema)
-                .withColumn("_seq", F.lit(0))
-                .withColumn("_sid", F.lit(0))
-            )
-            if not collapse:
-                return empty.select(*out_cols, F.col("_sid").alias("snapshot_id"))
-            return empty.select(*out_cols)
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
-        keys = S.KEY_COLS
+            files = added_files(snap, parent)
+            if files:
+                added.append((sid, snap.n_buckets, files))
         if not collapse:
+            parts = [
+                self._scan_files(
+                    to_snap.schema,
+                    [os.path.join(self.root, p) for ps in files.values() for p in ps],
+                )
+                .withColumn("_seq", F.lit(seq))
+                .withColumn("_sid", F.lit(sid))
+                for seq, (sid, _, files) in enumerate(added)
+            ]
+            if not parts:
+                parts = [
+                    self.spark.createDataFrame([], to_snap.schema)
+                    .withColumn("_seq", F.lit(0))
+                    .withColumn("_sid", F.lit(0))
+                ]
+            union = parts[0]
+            for p in parts[1:]:
+                union = union.unionByName(p)
             # one row per (key, lsn): the first commit that emitted the
             # version wins the tag (purge re-statements carry the SAME lsn
             # and identical payload — the one-LSN-one-payload invariant —
             # so this dedup is exact, not a choice among candidates)
+            keys = S.KEY_COLS
             rest2 = [c for c in union.columns if c not in (*keys, S.LSN_COL)]
             firsts = (
                 union.groupBy(*keys, S.LSN_COL)
@@ -605,11 +619,22 @@ class LakeTable:
                 .select(*keys, S.LSN_COL, "_w.*")
             )
             return firsts.select(*out_cols, F.col("_sid").alias("snapshot_id"))
-        # winner per key = max (_lsn, commit seq); the seq tie-break makes
-        # re-delivered equal-LSN rows resolve to the later commit
-        # deterministically (payloads are identical by the one-LSN-one-payload
-        # invariant, so this is belt-and-braces, not semantics)
-        winners = dedup_max_lsn(union, keys, F.struct(S.LSN_COL, "_seq"))
+        # net change per key = its winner over the added files. A key's
+        # files all sit in its bucket; across a rebucket its buckets agree
+        # modulo the gcd of the range's bucket counts, so grouping by
+        # bucket mod that gcd keeps every key inside one group. Commit
+        # order within a group keeps the later commit the LSN-tie winner.
+        g = 0
+        for _, n, _ in added:
+            g = math.gcd(g, n)
+        groups: dict[int, list[str]] = {}
+        for _, _, files in added:
+            for b, ps in files.items():
+                groups.setdefault(int(b) % g, []).extend(ps)
+        one_layout = all(n == g for _, n, _ in added)
+        winners = self._resolve(
+            to_snap, to_snap.schema, list(groups.values()), g if one_layout else 0
+        )
         return winners.select(*out_cols)
 
     def scd2(
@@ -683,7 +708,7 @@ class LakeTable:
         projection pushdown, so ``read().select(few)`` decodes every column
         while ``read(columns=few)`` decodes only the few."""
         snap = self.snapshot(snapshot_id)
-        resolved = self.read_resolved(buckets, snapshot_id, columns=columns)
+        resolved = self.read_resolved(buckets, snap.snapshot_id, columns=columns)
         out_cols = columns if columns is not None else [
             f.name for f in snap.payload_schema().fields
         ]
@@ -955,12 +980,14 @@ class LakeTable:
         read_resolved), and ``mask`` is the absolute paths of files that
         cannot hold a row in range but CAN hold a higher-LSN version of a
         candidate row (per-file lsn_max ≥ the bucket's minimum candidate
-        lsn_min). Scanning the mask with keys+_lsn only (columnar
-        projection) keeps the pruned read EXACT under merge-on-read: a
-        candidate winner superseded by an out-of-range update is knocked out
-        instead of resurrected. Files with unknown bounds (pre-upgrade
-        shards, evolved-in or uncapped columns) are never pruned and always
-        masked.
+        lsn_min). :meth:`read_where` resolves each bucket over its
+        candidates and mask together, which keeps the pruned read EXACT
+        under merge-on-read: a candidate superseded by an out-of-range
+        update loses to it, and the range filter drops that winner. A file
+        in neither list has ``lsn_max`` below every candidate's ``lsn_min``
+        in its bucket, so it cannot supersede one. Files with unknown bounds
+        (pre-upgrade shards, evolved-in or uncapped columns) are never
+        pruned.
         """
         from maestro_spark.filestats import _micros, col_overlaps
 
@@ -1017,60 +1044,32 @@ class LakeTable:
     ) -> DataFrame:
         """Live rows whose scalar ``col`` falls in [lo, hi] (inclusive,
         either end open), scanning only the files the per-column zone maps
-        admit plus a keys-only mask scan. Result equals
-        ``read().filter(col between)`` exactly (see plan_col_scan for why
-        masking preserves MOR semantics) — an analytics predicate on
-        ``role``, ``tool``, or an evolved payload column prunes like a ts
-        range instead of scanning every live file. ``columns`` additionally
-        prunes the candidate scans to the given payload columns (zone
-        pruning × column pruning compose — the narrow range query over the
-        wide table decodes neither out-of-range files nor wide columns).
+        admit (see :meth:`plan_col_scan`): each bucket's candidate and mask
+        files resolve as one group through :meth:`_resolve`, then the
+        range filter applies. Result equals ``read().filter(col between)``
+        exactly — an analytics predicate on ``role``, ``tool``, or an
+        evolved payload column prunes like a ts range instead of scanning
+        every live file. ``columns`` additionally prunes the scan to the
+        given payload columns (zone pruning × column pruning compose — the
+        narrow range query over the wide table decodes neither out-of-range
+        files nor wide columns).
         """
         snap = self.snapshot(snapshot_id)
         if col not in {f.name for f in snap.schema.fields}:
             raise ValueError(f"unknown column {col!r}")
-        cand, mask, _ = self.plan_col_scan(col, lo, hi, snapshot_id)
-        if columns is None:
-            scan_schema = snap.schema
-            payload = [f.name for f in snap.payload_schema().fields]
-        else:
-            need = dict.fromkeys(
-                [*S.KEY_COLS, *columns, col, S.LSN_COL, S.DELETED_COL]
-            )
-            scan_schema = T.StructType(
-                [f for f in snap.schema.fields if f.name in need]
-            )
-            payload = list(columns)
-        if not cand:
-            return self.spark.createDataFrame(
-                [], T.StructType([f for f in scan_schema.fields if f.name in set(payload)])
-            )
-        union: DataFrame | None = None
-        for j in sorted(cand):
-            part = self._scan_files(scan_schema, cand[j]).withColumn(
-                "_seq", F.lit(j)
-            )
-            union = part if union is None else union.unionByName(part)
-        winners = dedup_max_lsn(union, S.KEY_COLS, F.struct(S.LSN_COL, "_seq"))
-        if mask:
-            m = (
-                self._scan_files(scan_schema, mask)
-                .select(
-                    F.col("conv_id").alias("_m_conv"),
-                    F.col("turn_idx").alias("_m_turn"),
-                    F.col(S.LSN_COL).alias("_m_lsn"),
-                )
-            )
-            winners = winners.join(
-                m,
-                on=(
-                    (F.col("conv_id") == F.col("_m_conv"))
-                    & (F.col("turn_idx") == F.col("_m_turn"))
-                    & (F.col("_m_lsn") > F.col(S.LSN_COL))
-                ),
-                how="left_anti",
-            )
-        out = winners.filter(~F.col(S.DELETED_COL))
+        cand, mask, _ = self.plan_col_scan(col, lo, hi, snap.snapshot_id)
+        scan_schema = self._scan_schema(snap, None if columns is None else [*columns, col])
+        payload = (
+            list(columns) if columns is not None
+            else [f.name for f in snap.payload_schema().fields]
+        )
+        keep = {p for ps in cand.values() for p in ps} | set(mask)
+        groups = [
+            [p for p in ps if os.path.join(self.root, p) in keep]
+            for ps in snap.files.values()
+        ]
+        out = self._resolve(snap, scan_schema, [g for g in groups if g])
+        out = out.filter(~F.col(S.DELETED_COL))
         if lo is not None:
             out = out.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -1083,7 +1082,7 @@ class LakeTable:
         """Driver-side point-lookup plan: ``(bucket, candidates, total)``
         where ``candidates`` is the bucket's file list pruned by the
         per-file key blooms, as ``(original_commit_seq, rel_path)`` pairs
-        (the preserved seq keeps LSN-tie resolution commit-ordered), and
+        in commit order (so LSN ties still resolve to the later commit), and
         ``total`` is the bucket's unpruned file count. Files without a
         bloom (not yet indexed by :meth:`build_key_blooms`) are kept —
         pruning is only ever evidence-based, and blooms have no false
@@ -1122,30 +1121,21 @@ class LakeTable:
         where ``write_bucket_files``'s (conv_id, turn_idx)
         sort-within-partitions makes row-group min/max stats prune to the
         few pages actually holding the key — an index-lookup-shaped read,
-        not a scan. Per-file ``_seq`` tags carry each file's ORIGINAL
-        commit position (bloom pruning preserves them), keeping the
-        max-(_lsn, commit) winner rule identical to read_resolved's; blooms
-        have no false negatives, so the result equals
-        ``read().filter(conv_id = ...)`` exactly.
+        not a scan. The surviving files resolve as one commit-ordered group
+        through :meth:`_resolve` (one file: a plain scan; several: mor_scan,
+        which takes the key equality as a pushed filter), and the key
+        filter commutes with resolution per key; blooms have no false
+        negatives, so the result equals ``read().filter(conv_id = ...)``
+        exactly.
         """
         snap = self.snapshot(snapshot_id)
         payload = [f.name for f in snap.payload_schema().fields]
-        _, cand, _ = self.plan_lookup(conv_id, snapshot_id=snapshot_id)
-        if not cand:
-            return self.spark.createDataFrame([], snap.payload_schema())
+        _, cand, _ = self.plan_lookup(conv_id, snapshot_id=snap.snapshot_id)
         pred = F.col("conv_id") == F.lit(conv_id)
         if turn_idx is not None:
             pred = pred & (F.col("turn_idx") == F.lit(turn_idx))
-        union: DataFrame | None = None
-        for j, p in cand:
-            part = (
-                self._scan_files(snap.schema, [os.path.join(self.root, p)])
-                .filter(pred)
-                .withColumn("_seq", F.lit(j))
-            )
-            union = part if union is None else union.unionByName(part)
-        winners = dedup_max_lsn(union, S.KEY_COLS, F.struct(S.LSN_COL, "_seq"))
-        return winners.filter(~F.col(S.DELETED_COL)).select(*payload)
+        winners = self._resolve(snap, snap.schema, [[p for _, p in cand]] if cand else [])
+        return winners.filter(pred & ~F.col(S.DELETED_COL)).select(*payload)
 
     def purge(self, conv_id: str) -> Snapshot:
         """Right-to-be-forgotten delete: physically erase one conversation's

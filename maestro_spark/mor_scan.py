@@ -1,14 +1,16 @@
 """Shuffle-free merge-on-read scan (the MOR counterpart of SURVEY §2.A3).
 
-``LakeTable.read_resolved`` must produce one winning row per
-``(conv_id, turn_idx)`` across a bucket's base+delta files. The obvious
+``LakeTable._resolve`` — the one read-side winner rule behind
+``read_resolved``, ``lookup``, ``read_where`` and ``changes`` — must produce
+one winning row per ``(conv_id, turn_idx)`` across a bucket's base+delta
+files (or the pruned subset of them a lookup or range read needs). The obvious
 formulation — ``groupBy(key).agg(max_by(...))`` over all files — shuffles
 the whole table on every read. But resolution is *bucket-local by
 construction*: a key lives in exactly one bucket (``pk_bucket =
 hash(conv_id) % B``), so no row ever needs to cross bucket boundaries.
 
 This module exploits that with a Python batch ``DataSource`` whose input
-partitions are packs of whole bucket file-groups, at most one pack per task
+partitions are packs of bucket file-groups, at most one pack per task
 slot: each task resolves its buckets one after another, reading each
 bucket's files with pyarrow, resolving winners vectorized (sort by
 ``(key, _lsn, commit-seq)``, keep the last row per key — numpy boundary
@@ -19,6 +21,10 @@ performs, built from scratch per the north rule. Packing matters because a
 Python task has a fixed cost (worker set-up, ~120-140 ms on a 4-core host)
 that dwarfs resolving one small bucket (~12 ms), so the task count follows
 the cores, not the buckets.
+
+A pushed ``conv_id``/``turn_idx`` equality (``pushFilters``) drops the
+groups of other buckets and becomes a pyarrow row filter; key filters are
+safe before resolution because the key is the resolution key.
 
 Schema evolution: older files simply lack newer columns; each file is
 conformed to the snapshot schema (missing columns null-filled, compatible
@@ -63,13 +69,14 @@ def resolve_group(files: list[str], schema: StructType, key_filters=None):
     """Read one bucket's base+delta files and yield resolved Arrow batches.
 
     Winner per (conv_id, turn_idx) = max (_lsn, commit-seq), where seq is
-    the file's position in the bucket's commit-ordered list — the order the
-    JVM-side reads (``changes``, ``read_where``, ``lookup``) give
-    ``dedup_max_lsn`` by tagging each commit position. Equal-LSN ties can
-    only come from re-delivered events — the engine invariant is
-    one-LSN-one-payload per key, so the seq preference for the later commit
-    is defensive determinism, not semantics. Every read of a delta-bearing
-    bucket and every bucket rewrite (``LakeTable._fold``) resolves here.
+    the file's position in the group's commit-ordered list (a pruned subset
+    of a bucket keeps its files' relative order, so the tie-break holds).
+    Equal-LSN ties can only come from re-delivered events — the engine
+    invariant is one-LSN-one-payload per key, so the seq preference for the
+    later commit is defensive determinism, not semantics. Every read of a
+    multi-file group (``LakeTable._resolve``: resolved reads, lookups,
+    range reads, the net change feed) and every bucket rewrite
+    (``LakeTable._fold``) resolves here.
     """
     import numpy as np
     import pyarrow as pa
@@ -131,11 +138,25 @@ class MorScanReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
         self.groups: list[list[str]] = json.loads(options["groups_json"])
+        # 0 = groups are not single buckets of one layout: no bucket pruning
         self.n_buckets = int(options.get("n_buckets", "0"))
         # task slots of the session (sparkContext.defaultParallelism); the
         # planning worker has no SparkContext, so the caller passes it
         self.slots = int(options.get("slots", "1"))
         self.key_filters: list[tuple[str, object]] = []
+
+    def pushFilters(self, filters):
+        """Accept equality on the KEY columns only (safe pre-resolve; see
+        resolve_group). All filters are returned so Spark still
+        re-evaluates them — pushdown here is an IO optimization
+        (bucket-group pruning + parquet row-group pruning), never a
+        correctness dependency."""
+        from pyspark.sql.datasource import EqualTo
+
+        for f in filters:
+            if isinstance(f, EqualTo) and f.attribute in (("conv_id",), ("turn_idx",)):
+                self.key_filters.append((f.attribute[0], f.value))
+            yield f
 
     def partitions(self):
         groups = self.groups
@@ -156,27 +177,6 @@ class MorScanReader(DataSourceReader):
             yield from resolve_group(files, self._schema, self.key_filters)
 
 
-class PushdownMorScanReader(MorScanReader):
-    """MorScanReader + Spark 4.1 Python-DataSource filter pushdown. A
-    SEPARATE class because merely implementing pushFilters makes Spark
-    require ``spark.sql.python.filterPushdown.enabled``; read_resolved
-    selects this reader only when the session has (or accepts) the flag,
-    so the engine never hard-depends on a session conf it doesn't own."""
-
-    def pushFilters(self, filters):
-        """Accept equality on the KEY columns only (safe pre-resolve; see
-        resolve_group). All filters are returned so Spark still
-        re-evaluates them — pushdown here is an IO optimization
-        (bucket-group pruning + parquet row-group pruning), never a
-        correctness dependency."""
-        from pyspark.sql.datasource import EqualTo
-
-        for f in filters:
-            if isinstance(f, EqualTo) and f.attribute in (("conv_id",), ("turn_idx",)):
-                self.key_filters.append((f.attribute[0], f.value))
-            yield f
-
-
 class MorScanDataSource(DataSource):
     """spark.read.format("mor_scan").schema(s)
     .option("groups_json", json.dumps([[f1, f2], ...]))
@@ -190,22 +190,21 @@ class MorScanDataSource(DataSource):
         return StructType.fromJson(json.loads(self.options["schema_json"]))
 
     def reader(self, schema: StructType) -> MorScanReader:
-        cls = (
-            PushdownMorScanReader
-            if self.options.get("pushdown") == "true"
-            else MorScanReader
-        )
-        return cls(schema, dict(self.options))
+        return MorScanReader(schema, dict(self.options))
 
 
 def register(spark) -> None:
     spark.dataSource.register(MorScanDataSource)
 
 
-def scan(spark, schema: StructType, groups: list[list[str]], n_buckets: int,
-         pushdown: str = "false"):
-    """DataFrame of ``groups`` (whole buckets, files in commit order)
-    resolved in ``schema`` (PHYSICAL names), packed one task per core."""
+def scan(spark, schema: StructType, groups: list[list[str]], n_buckets: int):
+    """DataFrame of ``groups`` (files in commit order, each group holding
+    every version of its keys) resolved in ``schema`` (PHYSICAL names),
+    packed one task per core. ``n_buckets`` > 0 says each group is one
+    bucket of that layout, so a pushed ``conv_id`` equality prunes groups.
+    The reader implements filter pushdown, which Spark allows only with
+    ``spark.sql.python.filterPushdown.enabled`` set, so this sets it."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register(spark)
     return (
         spark.read.format(FORMAT_NAME)
@@ -214,6 +213,5 @@ def scan(spark, schema: StructType, groups: list[list[str]], n_buckets: int,
         .option("groups_json", json.dumps(groups))
         .option("slots", str(spark.sparkContext.defaultParallelism))
         .option("n_buckets", str(n_buckets))
-        .option("pushdown", pushdown)
         .load()
     )

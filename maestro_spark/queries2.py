@@ -333,10 +333,11 @@ def q_cdc_replay(spark, sf_dir):
 )
 def q_read_tsrange(spark, sf_dir):
     """Zone-map pruned event-time range read (lake.read_where_ts): per-file
-    ts bounds from the fstats store admit only overlapping files, a
-    keys-only mask scan preserves exact merge-on-read semantics (a winner
-    updated out of the range in a pruned file cannot resurrect its old
-    version), and the result must equal DuckDB's unpruned arg_max + filter
+    ts bounds from the fstats store admit only overlapping files; each
+    bucket resolves them together with the files that may hold a newer
+    version of their keys, which preserves exact merge-on-read semantics (a
+    winner updated out of the range in a pruned file cannot resurrect its
+    old version), and the result must equal DuckDB's unpruned arg_max + filter
     over the same log."""
     import datetime as dt
 
@@ -361,8 +362,9 @@ def q_read_colrange(spark, sf_dir):
     """Generalized zone maps (M10 extended, r2 verdict #4): a range
     predicate on ANY scalar column prunes files via per-column min/max
     bounds harvested in the same footer pass as ts/lsn
-    (filestats.collect_file's cols map), with the keys-only mask scan
-    keeping the pruned read EXACT under merge-on-read. Must equal DuckDB's
+    (filestats.collect_file's cols map), with each bucket's candidates
+    resolved together with their possible superseders, keeping the pruned
+    read EXACT under merge-on-read. Must equal DuckDB's
     unpruned arg_max + filter over the same log."""
     table = _ensure_cdc_demo_lake(spark)
     return table.read_where("turn_idx", 3, 5).select(

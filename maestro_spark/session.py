@@ -49,10 +49,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # mor_scan implements Python-DataSource filter pushdown (key
-        # equality -> bucket + row-group pruning); the reader requires this
-        # flag once pushFilters exists
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # finer scan splits: CDC log segments are modest files whose row

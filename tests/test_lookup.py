@@ -83,11 +83,24 @@ def test_lookup_equals_filtered_read(table):
     assert list(one["text"]) == ["a1v2"]
 
 
-def test_lookup_scans_one_bucket_only(table):
-    """inputFiles of the lookup plan all live under the key's own
-    pk_bucket dir — the other n_buckets-1 of the table are never opened."""
+def test_lookup_scans_one_bucket_only(table, monkeypatch):
+    """Every file the lookup plan reads — the parquet scan's inputFiles and
+    the file groups handed to mor_scan (a Python DataSource lists none) —
+    lives under the key's own pk_bucket dir: the other n_buckets-1 of the
+    table are never opened."""
+    from maestro_spark import mor_scan
+
+    groups: list[list[str]] = []
+    real = mor_scan.scan
+
+    def spy(spark, schema, gs, *a, **kw):
+        groups.extend(gs)
+        return real(spark, schema, gs, *a, **kw)
+
+    monkeypatch.setattr(mor_scan, "scan", spy)
     b = bucket_of("A", 4)
-    files = table.lookup("A").inputFiles()
+    df = table.lookup("A")
+    files = df.inputFiles() + [f for g in groups for f in g]
     assert files, "lookup plan lists no input files"
     assert all(f"pk_bucket={b}/" in f for f in files)
     total = sum(len(ps) for ps in table.snapshot().files.values())
@@ -193,7 +206,7 @@ def test_key_filter_pushdown_into_mor_scan(spark, tmp_path):
     )
     assert got.equals(want) and len(got) > 0
     # the reader's own pruning arithmetic: one bucket's groups survive
-    from maestro_spark.mor_scan import PushdownMorScanReader
+    from maestro_spark.mor_scan import MorScanReader
 
     snap = t.snapshot()
     groups = [
@@ -201,7 +214,7 @@ def test_key_filter_pushdown_into_mor_scan(spark, tmp_path):
     ]
     import json as _json
 
-    r = PushdownMorScanReader(
+    r = MorScanReader(
         snap.schema,
         {"groups_json": _json.dumps(groups), "n_buckets": str(snap.n_buckets)},
     )
