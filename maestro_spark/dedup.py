@@ -9,7 +9,8 @@ shuffle. The **aggregation
 form** is used because ``groupBy().agg(max_by(...))`` gets map-side partial
 aggregation for free (duplicates and superseded updates collapse before the
 shuffle), while the window form (`row_number`) must shuffle every event. The
-window form is kept only as the property-tested reference (SURVEY §5.2).
+window form lives on only as the reference ``tests/test_ops.py`` checks
+it against (SURVEY §5.2).
 
 A delete is a *winner*, not an absence: deletes survive dedup as rows so the
 merge can apply them (the classic CDC bug called out in SURVEY §7).
@@ -17,7 +18,7 @@ merge can apply them (the classic CDC bug called out in SURVEY §7).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from maestro_spark.schema import KEY_COLS
@@ -45,17 +46,3 @@ def dedup_max_lsn(
         .select(*keys, "_w.*")
     )
 
-
-def dedup_max_lsn_window(
-    events: DataFrame, keys: list[str] | None = None, lsn_col: str = "op_lsn"
-) -> DataFrame:
-    """Window form (SURVEY §2.E1) — the reference :func:`dedup_max_lsn` is
-    property-tested against."""
-    keys = keys or KEY_COLS
-    w = Window.partitionBy(*keys).orderBy(F.col(lsn_col).desc())
-    return (
-        events.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .select(*events.columns)
-    )

@@ -1,39 +1,48 @@
-"""Change-feed-maintained ANN index over a LakeTable (r2 verdict #5).
+"""Change-feed-maintained indexes over a LakeTable: LSH and IVF ANN,
+simhash near-dup, an inverted term index, and an exact-value index.
 
-``MaintainedLshIndex`` keeps a persisted LSH signature index (the
-``_bucket=<p>/`` parquet layout of ``similarity.build_lsh_index``) in sync
-with a transcript LakeTable that carries a vector payload column, driven by
-:meth:`LakeTable.changes` — the same delta-not-rebuild discipline the IVM
-view uses, pointed at an index instead of an aggregate:
+Every kind keeps ONE maintenance contract, written once in
+:class:`_MaintainedIndex` — the delta-not-rebuild discipline the IVM view
+uses, pointed at an index instead of an aggregate:
 
-- **refresh = O(delta)**: each refresh appends signature rows ONLY for the
-  keys the feed names (signatures are a pure function of vector +
-  hyperplanes, so the bucket layout — and probe partition pruning — is
-  untouched), never re-hashing the corpus;
+- **refresh = O(delta)**: each refresh appends index rows ONLY for the
+  keys :meth:`LakeTable.changes` names (an index row is a pure function of
+  the key's source columns and the meta, so the hive layout — and probe
+  partition pruning — is untouched), never re-indexing the corpus;
 - **updates/deletes via LSN dominance, not in-place edits**: an updated
-  vector's new signature may land in a DIFFERENT bucket than its stale row,
-  and the feed's delete events carry no vector to locate the old bucket —
+  row's new index rows may land in a DIFFERENT partition than its stale
+  ones, and the feed's delete events carry no payload to locate them —
   so every feed event also lands one row in a small ``_tombstones/`` side
   table ``(key, lsn)``, and probes drop any candidate row an
   equal-or-newer tombstone dominates (``tomb.lsn > row._lsn``). This is
   the lake's own max-LSN rule transplanted to the index;
-- **probe = pruned scan + dominance filter + exact re-rank**: candidate
-  buckets via Catalyst partition pruning (dir-level), per-key max-LSN
-  dedupe AMONG candidates (bounded by the probe, not the corpus), a
-  broadcast anti-join against the tombstone side table, cosine re-rank.
-  Results equal a probe of a FRESH rebuild over the base's current state —
-  asserted by tests;
+- **probe = pruned scan + dominance filter**: candidate partitions via
+  Catalyst partition pruning (dir-level), per-key max-LSN dedupe AMONG
+  candidates (bounded by the probe, not the corpus), a broadcast
+  anti-join against the tombstone side table. Results equal a probe of a
+  FRESH rebuild over the base's current state — asserted by tests;
 - **cursor + idempotence**: the applied-through cursor derives from
-  append-only ``_applied-<from>-<to>.json`` markers (the export_changes
-  pattern — monotone by construction). A crash between the data appends
-  and the marker re-applies the same range on the next refresh; that is
-  harmless because index rows are (key, lsn)-idempotent — duplicates
-  collapse in the probe's max-LSN dedupe — and is reclaimed by the next
-  :meth:`rebuild`.
+  append-only ``_applied-<from>-<to>.json`` range markers
+  (``lake._range_cursor``, shared with export_changes — monotone by
+  construction). A crash between the data appends and the marker
+  re-applies the same range on the next refresh; that is harmless
+  because index rows are (key, lsn)-idempotent — duplicates collapse in
+  the probe's max-LSN dedupe — and is reclaimed by the next rebuild;
+- **rebuild = compaction**: a full rebuild from base current state folds
+  away dominated rows, duplicate re-applies and tombstones. Its Spark
+  overwrite clears the whole index directory (rows, ``_tombstones/``,
+  markers, meta) in one step, so a crash before it leaves the index as it
+  was, and a crash after it leaves no meta, which makes the next refresh
+  rebuild. Bootstrap, an expired feed horizon, a range spanning a
+  rollback and a meta of an older layout all degrade to a rebuild.
 
-Periodic :meth:`rebuild` (full, from base current state) is the
-compaction of this structure: it folds away dominated rows, duplicate
-re-applies, and tombstones; between rebuilds every refresh is delta-sized.
+A kind supplies hooks only: its meta file name (``_META``), its source
+columns (:meth:`_source_cols`), :meth:`_fit` (the meta a rebuild writes —
+LSH's dimension, IVF's centroids) and :meth:`_write` (index rows for a
+refresh's upserts or a rebuild's live rows).
+
+Declared indexes persist through :mod:`maestro_spark.registry`, the same
+registry as the persisted IVM views (see :data:`_INDEXES`).
 """
 
 from __future__ import annotations
@@ -45,6 +54,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from maestro_spark import lake
 from maestro_spark import schema as S
 from maestro_spark.dedup import dedup_max_lsn
 from maestro_spark.functions.similarity import (
@@ -55,10 +65,9 @@ from maestro_spark.functions.similarity import (
     probe_buckets,
 )
 from maestro_spark.lake import LakeTable
+from maestro_spark.registry import Registry
 
-_META = "_maint_lsh_meta.json"
 _TOMBS = "_tombstones"
-_SH_META = "_maint_simhash_meta.json"
 
 
 def _append_tombstones(index_dir: str, feed: DataFrame) -> None:
@@ -99,8 +108,115 @@ def _anti_tombstones(spark: SparkSession, index_dir: str, df: DataFrame) -> Data
     )
 
 
-class MaintainedLshIndex:
-    """Feed-maintained LSH index over ``base``'s ``vec_col`` payload."""
+class _MaintainedIndex:
+    """The one refresh/rebuild contract of the module docstring; each kind
+    overrides the hooks below."""
+
+    _META: str  # meta file name inside the index directory
+    _LAYOUT: int | None = None  # the meta "v" of the kind's current layout
+
+    def __init__(self, spark: SparkSession, base: LakeTable, index_dir: str):
+        self.spark = spark
+        self.base = base
+        self.dir = index_dir
+        os.makedirs(index_dir, exist_ok=True)
+
+    # ---------------------------------------------------------------- hooks
+    def _source_cols(self) -> list[str]:
+        """Base columns the index rows derive from (scan-pruning set)."""
+        raise NotImplementedError
+
+    def _fit(self, live: DataFrame) -> dict | None:
+        """The meta a rebuild over ``live`` writes; None while there is
+        nothing live to fit it on (the index stays unbuilt)."""
+        raise NotImplementedError
+
+    def _write(self, rows: DataFrame, meta: dict, mode: str) -> None:
+        """rows: (keys, *source cols, _lsn) → the kind's index rows,
+        written with ``mode``: ``append`` (refresh) or ``overwrite``
+        (rebuild)."""
+        raise NotImplementedError
+
+    def _source_filter(self) -> Column:
+        """Rows worth indexing: every source column non-null."""
+        cols = self._source_cols()
+        out = F.col(cols[0]).isNotNull()
+        for c in cols[1:]:
+            out = out & F.col(c).isNotNull()
+        return out
+
+    # ------------------------------------------------------------- plumbing
+    def _meta(self) -> dict | None:
+        p = os.path.join(self.dir, self._META)
+        if not os.path.exists(p):
+            return None
+        with open(p) as fh:
+            return json.load(fh)
+
+    def applied_through(self) -> int:
+        """Highest base snapshot folded in — max ``to`` over the append-only
+        ``_applied-`` range markers (monotone)."""
+        return lake._range_cursor(self.dir, "_applied")
+
+    def _mark(self, frm: int, to: int) -> None:
+        lake._mark_range(self.dir, "_applied", frm, to)
+
+    # ---------------------------------------------------------- maintenance
+    def refresh(self) -> dict | None:
+        """Fold base changes ``(applied_through, tip]`` in (O(delta)).
+        Returns the range applied, or None when already current. A missing
+        or older-layout meta, an expired feed horizon and a range spanning
+        a rollback degrade to :meth:`rebuild` (same contract as the IVM
+        view)."""
+        meta = self._meta()
+        if meta is None or meta.get("v") != self._LAYOUT:
+            return self.rebuild()
+        frm = self.applied_through()
+        to = self.base.snapshot().snapshot_id
+        if to <= frm:
+            return None
+        try:
+            feed = self.base.changes(frm, to)
+        except (FileNotFoundError, ValueError):
+            return self.rebuild()
+        ups = feed.filter(
+            (F.col("op") == "upsert") & self._source_filter()
+        ).select(
+            *S.KEY_COLS, *self._source_cols(), F.col("lsn").alias(S.LSN_COL)
+        )
+        self._write(ups, meta, mode="append")
+        _append_tombstones(self.dir, feed)
+        self._mark(frm, to)
+        return {"from": frm, "to": to}
+
+    def rebuild(self) -> dict | None:
+        """Full rebuild from base current state — the structure's compaction
+        (folds dominated rows, duplicate re-applies, and tombstones). The
+        overwrite itself clears the old rows, ``_tombstones/``, markers and
+        meta; None when there is nothing live to fit the meta on."""
+        to = self.base.snapshot().snapshot_id
+        cols = self._source_cols()
+        live = self.base.read_resolved(columns=cols).filter(
+            ~F.col(S.DELETED_COL) & self._source_filter()
+        ).select(*S.KEY_COLS, *cols, S.LSN_COL)
+        meta = self._fit(live)
+        if meta is None:
+            return None
+        self._write(live, meta, mode="overwrite")
+        lake._atomic_write_json(
+            os.path.join(self.dir, self._META), meta, exclusive=False
+        )
+        self._mark(self.applied_through(), to)
+        return {"from": 0, "to": to, "rebuild": True}
+
+
+class MaintainedLshIndex(_MaintainedIndex):
+    """Feed-maintained LSH index over ``base``'s ``vec_col`` payload: the
+    ``_bucket=<p>/`` parquet layout of ``similarity.build_lsh_index``
+    (signatures are a pure function of vector + hyperplanes, the
+    hyperplanes a function of ``seed`` and the dimension in the meta)."""
+
+    _META = "_maint_lsh_meta.json"
 
     def __init__(
         self,
@@ -112,49 +228,30 @@ class MaintainedLshIndex:
         prefix_bits: int = 8,
         seed: int = 42,
     ):
-        self.spark = spark
-        self.base = base
-        self.dir = index_dir
+        super().__init__(spark, base, index_dir)
         self.vec_col = vec_col
         self.n_bits = n_bits
         self.prefix_bits = prefix_bits
         self.seed = seed
-        os.makedirs(index_dir, exist_ok=True)
-
-    # ------------------------------------------------------------- plumbing
-    def _meta_path(self) -> str:
-        return os.path.join(self.dir, _META)
-
-    def _meta(self) -> dict | None:
-        p = self._meta_path()
-        return json.load(open(p)) if os.path.exists(p) else None
 
     def _planes(self, dim: int) -> list[list[float]]:
         return [_projection_vector(self.seed + i, dim) for i in range(self.n_bits)]
 
-    def applied_through(self) -> int:
-        """Highest base snapshot folded in — max ``to`` over the append-only
-        range markers (monotone; same derivation as export_changes)."""
-        best = 0
-        for f in os.listdir(self.dir):
-            m = re.fullmatch(r"_applied-(\d{13})-(\d{13})\.json", f)
-            if m:
-                best = max(best, int(m.group(2)))
-        return best
+    def _source_cols(self) -> list[str]:
+        return [self.vec_col]
 
-    def _mark(self, frm: int, to: int) -> None:
-        p = os.path.join(self.dir, f"_applied-{frm:013d}-{to:013d}.json")
-        try:
-            from maestro_spark.lake import _atomic_write_json
+    def _fit(self, live: DataFrame) -> dict | None:
+        first = live.select(self.vec_col).head()
+        if first is None:
+            return None
+        return {"dim": len(first[0]), "n_bits": self.n_bits,
+                "prefix_bits": self.prefix_bits, "seed": self.seed,
+                "vec_col": self.vec_col}
 
-            _atomic_write_json(p, {"from": frm, "to": to}, exclusive=True)
-        except FileExistsError:
-            pass  # racer applied the identical range
-
-    def _sig_append(self, rows: DataFrame, dim: int, mode: str) -> None:
-        """rows: (conv_id, turn_idx, <vec_col>, _lsn) → signature rows into
-        their bucket dirs (hive partitioning preserved)."""
-        sig = lsh_signature(F.col(self.vec_col), self._planes(dim))
+    def _write(self, rows: DataFrame, meta: dict, mode: str) -> None:
+        """Signature rows into their bucket dirs (hive partitioning
+        preserved)."""
+        sig = lsh_signature(F.col(self.vec_col), self._planes(meta["dim"]))
         (
             rows.withColumn("_sig", sig)
             .withColumn(
@@ -166,57 +263,6 @@ class MaintainedLshIndex:
             .mode(mode)
             .parquet(self.dir)
         )
-
-    # -------------------------------------------------------------- refresh
-    def refresh(self) -> dict | None:
-        """Fold base changes ``(applied_through, tip]`` in. Returns the
-        range applied, or None when already current. Falls back to
-        :meth:`rebuild` when the feed horizon is gone or the range spans a
-        rollback (same degradation contract as the IVM view)."""
-        frm = self.applied_through()
-        to = self.base.snapshot().snapshot_id
-        if to <= frm:
-            return None
-        if self._meta() is None:
-            return self.rebuild()
-        try:
-            feed = self.base.changes(frm, to)
-        except (FileNotFoundError, ValueError):
-            return self.rebuild()
-        dim = self._meta()["dim"]
-        ups = feed.filter(
-            (F.col("op") == "upsert") & F.col(self.vec_col).isNotNull()
-        ).select(
-            *S.KEY_COLS, self.vec_col, F.col("lsn").alias(S.LSN_COL)
-        )
-        self._sig_append(ups, dim, mode="append")
-        _append_tombstones(self.dir, feed)
-        self._mark(frm, to)
-        return {"from": frm, "to": to}
-
-    def rebuild(self) -> dict:
-        """Full rebuild from base current state — the structure's compaction
-        (folds dominated rows, duplicate re-applies, and tombstones)."""
-        import shutil
-
-        to = self.base.snapshot().snapshot_id
-        live = self.base.read_resolved(columns=[self.vec_col]).filter(
-            ~F.col(S.DELETED_COL) & F.col(self.vec_col).isNotNull()
-        ).select(*S.KEY_COLS, self.vec_col, S.LSN_COL)
-        dim = len(
-            self.base.read(columns=[self.vec_col])
-            .filter(F.col(self.vec_col).isNotNull())
-            .head()[self.vec_col]
-        )
-        shutil.rmtree(os.path.join(self.dir, _TOMBS), ignore_errors=True)
-        self._sig_append(live, dim, mode="overwrite")
-        json.dump(
-            {"dim": dim, "n_bits": self.n_bits, "prefix_bits": self.prefix_bits,
-             "seed": self.seed, "vec_col": self.vec_col},
-            open(self._meta_path(), "w"),
-        )
-        self._mark(self.applied_through(), to)
-        return {"from": 0, "to": to, "rebuild": True}
 
     # ---------------------------------------------------------------- probe
     def topk(self, query_vec: list[float], k: int = 10,
@@ -250,13 +296,12 @@ class MaintainedLshIndex:
         )
 
 
-class MaintainedSimhashIndex:
+class MaintainedSimhashIndex(_MaintainedIndex):
     """Feed-maintained TEXT near-dup index over ``base``'s ``text_col`` --
     the dedup twin of :class:`MaintainedLshIndex`: banded 64-bit simhash
     rows ``(conv_id, turn_idx, simhash, band, block, _lsn)`` partitioned by
     band (the layout of ``dedup_text.build_simhash_index``), kept in sync
-    O(delta) off :meth:`LakeTable.changes` with the same marker-chain
-    cursor, LSN-dominance tombstones, and rebuild-as-compaction story.
+    O(delta) off :meth:`LakeTable.changes` under the module's contract.
 
     :meth:`near_pairs` mines candidate pairs from the stored table --
     equal to ``simhash_near_pairs`` over the base's CURRENT live rows
@@ -264,6 +309,8 @@ class MaintainedSimhashIndex:
     anti-join run on the (8-byte-signature) index rows, never re-tokenizing
     the corpus.
     """
+
+    _META = "_maint_simhash_meta.json"
 
     def __init__(
         self,
@@ -274,72 +321,36 @@ class MaintainedSimhashIndex:
         bands: int = 4,
     ):
         assert 64 % bands == 0, "bands must divide 64"
-        self.spark = spark
-        self.base = base
-        self.dir = index_dir
+        super().__init__(spark, base, index_dir)
         self.text_col = text_col
         self.bands = bands
-        os.makedirs(index_dir, exist_ok=True)
 
-    # ------------------------------------------------------------- plumbing
-    applied_through = MaintainedLshIndex.applied_through
-    _mark = MaintainedLshIndex._mark
+    def _source_cols(self) -> list[str]:
+        return [self.text_col]
 
-    def _banded_rows(self, rows: DataFrame) -> DataFrame:
-        """(conv_id, turn_idx, text, _lsn) -> banded signature rows."""
+    def _fit(self, live: DataFrame) -> dict:
+        return {"bands": self.bands, "text_col": self.text_col}
+
+    def _write(self, rows: DataFrame, meta: dict, mode: str) -> None:
+        """(conv_id, turn_idx, text, _lsn) -> banded signature rows, one
+        ``band=`` dir per band."""
         from maestro_spark.functions.dedup_text import _banded, simhash
 
         keyed = rows.withColumn("_key", F.struct(*S.KEY_COLS, S.LSN_COL))
         sig = simhash(keyed, self.text_col, "_key")
-        return _banded(sig, self.bands).select(
-            F.col("id.conv_id").alias("conv_id"),
-            F.col("id.turn_idx").alias("turn_idx"),
-            F.col(f"id.{S.LSN_COL}").alias(S.LSN_COL),
-            "simhash", "band", "block",
-        )
-
-    def _append(self, banded: DataFrame, mode: str) -> None:
         (
-            banded.repartition("band")
+            _banded(sig, self.bands).select(
+                F.col("id.conv_id").alias("conv_id"),
+                F.col("id.turn_idx").alias("turn_idx"),
+                F.col(f"id.{S.LSN_COL}").alias(S.LSN_COL),
+                "simhash", "band", "block",
+            )
+            .repartition("band")
             .sortWithinPartitions("band", "block")
             .write.partitionBy("band")
             .mode(mode)
             .parquet(self.dir)
         )
-
-    # -------------------------------------------------------------- refresh
-    def refresh(self) -> dict | None:
-        frm = self.applied_through()
-        to = self.base.snapshot().snapshot_id
-        if to <= frm:
-            return None
-        if not os.path.exists(os.path.join(self.dir, _SH_META)):
-            return self.rebuild()
-        try:
-            feed = self.base.changes(frm, to)
-        except (FileNotFoundError, ValueError):
-            return self.rebuild()
-        ups = feed.filter(
-            (F.col("op") == "upsert") & F.col(self.text_col).isNotNull()
-        ).select(*S.KEY_COLS, self.text_col, F.col("lsn").alias(S.LSN_COL))
-        self._append(self._banded_rows(ups), mode="append")
-        _append_tombstones(self.dir, feed)
-        self._mark(frm, to)
-        return {"from": frm, "to": to}
-
-    def rebuild(self) -> dict:
-        import shutil
-
-        to = self.base.snapshot().snapshot_id
-        live = self.base.read_resolved(columns=[self.text_col]).filter(
-            ~F.col(S.DELETED_COL) & F.col(self.text_col).isNotNull()
-        ).select(*S.KEY_COLS, self.text_col, S.LSN_COL)
-        shutil.rmtree(os.path.join(self.dir, _TOMBS), ignore_errors=True)
-        self._append(self._banded_rows(live), mode="overwrite")
-        json.dump({"bands": self.bands, "text_col": self.text_col},
-                  open(os.path.join(self.dir, _SH_META), "w"))
-        self._mark(self.applied_through(), to)
-        return {"from": 0, "to": to, "rebuild": True}
 
     # ----------------------------------------------------------------- mine
     def _live_banded(self) -> DataFrame:
@@ -383,35 +394,26 @@ class MaintainedSimhashIndex:
         )
 
 
-_IVF_META = "_maint_ivf_meta.json"
-
-
-class MaintainedIvfIndex:
+class MaintainedIvfIndex(_MaintainedIndex):
     """Feed-maintained IVF (k-means coarse-quantized) ANN index over
-    ``base``'s ``vec_col`` payload — ``similarity.update_ivf_index`` given
-    the full :class:`MaintainedLshIndex` treatment (r3 verdict #4):
+    ``base``'s ``vec_col`` payload — ``similarity.update_ivf_index`` under
+    the module's contract (r3 verdict #4):
 
-    - **refresh = O(delta)**: upserted vectors are assigned to the nearest
-      EXISTING centroid (pinned in the index meta between rebuilds — the
-      standard IVF maintenance story) and appended into their ``_list=<c>``
-      dir; the hive layout, hence probe partition pruning, is untouched;
-    - **updates/deletes via LSN dominance**: an updated vector's new row may
-      land in a DIFFERENT list than its stale row, and a delete carries no
-      vector to locate the old list — every feed event therefore also lands
-      one ``(key, lsn)`` row in ``_tombstones/``, and probes drop any
-      candidate an equal-or-newer tombstone dominates (strict ``>`` so an
-      update's own new row survives);
+    - **refresh**: upserted vectors are assigned to the nearest EXISTING
+      centroid (pinned in the index meta between rebuilds — the standard
+      IVF maintenance story) and appended into their ``_list=<c>`` dir;
     - **probe**: driver-side list ranking from the meta's k×dim centroids
       (no data IO), partition-pruned scan of the ``nprobe`` nearest lists,
       per-key max-LSN dedupe AMONG candidates, broadcast tombstone
       anti-join, exact cosine re-rank. With pinned centroids the result
       equals a probe of a fresh rebuild over base current state (pytest);
       ``nprobe >= k`` degenerates to exact brute force over live vectors;
-    - **cursor + idempotence + rebuild-as-compaction**: identical marker
-      chain / crash-replay / tombstone-folding contract as the LSH twin.
-      :meth:`rebuild` RE-FITS centroids by default (the drift answer);
+    - :meth:`rebuild` RE-FITS centroids by default (the drift answer);
       pass ``centroids=`` to pin them (the equality oracle).
     """
+
+    _META = "_maint_ivf_meta.json"
+    _pinned: list[list[float]] | None = None
 
     def __init__(
         self,
@@ -423,76 +425,22 @@ class MaintainedIvfIndex:
         iters: int = 5,
         seed: int = 42,
     ):
-        self.spark = spark
-        self.base = base
-        self.dir = index_dir
+        super().__init__(spark, base, index_dir)
         self.vec_col = vec_col
         self.k = k
         self.iters = iters
         self.seed = seed
-        os.makedirs(index_dir, exist_ok=True)
 
-    # ------------------------------------------------------------- plumbing
-    applied_through = MaintainedLshIndex.applied_through
-    _mark = MaintainedLshIndex._mark
+    def _source_cols(self) -> list[str]:
+        return [self.vec_col]
 
-    def _meta(self) -> dict | None:
-        p = os.path.join(self.dir, _IVF_META)
-        return json.load(open(p)) if os.path.exists(p) else None
-
-    def _append(self, rows: DataFrame, cents: list[list[float]], mode: str) -> None:
-        from maestro_spark.functions.similarity import _assign_expr
-
-        (
-            rows.withColumn("_list", _assign_expr(cents, self.vec_col))
-            .repartition("_list")
-            .write.partitionBy("_list")
-            .mode(mode)
-            .parquet(self.dir)
-        )
-
-    def _live(self) -> DataFrame:
-        return (
-            self.base.read_resolved(columns=[self.vec_col])
-            .filter(~F.col(S.DELETED_COL) & F.col(self.vec_col).isNotNull())
-            .select(*S.KEY_COLS, self.vec_col, S.LSN_COL)
-        )
-
-    # -------------------------------------------------------------- refresh
-    def refresh(self) -> dict | None:
-        """Fold base changes ``(applied_through, tip]`` in (O(delta));
-        bootstrap / horizon-expired / rollback ranges degrade to
-        :meth:`rebuild`, same as the LSH twin and the IVM view."""
-        frm = self.applied_through()
-        to = self.base.snapshot().snapshot_id
-        if to <= frm:
-            return None
-        meta = self._meta()
-        if meta is None:
-            return self.rebuild()
-        try:
-            feed = self.base.changes(frm, to)
-        except (FileNotFoundError, ValueError):
-            return self.rebuild()
-        ups = feed.filter(
-            (F.col("op") == "upsert") & F.col(self.vec_col).isNotNull()
-        ).select(*S.KEY_COLS, self.vec_col, F.col("lsn").alias(S.LSN_COL))
-        self._append(ups, meta["centroids"], mode="append")
-        _append_tombstones(self.dir, feed)
-        self._mark(frm, to)
-        return {"from": frm, "to": to}
-
-    def rebuild(self, centroids: list[list[float]] | None = None) -> dict:
-        """Full rebuild from base current state — folds dominated rows,
-        duplicate re-applies, and tombstones. Re-fits centroids unless a
-        pinned set is passed."""
-        import shutil
-
+    def _fit(self, live: DataFrame) -> dict | None:
         from maestro_spark.functions.similarity import kmeans_fit
 
-        to = self.base.snapshot().snapshot_id
-        live = self._live()
-        dim = len(live.select(self.vec_col).head()[0])
+        first = live.select(self.vec_col).head()
+        if first is None:
+            return None
+        centroids = self._pinned
         if centroids is None:
             fitted = live.withColumn(
                 "_kid", F.concat_ws(" ", "conv_id", F.col("turn_idx").cast("string"))
@@ -501,15 +449,27 @@ class MaintainedIvfIndex:
                 fitted, k=self.k, iters=self.iters, seed=self.seed,
                 vec_col=self.vec_col, id_col="_kid",
             )
-        shutil.rmtree(os.path.join(self.dir, _TOMBS), ignore_errors=True)
-        self._append(live, centroids, mode="overwrite")
-        json.dump(
-            {"centroids": centroids, "dim": dim, "vec_col": self.vec_col,
-             "k": len(centroids), "seed": self.seed},
-            open(os.path.join(self.dir, _IVF_META), "w"),
+        return {"centroids": centroids, "dim": len(first[0]),
+                "vec_col": self.vec_col, "k": len(centroids), "seed": self.seed}
+
+    def _write(self, rows: DataFrame, meta: dict, mode: str) -> None:
+        from maestro_spark.functions.similarity import _assign_expr
+
+        (
+            rows.withColumn("_list", _assign_expr(meta["centroids"], self.vec_col))
+            .repartition("_list")
+            .write.partitionBy("_list")
+            .mode(mode)
+            .parquet(self.dir)
         )
-        self._mark(self.applied_through(), to)
-        return {"from": 0, "to": to, "rebuild": True}
+
+    def rebuild(self, centroids: list[list[float]] | None = None) -> dict | None:
+        """:meth:`_MaintainedIndex.rebuild`, with ``centroids`` pinned."""
+        self._pinned = centroids
+        try:
+            return super().rebuild()
+        finally:
+            self._pinned = None
 
     # ---------------------------------------------------------------- probe
     def topk(self, query_vec: list[float], k: int = 10, nprobe: int = 2) -> DataFrame:
@@ -544,7 +504,7 @@ _TXT_META = "_maint_text_meta.json"
 _DOCLEN = "_doclen"  # per-doc token-count side table (BM25 corpus stats)
 
 
-class MaintainedTextIndex:
+class MaintainedTextIndex(_MaintainedIndex):
     """Feed-maintained inverted TERM index over ``base``'s ``text_col`` —
     serving-path term search at table scale (M40).
 
@@ -553,12 +513,11 @@ class MaintainedTextIndex:
     ONE term-bucket directory (Catalyst partition pruning; the bucket is
     picked on the driver by the pure-Python XXH64 twin ``keyhash.bucket_of``
     — the same trick as the table's point-lookup path). Maintenance is the
-    module's standard contract: O(delta) refresh off
-    :meth:`LakeTable.changes`, LSN-dominance tombstones (an updated doc's
-    dropped terms are dominated away, its kept terms' new rows survive the
-    strict ``>``), append-only range markers for the cursor, rebuild as
-    compaction. Probes equal a probe of a FRESH rebuild over base's
-    current state — asserted by tests.
+    module's contract (an updated doc's dropped terms are dominated away,
+    its kept terms' new rows survive the strict ``>``); a meta without
+    ``"v": 2`` is the pre-BM25 layout (no ``dl``/``_doclen``), which the
+    next refresh upgrades by a rebuild. Probes equal a probe of a FRESH
+    rebuild over base's current state — asserted by tests.
 
     Tokenization is deterministic and engine-portable: lowercase,
     ``[^a-z0-9]+`` splits, empties dropped; ``tf`` = occurrences per
@@ -572,6 +531,9 @@ class MaintainedTextIndex:
     exact via candidate-bounded base post-filter).
     """
 
+    _META = _TXT_META
+    _LAYOUT = 2
+
     def __init__(
         self,
         spark: SparkSession,
@@ -580,16 +542,9 @@ class MaintainedTextIndex:
         text_col: str = "text",
         n_buckets: int = 64,
     ):
-        self.spark = spark
-        self.base = base
-        self.dir = index_dir
+        super().__init__(spark, base, index_dir)
         self.text_col = text_col
         self.n_buckets = n_buckets
-        os.makedirs(index_dir, exist_ok=True)
-
-    # ------------------------------------------------------------- plumbing
-    applied_through = MaintainedLshIndex.applied_through
-    _mark = MaintainedLshIndex._mark
 
     def _toks_expr(self) -> Column:
         """Token-array Column over ``text_col`` — THE tokenizer, shared by
@@ -601,13 +556,7 @@ class MaintainedTextIndex:
         )
 
     def _source_cols(self) -> list[str]:
-        """Base columns the tokenizer reads (scan-pruning set)."""
         return [self.text_col]
-
-    def _source_filter(self) -> Column:
-        """Rows worth indexing (a NULL text yields no terms anyway — the
-        filter just avoids shipping those rows into the explode)."""
-        return F.col(self.text_col).isNotNull()
 
     def _term_rows(self, rows: DataFrame) -> DataFrame:
         """(keys, text, _lsn) → (keys, _lsn, term, tf, dl, _tb) — explode +
@@ -637,63 +586,24 @@ class MaintainedTextIndex:
             S.LSN_COL,
         )
 
-    def _append(self, terms: DataFrame, mode: str) -> None:
+    def _fit(self, live: DataFrame) -> dict:
+        return {"text_col": self.text_col, "n_buckets": self.n_buckets,
+                "v": self._LAYOUT}
+
+    def _write(self, rows: DataFrame, meta: dict, mode: str) -> None:
+        """Term rows into their ``_tb=`` dirs, doc lengths into
+        ``_doclen/``."""
+        rows = rows.localCheckpoint(eager=True)  # feeds both writes: scan once
         (
-            terms.repartition("_tb")
+            self._term_rows(rows).repartition("_tb")
             .sortWithinPartitions("_tb", "term")
             .write.partitionBy("_tb")
             .mode(mode)
             .parquet(self.dir)
         )
-
-    # -------------------------------------------------------------- refresh
-    def refresh(self) -> dict | None:
-        meta_path = os.path.join(self.dir, _TXT_META)
-        if not os.path.exists(meta_path):
-            return self.rebuild()
-        if json.load(open(meta_path)).get("v") != 2:
-            return self.rebuild()  # pre-BM25 layout (no dl/_doclen): upgrade
-        frm = self.applied_through()
-        to = self.base.snapshot().snapshot_id
-        if to <= frm:
-            return None
-        try:
-            feed = self.base.changes(frm, to)
-        except (FileNotFoundError, ValueError):
-            return self.rebuild()
-        ups = feed.filter(
-            (F.col("op") == "upsert") & self._source_filter()
-        ).select(
-            *S.KEY_COLS, *self._source_cols(), F.col("lsn").alias(S.LSN_COL)
-        ).localCheckpoint(eager=True)  # feeds BOTH writes below: scan once
-        self._append(self._term_rows(ups), mode="append")
-        self._doclen_rows(ups).write.mode("append").parquet(
+        self._doclen_rows(rows).write.mode(mode).parquet(
             os.path.join(self.dir, _DOCLEN)
         )
-        _append_tombstones(self.dir, feed)
-        self._mark(frm, to)
-        return {"from": frm, "to": to}
-
-    def rebuild(self) -> dict:
-        import shutil
-
-        to = self.base.snapshot().snapshot_id
-        live = self.base.read_resolved(columns=self._source_cols()).filter(
-            ~F.col(S.DELETED_COL) & self._source_filter()
-        ).select(
-            *S.KEY_COLS, *self._source_cols(), S.LSN_COL
-        ).localCheckpoint(eager=True)
-        shutil.rmtree(os.path.join(self.dir, _TOMBS), ignore_errors=True)
-        self._append(self._term_rows(live), mode="overwrite")
-        self._doclen_rows(live).write.mode("overwrite").parquet(
-            os.path.join(self.dir, _DOCLEN)
-        )
-        json.dump(
-            {"text_col": self.text_col, "n_buckets": self.n_buckets, "v": 2},
-            open(os.path.join(self.dir, _TXT_META), "w"),
-        )
-        self._mark(self.applied_through(), to)
-        return {"from": 0, "to": to, "rebuild": True}
 
     # ---------------------------------------------------------------- probe
     def _tokens(self, text: str) -> list[str]:
@@ -943,12 +853,6 @@ class MaintainedValueIndex(MaintainedTextIndex):
     def _source_cols(self) -> list[str]:
         return list(self.value_cols)
 
-    def _source_filter(self) -> Column:
-        out = F.col(self.value_cols[0]).isNotNull()
-        for c in self.value_cols[1:]:
-            out = out & F.col(c).isNotNull()
-        return out
-
     def _toks_expr(self) -> Column:
         # ONE term per row: the exact value tuple, cast to string, case
         # preserved — equality is equality, not text matching
@@ -1024,28 +928,6 @@ class MaintainedValueIndex(MaintainedTextIndex):
 
 
 # -------------------------------------------------- persisted index registry
-# Same contract as maestro_spark.ivm's persisted views: the index
-# declaration (kind + constructor params + base root) is written to
-# ``<index_dir>/_index.json`` so any later process can reconstruct and
-# refresh it by path alone, and the BASE table carries a race-free marker
-# registry (``<base.root>/_idx_registry/``, one idempotent distinct file
-# per index) so ``lake.optimize`` folds every declared index BEFORE
-# snapshot expiry trims the change-feed horizon its O(delta) refresh reads
-# from. Missing the fold stays CORRECT (refresh degrades to the documented
-# rebuild fallback) — the registry is a cost guarantee.
-_IDX_REG_DIR = "_idx_registry"
-
-
-def _decl_path(index_dir: str) -> str:
-    """The declaration lives BESIDE the index directory
-    (``<index_dir>._index.json``), not inside it: every index class's
-    rebuild-as-compaction rewrites its directory with Spark overwrite
-    mode, which clears foreign files — a declaration stored inside would
-    vanish on the first refresh."""
-    import os as _os
-
-    return _os.path.abspath(index_dir).rstrip(_os.sep) + "._index.json"
-
 INDEX_KINDS = {
     "text": MaintainedTextIndex,
     "value": MaintainedValueIndex,
@@ -1063,13 +945,6 @@ INDEX_COLUMN_PARAM = {
 }
 
 
-def _idx_registry_path(base: LakeTable, root: str) -> str:
-    import hashlib
-
-    h = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:16]
-    return os.path.join(base.root, _IDX_REG_DIR, f"{h}.json")
-
-
 def declare_index(
     spark: SparkSession,
     base: LakeTable,
@@ -1078,15 +953,12 @@ def declare_index(
     **params,
 ):
     """Declare a PERSISTED maintained index over ``base``. ``kind`` is one
-    of ``text`` / ``simhash`` / ``lsh`` / ``ivf``; ``params`` go to the
-    class constructor verbatim (validated against its signature so a typo
-    refuses with the accepted names). Re-declaring an existing root
-    verifies the stored declaration matches and refuses on any difference
-    (same rule as ivm.declare — two declarations over one root would
-    corrupt the cursor markers)."""
+    of :data:`INDEX_KINDS`; ``params`` go to the class constructor verbatim
+    (validated against its signature so a typo refuses with the accepted
+    names). Re-declaring an existing root verifies the stored declaration
+    matches and refuses on any difference (same rule as ivm.declare — two
+    declarations over one root would corrupt the cursor markers)."""
     import inspect
-
-    from maestro_spark.lake import _atomic_write_json
 
     if kind not in INDEX_KINDS:
         raise ValueError(
@@ -1107,101 +979,24 @@ def declare_index(
         "kind": kind,
         "params": dict(params),
     }
-    path = _decl_path(index_dir)
-    if os.path.exists(path):
-        prev = json.load(open(path))
-        if prev != decl:
-            diff = sorted(k for k in decl if prev.get(k) != decl[k])
-            raise ValueError(
-                f"index at {index_dir!r} already holds a DIFFERENT "
-                f"declaration (differs in {diff}) — refusing; drop the "
-                "index directory or declare a new root"
-            )
-    idx = cls(spark, base, index_dir, **params)
-    if not os.path.exists(path):
-        _atomic_write_json(path, decl, exclusive=False)
-    p = _idx_registry_path(base, index_dir)
-    if not os.path.exists(p):
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        _atomic_write_json(
-            p, {"root": os.path.abspath(index_dir)}, exclusive=False
-        )
-    return idx
+    return _INDEXES.declare(
+        base, index_dir, decl, lambda: cls(spark, base, index_dir, **params)
+    )
 
 
-def load_index(spark: SparkSession, root: str, base: LakeTable | None = None):
-    """Reconstruct a :func:`declare_index`-persisted index from its own
-    root. ``base`` defaults to opening the declared base root; pass it to
-    assert ownership (refuses another table's index)."""
-    path = _decl_path(root)
-    if not os.path.exists(path):
-        raise ValueError(f"{root!r} holds no declared index")
-    decl = json.load(open(path))
-    if base is None:
-        base = LakeTable(spark, decl["base_root"])
-    elif os.path.abspath(base.root) != decl["base_root"]:
-        raise ValueError(
-            f"index at {root!r} is declared over {decl['base_root']!r}, "
-            f"not {os.path.abspath(base.root)!r}"
-        )
-    return declare_index(spark, base, root, decl["kind"], **decl["params"])
-
-
-def undeclare_index(
-    spark: SparkSession, root: str, base: LakeTable | None = None
-) -> str:
-    """Remove a declared index: verify ownership, delete the index
-    directory, drop its registry marker. Returns the removed root."""
-    import shutil
-
-    idx = load_index(spark, root, base=base)
-    shutil.rmtree(root)
-    os.unlink(_decl_path(root))
-    try:
-        os.unlink(_idx_registry_path(idx.base, root))
-    except FileNotFoundError:
-        pass
-    return os.path.abspath(root)
-
-
-def registered_indexes(spark: SparkSession, base: LakeTable) -> list:
-    """Reconstruct every persisted index registered over ``base``; stale
-    markers (index removed out-of-band) and foreign markers (registry dir
-    copied wholesale into another table root) are pruned, never raised —
-    table maintenance must not wedge on a vanished index."""
-    reg = os.path.join(base.root, _IDX_REG_DIR)
-    if not os.path.isdir(reg):
-        return []
-    out = []
-    for f in sorted(os.listdir(reg)):
-        p = os.path.join(reg, f)
-        if not f.endswith(".json"):
-            continue
-        root = json.load(open(p))["root"]
-        decl_path = _decl_path(root)
-        if not os.path.exists(decl_path):
-            os.unlink(p)
-            continue
-        if json.load(open(decl_path))["base_root"] != os.path.abspath(base.root):
-            os.unlink(p)
-            continue
-        out.append(load_index(spark, root, base=base))
-    return out
-
-
-def list_declared(base: LakeTable) -> list[dict]:
-    """Metadata-only listing of the indexes registered over ``base``
-    (persisted declarations read straight from disk — no Spark analysis,
-    no pruning side effects; serving `describe`)."""
-    reg = os.path.join(base.root, _IDX_REG_DIR)
-    if not os.path.isdir(reg):
-        return []
-    out = []
-    for f in sorted(os.listdir(reg)):
-        if not f.endswith(".json"):
-            continue
-        root = json.load(open(os.path.join(reg, f)))["root"]
-        p = _decl_path(root)
-        if os.path.exists(p):
-            out.append({"root": root, **json.load(open(p))})
-    return out
+# The declaration lives BESIDE the index directory, at
+# ``<index_dir>._index.json``: a rebuild's Spark overwrite clears the
+# directory, so a declaration stored inside would vanish on the first
+# refresh.
+_INDEXES = Registry(
+    "index",
+    "_idx_registry",
+    lambda root: os.path.abspath(root).rstrip(os.sep) + "._index.json",
+    build=lambda spark, base, root, decl: declare_index(
+        spark, base, root, decl["kind"], **decl["params"]
+    ),
+)
+load_index = _INDEXES.load
+undeclare_index = _INDEXES.undeclare
+registered_indexes = _INDEXES.registered
+list_declared = _INDEXES.list_declared

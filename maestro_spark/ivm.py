@@ -54,6 +54,7 @@ from pyspark.sql import types as T
 
 from maestro_spark.lake import LakeTable, Snapshot, added_files, bucket_expr
 from maestro_spark.merge import merge_batch
+from maestro_spark.registry import Registry
 
 STATS_PAYLOAD_SCHEMA = T.StructType(
     [
@@ -701,7 +702,6 @@ class ConvStatsView(MaterializedView):
 
 
 # ------------------------------------------------------- persisted views
-_MV_FILE = "_mv.json"
 
 
 def declare(
@@ -731,10 +731,6 @@ def declare(
     Re-declaring an existing root verifies the stored declaration matches
     and REFUSES on any difference (two declarations over one root would
     corrupt the cursor; see MaterializedView.query_id docs)."""
-    import json as _json
-
-    from maestro_spark.lake import _atomic_write_json
-
     if where is not None and not isinstance(where, str):
         raise ValueError(
             "declare() persists the filter as SQL text — pass `where` as a "
@@ -753,24 +749,7 @@ def declare(
         "dim_columns": list(dim_columns) if dim_columns else None,
         "dim_how": dim_how if dim_root else "left",
     }
-    path = os.path.join(root, _MV_FILE)
-    if os.path.exists(path):
-        with open(path) as fh:
-            prev = _json.load(fh)
-        # default fields absent from older declarations
-        prev = {
-            **{"where": None, "dim_root": None, "dim_on": None,
-               "dim_columns": None, "dim_how": "left"},
-            **prev,
-        }
-        if prev != decl:
-            diff = sorted(k for k in decl if prev.get(k) != decl[k])
-            raise ValueError(
-                f"view at {root!r} already holds a DIFFERENT declaration "
-                f"(differs in {diff}) — refusing; drop the view directory "
-                "or declare a new root"
-            )
-    mv = MaterializedView(
+    return _VIEWS.declare(base, root, decl, lambda: MaterializedView(
         spark,
         base,
         root,
@@ -784,143 +763,24 @@ def declare(
         dim_on=dim_on,
         dim_columns=dim_columns,
         dim_how=dim_how,
-    )
-    if not os.path.exists(path):
-        _atomic_write_json(path, decl, exclusive=False)
-    _register(base, root)
-    return mv
+    ))
 
 
-def load(
-    spark: SparkSession, root: str, base: LakeTable | None = None
-) -> MaterializedView:
-    """Reconstruct a :func:`declare`-persisted view from its own root.
-    ``base`` defaults to opening the declared base root; pass it to assert
-    the view belongs to a specific table (refuses on mismatch)."""
-    import json as _json
-
-    path = os.path.join(root, _MV_FILE)
-    if not os.path.exists(path):
-        raise ValueError(f"{root!r} holds no declared materialized view")
-    with open(path) as fh:
-        decl = _json.load(fh)
-    if base is None:
-        base = LakeTable(spark, decl["base_root"])
-    elif os.path.abspath(base.root) != decl["base_root"]:
-        raise ValueError(
-            f"view at {root!r} is declared over {decl['base_root']!r}, "
-            f"not {os.path.abspath(base.root)!r}"
-        )
-    return declare(
-        spark,
-        base,
-        root,
-        key_cols=decl["key_cols"],
-        agg_exprs=decl["agg_exprs"],
-        columns=decl["columns"],
-        query_id=decl["query_id"],
-        allow_full_only=decl["allow_full_only"],
-        where=decl.get("where"),
-        dim_root=decl.get("dim_root"),
-        dim_on=decl.get("dim_on"),
-        dim_columns=decl.get("dim_columns"),
-        dim_how=decl.get("dim_how") or "left",
-    )
-
-
-# ----------------------------------------------------------- view registry
-# The BASE table carries a registry of the persisted views declared over it
-# (<base.root>/_mv_registry/, one tiny marker file per view — writes are
-# race-free without CAS because concurrent declares write DISTINCT files
-# idempotently) so maintenance can fold every declared view BEFORE snapshot
-# expiry trims the change-feed horizon their delta refresh reads from. A
-# view that misses the fold stays CORRECT (refresh degrades to the
-# full-recompute fallback) — the registry is a cost guarantee, not a
-# correctness one.
-_REG_DIR = "_mv_registry"
-
-
-def _registry_path(base: LakeTable, root: str) -> str:
-    import hashlib
-
-    h = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:16]
-    return os.path.join(base.root, _REG_DIR, f"{h}.json")
-
-
-def _register(base: LakeTable, root: str) -> None:
-    from maestro_spark.lake import _atomic_write_json
-
-    p = _registry_path(base, root)
-    if not os.path.exists(p):
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        _atomic_write_json(p, {"root": os.path.abspath(root)}, exclusive=False)
-
-
-def undeclare(
-    spark: SparkSession, root: str, base: LakeTable | None = None
-) -> str:
-    """Remove a :func:`declare`-persisted view: verify the root IS a
-    declared view (of ``base``, when given — refuses another table's view),
-    delete the view table, and drop its registry marker from the base.
-    Returns the removed root path."""
-    import shutil
-
-    mv = load(spark, root, base=base)
-    shutil.rmtree(root)
-    try:
-        os.unlink(_registry_path(mv.base, root))
-    except FileNotFoundError:
-        pass
-    return os.path.abspath(root)
-
-
-def registered_views(
-    spark: SparkSession, base: LakeTable
-) -> list[MaterializedView]:
-    """Reconstruct every persisted view registered over ``base``. Stale
-    markers (a view directory removed out-of-band) are pruned, not
-    raised — table maintenance must never wedge on a vanished view."""
-    import json as _json
-
-    reg = os.path.join(base.root, _REG_DIR)
-    if not os.path.isdir(reg):
-        return []
-    out = []
-    for f in sorted(os.listdir(reg)):
-        p = os.path.join(reg, f)
-        if not f.endswith(".json"):
-            continue
-        with open(p) as fh:
-            root = _json.load(fh)["root"]
-        mv_path = os.path.join(root, _MV_FILE)
-        if not os.path.exists(mv_path):
-            os.unlink(p)
-            continue
-        with open(mv_path) as fh:
-            if _json.load(fh)["base_root"] != os.path.abspath(base.root):
-                # foreign declaration (e.g. a registry dir copied wholesale
-                # into another table root): not OUR view — prune the marker
-                os.unlink(p)
-                continue
-        out.append(load(spark, root, base=base))
-    return out
-
-
-def list_declared(base: LakeTable) -> list[dict]:
-    """Metadata-only listing of the views registered over ``base`` (their
-    persisted declarations, read straight from disk — no Spark analysis,
-    no pruning side effects; serving `describe`)."""
-    import json as _json
-
-    reg = os.path.join(base.root, _REG_DIR)
-    if not os.path.isdir(reg):
-        return []
-    out = []
-    for f in sorted(os.listdir(reg)):
-        if not f.endswith(".json"):
-            continue
-        root = _json.load(open(os.path.join(reg, f)))["root"]
-        p = os.path.join(root, _MV_FILE)
-        if os.path.exists(p):
-            out.append({"root": root, **_json.load(open(p))})
-    return out
+# Older declarations lack the filter/dim fields; the signature defaults
+# fill them, both when comparing and when rebuilding.
+_VIEWS = Registry(
+    "materialized view",
+    "_mv_registry",
+    lambda root: os.path.join(root, "_mv.json"),
+    build=lambda spark, base, root, decl: declare(
+        spark, base, root,
+        **{k: v for k, v in decl.items() if k != "base_root"},
+    ),
+    defaults={"where": None, "dim_root": None, "dim_on": None,
+              "dim_columns": None, "dim_how": "left"},
+)
+_REG_DIR = _VIEWS.reg_dir
+load = _VIEWS.load
+undeclare = _VIEWS.undeclare
+registered_views = _VIEWS.registered
+list_declared = _VIEWS.list_declared

@@ -158,6 +158,37 @@ def _atomic_write_json(path: str, obj: dict, exclusive: bool) -> None:
         os.rename(tmp, path)
 
 
+# Append-only range markers ``<prefix>-<from13>-<to13>.json``: the cursor of
+# every consumer that folds snapshot ranges (``_applied`` for the maintained
+# indexes, ``_exported`` for export_changes). The cursor is DERIVED as the
+# max ``to`` over the markers, never read from a rewritable file, so it can
+# only move forward; a marker is published exclusively, and a caller that
+# finds the identical range already published joins it.
+def _range_marker(root: str, prefix: str, frm: int, to: int) -> str:
+    return os.path.join(root, f"{prefix}-{frm:013d}-{to:013d}.json")
+
+
+def _range_cursor(root: str, prefix: str) -> int:
+    """Highest snapshot any ``prefix`` range marker under ``root`` covers
+    (0 when there is none)."""
+    best = 0
+    if not os.path.isdir(root):
+        return best
+    for f in os.listdir(root):
+        m = re.fullmatch(rf"{prefix}-(\d{{13}})-(\d{{13}})\.json", f)
+        if m:
+            best = max(best, int(m.group(2)))
+    return best
+
+
+def _mark_range(root: str, prefix: str, frm: int, to: int, **extra) -> None:
+    try:
+        _atomic_write_json(_range_marker(root, prefix, frm, to),
+                           {"from": frm, "to": to, **extra}, exclusive=True)
+    except FileExistsError:
+        pass  # a racer published the identical range first
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -2037,21 +2068,6 @@ class LakeTable:
 
         return _txn()
 
-    @staticmethod
-    def _export_cursor(dest_root: str) -> int:
-        """The change-export high-water mark, derived from the immutable
-        exclusively-created range markers (``_exported-<from13>-<to13>.json``)
-        rather than a mutable last-write-wins file — append-only markers
-        make cursor regression structurally impossible."""
-        best = 0
-        if not os.path.isdir(dest_root):
-            return best
-        for f in os.listdir(dest_root):
-            m = re.fullmatch(r"_exported-(\d{13})-(\d{13})\.json", f)
-            if m:
-                best = max(best, int(m.group(2)))
-        return best
-
     # -------------------------------------------------- cross-table txn
     def transaction_multi(self, *others: "LakeTable", scratch_dir: str | None = None):
         """Cross-table atomic transaction (r2 verdict #7): a context manager
@@ -2169,8 +2185,9 @@ class LakeTable:
 
         Exactly-once under concurrent exporters and crashes:
 
-        - The cursor is DERIVED from the append-only range markers (see
-          :meth:`_export_cursor`), never from a rewritable file, so it can
+        - The cursor is DERIVED from the append-only
+          ``_exported-<from13>-<to13>.json`` range markers (see
+          :func:`_range_cursor`), never from a rewritable file, so it can
           only move forward; ``CHANGES_CURSOR`` is kept as a best-effort
           convenience cache for consumers.
         - The range's upper bound is pinned by an exclusively-created CLAIM
@@ -2209,7 +2226,7 @@ class LakeTable:
         if os.path.exists(fmt_sentinel):
             check_format()
         cur = self.snapshot().snapshot_id
-        frm = self._export_cursor(dest_root)
+        frm = _range_cursor(dest_root, "_exported")
         if cur <= frm:
             return {"from": frm, "to": frm, "rows": 0, "path": None}
         # only a call that writes a range decides the destination's format
@@ -2223,9 +2240,8 @@ class LakeTable:
             to = cur
         except FileExistsError:  # join/resume the range a racer claimed
             to = json.load(open(claim))["to"]
-        marker = os.path.join(dest_root, f"_exported-{frm:013d}-{to:013d}.json")
         final = os.path.join(dest_root, "changes", f"{frm:013d}-{to:013d}")
-        if not os.path.exists(marker):
+        if not os.path.exists(_range_marker(dest_root, "_exported", frm, to)):
             tmp = os.path.join(dest_root, f"_tmp-{uuid.uuid4().hex[:12]}")
             if format == "debezium":
                 from maestro_spark.ingest import to_debezium
@@ -2240,15 +2256,10 @@ class LakeTable:
                 os.rename(tmp, final)
             except OSError:  # a racer on the same claim renamed the
                 shutil.rmtree(tmp, ignore_errors=True)  # identical range
-            try:
-                _atomic_write_json(
-                    marker, {"from": frm, "to": to, "path": final}, exclusive=True
-                )
-            except FileExistsError:
-                pass  # a racer published the identical marker first
+            _mark_range(dest_root, "_exported", frm, to, path=final)
         _atomic_write_json(  # cache only; truth is the marker set
             os.path.join(dest_root, "CHANGES_CURSOR"),
-            {"exported_through": self._export_cursor(dest_root)},
+            {"exported_through": _range_cursor(dest_root, "_exported")},
             exclusive=False,
         )
         return {"from": frm, "to": to, "path": final,
@@ -2264,22 +2275,15 @@ class LakeTable:
         from a full :meth:`export` of that snapshot — the skipped range is
         deliberately NOT exported as deltas."""
         os.makedirs(dest_root, exist_ok=True)
-        frm = self._export_cursor(dest_root)
+        frm = _range_cursor(dest_root, "_exported")
         to = self.snapshot(to_snapshot).snapshot_id if to_snapshot is not None \
             else self.snapshot().snapshot_id
         if to <= frm:
             return {"from": frm, "to": frm, "rebaseline": False}
-        marker = os.path.join(dest_root, f"_exported-{frm:013d}-{to:013d}.json")
-        try:
-            _atomic_write_json(
-                marker, {"from": frm, "to": to, "path": None, "rebaseline": True},
-                exclusive=True,
-            )
-        except FileExistsError:
-            pass  # racer re-baselined (or exported) the same range
+        _mark_range(dest_root, "_exported", frm, to, path=None, rebaseline=True)
         _atomic_write_json(
             os.path.join(dest_root, "CHANGES_CURSOR"),
-            {"exported_through": self._export_cursor(dest_root)},
+            {"exported_through": _range_cursor(dest_root, "_exported")},
             exclusive=False,
         )
         return {"from": frm, "to": to, "rebaseline": True}
@@ -2631,6 +2635,8 @@ def describe(table: "LakeTable") -> dict:
     """One-call table report (SHOW CREATE TABLE + DESCRIBE DETAIL parity):
     schema, layout, current snapshot, tags, CHECK constraints, and
     zone-map-derived size totals — all metadata, zero data IO."""
+    from maestro_spark import index_maint, ivm
+
     snap = table.snapshot()
     rows = files = size = 0
     for ps in snap.files.values():
@@ -2654,21 +2660,9 @@ def describe(table: "LakeTable") -> dict:
         "bytes": size,
         "tags": table.tags(),
         "constraints": table.constraints(),
-        "materialized_views": _declared_views(table),
-        "indexes": _declared_indexes(table),
+        "materialized_views": ivm.list_declared(table),
+        "indexes": index_maint.list_declared(table),
     }
-
-
-def _declared_views(table: "LakeTable") -> list[dict]:
-    from maestro_spark import ivm
-
-    return ivm.list_declared(table)
-
-
-def _declared_indexes(table: "LakeTable") -> list[dict]:
-    from maestro_spark import index_maint
-
-    return index_maint.list_declared(table)
 
 
 def optimize(
@@ -2976,16 +2970,12 @@ def warehouse_sql(
             # marker (e.g. a registry dir copied wholesale from another
             # table) must never make DROP TABLE delete someone else's
             # view/index directory
-            derived = [
-                d["root"]
-                for d in (*_ivm.list_declared(t), *_im.list_declared(t))
-                if d.get("base_root") == os.path.abspath(root)
-            ]
-            for d in derived:
-                shutil.rmtree(d, ignore_errors=True)
-                for side in (f"{d}._index.json",):
-                    if os.path.exists(side):
-                        os.unlink(side)
+            derived = []
+            for reg in (_ivm._VIEWS, _im._INDEXES):
+                for d in reg.list_declared(t):
+                    if d["base_root"] == os.path.abspath(root):
+                        reg.remove(t, d["root"])
+                        derived.append(d["root"])
             shutil.rmtree(root)
             for v in (tname, f"{tname}__files", f"{tname}__history",
                       f"{tname}__changes"):

@@ -1090,17 +1090,12 @@ def q_sql_index(spark, sf_dir):
     same rules — certifying the statement grammar, the persisted index
     declaration, and the load-by-path refresh end-to-end on top of the
     already-certified index machinery (q_term_search)."""
-    import os
-    import shutil
-
     from maestro_spark import index_maint as IM
     from maestro_spark.queries2 import _CDC_DEMO_DIR, _ensure_cdc_demo_lake
 
     table = _ensure_cdc_demo_lake(spark)
     root = f"{_CDC_DEMO_DIR}/sql_idx"
-    shutil.rmtree(root, ignore_errors=True)
-    if os.path.exists(root + "._index.json"):
-        os.unlink(root + "._index.json")
+    IM._INDEXES.remove(table, root)
     table.sql(
         f"CREATE INDEX '{root}' ON t USING text (text) WITH (n_buckets = 8)"
     )
@@ -1135,17 +1130,12 @@ def q_value_index(spark, sf_dir):
     filtering the replayed live state — certifying the one-partition
     equality probe, the opaque-value (no tokenize/lowercase) contract, and
     the declaration round-trip end-to-end."""
-    import os
-    import shutil
-
     from maestro_spark import index_maint as IM
     from maestro_spark.queries2 import _CDC_DEMO_DIR, _ensure_cdc_demo_lake
 
     table = _ensure_cdc_demo_lake(spark)
     root = f"{_CDC_DEMO_DIR}/val_idx"
-    shutil.rmtree(root, ignore_errors=True)
-    if os.path.exists(root + "._index.json"):
-        os.unlink(root + "._index.json")
+    IM._INDEXES.remove(table, root)
     table.sql(
         f"CREATE INDEX '{root}' ON t USING value (tool) WITH (n_buckets = 8)"
     )
@@ -1173,17 +1163,12 @@ def q_value_index_comp(spark, sf_dir):
     two-column equality filter over the replayed live state — certifying
     the separator-encoded tuple terms, the all-non-null indexing rule,
     and the composite SQL declaration end-to-end."""
-    import os
-    import shutil
-
     from maestro_spark import index_maint as IM
     from maestro_spark.queries2 import _CDC_DEMO_DIR, _ensure_cdc_demo_lake
 
     table = _ensure_cdc_demo_lake(spark)
     root = f"{_CDC_DEMO_DIR}/val_idx_comp"
-    shutil.rmtree(root, ignore_errors=True)
-    if os.path.exists(root + "._index.json"):
-        os.unlink(root + "._index.json")
+    IM._INDEXES.remove(table, root)
     table.sql(
         f"CREATE INDEX '{root}' ON t USING value (role, tool) "
         "WITH (n_buckets = 8)"

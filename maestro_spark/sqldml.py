@@ -708,8 +708,6 @@ def execute_mv(table: LakeTable, sql: str, name: str = "t"):
     Scale: refresh work is delta-proportional (changed-conv bucket pruning,
     crossover rule) — the statement never implies a full recompute unless
     the view's own machinery chooses one."""
-    import os
-
     from maestro_spark import ivm
 
     rm = re.match(
@@ -727,7 +725,7 @@ def execute_mv(table: LakeTable, sql: str, name: str = "t"):
     )
     if dm:
         root = _mv_root(dm.group(2), table)
-        if not os.path.exists(os.path.join(root, ivm._MV_FILE)):
+        if ivm._VIEWS.read(root) is None:
             if dm.group(1):
                 return None
             raise ValueError(
@@ -938,8 +936,6 @@ def execute_index(table: LakeTable, sql: str, name: str = "t"):
     refuses. CREATE and REFRESH return the maintained index object
     (``search*``/``probe`` per kind); DROP returns the removed root, or
     None for an IF EXISTS no-op."""
-    import os
-
     from maestro_spark import index_maint as IM
 
     rm = re.match(
@@ -955,7 +951,7 @@ def execute_index(table: LakeTable, sql: str, name: str = "t"):
     )
     if dm:
         root = _idx_root(dm.group(2), table)
-        if not os.path.exists(IM._decl_path(root)):
+        if IM._INDEXES.read(root) is None:
             if dm.group(1):
                 return None
             raise ValueError(

@@ -765,3 +765,200 @@ def test_cli_search_subcommand(spark, tmp_path, capsys, monkeypatch):
     assert stale["hits"] == 2  # refresh skipped: new doc invisible
     fresh = run("search", base.root, "zone maps", "--mode", "phrase")
     assert fresh["hits"] == 3
+
+
+# ------------------------------------------ one contract, every index kind
+CONTRACT_PAYLOAD = T.StructType([
+    T.StructField("conv_id", T.StringType(), False),
+    T.StructField("turn_idx", T.IntegerType(), False),
+    T.StructField("text", T.StringType(), True),
+    T.StructField("tool", T.StringType(), True),
+    T.StructField("embedding", T.ArrayType(T.FloatType()), True),
+])
+CONTRACT_EVENT = T.StructType([
+    T.StructField("op_lsn", T.LongType(), False),
+    T.StructField("op", T.StringType(), False),
+    *CONTRACT_PAYLOAD.fields,
+])
+# small layouts, and probes that visit every partition, so each probe
+# returns every live key the index knows
+CONTRACT_PARAMS = {
+    "text": {"n_buckets": 4},
+    "value": {"n_buckets": 4},
+    "simhash": {},
+    "lsh": {"n_bits": 4, "prefix_bits": 2},
+    "ivf": {"k": 3, "iters": 2},
+}
+
+
+def _contract_events(spark, rows):
+    """rows: (lsn, op, conv_id, seed_or_None) — text, tool and vector
+    all derive from the seed."""
+    return spark.createDataFrame(
+        [(lsn, op, cid, 0,
+          None if s is None else f"alpha w{s % 3}",
+          None if s is None else f"t{s % 3}",
+          None if s is None else _vec(s))
+         for (lsn, op, cid, s) in rows],
+        CONTRACT_EVENT,
+    )
+
+
+def _contract_probe(kind, idx) -> list[tuple]:
+    if kind == "text":
+        rows = idx.search_bm25("alpha w1").collect()
+    elif kind == "value":
+        rows = [(v, *r) for v in ("t0", "t1", "t2")
+                for r in idx.lookup(v).orderBy(*S.KEY_COLS).collect()]
+    elif kind == "simhash":
+        rows = sorted(idx.near_pairs(max_hamming=3).collect())
+    elif kind == "lsh":
+        rows = idx.topk(_vec(1), 100, multiprobe_hamming=4).collect()
+    else:
+        rows = idx.topk(_vec(1), 100, nprobe=3).collect()
+    return [tuple(round(x, 9) if isinstance(x, float) else x for x in r)
+            for r in rows]
+
+
+def _mentions(rows, conv_id) -> bool:
+    return any(conv_id in " ".join(map(str, r)).split() for r in rows)
+
+
+@pytest.fixture()
+def overwrite_crash(monkeypatch):
+    """``arm("before" | "after")`` crashes every Spark overwrite write
+    before it runs or after it finished; ``arm(None)`` disarms. It patches
+    the writer, so it hits every kind's rebuild."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real_mode, real_parquet = DataFrameWriter.mode, DataFrameWriter.parquet
+
+    def arm(when):
+        def mode(self, save_mode):
+            if save_mode == "overwrite":  # parquet() re-calls mode(None)
+                if when == "before":
+                    raise RuntimeError("crash")
+                self._crash = True
+            return real_mode(self, save_mode)
+
+        def parquet(self, *a, **kw):
+            real_parquet(self, *a, **kw)
+            if getattr(self, "_crash", False):
+                raise RuntimeError("crash")
+
+        monkeypatch.setattr(DataFrameWriter, "mode", mode if when else real_mode)
+        monkeypatch.setattr(DataFrameWriter, "parquet",
+                            parquet if when else real_parquet)
+
+    return arm
+
+
+@pytest.mark.parametrize("kind", sorted(CONTRACT_PARAMS))
+def test_every_index_kind_keeps_the_refresh_contract(
+    spark, tmp_path, kind, overwrite_crash
+):
+    """Every kind in INDEX_KINDS: a refresh over an empty table, bootstrap,
+    an update epoch and a delete epoch, then a probe equal to a fresh
+    rebuild; a crash before the range marker resumes to the same answer;
+    a crash inside rebuild() — before or after its overwrite — never lets
+    the deleted key surface again."""
+    from maestro_spark.index_maint import INDEX_KINDS
+
+    cls, params = INDEX_KINDS[kind], CONTRACT_PARAMS[kind]
+    base = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=2,
+                            payload_schema=CONTRACT_PAYLOAD)
+    idx = cls(spark, base, str(tmp_path / "idx"), **params)
+    idx.refresh()  # an empty table: nothing to fit yet, or an empty index
+    merge_batch(base, _contract_events(spark, [
+        (i + 1, "insert", f"c{i}", i) for i in range(12)
+    ]), "q", 0)
+    n_fresh = iter(range(100))
+
+    def assert_equals_fresh():
+        fresh = cls(spark, base, str(tmp_path / f"fresh{next(n_fresh)}"),
+                    **params)
+        fresh.rebuild()
+        got = _contract_probe(kind, idx)
+        assert got and got == _contract_probe(kind, fresh)
+        return got
+
+    assert idx.refresh()["to"] == base.snapshot().snapshot_id  # bootstrap
+    merge_batch(base, _contract_events(spark, [
+        (100, "update", "c3", 301), (101, "insert", "c20", 20),
+    ]), "q", 1)
+    assert "rebuild" not in idx.refresh()
+    merge_batch(base, _contract_events(spark, [
+        (102, "delete", "c7", None),
+    ]), "q", 2)
+    assert "rebuild" not in idx.refresh()
+    assert idx.refresh() is None
+    assert not _mentions(assert_equals_fresh(), "c7")
+
+    # crash after the appends, before the range marker: the resume
+    # re-applies the same range, and the duplicates collapse
+    merge_batch(base, _contract_events(spark, [
+        (103, "update", "c5", 502),
+    ]), "q", 3)
+    idx._mark = lambda frm, to: (_ for _ in ()).throw(RuntimeError("crash"))
+    with pytest.raises(RuntimeError, match="crash"):
+        idx.refresh()
+    del idx._mark
+    assert idx.refresh()["to"] == base.snapshot().snapshot_id
+    assert_equals_fresh()
+
+    # crash inside rebuild(): the next refresh still answers like a fresh
+    # rebuild, and the deleted key stays dominated
+    for when in ("before", "after"):
+        overwrite_crash(when)
+        with pytest.raises(RuntimeError, match="crash"):
+            idx.rebuild()
+        overwrite_crash(None)
+        idx.refresh()
+        assert not _mentions(assert_equals_fresh(), "c7"), when
+
+
+def test_export_and_index_cursors_share_the_range_marker_reader(
+    spark, tmp_path, base, monkeypatch
+):
+    """export_changes, reset_export_cursor and an index all derive their
+    cursor through ``lake._range_cursor`` and publish through
+    ``lake._mark_range``; markers already on disk load unchanged."""
+    import json as _json
+    import os as _os
+
+    from maestro_spark import lake as L
+
+    reads, marks = [], []
+    real_read, real_mark = L._range_cursor, L._mark_range
+    monkeypatch.setattr(L, "_range_cursor", lambda root, prefix: (
+        reads.append(prefix) or real_read(root, prefix)))
+    monkeypatch.setattr(L, "_mark_range", lambda root, prefix, *a, **kw: (
+        marks.append(prefix) or real_mark(root, prefix, *a, **kw)))
+
+    dest = str(tmp_path / "export")
+    tip = base.snapshot().snapshot_id
+    assert base.export_changes(dest)["to"] == tip
+    idx = MaintainedLshIndex(spark, base, str(tmp_path / "cur_idx"))
+    idx.refresh()
+    assert idx.applied_through() == tip
+    assert {"_exported", "_applied"} <= set(reads)
+    assert {"_exported", "_applied"} <= set(marks)
+
+    merge_batch(base, _events(spark, [(300, "update", "c1", _vec(301))]), "q", 1)
+    reads.clear()
+    r = base.reset_export_cursor(dest)
+    assert r == {"from": tip, "to": tip + 1, "rebaseline": True}
+    assert reads and set(reads) == {"_exported"}
+    name = f"_exported-{tip:013d}-{tip + 1:013d}.json"
+    assert _json.load(open(_os.path.join(dest, name))) == {
+        "from": tip, "to": tip + 1, "path": None, "rebaseline": True}
+    assert sorted(f for f in _os.listdir(idx.dir) if f.startswith("_applied-")
+                  ) == [f"_applied-{0:013d}-{tip:013d}.json"]
+
+    # a marker written by hand in the on-disk layout moves both cursors
+    for root, prefix in ((dest, "_exported"), (idx.dir, "_applied")):
+        with open(_os.path.join(root, f"{prefix}-{tip + 1:013d}-{99:013d}.json"),
+                  "w") as fh:
+            _json.dump({"from": tip + 1, "to": 99}, fh)
+    assert idx.applied_through() == 99
+    assert base.export_changes(dest)["to"] == 99  # cursor past the tip: no-op

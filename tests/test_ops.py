@@ -4,14 +4,31 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from maestro_spark import ops
-from maestro_spark.dedup import dedup_max_lsn, dedup_max_lsn_window
+from maestro_spark.dedup import dedup_max_lsn
+from maestro_spark.schema import KEY_COLS
 
 
 def _ts(s):
     return dt.datetime.fromisoformat(s)
+
+
+def dedup_max_lsn_window(
+    events: DataFrame, keys: list[str] | None = None, lsn_col: str = "op_lsn"
+) -> DataFrame:
+    """Window form (SURVEY §2.E1) — the reference :func:`dedup_max_lsn` is
+    property-tested against."""
+    keys = keys or KEY_COLS
+    w = Window.partitionBy(*keys).orderBy(F.col(lsn_col).desc())
+    return (
+        events.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+        .select(*events.columns)
+    )
 
 
 def test_dedup_agg_equals_window(spark):

@@ -4,7 +4,7 @@ The north rule's criterion — throughput scaling efficiency >= 0.8 from N to
 4N executors — cannot use a real cluster here; per the driver instruction it
 is evidenced by running the SAME replay job on the SAME input at local[8]
 and local[32] (fresh JVM each) and reporting throughput at both plus
-efficiency = T(32) / (4 * T(8)).
+efficiency = T(32) / (4 * T(8)), where T is throughput in events/s.
 
 Usage: python tools/bench_scaling.py [n_events] [epochs]
 Writes BENCH/BASELINE.md and prints one JSON line.
@@ -185,7 +185,7 @@ All trials (best-of kept above; spread shows this VM's phantom-load noise):
 
 {chr(10).join(f"- trial {t['trial']} local[{t['cpus']}]: {t['wall_sec']}s ({t['events_per_sec']:,.0f} ev/s)" for t in (all_trials or []))}
 
-**Scaling efficiency (8→32 cores)** = T(32) / (4 × T(8)) = **{summary["value"]}**
+**Scaling efficiency (8→32 cores)** = T(32) / (4 × T(8)), T = events/s, = **{summary["value"]}**
 
 ## This box's own scaling ceilings (measured in the same windows)
 
