@@ -50,6 +50,7 @@ from pyspark.sql import types as T
 
 from maestro_spark import schema as S
 from maestro_spark.lake import LakeTable, Snapshot
+from maestro_spark.plan import plan_groups
 
 
 _PROTECTED = set(S.KEY_COLS) | {S.LSN_COL, S.DELETED_COL}
@@ -99,10 +100,11 @@ def _rewrite(
     snapshot as base (racing deltas conflict, not vanish)."""
     t0 = time.time()
     snap = table.snapshot()
-    df = transform(table._fold(snap, [ps for ps in snap.files.values() if ps]))
+    groups = plan_groups(table, snap).groups
+    df = transform(table._fold(snap, groups))
     new_files = table.write_bucket_files(df, schema=new_schema)
-    for b in snap.files:
-        new_files.setdefault(b, [])
+    for g in groups:
+        new_files.setdefault(str(g.bucket), [])
     return table.commit(
         new_files,
         epoch_key=None,

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from maestro_spark import schema as S
 from maestro_spark.lake import CommitConflict, LakeTable, Snapshot
 from maestro_spark.merge import merge_batch
+from maestro_spark.plan import plan_groups
 
 
 def max_live_lsn(table: LakeTable, snapshot_id: int | None = None) -> int:
@@ -45,13 +46,8 @@ def max_live_lsn(table: LakeTable, snapshot_id: int | None = None) -> int:
     zone-map arithmetic over per-file lsn_max, zero data IO at any table
     size."""
     snap = table.snapshot(snapshot_id)
-    best = 0
-    for ps in snap.files.values():
-        for p in ps:
-            hi = table.file_stats.get_or_read(p).get("lsn_max")
-            if hi is not None and hi > best:
-                best = hi
-    return best
+    return max([0, *(table.file_stats.get_or_read(p).get("lsn_max") or 0
+                     for g in plan_groups(table, snap).groups for p in g.rels)])
 
 
 def _dml_statement(

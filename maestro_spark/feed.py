@@ -40,12 +40,15 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from functools import partial
+from types import SimpleNamespace
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import StructType
 
 from maestro_spark import schema as S
-from maestro_spark.lake import SNAP_DIR, added_files, load_snapshot
+from maestro_spark.lake import SNAP_DIR, load_snapshot
+from maestro_spark.plan import plan_groups
 
 FORMAT_NAME = "table_changes"
 
@@ -207,27 +210,18 @@ class TableChangesStreamReader(DataSourceStreamReader):
         return {"snapshot": tip}
 
     def partitions(self, start: dict, end: dict):
+        """One partition per file ``plan.plan_groups(since=)`` plans; on a
+        rollback it raises (restart with startingSnapshot >= the rollback)."""
         lo, hi = start["snapshot"], end["snapshot"]
         self._cursor = max(self._cursor or 0, hi)
-        full_json = self._pinned_full_json if hi > lo else ""
-        parts: list[FeedFilePartition] = []
-        for sid in range(lo + 1, hi + 1):
-            snap = _snap(self.root, sid)
-            stats = snap.stats or {}
-            if stats.get("rollback_to") is not None:
-                raise ValueError(
-                    f"table_changes stream hit rollback snapshot {sid}; "
-                    "re-sync the consumer from a full read and restart the "
-                    "stream with startingSnapshot >= the rollback commit"
-                )
-            if stats.get("maintenance"):
-                continue
-            parent = _snap(self.root, snap.parent_id) if snap.parent_id is not None else None
-            parts.extend(
-                FeedFilePartition(os.path.join(self.root, p), full_json)
-                for ps in added_files(snap, parent).values()
-                for p in ps
-            )
+        # the feed never asks for bytes, so the chain needs no stats store
+        chain = SimpleNamespace(root=self.root, snapshot=partial(_snap, self.root))
+        plan = plan_groups(chain, _snap(self.root, hi), since=lo)
+        parts = [
+            FeedFilePartition(os.path.join(self.root, p), self._pinned_full_json)
+            for g in plan.groups
+            for p in g.rels
+        ]
         return parts or [FeedFilePartition("", "")]
 
     def read(self, partition: FeedFilePartition):

@@ -179,6 +179,8 @@ class _MaintainedIndex:
             feed = self.base.changes(frm, to)
         except (FileNotFoundError, ValueError):
             return self.rebuild()
+        # resolved once: the upsert write and the tombstones both read it
+        feed = feed.localCheckpoint(eager=True)
         ups = feed.filter(
             (F.col("op") == "upsert") & self._source_filter()
         ).select(
@@ -196,9 +198,10 @@ class _MaintainedIndex:
         meta; None when there is nothing live to fit the meta on."""
         to = self.base.snapshot().snapshot_id
         cols = self._source_cols()
-        live = self.base.read_resolved(columns=cols).filter(
+        # resolved once: every _fit pass (IVF's k-means) and _write read it
+        live = self.base.read_resolved(snapshot_id=to, columns=cols).filter(
             ~F.col(S.DELETED_COL) & self._source_filter()
-        ).select(*S.KEY_COLS, *cols, S.LSN_COL)
+        ).select(*S.KEY_COLS, *cols, S.LSN_COL).localCheckpoint(eager=True)
         meta = self._fit(live)
         if meta is None:
             return None
@@ -593,7 +596,6 @@ class MaintainedTextIndex(_MaintainedIndex):
     def _write(self, rows: DataFrame, meta: dict, mode: str) -> None:
         """Term rows into their ``_tb=`` dirs, doc lengths into
         ``_doclen/``."""
-        rows = rows.localCheckpoint(eager=True)  # feeds both writes: scan once
         (
             self._term_rows(rows).repartition("_tb")
             .sortWithinPartitions("_tb", "term")

@@ -52,8 +52,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from maestro_spark.lake import LakeTable, Snapshot, added_files, bucket_expr
+from maestro_spark.lake import LakeTable, Snapshot, bucket_expr
 from maestro_spark.merge import merge_batch
+from maestro_spark.plan import plan_groups
 from maestro_spark.registry import Registry
 
 STATS_PAYLOAD_SCHEMA = T.StructType(
@@ -526,42 +527,18 @@ class MaterializedView:
 
     # -------------------------------------------- crossover cost estimate
     def _range_bytes(self, frm: int, to: int) -> int:
-        """Bytes the change feed for ``(frm, to]`` would scan: the sizes of
-        the data files each non-maintenance epoch in the range ADDED vs its
-        parent — the exact file set :meth:`LakeTable.changes` resolves. Pure
-        driver-side manifest walk + file stats, no data IO. (An object-store
-        lake would carry sizes in the manifest itself; the local-FS lake
-        stats instead — same information, same cost class.)"""
-        total = 0
-        for sid in range(frm + 1, to + 1):
-            snap = self.base.snapshot(sid)
-            if snap.stats.get("maintenance"):
-                continue
-            parent = (
-                self.base.snapshot(snap.parent_id)
-                if snap.parent_id is not None
-                else None
-            )
-            for ps in added_files(snap, parent).values():
-                for p in ps:
-                    try:
-                        total += os.path.getsize(os.path.join(self.base.root, p))
-                    except OSError:
-                        pass  # vacuumed early: changes() will raise anyway
-        return total
+        """Bytes the change feed for ``(frm, to]`` would scan: the groups
+        ``plan.plan_groups(since=frm)`` plans, which are the exact file set
+        :meth:`LakeTable.changes` resolves, sized from file stats. Pure
+        driver-side manifest arithmetic, no data IO and no ``stat``."""
+        snap = self.base.snapshot(to)
+        return sum(g.bytes for g in plan_groups(self.base, snap, since=frm).groups)
 
     def _table_bytes(self, to: int) -> int:
         """Bytes a full resolved read of base snapshot ``to`` scans (every
         live manifest file — deltas included, since MOR reads them too)."""
         snap = self.base.snapshot(to)
-        total = 0
-        for ps in snap.files.values():
-            for p in ps:
-                try:
-                    total += os.path.getsize(os.path.join(self.base.root, p))
-                except OSError:
-                    pass
-        return total
+        return sum(g.bytes for g in plan_groups(self.base, snap).groups)
 
     def _event_schema(self) -> T.StructType:
         return T.StructType(

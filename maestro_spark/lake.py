@@ -38,19 +38,20 @@ lower-LSN insert arriving in a later epoch can never resurrect the row
 from __future__ import annotations
 
 import json
-import math
 import os
 import re
 import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from maestro_spark import schema as S
+from maestro_spark.plan import Group, Plan, plan_groups
 
 SNAP_DIR = "_snapshots"
 LEDGER_DIR = "_ledger"
@@ -120,20 +121,6 @@ def _logical(df: DataFrame, schema: T.StructType) -> DataFrame:
         return df
     inv = {p: l for l, p in cmap.items()}
     return df.select(*[F.col(c).alias(inv.get(c, c)) for c in df.columns])
-
-
-def added_files(snap: "Snapshot", parent: "Snapshot | None") -> dict[str, list[str]]:
-    """Bucket → the relative data file paths ``snap`` added over ``parent``
-    (per-bucket set difference, manifest order kept; no parent = every
-    file). The change feed's unit: an epoch's added files are exactly its
-    batch winners."""
-    out: dict[str, list[str]] = {}
-    for b, ps in snap.files.items():
-        prev = set(parent.files.get(b, [])) if parent else set()
-        new = [p for p in ps if p not in prev]
-        if new:
-            out[b] = new
-    return out
 
 
 class CommitConflict(Exception):
@@ -445,12 +432,10 @@ class LakeTable:
         one bucket's files, not the table.
         """
         snap = self.snapshot(snapshot_id)
-        want = {str(b) for b in buckets} if buckets is not None else None
         files = [
             os.path.join(self.root, p)
-            for b, ps in snap.files.items()
-            if want is None or b in want
-            for p in ps
+            for g in plan_groups(self, snap, buckets).groups
+            for p in g.rels
         ]
         if not files:
             return self.spark.createDataFrame([], snap.schema)
@@ -472,11 +457,8 @@ class LakeTable:
         table, not the table.
         """
         snap = self.snapshot(snapshot_id)
-        want = {str(b) for b in buckets} if buckets is not None else None
         return self._resolve(
-            snap,
-            self._scan_schema(snap, columns),
-            [ps for b, ps in snap.files.items() if want is None or b in want],
+            snap, self._scan_schema(snap, columns), plan_groups(self, snap, buckets)
         )
 
     @staticmethod
@@ -495,32 +477,22 @@ class LakeTable:
         need = {*S.KEY_COLS, *columns, S.LSN_COL, S.DELETED_COL}
         return T.StructType([f for f in snap.schema.fields if f.name in need])
 
-    def _resolve(
-        self,
-        snap: Snapshot,
-        scan_schema: T.StructType,
-        groups: list[list[str]],
-        n_buckets: int | None = None,
-    ) -> DataFrame:
+    def _resolve(self, snap: Snapshot, scan_schema: T.StructType, plan: Plan) -> DataFrame:
         """The ONE read-side winner rule: one row per key = max ``(_lsn,
-        position in its group)`` over each group of table-relative files,
-        in ``scan_schema``'s LOGICAL names, internal columns included,
-        tombstones kept. Each group lists, in commit order, files that
-        together hold every version of their keys worth resolving — a whole
-        bucket or a pruned subset of one — so no row crosses groups and the
-        read plans no exchange.
+        position in its group)`` over each group of ``plan`` (from
+        ``plan.plan_groups``: a whole bucket, a pruned subset of one, or a
+        change range's added files, in commit order — so no row crosses
+        groups and the read plans no exchange), in ``scan_schema``'s
+        LOGICAL names, internal columns included, tombstones kept.
 
         Every file the engine writes is key-unique *within itself* (merge
         writes per-epoch batch winners, compaction writes fully-resolved
         buckets), so a single-file group is a plain parquet scan; the
-        multi-file groups go through the ``mor_scan`` source (packed one
-        task per core, bucket-local Arrow merge). ``n_buckets`` (default
-        ``snap.n_buckets``) lets mor_scan drop the groups a pushed
-        ``conv_id`` equality cannot hit; 0 means groups are not single
-        buckets of one layout, and disables that pruning."""
-        root = self.root
-        single = [os.path.join(root, g[0]) for g in groups if len(g) == 1]
-        multi = [[os.path.join(root, p) for p in g] for g in groups if len(g) > 1]
+        multi-file groups go through the ``mor_scan`` source, packed one
+        task per core by the plan's bytes. Unless the plan mixes layouts,
+        mor_scan drops the groups a pushed ``conv_id`` equality cannot hit."""
+        single = [os.path.join(self.root, g.rels[0]) for g in plan.groups if len(g.rels) == 1]
+        multi = [g for g in plan.groups if len(g.rels) > 1]
         parts: list[DataFrame] = []
         if single:
             parts.append(self._scan_files(scan_schema, single))
@@ -530,17 +502,14 @@ class LakeTable:
             # the Arrow source reads files, so it works in PHYSICAL names
             # (keys/internals are never renameable, so its resolve/pushdown
             # columns are untouched); rename after
-            part = mor_scan.scan(
-                self.spark, S.physical_schema(scan_schema), multi,
-                snap.n_buckets if n_buckets is None else n_buckets,
-            )
+            part = mor_scan.scan(self.spark, S.physical_schema(scan_schema),
+                                 *self._abs(multi), 0 if plan.mixed else plan.n_buckets)
             parts.append(_logical(part, scan_schema))
         if not parts:
             return self.spark.createDataFrame([], scan_schema)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.select(*[f.name for f in scan_schema.fields])
+        return reduce(DataFrame.unionByName, parts).select(
+            *[f.name for f in scan_schema.fields]
+        )
 
     def changes(
         self,
@@ -563,12 +532,14 @@ class LakeTable:
         bucket's other keys, same row, same LSN) appear once, at their first
         emission. This is the version-history feed :meth:`scd2` builds on.
 
-        This is manifest arithmetic, not a table diff: each epoch snapshot in
-        the range contributes exactly the data files it ADDED (per-bucket set
-        difference vs its parent), and the net change per key is the max-LSN
-        winner across those files (resolved bucket-locally by
-        :meth:`_resolve`, no shuffle) — an epoch's added files are precisely
-        its batch winners, so the feed is exact. A :meth:`purge` snapshot's added
+        This is manifest arithmetic, not a table diff:
+        ``plan.plan_groups(since=from_snapshot)`` plans the data files each
+        epoch snapshot in the range ADDED (per-bucket set difference vs its
+        parent), grouped so each key's files share a group even across a
+        rebucket, and the net change per key is the max-LSN winner across
+        its group (resolved bucket-locally by :meth:`_resolve`, no shuffle)
+        — an epoch's added files are precisely its batch winners, so the
+        feed is exact. A :meth:`purge` snapshot's added
         file is a full rewrite of one bucket, so the feed also carries that
         bucket's unchanged rows re-stated at their current LSN — still
         correct to apply (idempotent upserts), just wider. Maintenance
@@ -593,51 +564,24 @@ class LakeTable:
             F.when(F.col(S.DELETED_COL), F.lit("delete")).otherwise(F.lit("upsert")).alias("op"),
             F.col(S.LSN_COL).alias("lsn"),
         ]
-        # (snapshot id, its bucket count, bucket -> added files), commit order
-        added: list[tuple[int, int, dict[str, list[str]]]] = []
-        for sid in range(from_snapshot + 1, to_snapshot + 1):
-            snap = self.snapshot(sid)
-            if snap.stats.get("rollback_to") is not None:
-                # a rollback's delta is files REMOVED vs its parent — the
-                # added-files feed cannot express it; consumers re-sync
-                raise ValueError(
-                    f"change feed range ({from_snapshot}, {to_snapshot}] spans "
-                    f"rollback snapshot {sid}; re-sync from a full read"
-                )
-            if snap.stats.get("maintenance"):
-                # content-preserving (compaction/rebucket/bloom) and ALTER
-                # snapshots contribute no change rows. Ranges SPANNING an
-                # alter are safe to feed through: physical column names are
-                # stable across a metadata-only rename (pre-rename files
-                # decode under the to-snapshot's physical schema), a masked
-                # drop simply stops decoding the column, and a re-added name
-                # owns a FRESH physical name (Snapshot.dropped reservation),
-                # so pre-drop files read it as null — never as the dropped
-                # column's stale bytes.
-                continue
-            parent = self.snapshot(snap.parent_id) if snap.parent_id is not None else None
-            files = added_files(snap, parent)
-            if files:
-                added.append((sid, snap.n_buckets, files))
+        # the added files of every epoch in the range. Maintenance
+        # (compaction/rebucket/bloom) and ALTER snapshots add none. Ranges
+        # SPANNING an alter are safe to feed through: physical column names
+        # are stable across a metadata-only rename (pre-rename files decode
+        # under the to-snapshot's physical schema), a masked drop simply
+        # stops decoding the column, and a re-added name owns a FRESH
+        # physical name (Snapshot.dropped reservation), so pre-drop files
+        # read it as null — never as the dropped column's stale bytes.
+        plan = plan_groups(self, to_snap, since=from_snapshot)
         if not collapse:
-            parts = [
-                self._scan_files(
-                    to_snap.schema,
-                    [os.path.join(self.root, p) for ps in files.values() for p in ps],
-                )
-                .withColumn("_seq", F.lit(seq))
-                .withColumn("_sid", F.lit(sid))
-                for seq, (sid, _, files) in enumerate(added)
-            ]
-            if not parts:
-                parts = [
-                    self.spark.createDataFrame([], to_snap.schema)
-                    .withColumn("_seq", F.lit(0))
-                    .withColumn("_sid", F.lit(0))
-                ]
-            union = parts[0]
-            for p in parts[1:]:
-                union = union.unionByName(p)
+            by_sid: dict[int, list[str]] = {}
+            for g in plan.groups:
+                for p, sid in zip(g.rels, g.seqs):
+                    by_sid.setdefault(sid, []).append(os.path.join(self.root, p))
+            union = reduce(DataFrame.unionByName, [
+                self._scan_files(to_snap.schema, files).withColumn("_sid", F.lit(sid))
+                for sid, files in sorted(by_sid.items())
+            ] or [self.spark.createDataFrame([], to_snap.schema).withColumn("_sid", F.lit(0))])
             # one row per (key, lsn): the first commit that emitted the
             # version wins the tag (purge re-statements carry the SAME lsn
             # and identical payload — the one-LSN-one-payload invariant —
@@ -646,27 +590,14 @@ class LakeTable:
             rest2 = [c for c in union.columns if c not in (*keys, S.LSN_COL)]
             firsts = (
                 union.groupBy(*keys, S.LSN_COL)
-                .agg(F.min_by(F.struct(*rest2), F.col("_seq")).alias("_w"))
+                .agg(F.min_by(F.struct(*rest2), F.col("_sid")).alias("_w"))
                 .select(*keys, S.LSN_COL, "_w.*")
             )
             return firsts.select(*out_cols, F.col("_sid").alias("snapshot_id"))
-        # net change per key = its winner over the added files. A key's
-        # files all sit in its bucket; across a rebucket its buckets agree
-        # modulo the gcd of the range's bucket counts, so grouping by
-        # bucket mod that gcd keeps every key inside one group. Commit
-        # order within a group keeps the later commit the LSN-tie winner.
-        g = 0
-        for _, n, _ in added:
-            g = math.gcd(g, n)
-        groups: dict[int, list[str]] = {}
-        for _, _, files in added:
-            for b, ps in files.items():
-                groups.setdefault(int(b) % g, []).extend(ps)
-        one_layout = all(n == g for _, n, _ in added)
-        winners = self._resolve(
-            to_snap, to_snap.schema, list(groups.values()), g if one_layout else 0
-        )
-        return winners.select(*out_cols)
+        # net change per key = its winner over its group's added files
+        # (commit order within a group keeps the later commit the LSN-tie
+        # winner)
+        return self._resolve(to_snap, to_snap.schema, plan).select(*out_cols)
 
     def scd2(
         self, from_snapshot: int = 0, to_snapshot: int | None = None
@@ -1002,56 +933,60 @@ class LakeTable:
     def plan_col_scan(
         self, col: str, lo, hi, snapshot_id: int | None = None
     ) -> tuple[dict[int, list[str]], list[str], int]:
-        """Zone-map planning for a range read on ANY scalar column
-        (driver-side manifest + fstats arithmetic, no data IO).
+        """Zone-map plan of a range read on ANY scalar column (driver-side
+        manifest + fstats arithmetic, no data IO), as :meth:`read_where`
+        reads it: ``(candidates, mask, total_files)``. ``candidates`` maps
+        commit position (the max-LSN tie-break) → absolute paths of files
+        whose ``col`` bounds overlap [lo, hi]; ``mask`` is the absolute
+        paths of the other files :meth:`_zone_rule` keeps."""
+        snap = self.snapshot(snapshot_id)
+        keep, hit = self._zone_rule(snap, col, lo, hi)
+        plan = plan_groups(self, snap, keep=keep)
+        cand: dict[int, list[str]] = {}
+        mask: list[str] = []
+        for g in plan.groups:
+            for j, p in zip(g.seqs, g.rels):
+                ap = os.path.join(self.root, p)
+                (cand.setdefault(j, []) if hit(p) else mask).append(ap)
+        return cand, mask, plan.total
 
-        Returns ``(candidates, mask, total_files)`` where ``candidates`` maps
-        commit position → absolute paths of files whose ``col`` bounds
-        overlap [lo, hi] (position is the max-LSN tie-break, as in
-        read_resolved), and ``mask`` is the absolute paths of files that
-        cannot hold a row in range but CAN hold a higher-LSN version of a
-        candidate row (per-file lsn_max ≥ the bucket's minimum candidate
-        lsn_min). :meth:`read_where` resolves each bucket over its
-        candidates and mask together, which keeps the pruned read EXACT
-        under merge-on-read: a candidate superseded by an out-of-range
-        update loses to it, and the range filter drops that winner. A file
-        in neither list has ``lsn_max`` below every candidate's ``lsn_min``
-        in its bucket, so it cannot supersede one. Files with unknown bounds
-        (pre-upgrade shards, evolved-in or uncapped columns) are never
-        pruned.
-        """
+    def _zone_rule(self, snap: Snapshot, col: str, lo, hi):
+        """``(keep, hit)`` of a range read on ``col`` over [lo, hi]. ``hit``:
+        the file's zone map overlaps the range (a candidate). ``keep``, the
+        planner's prune rule, keeps a bucket's candidates plus its mask —
+        the files whose ``lsn_max`` reaches the bucket's minimum candidate
+        ``lsn_min``, so may hold a higher-LSN version of a candidate row.
+        Resolving both together keeps the pruned read EXACT under
+        merge-on-read: a superseded candidate loses to its out-of-range
+        update, which the range filter then drops. Unknown bounds
+        (pre-upgrade shards, evolved-in or uncapped columns) never prune."""
         from maestro_spark.filestats import _micros, col_overlaps
 
         import datetime as _dt
 
         lo_v = _micros(lo) if isinstance(lo, _dt.datetime) else lo
         hi_v = _micros(hi) if isinstance(hi, _dt.datetime) else hi
-        snap = self.snapshot(snapshot_id)
         # zone maps are harvested from file footers, so they are keyed by the
         # PHYSICAL column name — stable across metadata-only renames
         pcol = S.column_map(snap.schema).get(col, col)
-        cand: dict[int, list[str]] = {}
-        mask: list[str] = []
-        total = 0
-        for ps in snap.files.values():
-            total += len(ps)
-            stats = [self.file_stats.get_or_read(p) for p in ps]
-            hits = [
-                j for j, st in enumerate(stats) if col_overlaps(st, pcol, lo_v, hi_v)
-            ]
-            if not hits:
-                continue  # no row of this bucket can be in range
+
+        def hit(rel: str) -> bool:
+            return col_overlaps(self.file_stats.get_or_read(rel), pcol, lo_v, hi_v)
+
+        def keep(files: list[str]) -> list[int]:
+            stats = [self.file_stats.get_or_read(p) for p in files]
+            hits = {j for j, p in enumerate(files) if hit(p)}
             floor = min(
                 (stats[j]["lsn_min"] for j in hits if stats[j]["lsn_min"] is not None),
                 default=None,
             )
-            for j, (p, st) in enumerate(zip(ps, stats)):
-                ap = os.path.join(self.root, p)
-                if j in hits:
-                    cand.setdefault(j, []).append(ap)
-                elif floor is None or st["lsn_max"] is None or st["lsn_max"] >= floor:
-                    mask.append(ap)
-        return cand, mask, total
+            return [] if not hits else [
+                j for j, st in enumerate(stats)
+                if j in hits or floor is None or st["lsn_max"] is None
+                or st["lsn_max"] >= floor
+            ]
+
+        return keep, hit
 
     def read_where_ts(
         self,
@@ -1075,10 +1010,12 @@ class LakeTable:
     ) -> DataFrame:
         """Live rows whose scalar ``col`` falls in [lo, hi] (inclusive,
         either end open), scanning only the files the per-column zone maps
-        admit (see :meth:`plan_col_scan`): each bucket's candidate and mask
-        files resolve as one group through :meth:`_resolve`, then the
-        range filter applies. Result equals ``read().filter(col between)``
-        exactly — an analytics predicate on ``role``, ``tool``, or an
+        admit: ``plan.plan_groups`` keeps each bucket's candidate and mask
+        files under :meth:`_zone_rule` (what :meth:`plan_col_scan` shows),
+        each bucket's kept files resolve as one group through
+        :meth:`_resolve`, then the range filter applies. Result equals
+        ``read().filter(col between)`` exactly — an analytics predicate on
+        ``role``, ``tool``, or an
         evolved payload column prunes like a ts range instead of scanning
         every live file. ``columns`` additionally prunes the scan to the
         given payload columns (zone pruning × column pruning compose — the
@@ -1088,18 +1025,13 @@ class LakeTable:
         snap = self.snapshot(snapshot_id)
         if col not in {f.name for f in snap.schema.fields}:
             raise ValueError(f"unknown column {col!r}")
-        cand, mask, _ = self.plan_col_scan(col, lo, hi, snap.snapshot_id)
+        keep, _ = self._zone_rule(snap, col, lo, hi)
         scan_schema = self._scan_schema(snap, None if columns is None else [*columns, col])
         payload = (
             list(columns) if columns is not None
             else [f.name for f in snap.payload_schema().fields]
         )
-        keep = {p for ps in cand.values() for p in ps} | set(mask)
-        groups = [
-            [p for p in ps if os.path.join(self.root, p) in keep]
-            for ps in snap.files.values()
-        ]
-        out = self._resolve(snap, scan_schema, [g for g in groups if g])
+        out = self._resolve(snap, scan_schema, plan_groups(self, snap, keep=keep))
         out = out.filter(~F.col(S.DELETED_COL))
         if lo is not None:
             out = out.filter(F.col(col) >= F.lit(lo))
@@ -1117,19 +1049,18 @@ class LakeTable:
         ``total`` is the bucket's unpruned file count. Files without a
         bloom (not yet indexed by :meth:`build_key_blooms`) are kept —
         pruning is only ever evidence-based, and blooms have no false
-        negatives."""
+        negatives. The bloom probe is ``plan.plan_groups``' ``keep`` rule
+        over the one bucket."""
         from maestro_spark import filestats as FS
         from maestro_spark.keyhash import bucket_of
 
         snap = self.snapshot(snapshot_id)
         b = bucket_of(conv_id, snap.n_buckets)
-        ps = snap.files.get(str(b), [])
-        cand = [
-            (j, p)
-            for j, p in enumerate(ps)
+        plan = plan_groups(self, snap, [b], keep=lambda files: [
+            j for j, p in enumerate(files)
             if FS.bloom_maybe_contains(self.file_stats.get(p), conv_id)
-        ]
-        return b, cand, len(ps)
+        ])
+        return b, [(j, p) for g in plan.groups for j, p in zip(g.seqs, g.rels)], plan.total
 
     def lookup(
         self,
@@ -1138,34 +1069,25 @@ class LakeTable:
         snapshot_id: int | None = None,
     ) -> DataFrame:
         """Point read: live turns of one conversation (optionally one turn),
-        touching only the ONE hash bucket the key lives in.
-
-        The bucket is computed on the driver with the pure-Python twin of
-        ``bucket_expr`` (maestro_spark.keyhash — parity property-tested
-        against ``F.xxhash64``), so planning launches no job and the scan
-        reads 1/n_buckets of the table's files regardless of table size.
-        Within the bucket, per-file KEY BLOOMS (filestats) drop the delta
-        files that never saw this conversation — at 100 TB a bucket holds
-        hundreds of settled tier files and a given conversation lives in a
-        handful, so the scan is per-conversation-sized, not bucket-sized.
-        Inside the surviving files the key predicate is pushed to parquet,
-        where ``write_bucket_files``'s (conv_id, turn_idx)
-        sort-within-partitions makes row-group min/max stats prune to the
-        few pages actually holding the key — an index-lookup-shaped read,
-        not a scan. The surviving files resolve as one commit-ordered group
-        through :meth:`_resolve` (one file: a plain scan; several: mor_scan,
-        which takes the key equality as a pushed filter), and the key
-        filter commutes with resolution per key; blooms have no false
-        negatives, so the result equals ``read().filter(conv_id = ...)``
-        exactly.
-        """
+        touching only the ONE hash bucket the key lives in, picked on the
+        driver by keyhash's pure-Python twin of ``bucket_expr`` (no job).
+        :meth:`plan_lookup` drops the bucket's files whose key bloom never
+        saw the conversation — at 100 TB a bucket holds hundreds of tier
+        files and a conversation lives in a handful. The rest resolve as
+        one commit-ordered group through :meth:`_resolve`, with the key
+        predicate pushed to parquet row groups (files are sorted on the
+        key). Blooms have no false negatives and the key filter commutes
+        with resolution, so the result equals
+        ``read().filter(conv_id = ...)`` exactly."""
         snap = self.snapshot(snapshot_id)
         payload = [f.name for f in snap.payload_schema().fields]
-        _, cand, _ = self.plan_lookup(conv_id, snapshot_id=snap.snapshot_id)
+        b, cand, _ = self.plan_lookup(conv_id, snapshot_id=snap.snapshot_id)
         pred = F.col("conv_id") == F.lit(conv_id)
         if turn_idx is not None:
             pred = pred & (F.col("turn_idx") == F.lit(turn_idx))
-        winners = self._resolve(snap, snap.schema, [[p for _, p in cand]] if cand else [])
+        # the bloom-kept files, as the one group the planner hands over
+        kept = [j for j, _ in cand]
+        winners = self._resolve(snap, snap.schema, plan_groups(self, snap, [b], keep=lambda _: kept))
         return winners.filter(pred & ~F.col(S.DELETED_COL)).select(*payload)
 
     def purge(self, conv_id: str) -> Snapshot:
@@ -1194,15 +1116,15 @@ class LakeTable:
         from maestro_spark.keyhash import bucket_of
 
         snap = self.snapshot()
-        b = str(bucket_of(conv_id, snap.n_buckets))
-        ps = snap.files.get(b, [])
-        if not ps:
+        b = bucket_of(conv_id, snap.n_buckets)
+        groups = plan_groups(self, snap, [b]).groups
+        if not any(g.rels for g in groups):
             return snap
         is_key = F.col("conv_id") == F.lit(conv_id)
         nullable_payload = [
             f for f in snap.payload_schema().fields if f.name not in S.KEY_COLS
         ]
-        df = self._fold(snap, [ps]).select(
+        df = self._fold(snap, groups).select(
             "pk_bucket",
             *S.KEY_COLS,
             *[
@@ -1224,9 +1146,9 @@ class LakeTable:
         # base = the snapshot this rewrite was planned from: a delta landing
         # in this bucket while the rewrite job ran must conflict, not vanish
         return self.commit(
-            {b: new_files.get(b, [])},
+            {str(b): new_files.get(str(b), [])},
             epoch_key=None,
-            stats={"purge_bucket": int(b)},
+            stats={"purge_bucket": b},
             append=False,
             base=snap.snapshot_id,
         )
@@ -1330,8 +1252,8 @@ class LakeTable:
         snap = self.snapshot(snapshot_id)
         missing = [
             p
-            for ps in snap.files.values()
-            for p in ps
+            for g in plan_groups(self, snap).groups
+            for p in g.rels
             if FS.BLOOM_FIELD not in (self.file_stats.get(p) or {})
         ]
         if not missing:
@@ -2329,10 +2251,9 @@ class LakeTable:
         """
         t0 = time.time()
         snap = self.snapshot()
-        todo = buckets if buckets is not None else [int(b) for b in snap.files]
-        df = self._fold(
-            snap, [snap.files[str(b)] for b in todo if snap.files.get(str(b))]
-        )
+        groups = plan_groups(self, snap, buckets).groups
+        todo = buckets if buckets is not None else [g.bucket for g in groups]
+        df = self._fold(snap, groups)
         if tombstone_horizon_lsn is not None:
             df = df.filter(
                 ~F.col(S.DELETED_COL) | (F.col(S.LSN_COL) >= tombstone_horizon_lsn)
@@ -2342,7 +2263,7 @@ class LakeTable:
             from maestro_spark.ops import zorder_key
 
             bounds: dict[str, tuple] = {}
-            rels = [p for b in todo for p in snap.files.get(str(b), [])]
+            rels = [p for g in groups for p in g.rels]
             cmap = S.column_map(snap.schema)
             for c in cluster_by:
                 per_file = [
@@ -2385,16 +2306,10 @@ class LakeTable:
     def delta_buckets(self, max_deltas: int) -> list[int]:
         """Buckets whose delta-file count has reached the compaction
         threshold — the LSM levelling trigger. Pure manifest arithmetic."""
-        snap = self.snapshot()
-        return sorted(int(b) for b, ps in snap.files.items() if len(ps) >= max_deltas)
-
-    def _file_bytes(self, rel: str) -> int:
-        """On-disk size of a committed data file — zone-map lookup first
-        (harvested at write time), getsize fallback for pre-upgrade files."""
-        st = self.file_stats.get(rel)
-        if st is not None and st.get("bytes") is not None:
-            return int(st["bytes"])
-        return os.path.getsize(os.path.join(self.root, rel))
+        return sorted(
+            g.bucket for g in plan_groups(self, self.snapshot()).groups
+            if len(g.rels) >= max_deltas
+        )
 
     @staticmethod
     def _fold_suffix(sizes: list[int], min_fold: int, factor: float) -> int:
@@ -2418,30 +2333,33 @@ class LakeTable:
                 break
         return k if k >= min_fold else 0
 
-    def _fold(self, snap: Snapshot, groups: list[list[str]]) -> DataFrame:
-        """Resolve whole-bucket file groups (table-relative paths, each in
-        commit order) into ``pk_bucket`` + ``snap.schema``'s columns, LOGICAL
-        names: the mor_scan source packs the buckets one task per core and
-        resolves each bucket locally (max ``(_lsn, commit-seq)`` per key),
-        reading ``pk_bucket`` from the partition path. Every bucket's rows
-        come out of one task, so :meth:`write_bucket_files` writes one file
-        per bucket with no exchange. The one fold of every bucket rewrite:
+    def _fold(self, snap: Snapshot, groups: list[Group]) -> DataFrame:
+        """Resolve whole-bucket groups of ``plan.plan_groups`` (or a
+        commit-ordered suffix of each) into ``pk_bucket`` +
+        ``snap.schema``'s columns, LOGICAL names: the mor_scan source packs
+        the buckets one task per core by their bytes and resolves each
+        bucket locally (max ``(_lsn, commit-seq)`` per key), reading
+        ``pk_bucket`` from the partition path. Every bucket's rows come out
+        of one task, so :meth:`write_bucket_files` writes one file per
+        bucket with no exchange. The one fold of every bucket rewrite:
         :meth:`compact_tiered`, :meth:`compact`, :meth:`purge` and
-        ``ddl``'s erase-drop."""
-        from maestro_spark import mor_scan
-
+        ``ddl``'s erase-drop. Empty groups are skipped."""
         scan_schema = T.StructType(
             [
                 T.StructField("pk_bucket", T.IntegerType(), True),
                 *S.physical_schema(snap.schema).fields,
             ]
         )
-        df = mor_scan.scan(
-            self.spark, scan_schema,
-            [[os.path.join(self.root, p) for p in g] for g in groups],
-            snap.n_buckets,
-        )
+        from maestro_spark import mor_scan
+
+        df = mor_scan.scan(self.spark, scan_schema,
+                           *self._abs([g for g in groups if g.rels]), snap.n_buckets)
         return _logical(df, snap.schema)
+
+    def _abs(self, groups: list[Group]) -> tuple[list[list[str]], list[int]]:
+        """``mor_scan.scan``'s input: the groups' absolute paths and bytes."""
+        return [[os.path.join(self.root, p) for p in g.rels] for g in groups], [
+            g.bytes for g in groups]
 
     def compact_tiered(
         self,
@@ -2453,7 +2371,8 @@ class LakeTable:
         rewrite of settled base files (the r2 measured scale-killer: at
         thousands of epochs, full-bucket folds cost O(table) per trigger).
 
-        The suffix groups go through :meth:`_fold` (mor_scan, whole buckets
+        The tiers are sized from the planner's file-stats bytes, and the
+        suffix groups go through :meth:`_fold` (mor_scan, whole buckets
         packed one task per core, no exchange), so the write emits one
         folded file per bucket: read + resolve + write of just the tier
         bytes.
@@ -2467,21 +2386,14 @@ class LakeTable:
         foldable tier."""
         t0 = time.time()
         snap = self.snapshot()
-        todo = [int(b) for b in snap.files] if buckets is None else buckets
         keep: dict[str, list[str]] = {}
-        groups: list[list[str]] = []
-        fold_bytes = 0
-        n_fold_files = 0
-        for b in todo:
-            ps = snap.files.get(str(b), [])
-            sizes = [self._file_bytes(p) for p in ps]
-            k = self._fold_suffix(sizes, min_fold, TIER_FACTOR)
-            if not k:
-                continue
-            keep[str(b)] = ps[: len(ps) - k]
-            groups.append(ps[len(ps) - k:])
-            fold_bytes += sum(sizes[len(ps) - k:])
-            n_fold_files += k
+        groups: list[Group] = []
+        for g in plan_groups(self, snap, buckets).groups:
+            n = len(g.rels)
+            k = self._fold_suffix(g.sizes, min_fold, TIER_FACTOR)
+            if k:
+                keep[str(g.bucket)] = g.rels[: n - k]
+                groups.append(g.sub(range(n - k, n)))
         if not groups:
             return None
         # no exchange fold at any tier size: on a local[4] host (64 buckets,
@@ -2497,8 +2409,8 @@ class LakeTable:
             stats={
                 "maintenance": "compact-tiered",
                 "buckets": sorted(int(b) for b in keep),
-                "fold_files": n_fold_files,
-                "fold_bytes": fold_bytes,
+                "fold_files": sum(len(g.rels) for g in groups),
+                "fold_bytes": sum(g.bytes for g in groups),
                 "compact_s": round(time.time() - t0, 3),
             },
             append=False,
@@ -2638,13 +2550,8 @@ def describe(table: "LakeTable") -> dict:
     from maestro_spark import index_maint, ivm
 
     snap = table.snapshot()
-    rows = files = size = 0
-    for ps in snap.files.values():
-        for p in ps:
-            st = table.file_stats.get_or_read(p)
-            rows += st.get("rows") or 0
-            size += st.get("bytes") or 0
-            files += 1
+    stats = [table.file_stats.get_or_read(p)
+             for g in plan_groups(table, snap).groups for p in g.rels]
     return {
         "root": table.root,
         "schema": [
@@ -2655,9 +2562,9 @@ def describe(table: "LakeTable") -> dict:
         "n_buckets": snap.n_buckets,
         "snapshot_id": snap.snapshot_id,
         "snapshots_retained": len(table.snapshot_ids()),
-        "files": files,
-        "rows_incl_tombstones": rows,
-        "bytes": size,
+        "files": len(stats),
+        "rows_incl_tombstones": sum(st.get("rows") or 0 for st in stats),
+        "bytes": sum(st.get("bytes") or 0 for st in stats),
         "tags": table.tags(),
         "constraints": table.constraints(),
         "materialized_views": ivm.list_declared(table),

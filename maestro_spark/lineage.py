@@ -2,8 +2,9 @@
 
 One lineage row per (epoch × changed bucket), appended each commit:
 ``epoch_id, query_id, pk_bucket, rows, lsn_min, lsn_max, files, bytes,
-snapshot_id, wall_s``. Row counts and LSN ranges come from parquet footers —
-metadata-only, no second pass over the data (the scale-honest way to get
+snapshot_id, wall_s``. Row counts, byte sizes and LSN ranges come from the
+file stats harvested from parquet footers at write time — metadata-only,
+no second pass over the data and no ``stat`` (the scale-honest way to get
 per-partition lineage; a recompute of the merge DAG would double the epoch
 cost at 100 TB).
 """
@@ -44,16 +45,14 @@ def append_lineage(
     new_files: dict[str, list[str]],
     wall_s: float,
 ) -> None:
-    from maestro_spark.merge import file_stats
-
     now = int(time.time() * 1_000_000)
     rows = []
     for b, rels in sorted(new_files.items(), key=lambda kv: int(kv[0])):
         tot_rows, lsn_min, lsn_max, nbytes = 0, None, None, 0
         for rel in rels:
-            st = file_stats(table, rel)
+            st = table.file_stats.get_or_read(rel)
             tot_rows += st["rows"]
-            nbytes += os.path.getsize(os.path.join(table.root, rel))
+            nbytes += st["bytes"]
             if st["lsn_min"] is not None:
                 lsn_min = st["lsn_min"] if lsn_min is None else min(lsn_min, st["lsn_min"])
                 lsn_max = st["lsn_max"] if lsn_max is None else max(lsn_max, st["lsn_max"])

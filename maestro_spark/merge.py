@@ -383,10 +383,3 @@ def read_quarantine(table: LakeTable, query_id: str) -> DataFrame | None:
         return None
     return table.spark.read.option("basePath", qdir).parquet(qdir)
 
-
-def file_stats(table: LakeTable, rel_path: str) -> dict:
-    """Per-file stats for lineage, served from the zone-map store the write
-    path populated (maestro_spark.filestats) — the footer is read at most
-    once per file per process, and normally zero times here because
-    write_bucket_files already harvested it."""
-    return table.file_stats.get_or_read(rel_path)

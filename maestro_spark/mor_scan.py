@@ -20,7 +20,8 @@ bucket — exactly the per-file-group merge a Hudi/Iceberg MOR reader
 performs, built from scratch per the north rule. Packing matters because a
 Python task has a fixed cost (worker set-up, ~120-140 ms on a 4-core host)
 that dwarfs resolving one small bucket (~12 ms), so the task count follows
-the cores, not the buckets.
+the cores, not the buckets. Groups and their bytes come from the driver's
+``plan.plan_groups`` (file stats), so the planner worker stats no file.
 
 A pushed ``conv_id``/``turn_idx`` equality (``pushFilters``) drops the
 groups of other buckets and becomes a pyarrow row filter; key filters are
@@ -35,7 +36,6 @@ from __future__ import annotations
 
 import heapq
 import json
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
@@ -50,12 +50,14 @@ class BucketPack(InputPartition):
     groups: list[list[str]] = field(default_factory=list)
 
 
-def pack_groups(groups: list[list[str]], slots: int) -> list[BucketPack]:
+def pack_groups(
+    groups: list[list[str]], sizes: list[int], slots: int
+) -> list[BucketPack]:
     """Pack bucket groups into at most ``slots`` partitions: largest total
-    file bytes first, each onto the least-loaded partition (LPT). A group is
-    never split, and each pack keeps its groups in input order."""
+    bytes first (``sizes[i]``, from the driver's plan; nothing is statted
+    here), each onto the least-loaded partition (LPT). A group is never
+    split, and each pack keeps its groups in input order."""
     n = max(1, min(slots, len(groups)))
-    sizes = [sum(os.path.getsize(f) for f in g) for g in groups]
     loads = [(0, k) for k in range(n)]  # (bytes, pack) min-heap
     members: list[list[int]] = [[] for _ in range(n)]
     for i in sorted(range(len(groups)), key=lambda i: -sizes[i]):
@@ -138,6 +140,7 @@ class MorScanReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
         self.groups: list[list[str]] = json.loads(options["groups_json"])
+        self.sizes: list[int] = json.loads(options["sizes_json"])  # per group
         # 0 = groups are not single buckets of one layout: no bucket pruning
         self.n_buckets = int(options.get("n_buckets", "0"))
         # task slots of the session (sparkContext.defaultParallelism); the
@@ -159,7 +162,7 @@ class MorScanReader(DataSourceReader):
             yield f
 
     def partitions(self):
-        groups = self.groups
+        groups, sizes = self.groups, self.sizes
         conv = [v for c, v in self.key_filters if c == "conv_id"]
         if conv and self.n_buckets:
             # a conv_id equality pins ONE bucket — drop every other group
@@ -167,10 +170,9 @@ class MorScanReader(DataSourceReader):
             from maestro_spark.keyhash import bucket_of
 
             tags = {f"pk_bucket={bucket_of(v, self.n_buckets)}/" for v in conv}
-            groups = [
-                g for g in groups if any(tag in g[0] for tag in tags)
-            ]
-        return pack_groups(groups, self.slots)
+            hit = [i for i, g in enumerate(groups) if any(t in g[0] for t in tags)]
+            groups, sizes = [groups[i] for i in hit], [sizes[i] for i in hit]
+        return pack_groups(groups, sizes, self.slots)
 
     def read(self, partition: BucketPack):
         for files in partition.groups:
@@ -180,6 +182,7 @@ class MorScanReader(DataSourceReader):
 class MorScanDataSource(DataSource):
     """spark.read.format("mor_scan").schema(s)
     .option("groups_json", json.dumps([[f1, f2], ...]))
+    .option("sizes_json", json.dumps([bytes, ...]))
     .option("slots", str(sc.defaultParallelism)).load()"""
 
     @classmethod
@@ -197,10 +200,12 @@ def register(spark) -> None:
     spark.dataSource.register(MorScanDataSource)
 
 
-def scan(spark, schema: StructType, groups: list[list[str]], n_buckets: int):
-    """DataFrame of ``groups`` (files in commit order, each group holding
-    every version of its keys) resolved in ``schema`` (PHYSICAL names),
-    packed one task per core. ``n_buckets`` > 0 says each group is one
+def scan(spark, schema: StructType, groups: list[list[str]], sizes: list[int],
+         n_buckets: int):
+    """DataFrame of ``groups`` (absolute files in commit order, each group
+    holding every version of its keys) resolved in ``schema`` (PHYSICAL
+    names), packed one task per core by the groups' ``sizes`` (bytes, from
+    the driver's plan). ``n_buckets`` > 0 says each group is one
     bucket of that layout, so a pushed ``conv_id`` equality prunes groups.
     The reader implements filter pushdown, which Spark allows only with
     ``spark.sql.python.filterPushdown.enabled`` set, so this sets it."""
@@ -211,6 +216,7 @@ def scan(spark, schema: StructType, groups: list[list[str]], n_buckets: int):
         .schema(schema)
         .option("schema_json", json.dumps(schema.jsonValue()))
         .option("groups_json", json.dumps(groups))
+        .option("sizes_json", json.dumps(sizes))
         .option("slots", str(spark.sparkContext.defaultParallelism))
         .option("n_buckets", str(n_buckets))
         .load()

@@ -962,3 +962,49 @@ def test_export_and_index_cursors_share_the_range_marker_reader(
             _json.dump({"from": tip + 1, "to": 99}, fh)
     assert idx.applied_through() == 99
     assert base.export_changes(dest)["to"] == 99  # cursor past the tip: no-op
+
+
+# Spark jobs of one rebuild and one refresh per kind, on the table below.
+# Each resolves its input once (rebuild: the live rows; refresh: the change
+# feed) into a local checkpoint that every later job reads, so a k-means
+# pass or a second write no longer re-resolves the base.
+JOBS_PER_CALL = {
+    "ivf": {"rebuild": 10, "refresh": 4},
+    "lsh": {"rebuild": 4, "refresh": 4},
+    "simhash": {"rebuild": 4, "refresh": 5},
+    "text": {"rebuild": 5, "refresh": 6},
+    "value": {"rebuild": 5, "refresh": 6},
+}
+
+
+@pytest.mark.parametrize("kind", sorted(CONTRACT_PARAMS))
+def test_refresh_and_rebuild_run_a_pinned_number_of_jobs(spark, tmp_path, kind):
+    from maestro_spark.index_maint import INDEX_KINDS
+
+    sc = spark.sparkContext
+    base = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=2,
+                            payload_schema=CONTRACT_PAYLOAD)
+    merge_batch(base, _contract_events(spark, [
+        (i + 1, "insert", f"c{i}", i) for i in range(12)
+    ]), "q", 0)
+    merge_batch(base, _contract_events(spark, [
+        (100, "update", "c3", 301), (101, "insert", "c20", 20),
+    ]), "q", 1)
+    idx = INDEX_KINDS[kind](spark, base, str(tmp_path / "idx"),
+                            **CONTRACT_PARAMS[kind])
+
+    def jobs(call) -> int:
+        group = f"index-{kind}-{call.__name__}"
+        sc.setJobGroup(group, group)
+        try:
+            assert call() is not None
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got = {"rebuild": jobs(idx.rebuild)}
+    merge_batch(base, _contract_events(spark, [
+        (102, "delete", "c7", None), (103, "update", "c5", 502),
+    ]), "q", 2)
+    got["refresh"] = jobs(idx.refresh)
+    assert got == JOBS_PER_CALL[kind]

@@ -6,6 +6,7 @@ import os
 
 from maestro_spark.gen import GenConfig, generate, write_log
 from maestro_spark.lake import DATA_DIR, LakeTable
+from maestro_spark.plan import file_bytes
 from maestro_spark.replay import replay
 from maestro_spark.verify import symmetric_diff_empty
 
@@ -510,7 +511,7 @@ def test_compact_tiered_folds_deltas_not_base(spark, tmp_path):
         # fold bytes == exactly the delta files' bytes; the base contributed 0
         pre = t.snapshot(snap.parent_id).files
         delta_bytes = sum(
-            t._file_bytes(p) for b, ps in pre.items() for p in ps[1:]
+            file_bytes(t, p) for b, ps in pre.items() for p in ps[1:]
         )
         assert snap.stats["fold_bytes"] == delta_bytes
         # repeated call with nothing foldable below the factor is a no-op

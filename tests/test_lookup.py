@@ -208,15 +208,18 @@ def test_key_filter_pushdown_into_mor_scan(spark, tmp_path):
     # the reader's own pruning arithmetic: one bucket's groups survive
     from maestro_spark.mor_scan import MorScanReader
 
+    from maestro_spark.plan import file_bytes
+
     snap = t.snapshot()
-    groups = [
-        [f"{t.root}/{p}" for p in ps] for ps in snap.files.values() if len(ps) > 1
-    ]
+    multi = [ps for ps in snap.files.values() if len(ps) > 1]
+    groups = [[f"{t.root}/{p}" for p in ps] for ps in multi]
     import json as _json
 
     r = MorScanReader(
         snap.schema,
-        {"groups_json": _json.dumps(groups), "n_buckets": str(snap.n_buckets)},
+        {"groups_json": _json.dumps(groups),
+         "sizes_json": _json.dumps([sum(file_bytes(t, p) for p in ps) for ps in multi]),
+         "n_buckets": str(snap.n_buckets)},
     )
     from pyspark.sql.datasource import EqualTo
 

@@ -46,7 +46,7 @@ def _groups_of(d: str, sizes: list[list[int]]) -> list[list[str]]:
 def test_pack_groups_keeps_each_bucket_whole(sizes, slots):
     with tempfile.TemporaryDirectory(prefix="pack_") as d:
         groups = _groups_of(d, sizes)
-        packs = pack_groups(groups, slots)
+        packs = pack_groups(groups, [sum(fs) for fs in sizes], slots)
     assert 1 <= len(packs) <= slots
     assert len(packs) == max(1, min(slots, len(groups)))
     # every input group appears whole, files in commit order, in exactly
@@ -65,12 +65,12 @@ def test_pack_groups_keeps_each_bucket_whole(sizes, slots):
 
 
 def test_reader_packs_to_slot_count(tmp_path):
-    groups = _groups_of(
-        str(tmp_path), [[300, 10], [50, 50], [200, 5, 5], [10, 10], [400, 1]]
-    )
+    sizes = [[300, 10], [50, 50], [200, 5, 5], [10, 10], [400, 1]]
+    groups = _groups_of(str(tmp_path), sizes)
     r = MorScanReader(
         S.TRANSCRIPT_SCHEMA,
-        {"groups_json": json.dumps(groups), "slots": "2"},
+        {"groups_json": json.dumps(groups),
+         "sizes_json": json.dumps([sum(fs) for fs in sizes]), "slots": "2"},
     )
     # bytes 310, 100, 210, 20, 401: 401 and 310 seed the two packs, 210
     # joins 310, then 100 and 20 join 401
