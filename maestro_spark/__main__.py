@@ -10,7 +10,8 @@ Subcommands:
   show    --table DIR [--limit N] [--snapshot ID]
   changes --table DIR --from-snapshot K [--to-snapshot N] [--limit N] [--all | --scd2]
   compact --table DIR [--tombstone-horizon LSN] [--policy tiered|full]
-  sql     "SELECT …" --table ROOT[=NAME] [--table …] [--snapshot N]
+  sql     "<statement>" --table ROOT[=NAME] [--table …] [--warehouse DIR]
+          [--snapshot N]   (statement kinds: maestro_spark.sqldml.STATEMENTS)
   resume-txns --table DIR
   ivm     --table DIR --view DIR [--to-snapshot N] [--keys … --aggs …]
           [--where …] [--dim DIR --dim-on COLS [--dim-how left|inner]]
@@ -488,14 +489,15 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"snapshot": snap.snapshot_id,
                           "rows": table.read().count()}))
     elif args.cmd == "sql":
-        from maestro_spark import sqldml as _sqldml
+        from maestro_spark import sqldml
+        from maestro_spark.lake import register_catalog, warehouse_sql
 
-        if _sqldml.is_table_ddl(args.query):
-            # CREATE TABLE / CTAS / DROP TABLE provision under --warehouse
+        st, groups = sqldml.classify(args.query)
+        if st.owner == sqldml.WAREHOUSE:
+            # CREATE/DROP TABLE, CTAS, SHOW TABLES, DESCRIBE TABLE and
+            # cross-table scripts run over the warehouse catalog
             if not args.warehouse:
-                raise SystemExit("sql: table DDL needs --warehouse")
-            from maestro_spark.lake import warehouse_sql
-
+                raise SystemExit(f"sql: {st.kind} needs --warehouse")
             df = warehouse_sql(spark, args.warehouse, args.query)
             df.show(args.limit, truncate=40)
             print(json.dumps({"rows": df.count(),
@@ -505,8 +507,6 @@ def main(argv: list[str] | None = None) -> int:
 
         views = []
         if args.warehouse:
-            from maestro_spark.lake import register_catalog
-
             views.extend(register_catalog(spark, args.warehouse))
         tables: dict[str, LakeTable] = {}
         for spec in args.table:
@@ -517,131 +517,36 @@ def main(argv: list[str] | None = None) -> int:
             views.append(view)
         if not views:
             raise SystemExit("sql: pass --table and/or --warehouse")
-        from maestro_spark import sqldml
-
-        if sqldml.is_mv(args.query):
-            # CREATE/REFRESH/DROP MATERIALIZED VIEW routes onto the
-            # incremental-view machinery; the base must be one of the
-            # --table views (CREATE names it in FROM; REFRESH/DROP are
-            # matched by the view's own persisted base_root)
-            mv, target, hit = None, None, False
-            for view, tbl in tables.items():
-                try:
-                    mv = sqldml.execute_mv(tbl, args.query, name=view)
-                    target, hit = view, True
-                    break
-                except ValueError as e:
-                    if "targets" not in str(e) and "declared over" not in str(e):
-                        raise
-            if not hit:
-                raise SystemExit(
-                    "sql: the view's base table is not among the --table views"
-                )
-            if mv is None or isinstance(mv, str):  # DROP [IF EXISTS]
-                print(json.dumps({
-                    "materialized_view": True, "base": target,
-                    "dropped": mv,
-                }))
-            else:
-                print(json.dumps({
-                    "materialized_view": True, "base": target,
-                    "view_root": mv.table.root,
-                    "rows": mv.read().count(),
-                    "applied_through": mv.applied_through(),
-                }))
-        elif sqldml.is_index(args.query):
-            # CREATE/REFRESH/DROP INDEX routes onto the feed-maintained
-            # index family; the base must be one of the --table views
-            idx, target, hit = None, None, False
-            for view, tbl in tables.items():
-                try:
-                    idx = sqldml.execute_index(tbl, args.query, name=view)
-                    target, hit = view, True
-                    break
-                except ValueError as e:
-                    if "targets" not in str(e) and "declared over" not in str(e):
-                        raise
-            if not hit:
-                raise SystemExit(
-                    "sql: the index's base table is not among the --table views"
-                )
-            if idx is None or isinstance(idx, str):  # DROP [IF EXISTS]
-                print(json.dumps({
-                    "index": True, "base": target, "dropped": idx,
-                }))
-            else:
-                print(json.dumps({
-                    "index": True, "base": target,
-                    "kind": type(idx).__name__, "root": idx.dir,
-                    "applied_through": idx.applied_through(),
-                }))
-        elif sqldml.is_maintenance(args.query):
-            # OPTIMIZE / VACUUM route onto the engine's own idempotent
-            # maintenance primitives; the target must be a --table view
-            summary, target = None, None
-            for view, tbl in tables.items():
-                try:
-                    summary = sqldml.execute_maintenance(
-                        tbl, args.query, name=view
-                    )
-                    target = view
-                    break
-                except ValueError as e:
-                    if "targets" not in str(e):
-                        raise
-            if summary is None:
-                raise SystemExit(
-                    "sql: maintenance target is not among the --table views"
-                )
-            print(json.dumps({"maintenance": True, "view": target, **summary}))
-        elif sqldml.is_ddl(args.query):
-            # ALTER TABLE routes onto the metadata-only DDL builders; the
-            # target must be one of the --table views
-            target = None
-            for view, tbl in tables.items():
-                try:
-                    snap = sqldml.execute_ddl(tbl, args.query, name=view)
-                    target = view
-                    break
-                except ValueError as e:
-                    if "targets" not in str(e):
-                        raise
-            if target is None:
-                raise SystemExit(
-                    "sql: DDL target is not among the --table views"
-                )
-            print(json.dumps({
-                "ddl": True, "view": target,
-                "snapshot": snap.snapshot_id,
-                "schema": [f.name for f in
-                           tables[target].snapshot().payload_schema().fields],
-            }))
-        elif sqldml.is_dml(args.query):
-            # write verbs compile onto the fenced DML builders; the target
-            # must be one of the --table views (not a read-only warehouse
-            # registration)
-            target = None
-            for view, tbl in tables.items():
-                try:
-                    snap = sqldml.execute_dml(tbl, args.query, name=view)
-                    target = view
-                    break
-                except ValueError as e:
-                    if "targets" not in str(e):
-                        raise
-            if target is None:
-                raise SystemExit(
-                    "sql: DML target is not among the --table views"
-                )
-            print(json.dumps({
-                "dml": True, "view": target,
-                "snapshot": snap.snapshot_id if snap else None,
-                "rows": tables[target].read().count(),
-            }))
-        else:
+        if st.owner is None:  # a SELECT over the registered views
             df = spark.sql(args.query)
             df.show(args.limit, truncate=40)
             print(json.dumps({"rows": df.count(), "views": views}))
+        else:
+            # every other kind runs through its owning --table view's door
+            view = sqldml.owner(args.query,
+                                {v: t.root for v, t in tables.items()})
+            df = (st.shape(spark, None) if view is None else
+                  tables[view].sql(args.query, name=view,
+                                   snapshot_id=args.snapshot))
+            if df.columns[0] in ("dropped_view", "dropped_index"):
+                out = {"dropped": df.head()[0]}
+            elif df.columns == ["op", "summary"]:  # OPTIMIZE/VACUUM, COPY
+                out = json.loads(df.head()["summary"])
+            elif st.family == "index":
+                row = df.head()
+                out = {"kind": row["index"], "root": row["root"],
+                       "applied_through": row["applied_through"]}
+            elif st.family == "materialized_view":
+                out = {"view_root": sqldml._derived_root(
+                    groups["path"], tables[view].root, st.family),
+                    "rows": df.count()}
+            else:
+                df.show(args.limit, truncate=40)
+                out = {"rows": df.count(),
+                       "snapshot": tables[view].snapshot().snapshot_id}
+                if st.family == "ddl":
+                    out["schema"] = df.columns
+            print(json.dumps({st.family: True, "view": view, **out}))
     elif args.cmd == "search":
         from maestro_spark.index_maint import MaintainedTextIndex
 

@@ -715,195 +715,39 @@ class LakeTable:
         snapshot_id: int | None = None,
         ts=None,
     ) -> DataFrame:
-        """One-shot SQL over this table: register it as view ``name``
-        (default ``t``) and run ``query`` through the session.
+        """One-shot SQL over this table, registered as view ``name``
+        (default ``t``). Each statement kind — which pin it takes, what it
+        runs, the rows it returns and when the view is re-registered — is
+        declared once in :data:`maestro_spark.sqldml.STATEMENTS`, whose
+        module docstring lists the grammar. A SELECT reads the view, and
+        so do INSERT … SELECT and MERGE … USING, whose writes execute
+        exactly-once through the fenced DML builders and return the
+        post-statement live rows.
 
-        WRITE statements (``INSERT INTO`` / ``UPDATE`` / ``DELETE FROM`` /
-        ``MERGE INTO`` — see maestro_spark.sqldml for the accepted grammar)
-        compile onto the engine's fenced DML builders, execute exactly-once,
-        and return the table's POST-STATEMENT live rows (the view is
-        re-registered at the new snapshot so follow-up SELECTs see it).
-        ``ALTER TABLE`` statements route onto the metadata-only DDL builders
-        (maestro_spark.ddl) the same way, and ``CREATE/REFRESH MATERIALIZED
-        VIEW`` onto the incremental-view machinery (maestro_spark.ivm) —
-        those return the refreshed VIEW's live rows.
-
-        SELECTs accept INLINE time travel on the view name — Delta's
-        ``<name> VERSION AS OF 3`` / ``<name> TIMESTAMP AS OF '…'``,
-        Iceberg's ``FOR VERSION AS OF``, and SQL:2011's ``FOR SYSTEM_TIME
-        AS OF`` spellings. ``VERSION AS OF`` takes a snapshot id or a
-        quoted TAG name (:meth:`tag`); ``TIMESTAMP AS OF`` takes a quoted
-        ISO datetime or epoch seconds (:meth:`snapshot_id_at`). The clause
-        is equivalent to the ``snapshot_id=`` kwarg (pass one or the
-        other); several clauses must agree on one snapshot. On ``INSERT …
-        SELECT`` / ``MERGE … USING`` a pin applies to the statement's
-        SOURCE read — point-in-time repair (restore rows from history into
-        the live tip as a normal fenced write); UPDATE/DELETE and DDL
-        refuse a pin (they never read the view, so it could only mislead)."""
+        Time travel: ``snapshot_id=``/``ts=`` or an inline ``<name>
+        VERSION|TIMESTAMP AS OF …`` clause on the view name (Delta, Iceberg
+        and SQL:2011 spellings; a version is an id or a quoted tag). The
+        clause is equivalent to the kwarg — pass one or the other — and
+        several clauses must agree on one snapshot. A pin reads history: it
+        pins a SELECT's view, or the SOURCE read of INSERT … SELECT /
+        MERGE … USING (point-in-time repair); every other kind reads only
+        live rows and refuses a pin."""
         from maestro_spark import sqldml
 
-        if meta := sqldml.describe_meta(query):
-            kind, tname = meta
-            if tname.lower() != name.lower():
-                raise ValueError(
-                    f"DESCRIBE {kind.upper()} targets {tname!r} but this "
-                    f"table is registered as {name!r}"
-                )
-            return (self.meta_snapshots() if kind == "history"
-                    else self.meta_files())
-        if sc_name := sqldml.show_create_target(query):
-            if sc_name.lower() != name.lower():
-                raise ValueError(
-                    f"SHOW CREATE TABLE targets {sc_name!r} but this "
-                    f"table is registered as {name!r}"
-                )
-            return self.spark.createDataFrame(
-                [(show_create(self, sc_name),)], "create_statement string"
-            )
-        if sd := sqldml.show_derived_target(query):
-            kind, tname = sd
-            if tname is not None and tname.lower() != name.lower():
-                raise ValueError(
-                    f"SHOW targets {tname!r} but this table is registered "
-                    f"as {name!r}"
-                )
-            return _show_derived(self, kind)
-        if sqldml.is_search(query):
-            # before clause extraction: the query literal could contain
-            # 'VERSION AS OF' text; a SEARCH never time-travels
-            return sqldml.execute_search(self, query, name=name)
-        if sqldml.is_restore(query):
-            # before clause extraction: RESTORE's own `TO VERSION AS OF`
-            # would otherwise parse as a time-travel pin on ident 'TO'
-            if snapshot_id is not None or ts is not None:
-                raise ValueError(
-                    "RESTORE carries its own pin — drop the kwarg"
-                )
-            snap = sqldml.execute_restore(self, query, name=name)
-            self.create_view(name)  # follow-up SELECTs see the restored tip
-            return self.spark.createDataFrame(
-                [("restore", snap.snapshot_id,
-                  snap.stats.get("rollback_to"))],
-                "op: string, snapshot_id: long, restored_to: long",
-            )
-        if sqldml.is_script(query):
-            # before clause extraction: pins are refused inside scripts,
-            # and a literal INSIDE the script must not be misparsed here
-            if snapshot_id is not None or ts is not None:
-                raise ValueError(
-                    "a transaction script cannot target a time-travel pin"
-                )
-            n = sqldml.execute_script(self, query, name=name)
-            return self.spark.createDataFrame(
-                [("transaction", n, self.snapshot().snapshot_id)],
-                "op: string, statements_applied: int, snapshot_id: long",
-            )
-        query, tt_pins = sqldml.extract_time_travel(query, name)
-        if tt_pins:
-            if snapshot_id is not None or ts is not None:
-                raise ValueError(
-                    "pass the time-travel pin inline OR as a kwarg, not both"
-                )
-            snapshot_id = self._resolve_tt_pins(tt_pins)
-            if sqldml.is_dml(query):
-                # a pin on the SOURCE of INSERT … SELECT / MERGE … USING is
-                # point-in-time repair (Delta parity: restore rows from
-                # history into the live table) — those statements read the
-                # registered view, so pinning the view pins exactly the
-                # source. UPDATE/DELETE never read the view (their
-                # predicates evaluate against live rows inside the
-                # builders), so a pin there would be silently ignored —
-                # refuse instead.
-                verb = sqldml._VERB_RE.match(query).group(1).lower()
-                if verb not in ("insert", "merge"):
-                    raise ValueError(
-                        "time travel pins the statement's SOURCE read; "
-                        f"{verb.upper()} reads only live rows — only "
-                        "INSERT … SELECT and MERGE … USING accept a pin"
-                    )
-                self.create_view(name, snapshot_id=snapshot_id)
-                sqldml.execute_dml(self, query, name=name)
-                return self.create_view(name)
-            for routed in (
-                sqldml.is_mv, sqldml.is_maintenance, sqldml.is_index,
-                sqldml.is_ddl,
-            ):
-                if routed(query):
-                    raise ValueError(
-                        "time travel is read-only: a DDL/maintenance "
-                        "statement cannot target VERSION/TIMESTAMP AS OF"
-                    )
+        return sqldml.run(self, query, name, snapshot_id, ts)
 
-        if sqldml.is_mv(query):
-            if snapshot_id is not None or ts is not None:
-                raise ValueError(
-                    "materialized-view DDL cannot target a time-travel pin"
-                )
-            res = sqldml.execute_mv(self, query, name=name)
-            if res is None or isinstance(res, str):  # DROP [IF EXISTS]
-                return self.spark.createDataFrame(
-                    [(res,)], "dropped_view: string"
-                )
-            return res.read()
-        if sqldml.is_maintenance(query):
-            if snapshot_id is not None or ts is not None:
-                raise ValueError("maintenance cannot target a time-travel pin")
-            import json as _json
-
-            summary = sqldml.execute_maintenance(self, query, name=name)
-            return self.spark.createDataFrame(
-                [(summary["op"], _json.dumps(summary))], "op: string, summary: string"
-            )
-        if sqldml.is_index(query):
-            if snapshot_id is not None or ts is not None:
-                raise ValueError("index DDL cannot target a time-travel pin")
-            res = sqldml.execute_index(self, query, name=name)
-            if res is None or isinstance(res, str):  # DROP [IF EXISTS]
-                return self.spark.createDataFrame(
-                    [(res,)], "dropped_index: string"
-                )
-            return self.spark.createDataFrame(
-                [(type(res).__name__, res.dir, res.applied_through())],
-                "index: string, root: string, applied_through: long",
-            )
-        if sqldml.is_ddl(query):
-            if snapshot_id is not None or ts is not None:
-                raise ValueError("DDL cannot target a time-travel pin")
-            sqldml.execute_ddl(self, query, name=name)
-            return self.create_view(name)
-        if sqldml.is_copy(query):
-            if snapshot_id is not None or ts is not None:
-                raise ValueError("COPY INTO cannot target a time-travel pin")
-            summary = sqldml.execute_copy(self, query, name=name)
-            self.create_view(name)  # follow-up SELECTs see the loaded state
-            return self.spark.createDataFrame(
-                [("copy_into", json.dumps(summary))],
-                "op: string, summary: string",
-            )
-        if sqldml.is_dml(query):
-            if snapshot_id is not None or ts is not None:
-                raise ValueError("DML cannot target a time-travel pin")
-            # register the PRE-statement view first: INSERT … SELECT FROM t
-            # and MERGE … USING (SELECT … FROM t) read the statement-start
-            # snapshot (standard SQL semantics); re-register after so
-            # follow-up SELECTs see the post-statement state
-            self.create_view(name)
-            sqldml.execute_dml(self, query, name=name)
-            return self.create_view(name)
-        self.create_view(name, snapshot_id=snapshot_id, ts=ts)
-        return self.spark.sql(query)
-
-    def _resolve_tt_pins(self, pins: list[tuple[str, str]]) -> int:
-        """Resolve inline time-travel clauses (from
-        ``sqldml.extract_time_travel``) to ONE snapshot id: tags via
-        :meth:`ref`, timestamps via :meth:`snapshot_id_at`, bare numbers as
-        snapshot ids / epoch seconds. Clauses that disagree refuse — one
-        registered view reads one snapshot."""
+    def _resolve_tt_pins(self, pins: list[tuple[str, object]]) -> int:
+        """Resolve time-travel pins to ONE snapshot id. A pin is
+        ``(kind, value)``: kind ``VERSION`` or ``TIMESTAMP``; value an
+        inline clause's raw text (a quoted tag or ISO datetime, or a bare
+        number) or a kwarg's snapshot id / timestamp. Tags resolve via
+        :meth:`ref`, timestamps via :meth:`snapshot_id_at`. Pins that
+        disagree refuse — one registered view reads one snapshot."""
         import datetime as _dt
 
         sids: set[int] = set()
         for kind, raw in pins:
-            if raw[0] in "'\"":
+            if isinstance(raw, str) and raw[:1] in "'\"":
                 lit = raw[1:-1]
                 if kind == "VERSION":
                     sids.add(self.ref(lit))
@@ -912,7 +756,9 @@ class LakeTable:
             elif kind == "VERSION":
                 sids.add(self.snapshot(int(raw)).snapshot_id)  # validates
             else:
-                sids.add(self.snapshot_id_at(float(raw)))
+                sids.add(self.snapshot_id_at(
+                    float(raw) if isinstance(raw, str) else raw
+                ))
         if len(sids) != 1:
             raise ValueError(
                 f"conflicting time-travel pins resolve to snapshots "
@@ -1592,7 +1438,9 @@ class LakeTable:
             epoch_key=None,
             schema_json=target.schema_json,
             files=dict(target.files),
-            n_buckets=parent.n_buckets,
+            # the target's files are hashed into the target's bucket count
+            # (a rebucket in between changed the tip's)
+            n_buckets=target.n_buckets,
             stats={"rollback_to": to_snapshot},
             # the name registry is monotone even across a rollback: files of
             # the rolled-back epochs may survive in retained snapshots, so
@@ -2779,316 +2627,224 @@ def refresh_catalog(
     }
 
 
-def _show_derived(table: "LakeTable", kind: str) -> DataFrame:
-    """Result rows for ``SHOW MATERIALIZED VIEWS`` / ``SHOW INDEXES``: one
-    row per persisted declaration registered over ``table`` (root path +
-    the declaration JSON) — pure registry metadata, no Spark jobs."""
-    from maestro_spark import index_maint as _im
-    from maestro_spark import ivm as _ivm
-
-    rows = (_ivm.list_declared(table) if kind == "views"
-            else _im.list_declared(table))
-    return table.spark.createDataFrame(
-        [(d["root"], json.dumps({k: v for k, v in d.items() if k != "root"}))
-         for d in rows] or [],
-        "root string, declaration string",
-    )
-
-
 def warehouse_sql(
     spark: SparkSession, warehouse: str, query: str, prefix: str = ""
 ) -> DataFrame:
     """Warehouse-level SQL front door — the multi-table twin of
-    :meth:`LakeTable.sql` (r5 final). One call routes any statement of the
-    engine's SQL surface against the tables under ``warehouse``:
+    :meth:`LakeTable.sql` over the lake tables under ``warehouse``. Each
+    statement kind is declared once in
+    :data:`maestro_spark.sqldml.STATEMENTS`. The kinds owned by the
+    warehouse run here:
 
     - ``CREATE TABLE [IF NOT EXISTS] <name> (col type, …) [WITH
-      (n_buckets = K)]`` — provision an empty lake table at
-      ``<warehouse>/<name>``. The column list goes to Spark's DDL schema
-      parser verbatim and MUST include the engine's key contract
-      (``conv_id string, turn_idx int``); reserved internal names refuse.
-    - ``CREATE TABLE <name> [WITH (…)] AS SELECT …`` — CTAS: the SELECT
-      runs over the registered catalog (sibling lake tables join freely),
-      and the result lands as one fenced upsert epoch (duplicate keys in
-      the SELECT refuse — a statement must be unambiguous about a key's
-      final value).
-    - ``DROP TABLE [IF EXISTS] <name>`` — removes the table, its REGISTERED
-      materialized views and indexes (they are derived data owned by the
-      table), and its session views.
-    - DML / ``ALTER TABLE`` / ``OPTIMIZE`` / ``VACUUM`` — the statement's
-      own target name picks the table; delegates to that table's
-      :meth:`LakeTable.sql` (same fenced builders, same refusals).
-    - SELECT — runs over the registered catalog; inline time travel
-      (``<table> VERSION|TIMESTAMP AS OF …``) is resolved PER TABLE, so a
-      join of one table's history against another's tip is one statement.
-    - ``SHOW TABLES`` / ``DESCRIBE [TABLE] <name>`` — catalog listing and
-      the one-call :func:`describe` report as result rows (metadata only);
-      ``DESCRIBE HISTORY|FILES <name>`` serves the snapshot-chain /
-      file-manifest metadata tables (``meta_snapshots``/``meta_files``).
-    - ``CREATE/REFRESH/DROP MATERIALIZED VIEW`` / ``… INDEX`` — CREATE
-      routes by its inline base reference (``FROM <t>`` / ``ON <t>``);
-      REFRESH/DROP resolve the owning base from the view/index's own
-      persisted declaration (quoted-path targets; bare names resolve
-      relative to a base table, so those use that table's front door).
+      (n_buckets = K)]`` provisions an empty table at ``<warehouse>/<name>``;
+      the columns must include the key contract (``conv_id string,
+      turn_idx int``) and no reserved internal name.
+    - ``CREATE TABLE <name> [WITH (…)] AS SELECT …`` (CTAS) runs the SELECT
+      over the registered catalog and lands it as one fenced upsert epoch
+      (duplicate keys refuse).
+    - ``DROP TABLE [IF EXISTS] <name>`` removes the table, the views and
+      indexes registered over it, and its session views.
+    - ``SHOW TABLES`` / ``DESCRIBE [TABLE] <name>`` list the catalog and
+      the one-call :func:`describe` report.
+    - ``BEGIN … COMMIT`` is a cross-table script: each statement applies
+      to its own table's branch, and COMMIT publishes all of them through
+      :meth:`LakeTable.transaction_multi` — all tables move or none do.
+    - A SELECT runs over the registered catalog, with inline time travel
+      resolved PER TABLE, so one table's history joins another's tip.
 
-    Scale: provisioning and routing are driver-side metadata; every data
-    plan is the same one the single-table door produces."""
+    Every other kind finds its owning table as its entry says (the named
+    target, a CREATE's inline FROM/ON base, or the declaration of the
+    view/index path it names) and runs through that table's
+    :meth:`LakeTable.sql`. Routing is driver-side metadata; every data
+    plan is the one the single-table door produces."""
     from maestro_spark import sqldml
 
-    def _summary(op: str, **kw) -> DataFrame:
-        return spark.createDataFrame(
-            [(op, json.dumps(kw))], "op: string, summary: string"
+    st, groups = sqldml.classify(query)
+    if st.owner == sqldml.WAREHOUSE:
+        return _WAREHOUSE_KINDS[st.kind](spark, warehouse, query, prefix, groups)
+    if st.owner is None:  # SELECT over the catalog, per-table time travel
+        stripped, by_ident = sqldml.extract_time_travel_any(query)
+        tables = register_catalog(spark, warehouse, prefix=prefix)
+        for ident, pins in by_ident.items():
+            t = tables.get(ident[len(prefix):] if prefix and ident.startswith(prefix)
+                           else ident)
+            if t is None:
+                raise ValueError(
+                    f"time-travel clause on {ident!r}, which is not a lake "
+                    f"table under {warehouse} (have: {sorted(tables)})"
+                )
+            t.create_view(ident, snapshot_id=t._resolve_tt_pins(pins))
+        return spark.sql(stripped)
+    roots = {n: os.path.join(warehouse, n) for n in _lake_dirs(warehouse)}
+    name = sqldml.owner(query, roots)
+    if name is None:  # DROP … IF EXISTS of an undeclared path: a no-op
+        return st.shape(spark, None)
+    return LakeTable(spark, roots[name]).sql(query, name=name)
+
+
+def _summary(spark: SparkSession, op: str, **kw) -> DataFrame:
+    return spark.createDataFrame([(op, json.dumps(kw))], "op: string, summary: string")
+
+
+def _root_of(warehouse: str, tname: str) -> str:
+    root = os.path.join(warehouse, tname)
+    if not os.path.isdir(os.path.join(root, SNAP_DIR)):
+        raise ValueError(
+            f"no lake table {tname!r} under {warehouse} "
+            f"(have: {sorted(_lake_dirs(warehouse)) or 'none'})"
         )
+    return root
 
-    def _root_of(tname: str) -> str:
-        root = os.path.join(warehouse, tname)
-        if not os.path.isdir(os.path.join(root, SNAP_DIR)):
-            raise ValueError(
-                f"no lake table {tname!r} under {warehouse} "
-                f"(have: {sorted(_lake_dirs(warehouse)) or 'none'})"
-            )
-        return root
 
-    if sqldml.is_table_ddl(query):
-        spec = sqldml.parse_table_ddl(query)
-        tname = spec["name"]
-        root = os.path.join(warehouse, tname)
-        exists = os.path.isdir(os.path.join(root, SNAP_DIR))
-        if exists and spec["op"] == "create":
-            # a crash between mkdir and the first snapshot publish leaves a
-            # half-born dir: no committed state exists, so CREATE resumes
-            # it instead of refusing against (or opening) an empty shell
-            try:
-                LakeTable(spark, root).snapshot()
-            except (IndexError, FileNotFoundError):
-                shutil.rmtree(root)
-                exists = False
-        if spec["op"] == "drop":
-            if not exists:
-                if spec["if_exists"]:
-                    return _summary("drop_table", dropped=None)
-                raise ValueError(f"no lake table {tname!r} under {warehouse}")
-            t = LakeTable(spark, root)
-            from maestro_spark import index_maint as _im
-            from maestro_spark import ivm as _ivm
+def _wh_table_ddl(spark, warehouse, query, prefix, groups) -> DataFrame:
+    """CREATE TABLE / CTAS / DROP TABLE (see :func:`warehouse_sql`)."""
+    from maestro_spark import sqldml
 
-            # ownership gate: only remove derived data whose own persisted
-            # declaration points back at THIS table — a foreign registry
-            # marker (e.g. a registry dir copied wholesale from another
-            # table) must never make DROP TABLE delete someone else's
-            # view/index directory
-            derived = []
-            for reg in (_ivm._VIEWS, _im._INDEXES):
-                for d in reg.list_declared(t):
-                    if d["base_root"] == os.path.abspath(root):
-                        reg.remove(t, d["root"])
-                        derived.append(d["root"])
+    spec = sqldml.parse_table_ddl(query)
+    tname = spec["name"]
+    root = os.path.join(warehouse, tname)
+    exists = os.path.isdir(os.path.join(root, SNAP_DIR))
+    if exists and spec["op"] == "create":
+        # a crash between mkdir and the first snapshot publish leaves a
+        # half-born dir: no committed state exists, so CREATE resumes
+        # it instead of refusing against (or opening) an empty shell
+        try:
+            LakeTable(spark, root).snapshot()
+        except (IndexError, FileNotFoundError):
             shutil.rmtree(root)
-            for v in (tname, f"{tname}__files", f"{tname}__history",
-                      f"{tname}__changes"):
-                spark.catalog.dropTempView(prefix + v)
-            return _summary("drop_table", dropped=root, derived_dropped=derived)
-        # CREATE
-        params = dict(spec["params"])
-        n_buckets = params.pop("n_buckets", 64)
-        if params:
-            raise ValueError(
-                f"unknown CREATE TABLE WITH parameter(s) {sorted(params)} "
-                "— accepted: n_buckets"
-            )
-        if not isinstance(n_buckets, int) or n_buckets < 1:
-            raise ValueError("n_buckets must be a positive int")
-        if exists:
-            if spec["if_not_exists"]:
-                t = LakeTable(spark, root)
-                t.create_view(prefix + tname)
-                return t.read()
-            raise ValueError(f"lake table {tname!r} already exists at {root}")
-        if spec["columns"] is not None:
-            schema = T.StructType.fromDDL(spec["columns"])
-            _validate_payload_contract(schema)
-            schema = T.StructType([
-                T.StructField(f.name, f.dataType, f.name not in S.KEY_COLS)
-                for f in schema.fields
-            ])
-            t = LakeTable.create(spark, root, payload_schema=schema,
-                                 n_buckets=n_buckets)
-            t.create_view(prefix + tname)
-            return t.read()
-        # CTAS: the SELECT sees every sibling table
-        register_catalog(spark, warehouse, prefix=prefix)
-        df = spark.sql(spec["select"])
-        _validate_payload_contract(df.schema)
-        fields = [
-            T.StructField(f.name, f.dataType, f.name not in S.KEY_COLS)
-            for f in df.schema.fields
-        ]
-        t = LakeTable.create(spark, root,
-                             payload_schema=T.StructType(fields),
-                             n_buckets=n_buckets)
-        try:
-            from maestro_spark.dml import upsert
-
-            upsert(t, df, query_id="ctas")
-        except Exception:
-            shutil.rmtree(root, ignore_errors=True)  # no half-born tables
-            raise
-        t.create_view(prefix + tname)
-        return t.read()
-
-    if re.match(r"^\s*show\s+tables\s*;?\s*$", query, re.I):
-        rows = []
-        for tname in sorted(_lake_dirs(warehouse)):
-            t = LakeTable(spark, os.path.join(warehouse, tname))
-            snap = t.snapshot()
-            rows.append((tname, snap.snapshot_id, snap.n_buckets,
-                         len(snap.payload_schema().fields)))
-        return spark.createDataFrame(
-            rows or [], "table_name string, snapshot_id long, n_buckets int, "
-                        "n_columns int",
-        )
-    if meta := sqldml.describe_meta(query):
-        kind, tname = meta
-        t = LakeTable(spark, _root_of(tname))
-        return t.meta_snapshots() if kind == "history" else t.meta_files()
-    if sd := sqldml.show_derived_target(query):
-        kind, tname = sd
-        if tname is None:
-            raise ValueError(
-                f"warehouse SHOW {'MATERIALIZED VIEWS' if kind == 'views' else 'INDEXES'} "
-                "needs ON <table> (the registry lives with the base table)"
-            )
-        return _show_derived(LakeTable(spark, _root_of(tname)), kind)
-    if sc_name := sqldml.show_create_target(query):
-        t = LakeTable(spark, _root_of(sc_name))
-        return spark.createDataFrame(
-            [(show_create(t, sc_name),)], "create_statement string"
-        )
-    if dm := re.match(r"^\s*describe\s+(?:table\s+)?([A-Za-z_]\w*)\s*;?\s*$",
-                      query, re.I):
-        t = LakeTable(spark, _root_of(dm.group(1)))
-        rep = describe(t)
-        return spark.createDataFrame(
-            [(k, json.dumps(v) if not isinstance(v, str) else v)
-             for k, v in rep.items()],
-            "property string, value string",
-        )
-    if sqldml.is_script(query):
-        # CROSS-TABLE transaction script: each statement applies to its own
-        # table's zero-copy branch; COMMIT publishes every table through
-        # the coordinator-intent protocol (transaction_multi) — ALL tables
-        # move or NONE do, even across a crash mid-publish.
-        stmts, term = sqldml.parse_script(query)
-        if term == "rollback" or not stmts:
-            return _summary("transaction", statements_applied=0, tables=[])
-        targets = []
-        for s_ in stmts:
-            tgt = sqldml.statement_target(s_)
-            if tgt is None:
-                raise ValueError(
-                    f"cannot find the target table of {s_[:60]!r}"
-                )
-            targets.append(tgt)
-        names = list(dict.fromkeys(targets))
-        tables = {n: LakeTable(spark, _root_of(n)) for n in names}
-        # read-only sources (tables referenced but never written) serve
-        # their COMMITTED state — snapshot isolation for the script's reads
-        register_catalog(spark, warehouse, prefix=prefix)
-        try:
-            with tables[names[0]].transaction_multi(
-                *[tables[n] for n in names[1:]]
-            ) as branches:
-                bmap = dict(zip(names, branches))
-                for i, (s_, tgt) in enumerate(zip(stmts, targets)):
-                    for n, b in bmap.items():
-                        b.create_view(prefix + n)  # in-flight branch states
-                    if sqldml.is_ddl(s_):
-                        sqldml.execute_ddl(bmap[tgt], s_, name=tgt)
-                    else:
-                        sqldml.execute_dml(bmap[tgt], s_, name=tgt,
-                                           query_id=f"sqltxn.{i}")
-        finally:
-            # committed states, published or discarded (the branches the
-            # views pointed at mid-script are gone)
-            for n, t in tables.items():
-                t.create_view(prefix + n)
-        return _summary("transaction", statements_applied=len(stmts),
-                        tables=names)
-    target = sqldml.statement_target(query)
-    if target is not None:
-        return LakeTable(spark, _root_of(target)).sql(query, name=target)
-    if sqldml.is_search(query):
-        # the index's persisted declaration names its base; the warehouse
-        # door therefore wants a QUOTED index path (bare names are
-        # base-relative — use that table's front door)
-        tm = re.match(r"^\s*search\s+('[^']+'|\"[^\"]+\")",
-                      sqldml._mask_literal_bodies(query), re.I)
-        if not tm:
-            raise ValueError(
-                "warehouse SEARCH needs a QUOTED index path target (a "
-                "bare name resolves relative to its base table — use "
-                "that table's front door for bare names)"
-            )
-        from maestro_spark import index_maint as _im
-
-        path = query[tm.start(1) + 1 : tm.end(1) - 1]
-        return _im.load_index(spark, path).base.sql(query)
-    if sqldml.is_mv(query) or sqldml.is_index(query):
-        # CREATE names its base inline (FROM <t> / ON <t>); REFRESH/DROP
-        # resolve the owning base from the view/index's own PERSISTED
-        # declaration — so every verb routes from the warehouse door too
-        mv_stmt = sqldml.is_mv(query)
-        masked = sqldml._mask_literal_bodies(query)
-        if re.match(r"^\s*create\b", query, re.I):
-            m = re.search(
-                r"\bfrom\s+([A-Za-z_]\w*)" if mv_stmt
-                else r"\bon\s+([A-Za-z_]\w*)",
-                masked, re.I,
-            )
-            if not m:
-                raise ValueError(
-                    "cannot find the base table in the CREATE statement"
-                )
-            base_name = query[m.start(1) : m.end(1)]
-            return LakeTable(spark, _root_of(base_name)).sql(
-                query, name=base_name
-            )
-        tm = re.search(
-            r"(?:view|index)\s+(?:if\s+exists\s+)?('[^']+'|\"[^\"]+\")",
-            masked, re.I,
-        )
-        if not tm:
-            raise ValueError(
-                "warehouse REFRESH/DROP of a view/index needs a QUOTED "
-                "path target (a bare name resolves relative to its base "
-                "table — use that table's front door for bare names)"
-            )
-        path = query[tm.start(1) + 1 : tm.end(1) - 1]
-        if_exists = bool(re.search(r"\bif\s+exists\b", masked, re.I))
+            exists = False
+    if spec["op"] == "drop":
+        if not exists:
+            if spec["if_exists"]:
+                return _summary(spark, "drop_table", dropped=None)
+            raise ValueError(f"no lake table {tname!r} under {warehouse}")
+        t = LakeTable(spark, root)
         from maestro_spark import index_maint as _im
         from maestro_spark import ivm as _ivm
 
-        try:
-            obj = (_ivm.load if mv_stmt else _im.load_index)(spark, path)
-        except ValueError:
-            if if_exists and re.match(r"^\s*drop\b", query, re.I):
-                kind = "dropped_view" if mv_stmt else "dropped_index"
-                return spark.createDataFrame([(None,)], f"{kind}: string")
-            raise
-        return obj.base.sql(query)
-    # SELECT over the catalog, with per-table inline time travel
-    stripped, by_ident = sqldml.extract_time_travel_any(query)
-    tables = register_catalog(spark, warehouse, prefix=prefix)
-    for ident, pins in by_ident.items():
-        t = tables.get(ident[len(prefix):] if prefix and ident.startswith(prefix)
-                       else ident)
-        if t is None:
-            raise ValueError(
-                f"time-travel clause on {ident!r}, which is not a lake "
-                f"table under {warehouse} (have: {sorted(tables)})"
-            )
-        t.create_view(ident, snapshot_id=t._resolve_tt_pins(pins))
-    return spark.sql(stripped)
+        # ownership gate: only remove derived data whose own persisted
+        # declaration points back at THIS table — a foreign registry
+        # marker (e.g. a registry dir copied wholesale from another
+        # table) must never make DROP TABLE delete someone else's
+        # view/index directory
+        derived = []
+        for reg in (_ivm._VIEWS, _im._INDEXES):
+            for d in reg.list_declared(t):
+                if d["base_root"] == os.path.abspath(root):
+                    reg.remove(t, d["root"])
+                    derived.append(d["root"])
+        shutil.rmtree(root)
+        for v in (tname, f"{tname}__files", f"{tname}__history",
+                  f"{tname}__changes"):
+            spark.catalog.dropTempView(prefix + v)
+        return _summary(spark, "drop_table", dropped=root,
+                        derived_dropped=derived)
+    # CREATE
+    params = dict(spec["params"])
+    n_buckets = params.pop("n_buckets", 64)
+    if params:
+        raise ValueError(
+            f"unknown CREATE TABLE WITH parameter(s) {sorted(params)} "
+            "— accepted: n_buckets"
+        )
+    if not isinstance(n_buckets, int) or n_buckets < 1:
+        raise ValueError("n_buckets must be a positive int")
+    if exists:
+        if spec["if_not_exists"]:
+            t = LakeTable(spark, root)
+            t.create_view(prefix + tname)
+            return t.read()
+        raise ValueError(f"lake table {tname!r} already exists at {root}")
+    if spec["columns"] is not None:
+        schema = T.StructType.fromDDL(spec["columns"])
+        _validate_payload_contract(schema)
+        schema = T.StructType([
+            T.StructField(f.name, f.dataType, f.name not in S.KEY_COLS)
+            for f in schema.fields
+        ])
+        t = LakeTable.create(spark, root, payload_schema=schema,
+                             n_buckets=n_buckets)
+        t.create_view(prefix + tname)
+        return t.read()
+    # CTAS: the SELECT sees every sibling table
+    register_catalog(spark, warehouse, prefix=prefix)
+    df = spark.sql(spec["select"])
+    _validate_payload_contract(df.schema)
+    fields = [
+        T.StructField(f.name, f.dataType, f.name not in S.KEY_COLS)
+        for f in df.schema.fields
+    ]
+    t = LakeTable.create(spark, root,
+                         payload_schema=T.StructType(fields),
+                         n_buckets=n_buckets)
+    try:
+        from maestro_spark.dml import upsert
+
+        upsert(t, df, query_id="ctas")
+    except Exception:
+        shutil.rmtree(root, ignore_errors=True)  # no half-born tables
+        raise
+    t.create_view(prefix + tname)
+    return t.read()
+
+
+def _wh_show_tables(spark, warehouse, query, prefix, groups) -> DataFrame:
+    rows = []
+    for tname in sorted(_lake_dirs(warehouse)):
+        snap = LakeTable(spark, os.path.join(warehouse, tname)).snapshot()
+        rows.append((tname, snap.snapshot_id, snap.n_buckets,
+                     len(snap.payload_schema().fields)))
+    return spark.createDataFrame(
+        rows or [], "table_name string, snapshot_id long, n_buckets int, "
+                    "n_columns int",
+    )
+
+
+def _wh_describe(spark, warehouse, query, prefix, groups) -> DataFrame:
+    rep = describe(LakeTable(spark, _root_of(warehouse, groups["table"])))
+    return spark.createDataFrame(
+        [(k, json.dumps(v) if not isinstance(v, str) else v)
+         for k, v in rep.items()],
+        "property string, value string",
+    )
+
+
+def _wh_script(spark, warehouse, query, prefix, groups) -> DataFrame:
+    """Cross-table script: one branch per target table, published through
+    the coordinator-intent protocol (transaction_multi) — ALL tables move
+    or NONE do, even across a crash mid-publish."""
+    from maestro_spark import sqldml
+
+    stmts, term = sqldml.parse_script(query)
+    if term == "rollback" or not stmts:
+        return _summary(spark, "transaction", statements_applied=0, tables=[])
+    names = sqldml.script_tables(stmts)
+    tables = {n: LakeTable(spark, _root_of(warehouse, n)) for n in names}
+    # read-only sources (tables referenced but never written) serve
+    # their COMMITTED state — snapshot isolation for the script's reads
+    register_catalog(spark, warehouse, prefix=prefix)
+    try:
+        with tables[names[0]].transaction_multi(
+            *[tables[n] for n in names[1:]]
+        ) as branches:
+            sqldml.apply_statements(stmts, dict(zip(names, branches)),
+                                    prefix=prefix)
+    finally:
+        # committed states, published or discarded (the branches the
+        # views pointed at mid-script are gone)
+        for n, t in tables.items():
+            t.create_view(prefix + n)
+    return _summary(spark, "transaction", statements_applied=len(stmts),
+                    tables=names)
+
+
+_WAREHOUSE_KINDS = {
+    "table_ddl": _wh_table_ddl,
+    "show_tables": _wh_show_tables,
+    "describe_table": _wh_describe,
+    "script": _wh_script,
+}
 
 
 def _lake_dirs(warehouse: str) -> list[str]:

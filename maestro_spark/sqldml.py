@@ -34,12 +34,27 @@ engine REFUSES rather than mis-executes):
       (idempotent per-file bulk load — ingest.copy_into)
     RESTORE TABLE <t> TO VERSION AS OF <id|'tag'> / TO TIMESTAMP AS OF <'iso'|epoch>
       (forward-only rollback — lake.rollback)
+    BEGIN [TRANSACTION|WORK]; <DML or ALTER TABLE>; … COMMIT | ROLLBACK
+      (one atomic script — execute_script)
+    DESCRIBE HISTORY|FILES <t> / SHOW CREATE TABLE <t>
+    SHOW MATERIALIZED VIEWS [ON <t>] / SHOW INDEXES [ON <t>]
     CREATE TABLE [IF NOT EXISTS] <name> (col type, …) [WITH (n_buckets = K)]
     CREATE TABLE <name> [WITH (…)] AS SELECT … / DROP TABLE [IF EXISTS] <name>
-      (table provisioning — the warehouse front door, lake.warehouse_sql)
-    SELECTs additionally accept inline time travel on a view name:
+    SHOW TABLES / DESCRIBE [TABLE] <name>
+      (table provisioning and catalog — the warehouse front door,
+      lake.warehouse_sql)
+    Time travel, inline on a view name or as the snapshot_id=/ts= kwarg:
       <name> [FOR] VERSION AS OF <id|'tag'> / [FOR] TIMESTAMP AS OF <'iso'|epoch>
-      (extract_time_travel; resolved by the table's own snapshot chain)
+      (extract_time_travel; resolved by the table's own snapshot chain).
+      It pins a SELECT, or the SOURCE read of INSERT … SELECT / MERGE …
+      USING; every other kind refuses it.
+
+Routing: every statement kind above is ONE entry of :data:`STATEMENTS` —
+its anchored matcher (with the ``target`` group its refusals check), its
+pin policy, its executor, its result rows, when it (re-)registers the
+view, and how the warehouse door and the CLI find its owning table.
+``LakeTable.sql`` (:func:`run`), ``warehouse_sql`` (:func:`owner`) and the
+CLI ``sql`` command all dispatch through that one table.
 
 Design choices:
 - expressions are NEVER re-implemented: every value/assignment/predicate
@@ -60,22 +75,20 @@ join + one exchange, plan-gated in tests/test_plan_quality.py).
 
 from __future__ import annotations
 
+import json
+import os
 import re
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from maestro_spark import index_maint as IM
+from maestro_spark import ivm
 from maestro_spark import schema as S
 from maestro_spark.dml import MergeInto, delete_where, update_where, upsert
-from maestro_spark.lake import LakeTable, Snapshot
-
-_VERB_RE = re.compile(r"^\s*(insert|update|delete|merge|truncate)\b", re.I)
-
-
-def is_dml(sql: str) -> bool:
-    """True when the statement text starts with a write verb."""
-    return bool(_VERB_RE.match(sql or ""))
-
+from maestro_spark.lake import LakeTable, Snapshot, show_create
 
 # Inline time travel (Delta `t VERSION AS OF 3` / `t TIMESTAMP AS OF '…'`,
 # Iceberg `t FOR VERSION AS OF 3`, SQL:2011 `t FOR SYSTEM_TIME AS OF …`).
@@ -498,8 +511,7 @@ def execute_dml(
     sql = sql.rstrip()
     while sql.endswith(";"):
         sql = sql[:-1].rstrip()
-    verb = _VERB_RE.match(sql)
-    if not verb:
+    if classify(sql)[0].family != "dml":
         raise ValueError("not a DML statement (INSERT/UPDATE/DELETE/MERGE)")
     fn = {
         "insert": _exec_insert,
@@ -507,19 +519,11 @@ def execute_dml(
         "delete": _exec_delete,
         "merge": _exec_merge,
         "truncate": _exec_truncate,
-    }[verb.group(1).lower()]
+    }[re.match(r"\s*(\w+)", sql).group(1).lower()]
     return fn(table, sql, name, query_id)
 
 
 # ------------------------------------------------------ transaction scripts
-_SCRIPT_RE = re.compile(r"^\s*begin\b", re.I)
-
-
-def is_script(sql: str) -> bool:
-    """True when the text is a ``BEGIN … COMMIT/ROLLBACK`` script."""
-    return bool(_SCRIPT_RE.match(sql or ""))
-
-
 def parse_script(sql: str) -> tuple[list[str], str]:
     """Split ``BEGIN[ TRANSACTION|WORK]; <stmt>; …; COMMIT|ROLLBACK`` into
     its inner statements and terminator (literal-aware top-level ``;``
@@ -550,7 +554,7 @@ def parse_script(sql: str) -> tuple[list[str], str]:
             raise ValueError(
                 f"misplaced transaction keyword mid-script: {s_[:40]!r}"
             )
-        if not (is_dml(s_) or is_ddl(s_)):
+        if classify(s_)[0].family not in ("dml", "ddl"):
             raise ValueError(
                 "only DML (INSERT/UPDATE/DELETE/MERGE/TRUNCATE) and ALTER "
                 f"TABLE statements run inside BEGIN … COMMIT; got {s_[:60]!r}"
@@ -580,27 +584,49 @@ def execute_script(
         return 0
     try:
         with table.transaction() as txn:
-            for i, s_ in enumerate(stmts):
-                # each statement reads the BRANCH state as of the previous one
-                txn.create_view(name)
-                if is_ddl(s_):
-                    execute_ddl(txn, s_, name=name)
-                else:
-                    execute_dml(txn, s_, name=name, query_id=f"{query_id}.{i}")
+            apply_statements(stmts, {name: txn}, query_id)
     finally:
         table.create_view(name)  # committed state, published or discarded
     return len(stmts)
 
 
+def script_tables(stmts: list[str]) -> list[str]:
+    """The distinct target tables of a script's statements, in first-use
+    order (the warehouse door's cross-table script opens one branch per
+    table); a statement without a target refuses."""
+    names = [statement_target(s_) for s_ in stmts]
+    if None in names:
+        raise ValueError(
+            f"cannot find the target table of {stmts[names.index(None)][:60]!r}"
+        )
+    return list(dict.fromkeys(names))
+
+
+def apply_statements(
+    stmts: list[str], branches: dict[str, LakeTable], query_id: str = "sqltxn",
+    prefix: str = "",
+) -> None:
+    """The one script statement loop, for :func:`execute_script` (one
+    table) and the warehouse door's cross-table script. ``branches`` maps
+    each view name to its in-flight branch; before every statement each
+    branch is re-registered as view ``prefix + name``, so a statement reads
+    the states the previous ones left. ALTER TABLE runs through
+    :func:`execute_ddl`, every other verb through :func:`execute_dml`, on
+    the branch its target names (one table: that table's, so a foreign
+    target refuses there)."""
+    for i, s_ in enumerate(stmts):
+        for n, b in branches.items():
+            b.create_view(prefix + n)
+        st, groups = classify(s_)
+        name = groups.get("target")
+        name = name if name in branches else next(iter(branches))
+        if st.family == "ddl":
+            execute_ddl(branches[name], s_, name=name)
+        else:
+            execute_dml(branches[name], s_, name=name, query_id=f"{query_id}.{i}")
+
+
 # ---------------------------------------------------------------------- DDL
-_DDL_RE = re.compile(r"^\s*alter\s+table\b", re.I)
-
-
-def is_ddl(sql: str) -> bool:
-    """True when the statement text starts with ALTER TABLE."""
-    return bool(_DDL_RE.match(sql or ""))
-
-
 def execute_ddl(table: LakeTable, sql: str, name: str = "t") -> Snapshot:
     """Parse one ALTER TABLE statement and run it through the engine's
     metadata-only DDL builders (maestro_spark.ddl) — the SQL twin of
@@ -643,23 +669,19 @@ def execute_ddl(table: LakeTable, sql: str, name: str = "t") -> Snapshot:
 
 
 # ------------------------------------------------------ materialized views
-_MV_RE = re.compile(r"^\s*(create|refresh|drop)\s+materialized\s+view\b", re.I)
 _MV_TARGET = r"('[^']+'|\"[^\"]+\"|[A-Za-z_]\w*)"
 
 
-def is_mv(sql: str) -> bool:
-    """True when the statement is CREATE/REFRESH/DROP MATERIALIZED VIEW."""
-    return bool(_MV_RE.match(sql or ""))
-
-
-def _mv_root(target: str, table: LakeTable) -> str:
-    """Quoted target = literal view path; bare identifier = a sibling
-    directory of the base root (``<base.root>__mv_<ident>``) so views
-    travel with their table without the caller inventing paths."""
+def _derived_root(target: str, base_root: str, family: str) -> str:
+    """Quoted target = literal view/index path; bare identifier = a sibling
+    directory of the base root (``<base.root>__mv_<ident>`` for a view,
+    ``__idx_<ident>`` for an index) so derived data travels with its table
+    without the caller inventing paths."""
     t = target.strip()
     if t[0] in "'\"":
         return t[1:-1]
-    return f"{table.root.rstrip('/')}__mv_{t}"
+    suffix = "mv" if family == "materialized_view" else "idx"
+    return f"{base_root.rstrip('/')}__{suffix}_{t}"
 
 
 def _derive_scan_columns(exprs: list[str], table: LakeTable) -> list[str]:
@@ -694,7 +716,7 @@ def execute_mv(table: LakeTable, sql: str, name: str = "t"):
     staleness is cursor-tracked by the view machinery itself.
 
     ``<view>`` is a quoted path (``'/data/conv_stats'``) or a bare name
-    (view lives beside the base root — see :func:`_mv_root`). The select
+    (view lives beside the base root — see :func:`_derived_root`). The select
     list must echo exactly the GROUP BY columns plus ALIASED aggregate
     expressions (expression text goes to Spark's parser verbatim and is
     PERSISTED in the view root, so REFRESH needs only the view path).
@@ -708,13 +730,12 @@ def execute_mv(table: LakeTable, sql: str, name: str = "t"):
     Scale: refresh work is delta-proportional (changed-conv bucket pruning,
     crossover rule) — the statement never implies a full recompute unless
     the view's own machinery chooses one."""
-    from maestro_spark import ivm
-
     rm = re.match(
         rf"^\s*refresh\s+materialized\s+view\s+{_MV_TARGET}\s*;?\s*$", sql, re.I
     )
     if rm:
-        mv = ivm.load(table.spark, _mv_root(rm.group(1), table), base=table)
+        root = _derived_root(rm.group(1), table.root, "materialized_view")
+        mv = ivm.load(table.spark, root, base=table)
         mv.refresh()
         return mv
 
@@ -724,7 +745,7 @@ def execute_mv(table: LakeTable, sql: str, name: str = "t"):
         sql, re.I,
     )
     if dm:
-        root = _mv_root(dm.group(2), table)
+        root = _derived_root(dm.group(2), table.root, "materialized_view")
         if ivm._VIEWS.read(root) is None:
             if dm.group(1):
                 return None
@@ -792,7 +813,7 @@ def execute_mv(table: LakeTable, sql: str, name: str = "t"):
         )
     if not agg_exprs:
         raise ValueError("view needs at least one aggregate select item")
-    root = _mv_root(g(1), table)
+    root = _derived_root(g(1), table.root, "materialized_view")
 
     def _declare(columns):
         mv = ivm.declare(
@@ -818,14 +839,6 @@ def execute_mv(table: LakeTable, sql: str, name: str = "t"):
 
 
 # ------------------------------------------------------------- maintenance
-_MAINT_RE = re.compile(r"^\s*(optimize|vacuum)\b", re.I)
-
-
-def is_maintenance(sql: str) -> bool:
-    """True when the statement is OPTIMIZE / VACUUM."""
-    return bool(_MAINT_RE.match(sql or ""))
-
-
 def execute_maintenance(table: LakeTable, sql: str, name: str = "t") -> dict:
     """Route a maintenance statement onto the engine's own idempotent
     primitives (Delta SQL parity). Accepted forms::
@@ -875,23 +888,6 @@ def execute_maintenance(table: LakeTable, sql: str, name: str = "t") -> dict:
 
 
 # ----------------------------------------------------------------- indexes
-_IDX_RE = re.compile(r"^\s*(create|refresh|drop)\s+index\b", re.I)
-
-
-def is_index(sql: str) -> bool:
-    """True when the statement is CREATE/REFRESH/DROP INDEX."""
-    return bool(_IDX_RE.match(sql or ""))
-
-
-def _idx_root(target: str, table: LakeTable) -> str:
-    """Quoted target = literal index path; bare identifier = a sibling
-    directory of the base root (``<base.root>__idx_<ident>``)."""
-    t = target.strip()
-    if t[0] in "'\"":
-        return t[1:-1]
-    return f"{table.root.rstrip('/')}__idx_{t}"
-
-
 def _parse_with_params(text: str) -> dict:
     """``k1 = 4, text_col = 'text'`` → typed dict (int / float / 'string'
     literals only — these feed a constructor, not an expression)."""
@@ -926,7 +922,7 @@ def execute_index(table: LakeTable, sql: str, name: str = "t"):
         DROP INDEX [IF EXISTS] <idx>
 
     ``<idx>`` is a quoted path or a bare name (index lives beside the base
-    root — see :func:`_idx_root`). The indexed column binds to the kind's
+    root — see :func:`_derived_root`). The indexed column binds to the kind's
     column parameter (``text_col`` / ``vec_col``); WITH parameters go to
     the class constructor after signature validation (a typo refuses with
     the accepted names). The declaration persists in the index root
@@ -936,13 +932,12 @@ def execute_index(table: LakeTable, sql: str, name: str = "t"):
     refuses. CREATE and REFRESH return the maintained index object
     (``search*``/``probe`` per kind); DROP returns the removed root, or
     None for an IF EXISTS no-op."""
-    from maestro_spark import index_maint as IM
-
     rm = re.match(
         rf"^\s*refresh\s+index\s+{_MV_TARGET}\s*;?\s*$", sql, re.I
     )
     if rm:
-        idx = IM.load_index(table.spark, _idx_root(rm.group(1), table), base=table)
+        root = _derived_root(rm.group(1), table.root, "index")
+        idx = IM.load_index(table.spark, root, base=table)
         idx.refresh()
         return idx
 
@@ -950,7 +945,7 @@ def execute_index(table: LakeTable, sql: str, name: str = "t"):
         rf"^\s*drop\s+index\s+(if\s+exists\s+)?{_MV_TARGET}\s*;?\s*$", sql, re.I
     )
     if dm:
-        root = _idx_root(dm.group(2), table)
+        root = _derived_root(dm.group(2), table.root, "index")
         if IM._INDEXES.read(root) is None:
             if dm.group(1):
                 return None
@@ -1000,21 +995,14 @@ def execute_index(table: LakeTable, sql: str, name: str = "t"):
         )
     params[col_param] = cols if len(cols) > 1 else cols[0]
     idx = IM.declare_index(
-        table.spark, table, _idx_root(cm.group(1), table), kind, **params
+        table.spark, table, _derived_root(cm.group(1), table.root, "index"), kind,
+        **params,
     )
     idx.refresh()
     return idx
 
 
 # ------------------------------------------------------------------ SEARCH
-_SEARCH_RE = re.compile(r"^\s*search\b", re.I)
-
-
-def is_search(sql: str) -> bool:
-    """True when the statement is SEARCH (maintained-text-index probe)."""
-    return bool(_SEARCH_RE.match(sql or ""))
-
-
 def execute_search(table: LakeTable, sql: str, name: str = "t") -> DataFrame:
     """Route a retrieval statement onto a maintained inverted text index
     (the SQL twin of the ``search`` CLI). Accepted form::
@@ -1040,9 +1028,8 @@ def execute_search(table: LakeTable, sql: str, name: str = "t") -> DataFrame:
             "unsupported SEARCH (want: SEARCH <idx> FOR '<query>'[, '<v2>'…] "
             "[MODE term|and|phrase|bm25|bm25_and] [LIMIT k])"
         )
-    from maestro_spark import index_maint as IM
-
-    idx = IM.load_index(table.spark, _idx_root(m.group(1), table), base=table)
+    root = _derived_root(m.group(1), table.root, "index")
+    idx = IM.load_index(table.spark, root, base=table)
     if not hasattr(idx, "search_bm25"):
         raise ValueError(
             f"SEARCH wants a text index; {type(idx).__name__} is not one"
@@ -1082,14 +1069,6 @@ def execute_search(table: LakeTable, sql: str, name: str = "t") -> DataFrame:
 
 
 # ------------------------------------------------------- table provisioning
-_TABLE_DDL_RE = re.compile(r"^\s*(create|drop)\s+table\b", re.I)
-
-
-def is_table_ddl(sql: str) -> bool:
-    """True when the statement is CREATE TABLE / CTAS / DROP TABLE."""
-    return bool(_TABLE_DDL_RE.match(sql or ""))
-
-
 def parse_table_ddl(sql: str) -> dict:
     """Parse one table-provisioning statement (the warehouse front door's
     grammar — see :func:`maestro_spark.lake.warehouse_sql`) into a plain
@@ -1146,89 +1125,7 @@ def parse_table_ddl(sql: str) -> dict:
             "columns": columns, "params": params, "select": select}
 
 
-_SHOW_DERIVED_RE = re.compile(
-    r"^\s*show\s+(materialized\s+views|indexes)(?:\s+on\s+([A-Za-z_]\w*))?"
-    r"\s*;?\s*$",
-    re.I,
-)
-
-
-def show_derived_target(sql: str) -> tuple[str, str | None] | None:
-    """``SHOW MATERIALIZED VIEWS [ON <t>]`` / ``SHOW INDEXES [ON <t>]`` →
-    ``("views"|"indexes", table_or_None)``; None for anything else. Routed
-    onto the persisted-declaration registries (ivm.list_declared /
-    index_maint.list_declared) — metadata only, no Spark jobs."""
-    if m := _SHOW_DERIVED_RE.match(sql or ""):
-        kind = "views" if m.group(1).lower().startswith("materialized") else "indexes"
-        return kind, (_strip_ident(m.group(2)) if m.group(2) else None)
-    return None
-
-
-_SHOW_CREATE_RE = re.compile(
-    r"^\s*show\s+create\s+table\s+([A-Za-z_]\w*)\s*;?\s*$", re.I
-)
-
-
-def show_create_target(sql: str) -> str | None:
-    """``SHOW CREATE TABLE <t>`` → the table name; None otherwise."""
-    if m := _SHOW_CREATE_RE.match(sql or ""):
-        return _strip_ident(m.group(1))
-    return None
-
-
-# ------------------------------------------------- metadata-table DESCRIBE
-_META_RE = re.compile(
-    r"^\s*describe\s+(history|files)\s+([A-Za-z_]\w*)\s*;?\s*$", re.I
-)
-
-
-def describe_meta(sql: str) -> tuple[str, str] | None:
-    """``DESCRIBE HISTORY <t>`` / ``DESCRIBE FILES <t>`` (Delta/Iceberg
-    metadata-table parity) → ``(kind, table)``; None for anything else.
-    Routed onto :meth:`LakeTable.meta_snapshots` / ``meta_files`` — pure
-    snapshot-chain metadata, no data IO."""
-    if m := _META_RE.match(sql or ""):
-        return m.group(1).lower(), _strip_ident(m.group(2))
-    return None
-
-
-_TARGET_RES = [
-    re.compile(p, re.I)
-    for p in (
-        r"^\s*insert\s+into\s+([A-Za-z_]\w*)\b",
-        r"^\s*update\s+([A-Za-z_]\w*)\b",
-        r"^\s*delete\s+from\s+([A-Za-z_]\w*)\b",
-        r"^\s*merge\s+into\s+([A-Za-z_]\w*)\b",
-        r"^\s*truncate\s+table\s+([A-Za-z_]\w*)\b",
-        r"^\s*alter\s+table\s+([A-Za-z_]\w*)\b",
-        r"^\s*optimize\s+([A-Za-z_]\w*)\b",
-        r"^\s*vacuum\s+([A-Za-z_]\w*)\b",
-        r"^\s*copy\s+into\s+([A-Za-z_]\w*)\b",
-        r"^\s*restore\s+table\s+([A-Za-z_]\w*)\b",
-    )
-]
-
-
-def statement_target(sql: str) -> str | None:
-    """The table name a single-table routed statement operates on (DML,
-    ALTER, OPTIMIZE/VACUUM) — how the warehouse front door picks which
-    ``LakeTable.sql`` to delegate to. None for SELECTs and for statement
-    kinds whose target is a view/index path rather than a table."""
-    for rx in _TARGET_RES:
-        if m := rx.match(sql or ""):
-            return _strip_ident(m.group(1))
-    return None
-
-
 # ------------------------------------------------------------- COPY INTO
-_COPY_RE = re.compile(r"^\s*copy\s+into\b", re.I)
-
-
-def is_copy(sql: str) -> bool:
-    """True when the statement is COPY INTO."""
-    return bool(_COPY_RE.match(sql or ""))
-
-
 def execute_copy(table: LakeTable, sql: str, name: str = "t") -> dict:
     """Compile one ``COPY INTO`` statement onto :func:`ingest.copy_into`
     (idempotent per-file bulk load). Accepted form::
@@ -1267,14 +1164,6 @@ def execute_copy(table: LakeTable, sql: str, name: str = "t") -> dict:
 
 
 # ---------------------------------------------------------- RESTORE TABLE
-_RESTORE_RE = re.compile(r"^\s*restore\s+table\b", re.I)
-
-
-def is_restore(sql: str) -> bool:
-    """True when the statement is RESTORE TABLE."""
-    return bool(_RESTORE_RE.match(sql or ""))
-
-
 def execute_restore(table: LakeTable, sql: str, name: str = "t") -> Snapshot:
     """Compile one ``RESTORE TABLE`` statement (Delta parity) onto
     :meth:`LakeTable.rollback`. Accepted form::
@@ -1301,3 +1190,255 @@ def execute_restore(table: LakeTable, sql: str, name: str = "t") -> Snapshot:
     kind = m.group(2).upper()
     sid = table._resolve_tt_pins([(kind, m.group(3))])
     return table.rollback(sid)
+
+
+# ------------------------------------------------------------ statement table
+# Pin policies: what a time-travel pin (an inline clause or the
+# snapshot_id=/ts= kwarg) means for a statement kind.
+REFUSE = "refuse"  # the statement reads only live rows: a pin refuses
+SOURCE = "source"  # the pin is the registered view the SOURCE reads
+SELECT = "select"  # the pin is the registered view the query reads
+OWN = "own"  # RESTORE names its snapshot in its own TO … AS OF clause
+# How the warehouse door and the CLI find the table that owns a statement.
+TARGET = "target"  # the named target (for a CREATE: its inline FROM/ON base)
+DECLARED = "declared"  # the base root stored with the view/index it names
+WAREHOUSE = "warehouse"  # runs in warehouse_sql itself, over the catalog
+
+
+@dataclass(frozen=True)
+class Statement:
+    """One statement kind of the SQL surface. ``pattern`` is anchored and
+    runs over a literal-masked copy of the text; its optional ``target``
+    group names the table the statement must be aimed at. ``run(table,
+    sql, name)`` executes it and ``shape(spark, result)`` turns the result
+    into rows (None: the view re-registered after the statement). ``view``
+    registers the view ``before`` the statement (at the pin), re-registers
+    it ``after``, or ``both``. ``owner`` is how the warehouse door and the
+    CLI find the owning table (None: a SELECT over the catalog)."""
+
+    kind: str
+    family: str
+    pattern: re.Pattern
+    pin: str
+    run: Callable
+    shape: Callable | None
+    view: str
+    owner: str | None
+
+
+def _st(kind, pattern, pin, run, shape, view="", owner=TARGET, family=None):
+    return Statement(kind, family or kind, re.compile(r"^\s*" + pattern, re.I | re.S),
+                     pin, run, shape, view, owner)
+
+
+def _frame(spark, out):
+    return out
+
+
+def _row(schema: str, fn: Callable) -> Callable:
+    """Result shape: one row ``fn(result)`` of ``schema``."""
+    return lambda spark, out: spark.createDataFrame([fn(out)], schema)
+
+
+def _or_dropped(col: str, shape: Callable) -> Callable:
+    """Result shape of a view/index kind: DROP [IF EXISTS] returns the
+    removed root (None for an IF EXISTS no-op) as column ``col``."""
+    def rows(spark, out):
+        if out is None or isinstance(out, str):
+            return spark.createDataFrame([(out,)], f"{col}: string")
+        return shape(spark, out)
+    return rows
+
+
+def _declarations(table: LakeTable, decls: list[dict]) -> DataFrame:
+    """SHOW MATERIALIZED VIEWS / SHOW INDEXES: one row per persisted
+    declaration registered over ``table`` — registry metadata only."""
+    return table.spark.createDataFrame(
+        [(d["root"], json.dumps({k: v for k, v in d.items() if k != "root"}))
+         for d in decls] or [],
+        "root string, declaration string",
+    )
+
+
+def _select(table, sql, name):
+    return table.spark.sql(sql)
+
+
+def _run_script(table, sql, name):
+    return execute_script(table, sql, name=name), table.snapshot().snapshot_id
+
+
+_ID = r"(?P<target>[A-Za-z_][\w.]*)"
+_PATH = rf"(?P<path>{_MV_TARGET})"
+_DROP_PATH = rf"(?P<if_exists>if\s+exists\s+)?{_PATH}"
+_SUMMARY = "op: string, summary: string"
+_MV_ROWS = _or_dropped("dropped_view", lambda spark, mv: mv.read())
+_INDEX_ROWS = _or_dropped("dropped_index", _row(
+    "index: string, root: string, applied_through: long",
+    lambda idx: (type(idx).__name__, idx.dir, idx.applied_through()),
+))
+
+# The SQL surface, one kind per entry; the first matching entry wins.
+STATEMENTS: tuple[Statement, ...] = (
+    _st("script", r"begin\b", REFUSE, _run_script,
+        _row("op: string, statements_applied: int, snapshot_id: long",
+             lambda out: ("transaction", *out)), owner=WAREHOUSE),
+    _st("describe_history", rf"describe\s+history\s+{_ID}\s*;?\s*$", REFUSE,
+        lambda t, q, n: t.meta_snapshots(), _frame),
+    _st("describe_files", rf"describe\s+files\s+{_ID}\s*;?\s*$", REFUSE,
+        lambda t, q, n: t.meta_files(), _frame),
+    _st("show_create", rf"show\s+create\s+table\s+{_ID}\s*;?\s*$", REFUSE,
+        lambda t, q, n: show_create(t, n),
+        _row("create_statement string", lambda s: (s,))),
+    _st("show_views", rf"show\s+materialized\s+views(?:\s+on\s+{_ID})?\s*;?\s*$",
+        REFUSE, lambda t, q, n: _declarations(t, ivm.list_declared(t)), _frame),
+    _st("show_indexes", rf"show\s+indexes(?:\s+on\s+{_ID})?\s*;?\s*$", REFUSE,
+        lambda t, q, n: _declarations(t, IM.list_declared(t)), _frame),
+    _st("search", rf"search\b(?:\s+{_PATH})?", REFUSE, execute_search, _frame,
+        owner=DECLARED),
+    _st("restore", rf"restore\s+table\b(?:\s+{_ID})?", OWN, execute_restore,
+        _row("op: string, snapshot_id: long, restored_to: long",
+             lambda s: ("restore", s.snapshot_id, s.stats.get("rollback_to"))),
+        view="after"),
+    _st("create_view", rf"create\s+materialized\s+view\b"
+        rf"(?:\s+{_PATH}\s+as\s+select\b.*?\bfrom\s+{_ID})?", REFUSE,
+        execute_mv, _MV_ROWS, family="materialized_view"),
+    _st("view", rf"(?:refresh|drop)\s+materialized\s+view\b(?:\s+{_DROP_PATH})?",
+        REFUSE, execute_mv, _MV_ROWS, owner=DECLARED, family="materialized_view"),
+    _st("create_index", rf"create\s+index\b(?:\s+{_PATH}\s+on\s+{_ID})?", REFUSE,
+        execute_index, _INDEX_ROWS, family="index"),
+    _st("index", rf"(?:refresh|drop)\s+index\b(?:\s+{_DROP_PATH})?", REFUSE,
+        execute_index, _INDEX_ROWS, owner=DECLARED, family="index"),
+    _st("maintenance", rf"(?:optimize|vacuum)\b(?:\s+{_ID})?", REFUSE,
+        execute_maintenance, _row(_SUMMARY, lambda s: (s["op"], json.dumps(s)))),
+    _st("alter", rf"alter\s+table\b(?:\s+{_ID})?", REFUSE, execute_ddl, None,
+        view="after", family="ddl"),
+    _st("copy", rf"copy\s+into\b(?:\s+{_ID})?", REFUSE, execute_copy,
+        _row(_SUMMARY, lambda s: ("copy_into", json.dumps(s))), view="after"),
+    # INSERT … VALUES reads no view; INSERT … SELECT / MERGE … USING read
+    # the registered view, so a pin there is their SOURCE read
+    _st("insert_values", rf"insert\s+into\s+{_ID}\s*(?:\([^)]*\)\s*)?values\b",
+        REFUSE, execute_dml, None, view="both", family="dml"),
+    _st("insert_select_merge", rf"(?:insert|merge)\b(?:\s+into\s+{_ID})?",
+        SOURCE, execute_dml, None, view="both", family="dml"),
+    _st("update_delete_truncate",
+        rf"(?:update|delete(?:\s+from)?|truncate(?:\s+table)?)\b(?:\s+{_ID})?",
+        REFUSE, execute_dml, None, view="both", family="dml"),
+    # warehouse-only kinds; the table door hands them to Spark like a SELECT
+    _st("table_ddl", r"(?:create|drop)\s+table\b", SELECT, _select, _frame,
+        view="before", owner=WAREHOUSE),
+    _st("show_tables", r"show\s+tables\s*;?\s*$", SELECT, _select, _frame,
+        view="before", owner=WAREHOUSE),
+    _st("describe_table", r"describe\s+(?:table\s+)?(?P<table>[A-Za-z_]\w*)\s*;?\s*$",
+        SELECT, _select, _frame, view="before", owner=WAREHOUSE),
+    _st("select", "", SELECT, _select, _frame, view="before", owner=None),
+)
+
+
+def classify(sql: str) -> tuple[Statement, dict[str, str]]:
+    """The first :data:`STATEMENTS` entry whose matcher accepts ``sql``,
+    with its named groups (``target``, ``path``, …) sliced from the
+    original text. Matching runs over a literal-masked copy, so a quoted
+    value can change neither the kind nor the target."""
+    sql = sql or ""
+    masked = _mask_literal_bodies(sql)
+    for st in STATEMENTS:
+        if m := st.pattern.match(masked):
+            return st, {k: sql[m.start(k) : m.end(k)]
+                        for k, v in m.groupdict().items() if v is not None}
+    raise AssertionError("the select entry matches every statement")
+
+
+def is_dml(sql: str) -> bool:
+    """True for INSERT / UPDATE / DELETE / MERGE / TRUNCATE."""
+    return classify(sql)[0].family == "dml"
+
+
+def is_ddl(sql: str) -> bool:
+    """True for ALTER TABLE."""
+    return classify(sql)[0].family == "ddl"
+
+
+def is_mv(sql: str) -> bool:
+    """True for CREATE/REFRESH/DROP MATERIALIZED VIEW."""
+    return classify(sql)[0].family == "materialized_view"
+
+
+def statement_target(sql: str) -> str | None:
+    """The table a statement names as its target (a CREATE MATERIALIZED
+    VIEW / INDEX: its inline FROM / ON base); None for SELECTs and for
+    kinds that name a view/index path instead."""
+    return classify(sql)[1].get("target")
+
+
+def run(
+    table: LakeTable, sql: str, name: str = "t", snapshot_id: int | None = None,
+    ts=None,
+) -> DataFrame:
+    """Run one statement against ``table`` registered as view ``name`` —
+    the body of :meth:`LakeTable.sql`. The inline pins (none for RESTORE,
+    whose own ``TO … AS OF`` is not one) and the kwarg pin meet in one
+    rule: both at once refuse, and a kind that reads only live rows
+    refuses any pin; otherwise they resolve to one snapshot id through
+    :meth:`LakeTable._resolve_tt_pins`."""
+    st, groups = classify(sql)
+    pins = []
+    if st.pin != OWN:  # the kind of the statement the pins are stripped from
+        sql, pins = extract_time_travel(sql, name)
+        st, groups = classify(sql)
+    kwargs = [(k, v) for k, v in (("VERSION", snapshot_id), ("TIMESTAMP", ts))
+              if v is not None]
+    if pins and kwargs:
+        raise ValueError("pass the time-travel pin inline OR as a kwarg, not both")
+    pins = pins or kwargs
+    if pins and st.pin in (REFUSE, OWN):
+        raise ValueError(
+            f"{sql.split()[0].upper()} cannot target a time-travel pin: the "
+            "statement reads only live rows — only SELECT, INSERT … SELECT "
+            "and MERGE … USING accept a pin (RESTORE names its snapshot in "
+            "its own TO … AS OF clause)"
+        )
+    if "target" in groups:
+        _require_target(groups["target"], name)
+    sid = table._resolve_tt_pins(pins) if pins else None
+    if st.view in ("before", "both"):
+        table.create_view(name, snapshot_id=sid)
+    out = st.run(table, sql, name)
+    if st.view in ("after", "both"):
+        view = table.create_view(name)  # follow-up SELECTs see the new tip
+    return view if st.shape is None else st.shape(table.spark, out)
+
+
+def owner(sql: str, roots: dict[str, str]) -> str | None:
+    """The key of ``roots`` (table name → lake root) whose table owns
+    ``sql``, found as its kind's ``owner`` says: the named target, or the
+    table whose root the view/index path's persisted declaration names (a
+    bare name is looked up beside each root). None for a DROP … IF EXISTS
+    of a path that holds no declaration: a no-op that no table owns."""
+    st, groups = classify(sql)
+    verb = sql.split()[0].upper()
+    if st.owner == TARGET:
+        name = groups.get("target")
+        if name is None:
+            raise ValueError(
+                f"cannot find the table this {verb} statement runs on (a "
+                "SHOW needs ON <table>: the registry lives with the base table)"
+            )
+        if name not in roots:
+            raise ValueError(f"no lake table {name!r} among {sorted(roots)}")
+        return name
+    reg = ivm._VIEWS if st.family == "materialized_view" else IM._INDEXES
+    path = groups.get("path")
+    decls = {n: reg.read(_derived_root(path, r, st.family))
+             for n, r in roots.items()} if path else {}
+    hits = [n for n, d in decls.items()
+            if d and d["base_root"] == os.path.abspath(roots[n])]
+    if len(hits) == 1:
+        return hits[0]
+    if groups.get("if_exists") and not any(decls.values()):
+        return None
+    raise ValueError(
+        f"{verb} {path!r}: {'several' if hits else 'no'} tables among "
+        f"{sorted(roots)} declare it — name the {reg.noun} by its QUOTED "
+        "path (a bare name resolves beside its base table)"
+    )
