@@ -466,8 +466,8 @@ class LakeTable:
         """The narrow schema a read decodes: ``columns`` plus the keys and
         ``_lsn``/``_deleted`` (the winner rule and tombstone filter need
         them) in table order; all of ``snap.schema`` when ``columns`` is
-        None. Projection pushdown by hand: Python DataSources (mor_scan)
-        never receive Spark's column pruning."""
+        None. Projection pushdown by hand: ``mor_scan``'s ``mapInArrow``
+        never receives Spark's column pruning."""
         if columns is None:
             return snap.schema
         names = {f.name for f in snap.schema.fields}
@@ -477,7 +477,8 @@ class LakeTable:
         need = {*S.KEY_COLS, *columns, S.LSN_COL, S.DELETED_COL}
         return T.StructType([f for f in snap.schema.fields if f.name in need])
 
-    def _resolve(self, snap: Snapshot, scan_schema: T.StructType, plan: Plan) -> DataFrame:
+    def _resolve(self, snap: Snapshot, scan_schema: T.StructType, plan: Plan,
+                 key_filters: list[tuple[str, object]] | None = None) -> DataFrame:
         """The ONE read-side winner rule: one row per key = max ``(_lsn,
         position in its group)`` over each group of ``plan`` (from
         ``plan.plan_groups``: a whole bucket, a pruned subset of one, or a
@@ -487,10 +488,11 @@ class LakeTable:
 
         Every file the engine writes is key-unique *within itself* (merge
         writes per-epoch batch winners, compaction writes fully-resolved
-        buckets), so a single-file group is a plain parquet scan; the
-        multi-file groups go through the ``mor_scan`` source, packed one
-        task per core by the plan's bytes. Unless the plan mixes layouts,
-        mor_scan drops the groups a pushed ``conv_id`` equality cannot hit."""
+        buckets), so a single-file group is a plain parquet scan, to which
+        Spark pushes the caller's filters; the multi-file groups go through
+        ``mor_scan.scan``, packed one task per core by the plan's bytes,
+        which sees no pushed filter: ``key_filters`` (key-column
+        equalities, :meth:`lookup`'s) prune its row groups and rows."""
         single = [os.path.join(self.root, g.rels[0]) for g in plan.groups if len(g.rels) == 1]
         multi = [g for g in plan.groups if len(g.rels) > 1]
         parts: list[DataFrame] = []
@@ -499,11 +501,11 @@ class LakeTable:
         if multi:
             from maestro_spark import mor_scan
 
-            # the Arrow source reads files, so it works in PHYSICAL names
-            # (keys/internals are never renameable, so its resolve/pushdown
+            # the Arrow scan reads files, so it works in PHYSICAL names
+            # (keys/internals are never renameable, so its resolve/filter
             # columns are untouched); rename after
             part = mor_scan.scan(self.spark, S.physical_schema(scan_schema),
-                                 *self._abs(multi), 0 if plan.mixed else plan.n_buckets)
+                                 *self._abs(multi), key_filters)
             parts.append(_logical(part, scan_schema))
         if not parts:
             return self.spark.createDataFrame([], scan_schema)
@@ -516,12 +518,17 @@ class LakeTable:
         from_snapshot: int,
         to_snapshot: int | None = None,
         collapse: bool = True,
+        columns: list[str] | None = None,
     ) -> DataFrame:
         """Incremental change feed between two committed snapshots
         (exclusive ``from_snapshot``, inclusive ``to_snapshot``; default =
         current). One row per key changed in the range::
 
             conv_id, turn_idx, <payload...>, op ('upsert'|'delete'), lsn
+
+        ``columns`` narrows ``<payload...>`` to those columns and decodes
+        only them plus the keys and internals, like :meth:`read`'s — a
+        consumer that needs only the changed keys skips the payload.
 
         ``collapse=False`` is the ALL-CHANGES mode (Delta CDF's non-net
         feed): instead of the net max-LSN winner per key, EVERY version the
@@ -558,7 +565,10 @@ class LakeTable:
         to_snapshot = to_snap.snapshot_id
         if to_snapshot < from_snapshot:
             raise ValueError(f"to_snapshot {to_snapshot} < from_snapshot {from_snapshot}")
-        payload = [f.name for f in to_snap.payload_schema().fields]
+        scan_schema = self._scan_schema(to_snap, columns)
+        payload = list(columns) if columns is not None else [
+            f.name for f in to_snap.payload_schema().fields
+        ]
         out_cols = [
             *payload,
             F.when(F.col(S.DELETED_COL), F.lit("delete")).otherwise(F.lit("upsert")).alias("op"),
@@ -579,9 +589,9 @@ class LakeTable:
                 for p, sid in zip(g.rels, g.seqs):
                     by_sid.setdefault(sid, []).append(os.path.join(self.root, p))
             union = reduce(DataFrame.unionByName, [
-                self._scan_files(to_snap.schema, files).withColumn("_sid", F.lit(sid))
+                self._scan_files(scan_schema, files).withColumn("_sid", F.lit(sid))
                 for sid, files in sorted(by_sid.items())
-            ] or [self.spark.createDataFrame([], to_snap.schema).withColumn("_sid", F.lit(0))])
+            ] or [self.spark.createDataFrame([], scan_schema).withColumn("_sid", F.lit(0))])
             # one row per (key, lsn): the first commit that emitted the
             # version wins the tag (purge re-statements carry the SAME lsn
             # and identical payload — the one-LSN-one-payload invariant —
@@ -597,7 +607,7 @@ class LakeTable:
         # net change per key = its winner over its group's added files
         # (commit order within a group keeps the later commit the LSN-tie
         # winner)
-        return self._resolve(to_snap, to_snap.schema, plan).select(*out_cols)
+        return self._resolve(to_snap, scan_schema, plan).select(*out_cols)
 
     def scd2(
         self, from_snapshot: int = 0, to_snapshot: int | None = None
@@ -666,9 +676,12 @@ class LakeTable:
         """Live rows (tombstones filtered), payload columns only.
         ``columns`` prunes the scan to exactly those payload columns (plus
         the internals resolution needs) — pass it for narrow analytics over
-        wide transcript tables: Python DataSources don't receive Spark's
-        projection pushdown, so ``read().select(few)`` decodes every column
-        while ``read(columns=few)`` decodes only the few."""
+        wide transcript tables: Spark prunes the columns of a single-file
+        bucket's parquet scan, but not of a multi-file bucket's ``mor_scan``
+        resolve, so there ``read().select(few)`` decodes every column while
+        ``read(columns=few)`` decodes only the few. Likewise a
+        ``read().filter(conv_id == k)`` resolves every multi-file bucket in
+        full; :meth:`lookup` is the point read."""
         snap = self.snapshot(snapshot_id)
         resolved = self.read_resolved(buckets, snap.snapshot_id, columns=columns)
         out_cols = columns if columns is not None else [
@@ -696,8 +709,8 @@ class LakeTable:
         reading a stable state while writers commit — snapshot isolation
         for SQL readers. A view created with no pin is plan-time-pinned to
         the CURRENT snapshot; call again to pick up newer commits.
-        ``columns`` prunes the scan like :meth:`read` (Python DataSources
-        receive no projection pushdown, so pass it for narrow analytics)."""
+        ``columns`` prunes the scan like :meth:`read` (``mor_scan`` receives
+        no projection pushdown, so pass it for narrow analytics)."""
         if sum(x is not None for x in (snapshot_id, ts, tag)) > 1:
             raise ValueError("pass at most one of snapshot_id / ts / tag")
         if ts is not None:
@@ -920,20 +933,24 @@ class LakeTable:
         :meth:`plan_lookup` drops the bucket's files whose key bloom never
         saw the conversation — at 100 TB a bucket holds hundreds of tier
         files and a conversation lives in a handful. The rest resolve as
-        one commit-ordered group through :meth:`_resolve`, with the key
-        predicate pushed to parquet row groups (files are sorted on the
-        key). Blooms have no false negatives and the key filter commutes
-        with resolution, so the result equals
-        ``read().filter(conv_id = ...)`` exactly."""
+        one commit-ordered group through :meth:`_resolve`, which is handed
+        the key (and turn) equality to prune parquet row groups by their
+        key statistics (files are sorted on the key) before resolving.
+        Blooms have no false negatives and the key filter commutes with
+        resolution, so the result equals ``read().filter(conv_id = ...)``
+        exactly."""
         snap = self.snapshot(snapshot_id)
         payload = [f.name for f in snap.payload_schema().fields]
         b, cand, _ = self.plan_lookup(conv_id, snapshot_id=snap.snapshot_id)
         pred = F.col("conv_id") == F.lit(conv_id)
+        key_filters = [("conv_id", conv_id)]
         if turn_idx is not None:
             pred = pred & (F.col("turn_idx") == F.lit(turn_idx))
+            key_filters.append(("turn_idx", turn_idx))
         # the bloom-kept files, as the one group the planner hands over
         kept = [j for j, _ in cand]
-        winners = self._resolve(snap, snap.schema, plan_groups(self, snap, [b], keep=lambda _: kept))
+        winners = self._resolve(snap, snap.schema,
+                                plan_groups(self, snap, [b], keep=lambda _: kept), key_filters)
         return winners.filter(pred & ~F.col(S.DELETED_COL)).select(*payload)
 
     def purge(self, conv_id: str) -> Snapshot:
@@ -2184,7 +2201,7 @@ class LakeTable:
     def _fold(self, snap: Snapshot, groups: list[Group]) -> DataFrame:
         """Resolve whole-bucket groups of ``plan.plan_groups`` (or a
         commit-ordered suffix of each) into ``pk_bucket`` +
-        ``snap.schema``'s columns, LOGICAL names: the mor_scan source packs
+        ``snap.schema``'s columns, LOGICAL names: ``mor_scan.scan`` packs
         the buckets one task per core by their bytes and resolves each
         bucket locally (max ``(_lsn, commit-seq)`` per key), reading
         ``pk_bucket`` from the partition path. Every bucket's rows come out
@@ -2200,8 +2217,7 @@ class LakeTable:
         )
         from maestro_spark import mor_scan
 
-        df = mor_scan.scan(self.spark, scan_schema,
-                           *self._abs([g for g in groups if g.rels]), snap.n_buckets)
+        df = mor_scan.scan(self.spark, scan_schema, *self._abs([g for g in groups if g.rels]))
         return _logical(df, snap.schema)
 
     def _abs(self, groups: list[Group]) -> tuple[list[list[str]], list[int]]:

@@ -53,7 +53,6 @@ class Group:
 class Plan:
     groups: list[Group]
     n_buckets: int   # the layout group buckets index (``since=``: the gcd)
-    mixed: bool      # ``since=``: the range's snapshots differ in layout
     total: int       # files planned before ``keep`` pruned them
 
 
@@ -67,9 +66,8 @@ def plan_groups(table, snap, buckets=None, since=None, keep=None) -> Plan:
     non-maintenance snapshot in ``(k, snap]`` added over its parent and
     refuses a rollback, whose delta is files removed. Those group by bucket
     mod the gcd of the adding snapshots' bucket counts (a key's buckets
-    agree modulo it across a rebucket), and ``mixed`` says the counts
-    differ. ``keep(rels) -> positions`` is the per-group prune rule; a
-    group it empties is dropped.
+    agree modulo it across a rebucket). ``keep(rels) -> positions`` is
+    the per-group prune rule; a group it empties is dropped.
     """
     bytes_of = partial(file_bytes, table)
     if since is None:
@@ -87,7 +85,6 @@ def plan_groups(table, snap, buckets=None, since=None, keep=None) -> Plan:
             for b, ps in snap.files.items()
             if buckets is None or b in want
         ]
-        mixed = False
     else:
         if buckets is not None:
             raise ValueError("plan_groups: buckets= and since= do not combine")
@@ -115,8 +112,7 @@ def plan_groups(table, snap, buckets=None, since=None, keep=None) -> Plan:
             g.rels.extend(new)
             g.seqs.extend([sid] * len(new))
         groups = list(by.values())
-        mixed = any(nb != n for _, nb, _, _ in added)
     total = sum(len(g.rels) for g in groups)
     if keep is not None:
         groups = [g.sub(k) for g in groups if (k := keep(g.rels))]
-    return Plan(groups, n, mixed, total)
+    return Plan(groups, n, total)

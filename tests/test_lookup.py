@@ -85,7 +85,7 @@ def test_lookup_equals_filtered_read(table):
 
 def test_lookup_scans_one_bucket_only(table, monkeypatch):
     """Every file the lookup plan reads — the parquet scan's inputFiles and
-    the file groups handed to mor_scan (a Python DataSource lists none) —
+    the file groups handed to mor_scan (a mapInArrow scan lists none) —
     lives under the key's own pk_bucket dir: the other n_buckets-1 of the
     table are never opened."""
     from maestro_spark import mor_scan
@@ -130,7 +130,7 @@ def test_lookup_on_replayed_log(spark, tmp_path):
 
 def test_read_columns_prunes_and_matches(spark, tmp_path):
     """read(columns=...) equals read().select(...) exactly, and the pruned
-    plan's scan schema is narrow (the Python DataSource gets no projection
+    plan's scan schema is narrow (mor_scan gets no projection
     pushdown from Spark, so the manual pruning is the only thing standing
     between a 2-column query and a full-width decode at 100 TB); the JVM
     exchange resolve over the same narrowed schema agrees."""
@@ -149,15 +149,17 @@ def test_read_columns_prunes_and_matches(spark, tmp_path):
     assert a.equals(b) and len(a) > 0
 
     def scan_width(df):
-        """Widest Output [N] in the formatted plan — the scan nodes are the
-        widest nodes in these plans, so this is the decoded column count."""
+        """Widest Output [N] or Input [N] in the formatted plan — the scan
+        nodes (and, for MapInArrow, which prints no Output, the node reading
+        it) are the widest nodes in these plans, so this is the decoded
+        column count."""
         import re
 
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
-        widths = [int(m.group(1)) for m in re.finditer(r"Output \[(\d+)\]", plan)]
+        widths = [int(m.group(1)) for m in re.finditer(r"(?:Output|Input) \[(\d+)\]", plan)]
         assert widths, plan[:1000]
         return max(widths), plan
 
@@ -182,12 +184,11 @@ def test_read_columns_prunes_and_matches(spark, tmp_path):
         t.read(columns=["nope"])
 
 
-def test_key_filter_pushdown_into_mor_scan(spark, tmp_path):
-    """read().filter(conv_id == X) through the Python DataSource: the
-    pushed key-equality prunes bucket groups driver-side (same hash twin as
-    lookup) and rides into pyarrow as a row-group filter — and the result
-    still equals the unpruned read's filter exactly (Spark re-evaluates
-    every filter post-scan, so pushdown is an IO optimization only)."""
+def test_key_filter_pushdown_into_mor_scan(spark, tmp_path, monkeypatch):
+    """read().filter(conv_id == X) equals the unpruned read's filter
+    exactly. Spark pushes no filter into mor_scan, so that read resolves
+    every multi-file bucket; the point read is lookup, which hands
+    mor_scan only the key's own bucket and equals the same filter."""
     log = generate(GenConfig(seed=13, n_convs=30, segment_rows=250))
     write_log(log, str(tmp_path / "log"), segment_rows=250)
     t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=8)
@@ -205,30 +206,42 @@ def test_key_filter_pushdown_into_mor_scan(spark, tmp_path):
         full[full["conv_id"] == cid].sort_values("turn_idx").reset_index(drop=True)
     )
     assert got.equals(want) and len(got) > 0
-    # the reader's own pruning arithmetic: one bucket's groups survive
-    from maestro_spark.mor_scan import MorScanReader
+    # the lookup of the same key: one bucket's files reach mor_scan
+    from maestro_spark import mor_scan
 
-    from maestro_spark.plan import file_bytes
+    groups: list[list[str]] = []
+    real = mor_scan.scan
 
-    snap = t.snapshot()
-    multi = [ps for ps in snap.files.values() if len(ps) > 1]
-    groups = [[f"{t.root}/{p}" for p in ps] for ps in multi]
-    import json as _json
+    def spy(spark, schema, gs, *a, **kw):
+        groups.extend(gs)
+        return real(spark, schema, gs, *a, **kw)
 
-    r = MorScanReader(
-        snap.schema,
-        {"groups_json": _json.dumps(groups),
-         "sizes_json": _json.dumps([sum(file_bytes(t, p) for p in ps) for ps in multi]),
-         "n_buckets": str(snap.n_buckets)},
-    )
-    from pyspark.sql.datasource import EqualTo
+    monkeypatch.setattr(mor_scan, "scan", spy)
+    b = bucket_of(cid, t.snapshot().n_buckets)
+    looked = t.lookup(cid).orderBy("turn_idx").toPandas().reset_index(drop=True)
+    assert looked.equals(want)
+    assert groups and all(f"pk_bucket={b}/" in f for g in groups for f in g)
 
-    leftover = list(r.pushFilters([EqualTo(("conv_id",), cid)]))
-    assert len(leftover) == 1  # everything handed back for re-evaluation
-    parts = r.partitions()
-    assert 0 < len(parts) < max(len(groups), 2)
-    b = bucket_of(cid, snap.n_buckets)
-    assert all(f"pk_bucket={b}/" in g[0] for p in parts for g in p.groups)
+
+def test_lookup_hands_its_key_to_mor_scan(table, monkeypatch):
+    """mor_scan sees no pushed filter, so lookup passes its key (and turn)
+    equality itself; the resolver prunes row groups and rows with it."""
+    from maestro_spark import mor_scan
+
+    seen: list = []
+    real = mor_scan.scan
+
+    def spy(spark, schema, gs, sizes, key_filters=None):
+        seen.append(key_filters)
+        return real(spark, schema, gs, sizes, key_filters)
+
+    monkeypatch.setattr(mor_scan, "scan", spy)
+    # A's bucket holds both epochs' files, so its lookup goes through mor_scan
+    assert len(table.snapshot().files[str(bucket_of("A", 4))]) == 2
+    assert [r["text"] for r in table.lookup("A").orderBy("turn_idx").collect()] == [
+        "a0", "a1v2"]
+    assert [r["text"] for r in table.lookup("A", turn_idx=1).collect()] == ["a1v2"]
+    assert seen == [[("conv_id", "A")], [("conv_id", "A"), ("turn_idx", 1)]]
 
 
 # --------------------------------------------------------------- key blooms

@@ -11,7 +11,6 @@ that planning stats no data file."""
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import tempfile
@@ -22,7 +21,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from maestro_spark.lake import Snapshot
-from maestro_spark.mor_scan import MorScanReader, pack_groups
+from maestro_spark.mor_scan import pack_groups
 from maestro_spark.plan import file_bytes, plan_groups
 
 KEYS = range(24)
@@ -142,7 +141,7 @@ def test_plan_groups_matches_the_manifest(ops, slots, data):
         assert [(g.bucket, g.rels, g.seqs) for g in plan.groups] == [
             (int(b), ps, list(range(len(ps)))) for b, ps in tip.files.items()
         ]
-        assert plan.n_buckets == tip.n_buckets and not plan.mixed
+        assert plan.n_buckets == tip.n_buckets
         assert plan.total == sum(len(ps) for ps in tip.files.values())
         for g in plan.groups:
             # bytes: file stats where recorded, the on-disk size otherwise
@@ -157,9 +156,7 @@ def test_plan_groups_matches_the_manifest(ops, slots, data):
         groups = [[os.path.join(root, p) for p in g.rels] for g in plan.groups if g.rels]
         on_disk = [sum(os.path.getsize(f) for f in g) for g in groups]
         planned = [g.bytes for g in plan.groups if g.rels]
-        assert [p.groups for p in pack_groups(groups, planned, slots)] == [
-            p.groups for p in pack_groups(groups, on_disk, slots)
-        ]
+        assert pack_groups(groups, planned, slots) == pack_groups(groups, on_disk, slots)
 
         # since=k: each epoch's added files, grouped by bucket mod the gcd
         since = data.draw(st.integers(0, tip.snapshot_id), label="since")
@@ -178,7 +175,6 @@ def test_plan_groups_matches_the_manifest(ops, slots, data):
                 expect.setdefault(int(b) % g, []).extend((p, sid) for p in ps)
         assert {gr.bucket: list(zip(gr.rels, gr.seqs)) for gr in plan.groups} == expect
         assert plan.n_buckets == g
-        assert plan.mixed == any(n != g for _, n, _ in want)
         # every key's added files sit in one group, across a rebucket too
         for k in KEYS:
             holding = {gr.bucket for gr in plan.groups for p in gr.rels
@@ -208,14 +204,12 @@ def test_bucket_ids_outside_the_layout_are_refused(tmp_path, bad):
 
 
 def test_pack_groups_stats_no_file():
-    """The planner worker packs from the sizes it is handed: these paths do
-    not exist, and nothing is opened or statted."""
+    """Packing uses the sizes it is handed: these paths do not exist, and
+    nothing is opened or statted."""
     groups = [["/nonexistent/pk_bucket=0/a", "/nonexistent/pk_bucket=0/b"],
               ["/nonexistent/pk_bucket=1/c", "/nonexistent/pk_bucket=1/d"]]
-    r = MorScanReader(None, {"groups_json": json.dumps(groups),
-                             "sizes_json": "[10, 30]", "slots": "2"})
     # the larger group seeds the first pack
-    assert [p.groups for p in r.partitions()] == [[groups[1]], [groups[0]]]
+    assert pack_groups(groups, [10, 30], 2) == [[groups[1]], [groups[0]]]
 
 
 # ------------------------------------------------------------------ Spark

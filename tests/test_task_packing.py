@@ -1,12 +1,11 @@
 """Per-core packing of small per-bucket work: ``mor_scan`` packs whole bucket
-groups into at most one input partition per task slot, and the epoch
+groups into at most one pack (one task) per task slot, and the epoch
 merge's exchange has an explicit partition count, so a small epoch's bucket
 write runs on every core instead of in one AQE-coalesced task."""
 
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
 import tempfile
 
@@ -16,7 +15,7 @@ from hypothesis import strategies as st
 from maestro_spark import schema as S
 from maestro_spark.lake import LakeTable
 from maestro_spark.merge import merge_batch
-from maestro_spark.mor_scan import MorScanReader, pack_groups
+from maestro_spark.mor_scan import pack_groups
 from maestro_spark.verify import symmetric_diff_empty
 
 
@@ -51,31 +50,26 @@ def test_pack_groups_keeps_each_bucket_whole(sizes, slots):
     assert len(packs) == max(1, min(slots, len(groups)))
     # every input group appears whole, files in commit order, in exactly
     # one pack; each pack keeps its groups in input order
-    seen = [g for p in packs for g in p.groups]
+    seen = [g for p in packs for g in p]
     assert sorted(map(tuple, seen)) == sorted(map(tuple, groups))
     for p in packs:
-        idx = [groups.index(g) for g in p.groups]
+        idx = [groups.index(g) for g in p]
         assert idx == sorted(idx)
     # largest-first onto the least-loaded pack: loads differ by at most
     # the largest group
     if groups:
         size = {tuple(g): sum(fs) for g, fs in zip(groups, sizes)}
-        load = [sum(size[tuple(g)] for g in p.groups) for p in packs]
+        load = [sum(size[tuple(g)] for g in p) for p in packs]
         assert max(load) - min(load) <= max(size.values())
 
 
 def test_reader_packs_to_slot_count(tmp_path):
     sizes = [[300, 10], [50, 50], [200, 5, 5], [10, 10], [400, 1]]
     groups = _groups_of(str(tmp_path), sizes)
-    r = MorScanReader(
-        S.TRANSCRIPT_SCHEMA,
-        {"groups_json": json.dumps(groups),
-         "sizes_json": json.dumps([sum(fs) for fs in sizes]), "slots": "2"},
-    )
     # bytes 310, 100, 210, 20, 401: 401 and 310 seed the two packs, 210
     # joins 310, then 100 and 20 join 401
-    packs = r.partitions()
-    assert [p.groups for p in packs] == [
+    packs = pack_groups(groups, [sum(fs) for fs in sizes], 2)
+    assert packs == [
         [groups[1], groups[3], groups[4]],
         [groups[0], groups[2]],
     ]
