@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from maestro_spark import schema as S
+from maestro_spark.keyhash import bucket_of
 from maestro_spark.lake import CommitConflict, LakeTable, Snapshot
 from maestro_spark.merge import merge_batch
 from maestro_spark.plan import plan_groups
@@ -48,6 +49,57 @@ def max_live_lsn(table: LakeTable, snapshot_id: int | None = None) -> int:
     snap = table.snapshot(snapshot_id)
     return max([0, *(table.file_stats.get_or_read(p).get("lsn_max") or 0
                      for g in plan_groups(table, snap).groups for p in g.rels)])
+
+
+def _pinned_keys(expr) -> set[str] | None:
+    """The ``conv_id`` values an analyzed Catalyst condition admits, when
+    it pins them to string literals (``=``, ``<=>``, ``IN``, under AND/OR);
+    None when any key may match."""
+    kind = _kind(expr)
+    if kind in ("And", "Or"):
+        l, r = _pinned_keys(expr.left()), _pinned_keys(expr.right())
+        if kind == "Or":
+            return None if l is None or r is None else l | r
+        return r if l is None else l if r is None else l & r
+    if kind in ("EqualTo", "EqualNullSafe"):
+        attr, lit = expr.left(), expr.right()
+        if _kind(attr) == "Literal":
+            attr, lit = lit, attr
+        lits = [lit]
+    elif kind == "In":  # the key IN literals, never a literal IN columns
+        attr = expr.value()
+        lits = [expr.list().apply(i) for i in range(expr.list().size())]
+    else:
+        return None
+    if (_kind(attr) != "AttributeReference" or attr.name().lower() != "conv_id"
+            or not lits or any(_kind(x) != "Literal" or x.value() is None
+                               or x.dataType().typeName() != "string"
+                               for x in lits)):
+        return None
+    return {x.value().toString() for x in lits}
+
+
+def _kind(expr) -> str:
+    return expr.getClass().getSimpleName()
+
+
+def _matching(table: LakeTable, predicate: Column) -> DataFrame:
+    """Current live rows matching ``predicate``. Spark pushes no filter
+    into a multi-file bucket's ``mor_scan`` resolve, so a predicate that
+    pins ``conv_id`` (see :func:`_pinned_keys`) reads only its keys'
+    buckets, picked on the driver as :meth:`LakeTable.lookup` picks one."""
+    snap = table.snapshot()
+    try:
+        cond = (
+            table.spark.createDataFrame([], snap.payload_schema())
+            .filter(predicate)._jdf.queryExecution().analyzed().condition()
+        )
+        keys = _pinned_keys(cond)
+    except Exception:  # the read below raises the predicate's own error
+        keys = None
+    buckets = None if keys is None else sorted(
+        {bucket_of(k, snap.n_buckets) for k in keys})
+    return table.read(snap.snapshot_id, buckets=buckets).filter(predicate)
 
 
 def _dml_statement(
@@ -292,7 +344,7 @@ def delete_where(
 
     def build(lsn: int) -> DataFrame:
         # re-read per attempt: a re-planned statement must see the racer's rows
-        keys = table.read().filter(predicate).select(*S.KEY_COLS)
+        keys = _matching(table, predicate).select(*S.KEY_COLS)
         return keys.withColumn("op", F.lit("delete")).withColumn(
             "op_lsn", F.lit(lsn).cast("long")
         )
@@ -317,7 +369,7 @@ def update_where(
     second read the first's result instead)."""
 
     def build(lsn: int) -> DataFrame:
-        rows = table.read().filter(predicate)
+        rows = _matching(table, predicate)
         have = set(rows.columns)
         proj = [
             (assignments[c].alias(c) if c in assignments else F.col(c))

@@ -176,7 +176,8 @@ class _MaintainedIndex:
         if to <= frm:
             return None
         try:
-            feed = self.base.changes(frm, to)
+            feed = self.base.changes(
+                frm, to, columns=[*S.KEY_COLS, *self._source_cols()])
         except (FileNotFoundError, ValueError):
             return self.rebuild()
         # resolved once: the upsert write and the tombstones both read it

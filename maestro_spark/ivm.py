@@ -436,7 +436,7 @@ class MaterializedView:
         if self._full_only:
             return self.full_refresh(to)
         try:
-            feed = self.base.changes(frm, to)
+            feed = self.base.changes(frm, to, columns=["conv_id"])
         except (FileNotFoundError, ValueError):
             # feed horizon expired, or the range spans a rollback (whose
             # delta the feed cannot express) → full rebuild re-syncs
@@ -457,7 +457,8 @@ class MaterializedView:
             return self.full_refresh(to)
 
         n_buckets = self.base.snapshot(to).n_buckets
-        # ONE scan of the feed's epoch-file union: the changed-conv set is
+        # ONE scan of the feed's epoch-file union (keys only: the feed was
+        # asked for conv_id alone): the changed-conv set is
         # checkpointed (bounded: convs touched in the range — small relative
         # to the table by construction), then the bucket list (driver-side,
         # ≤ n_buckets ints), the aggregate join, and the tombstone anti-join

@@ -28,7 +28,7 @@ def file_bytes(table, rel: str) -> int:
 
 @dataclass
 class Group:
-    bucket: int        # bucket id; under ``since=``, bucket mod Plan.n_buckets
+    bucket: int        # bucket id; under ``since=``, bucket mod the gcd
     rels: list[str]    # table-relative data file paths, commit order
     # each file's commit position: its index in the bucket's manifest list,
     # or under ``since=`` the id of the snapshot that added it
@@ -52,7 +52,6 @@ class Group:
 @dataclass
 class Plan:
     groups: list[Group]
-    n_buckets: int   # the layout group buckets index (``since=``: the gcd)
     total: int       # files planned before ``keep`` pruned them
 
 
@@ -115,4 +114,4 @@ def plan_groups(table, snap, buckets=None, since=None, keep=None) -> Plan:
     total = sum(len(g.rels) for g in groups)
     if keep is not None:
         groups = [g.sub(k) for g in groups if (k := keep(g.rels))]
-    return Plan(groups, n, total)
+    return Plan(groups, total)

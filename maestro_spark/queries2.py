@@ -707,9 +707,8 @@ def q_cdc_changes(spark, sf_dir):
     per-key max-LSN winner set incl. tombstones — which DuckDB can state
     directly as arg_max over the same log segments."""
     table = _ensure_cdc_demo_lake(spark)
-    return table.changes(0).select(
-        "conv_id", "turn_idx", "text", "role", "tool", "op", "lsn"
-    )
+    cols = ["conv_id", "turn_idx", "text", "role", "tool"]
+    return table.changes(0, columns=cols).select(*cols, "op", "lsn")
 
 
 @q(

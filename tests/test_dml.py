@@ -11,6 +11,7 @@ import pytest
 
 from maestro_spark import schema as S
 from maestro_spark.dml import (
+    _pinned_keys,
     delete_where,
     max_live_lsn,
     merge_into,
@@ -253,3 +254,47 @@ def test_merge_into_rejects_ambiguity_and_empty(spark, table):
         merge_into(table, ok).execute()
     with pytest.raises(ValueError, match="key columns"):
         merge_into(table, ok.drop("turn_idx"))
+
+
+def test_key_pinned_dml_reads_only_its_buckets(spark, table, monkeypatch):
+    """A predicate pinning conv_id to literals (Python or SQL form) reads
+    only those keys' buckets; any other predicate reads the whole table.
+    Results are those of the unnarrowed read."""
+    from maestro_spark.keyhash import bucket_of
+
+    n = table.snapshot().n_buckets
+    calls = []
+    read = LakeTable.read
+
+    def spy(self, snapshot_id=None, buckets=None, columns=None):
+        calls.append(buckets)
+        return read(self, snapshot_id, buckets, columns)
+
+    monkeypatch.setattr(LakeTable, "read", spy)
+    delete_where(table, F.col("conv_id") == "A")
+    assert calls == [[bucket_of("A", n)]]
+    # table.sql also reads the whole table to register its view
+    calls.clear()
+    table.sql("UPDATE t SET text = 'x' WHERE conv_id IN ('A', 'B') AND turn_idx = 0")
+    assert [c for c in calls if c is not None] == [
+        sorted({bucket_of("A", n), bucket_of("B", n)})]
+    calls.clear()
+    update_where(table, (F.col("conv_id") == "B") | (F.col("turn_idx") == 9),
+                 {"text": F.lit("y")})
+    assert calls == [None]
+    monkeypatch.undo()
+    assert _rows(table) == {("B", 0): "y"}
+
+    # what pins the key, and what must not
+    schema = table.snapshot().payload_schema()
+    for where, want in [
+        ("CONV_ID = 'a' OR conv_id <=> 'b'", {"a", "b"}),
+        ("conv_id = 'a' AND conv_id = 'b'", set()),
+        ("conv_id = 'a' OR turn_idx = 0", None),
+        ("'a' IN (conv_id, 'a')", None),
+        ("lower(conv_id) = 'a'", None),
+        ("conv_id = NULL", None),
+    ]:
+        cond = (spark.createDataFrame([], schema).filter(F.expr(where))
+                ._jdf.queryExecution().analyzed().condition())
+        assert _pinned_keys(cond) == want, where

@@ -141,7 +141,6 @@ def test_plan_groups_matches_the_manifest(ops, slots, data):
         assert [(g.bucket, g.rels, g.seqs) for g in plan.groups] == [
             (int(b), ps, list(range(len(ps)))) for b, ps in tip.files.items()
         ]
-        assert plan.n_buckets == tip.n_buckets
         assert plan.total == sum(len(ps) for ps in tip.files.values())
         for g in plan.groups:
             # bytes: file stats where recorded, the on-disk size otherwise
@@ -174,7 +173,7 @@ def test_plan_groups_matches_the_manifest(ops, slots, data):
             for b, ps in added.items():
                 expect.setdefault(int(b) % g, []).extend((p, sid) for p in ps)
         assert {gr.bucket: list(zip(gr.rels, gr.seqs)) for gr in plan.groups} == expect
-        assert plan.n_buckets == g
+        assert all(gr.bucket < g for gr in plan.groups)
         # every key's added files sit in one group, across a rebucket too
         for k in KEYS:
             holding = {gr.bucket for gr in plan.groups for p in gr.rels
